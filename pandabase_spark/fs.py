@@ -189,7 +189,7 @@ class HadoopFS:
             # Hadoop's ChecksumFileSystem, whose overwrite-rename is
             # delete-then-rename (a reader racing it sees the file
             # briefly MISSING; the two-driver race test caught exactly
-            # that on the CURRENT pointer)
+            # that on the hint file)
             with open(local, "r", encoding="utf-8") as fh:
                 return fh.read()
         # a py4j byte[] argument is passed by value, so readFully into a

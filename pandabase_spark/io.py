@@ -9,12 +9,13 @@ declarative Spark plan committed through a tiny manifest log.
 Storage model (v2 — segment + manifest commit log)
 ==================================================
 
-A table directory holds immutable write segments plus two small JSON
-files::
+A table directory holds immutable write segments plus a small JSON
+version log::
 
     <warehouse>/<table>/
         _pandabase_meta.json        keys, auto_index, num_buckets, schema
-        _pandabase_log.json         manifest: {segment -> live bucket list}
+        _pb_log/<v>.json            manifest v: {segment -> live bucket list}
+        _pandabase_log.json         hint: a copy of a recent manifest
         seg-<uuid>/_pb_b=<n>/*.parquet
 
 Rows are hash-bucketed: ``pmod(xxhash64(key...), num_buckets)`` names the
@@ -37,22 +38,21 @@ Write modes:
   segment; the manifest commit atomically swaps those buckets' ownership
   from the old segments to the new one. Old files are never touched.
 
-ACID story: the manifest write is a stage-file + atomic overwrite-rename
-(:mod:`pandabase_spark.fs`), so a crash at ANY point before the rename
-leaves the previous manifest — and therefore the previous table state —
-fully intact (snapshot isolation for readers; orphan segments are
-garbage, removed by :meth:`KeyedCatalog.vacuum`). This replaces the v1
-in-place dynamic-partition-overwrite, which could lose buckets if the
-writer died mid-commit — the same reason Delta Lake keeps a JSON action
-log instead of rewriting in place.
+ACID story: a commit is the put-if-absent creation of the next version
+file (:mod:`pandabase_spark.kt_log`), so a crash at ANY point before
+that claim leaves the previous manifest — and therefore the previous
+table state — fully intact (snapshot isolation for readers; orphan
+segments are garbage, removed by :meth:`KeyedCatalog.vacuum`). This
+replaces the v1 in-place dynamic-partition-overwrite, which could lose
+buckets if the writer died mid-commit — the same reason Delta Lake keeps
+a JSON action log instead of rewriting in place.
 
-Concurrency contract: SINGLE WRITER PER TABLE. The manifest commit is
-last-writer-wins; concurrent writers do not corrupt data files (segments
-are uuid-named and immutable) but one manifest update can eclipse
-another, and the append PK-overlap probe is check-then-act. The
-reference inherits multi-writer safety from the database's UNIQUE
-constraint; a lock service or a CAS-capable store would be needed to
-offer the same here, and this engine does not pretend to.
+Concurrency contract: optimistic. Every write plans against one version
+and claims the next; a writer that loses the claim raises
+:class:`ConcurrentWriteError` instead of overwriting a rival's commit.
+Segments are uuid-named and immutable, so losers never corrupt data.
+On stores without a conditional put (S3 without a coordinating log
+store) the claim is best-effort, the same tradeoff as Delta's.
 
 Scale design (the part that matters at 100 TB):
 
@@ -82,7 +82,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from pandabase_spark import kt_log
 from pandabase_spark.fs import HadoopFS
+from pandabase_spark.kt_log import LOG_DIR, LOG_FILE  # noqa: F401
 from pandabase_spark.localframe import local_frame
 from pandabase_spark.names import clean_name, is_clean
 from pandabase_spark.types import (
@@ -99,8 +101,6 @@ from pandabase_spark.types import (
 AUTO_INDEX_NAME = "pandabase_auto_generated_index"  # reference:pandabase/helpers.py:13
 PART_DIR = "_pb_b"
 META_FILE = "_pandabase_meta.json"
-LOG_FILE = "_pandabase_log.json"
-LOG_DIR = "_pb_log"
 DV_DIR = "_pb_dv"
 WRITE_MODES = ("create_only", "append", "upsert")
 
@@ -265,15 +265,6 @@ def _bucket_expr(keys: Sequence[str], num_buckets: int):
     ).cast("int")
 
 
-def _is_version_file(name: str) -> bool:
-    """True for committed version manifests (``{v:010d}.json``) —
-    excludes ``.skip.json`` sidecars and the vacuum history summary
-    cache, both of which share the log directory."""
-    if not name.endswith(".json") or name.endswith(".skip.json"):
-        return False
-    return name.split(".")[0].isdigit()
-
-
 def _man_dv_files(man: dict) -> "set[str]":
     """The DV sidecar files a manifest references and OWNS — external
     (clone) refs carry a '/' and are the source table's to reclaim.
@@ -408,75 +399,15 @@ class KeyedCatalog:
         )
 
     def _manifest(self, table_name: str, version: int | None = None) -> dict:
-        if version is not None:
-            p = f"{self._path(table_name)}/{LOG_DIR}/{version:010d}.json"
-            if not self.fs.exists(p):
-                raise NameError(
-                    f"table {table_name!r} has no snapshot v{version} "
-                    "(never committed, or truncated by vacuum)"
-                )
-            return json.loads(self.fs.read_text(p))
-        p = f"{self._path(table_name)}/{LOG_FILE}"
-        if not self.fs.exists(p):
-            return {"v": 0, "segments": {}}
-        man = json.loads(self.fs.read_text(p))
-        # Head resolution: the put-if-absent CLAIM is the commit's
-        # linearization point, so a version file can exist ABOVE the
-        # CURRENT pointer (a writer between its two steps, a crashed
-        # writer, or the bounded roll-forward-regression anomaly —
-        # see _commit). One exists() probe per read follows the chain
-        # so every reader sees the true head; the miss (no newer
-        # claim) is the overwhelmingly common case. Read-only: the
-        # pointer itself is republished by the next commit, not here.
-        while True:
-            nxt = (
-                f"{self._path(table_name)}/{LOG_DIR}/"
-                f"{man['v'] + 1:010d}.json"
+        if version is None:
+            return kt_log.head(self.fs, self._path(table_name))
+        man = kt_log.read_version(self.fs, self._path(table_name), version)
+        if man is None:
+            raise NameError(
+                f"table {table_name!r} has no snapshot v{version} "
+                "(never committed, or truncated by vacuum)"
             )
-            if not self.fs.exists(nxt):
-                return man
-            man = json.loads(self.fs.read_text(nxt))
-
-    def _repair_regressed_pointer(
-        self, table_name: str, cur_path: str, doc: "str | None" = None,
-    ) -> None:
-        """Republish CURRENT at the head-resolved chain if a delayed
-        publish regressed it (the bounded anomaly documented in
-        :meth:`_commit`). In-repo readers already heal through
-        :meth:`_manifest`'s head resolution, but an external tool (or
-        an older-format reader) consuming the pointer file directly
-        would otherwise see a stale — though committed — snapshot
-        until the next commit happens to land. Best-effort and
-        idempotent: the republished bytes are exactly the head claim
-        file's own, so racing repairs/publishes converge; any IO race
-        is left for the next reader/commit to heal. ``doc`` is the
-        pointer content the caller just wrote — passing it skips
-        re-reading the file the caller authored one line earlier (an
-        extra RPC per successful commit on object stores); the chain
-        walk from its version reaches the same head either way."""
-        try:
-            head_txt = doc if doc is not None else self.fs.read_text(cur_path)
-            head = json.loads(head_txt)
-            published_v = head["v"]
-            while True:
-                nxt = (
-                    f"{self._path(table_name)}/{LOG_DIR}/"
-                    f"{head['v'] + 1:010d}.json"
-                )
-                if not self.fs.exists(nxt):
-                    break
-                head_txt = self.fs.read_text(nxt)
-                head = json.loads(head_txt)
-            if head["v"] > published_v:
-                self.fs.write_text_atomic(cur_path, head_txt)
-                # observable fact for the multi-writer soak: how many
-                # times THIS driver actually republished a regressed
-                # pointer (not mere no-op repair calls)
-                self.pointer_repairs = (
-                    getattr(self, "pointer_repairs", 0) + 1
-                )
-        except Exception:
-            pass  # repair is opportunistic; _manifest still heals
+        return man
 
     def _skipping(self, table_name: str, man: dict) -> dict:
         """The data-skipping dict ({stats, blooms, sketches}) of a
@@ -540,7 +471,7 @@ class KeyedCatalog:
         self, table_name: str, txn: "tuple[str, int] | None"
     ) -> bool:
         """True iff this (app_id, version) write already committed —
-        the replay guard. Checked against the CURRENT manifest; a
+        the replay guard. Checked against the head manifest; a
         racing duplicate that slips past the check loses the OCC
         claim in :meth:`_commit` instead, and its retry lands here."""
         if txn is None:
@@ -575,6 +506,11 @@ class KeyedCatalog:
 
         if v is None:
             return None
+        if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+            # stored stats are naive local wall time (what collect()
+            # returns for a timestamp), so an aware bound is compared
+            # as the same instant in that representation
+            v = v.astimezone().replace(tzinfo=None)
         if isinstance(v, (datetime.datetime, datetime.date)):
             return v.isoformat()
         if isinstance(v, (int, float, str, bool)):
@@ -1020,40 +956,17 @@ class KeyedCatalog:
         effective bucketing changes exactly when the commit lands,
         with no separate meta write to crash between.
 
-        The versioned history file is claimed with PUT-IF-ABSENT
-        (Delta's log-store contract): the first writer to create
-        ``{v+1}.json`` owns version v+1 — THE CLAIM IS THE
-        LINEARIZATION POINT. If the claim fails and the CURRENT
-        pointer has already advanced past ``v``, another writer
-        completed a commit we never saw — raising
-        :class:`ConcurrentWriteError` instead of silently overwriting
-        turns a lost update into a retryable error (re-read the
-        snapshot, re-plan, re-commit). If the claim fails while the
-        pointer still reads ``v``, the existing file belongs to a
-        rival between its two steps or to a writer that crashed
-        there; either way it is a COMPLETE committed document, so the
-        loser ROLLS IT FORWARD (publishes its bytes as CURRENT) and
-        raises — never overwrites it. The rolled-forward owner, if
-        alive, observes CURRENT carrying its own bytes and reports
-        success; a crashed writer's commit thus becomes durable at
-        its claim, and replayed retries stay idempotent through the
-        ``txn=`` watermark (the same contract as every replayed
-        write).
-
-        The CURRENT pointer is re-read after EVERY claim outcome, not
-        only after a failed one: vacuum prunes non-current version
-        files, so a stale writer's put-if-absent on ``{v+1}.json`` can
-        SUCCEED even though v+1..v+k committed long ago — publishing
-        CURRENT then would silently roll the table back past every
-        newer commit. Winning the file claim is therefore necessary
-        but not sufficient; CURRENT must still read ``v`` (or already
-        carry our bytes via a rival's roll-forward) before the commit
-        counts. Known bounded anomaly: a loser's roll-forward publish
-        delayed past a subsequent commit can briefly regress CURRENT
-        to the (valid, committed) prior snapshot; the next commit
-        attempt rolls the head forward again — monotonicity heals,
-        no data is lost. Vacuum remains outside this protocol
-        (stop-the-world maintenance, as documented on vacuum())."""
+        The commit is ONE step (:mod:`pandabase_spark.kt_log`):
+        create ``_pb_log/{v+1}.json`` put-if-absent. Winning the claim
+        commits; the ``_pandabase_log.json`` hint is then written
+        best-effort (readers chase past a stale or missing hint).
+        Losing it means another writer committed v+1 after the
+        snapshot this commit was planned on, so it raises
+        :class:`ConcurrentWriteError` — a lost update becomes a
+        retryable error (re-read, re-plan, re-commit), and a replayed
+        retry stays idempotent through ``txn=``. A stale writer can
+        never win a slot below the head, even one vacuum pruned:
+        vacuum leaves a stub there, never a hole."""
         import time as _time
 
         # Data-skipping stats ride in the manifest, keyed by SEGMENT
@@ -1177,12 +1090,6 @@ class KeyedCatalog:
             "v": v + 1,
             "segments": segments,
             "ts": int(_time.time() * 1_000_000),
-            # commit identity + parent link: what lets a slow winner
-            # whose claim was rolled forward AND built upon recognize
-            # its own commit inside the published chain (see the claim
-            # outcome analysis below)
-            "cid": uuid.uuid4().hex,
-            "parent": prior_man.get("cid"),
             "op": op,
             "nb": nb or prior_man.get("nb") or m.num_buckets,
             "segcols": segcols,
@@ -1234,10 +1141,8 @@ class KeyedCatalog:
                 # writer-unique suffix so a rival's same-version
                 # sidecar can never be overwritten or deleted by a
                 # loser's cleanup.
-                import uuid as _uuid
-
                 skip_file = (
-                    f"{v + 1:010d}-{_uuid.uuid4().hex[:8]}.skip.json"
+                    f"{v + 1:010d}-{uuid.uuid4().hex[:8]}.skip.json"
                 )
                 skip_path = (
                     f"{self._path(table_name)}/{LOG_DIR}/{skip_file}"
@@ -1247,108 +1152,21 @@ class KeyedCatalog:
             else:
                 doc_d.update(skipping)
         doc = json.dumps(doc_d)
-        vpath = f"{self._path(table_name)}/{LOG_DIR}/{v + 1:010d}.json"
-        cur_path = f"{self._path(table_name)}/{LOG_FILE}"
-        claimed = self.fs.write_text_if_absent(vpath, doc)
-        cur_txt = (
-            self.fs.read_text(cur_path)
-            if self.fs.exists(cur_path)
-            else '{"v": 0}'
-        )
-        cur = json.loads(cur_txt)["v"]
-        if claimed and cur <= v:
-            # cur < v covers the bounded regression anomaly: a delayed
-            # roll-forward publish moved CURRENT below our (head-
-            # resolved) base; our claim still extends the true chain,
-            # and publishing heals the pointer
-            self.fs.write_text_atomic(cur_path, doc)
-            # our own publish can ALSO be the delayed write in that
-            # anomaly (a rival rolled us forward and committed on top
-            # between our claim and this line) — close the window now
-            # instead of leaving the pointer regressed for external
-            # pointer-file readers until the next commit
-            self._repair_regressed_pointer(table_name, cur_path, doc=doc)
+        tpath = self._path(table_name)
+        claim = kt_log.version_path(tpath, v + 1)
+        if self.fs.write_text_if_absent(claim, doc):
+            try:
+                self.fs.write_text_atomic(kt_log.hint_path(tpath), doc)
+            except Exception:
+                pass  # only a hint: readers chase to the head without it
             return
-        if claimed and cur > v:
-            # CURRENT moved while we held the claim. Two worlds:
-            # (a) a losing rival ROLLED our claim forward (and may
-            #     have already retried and committed on top) — our
-            #     commit is durable inside the published chain;
-            # (b) vacuum pruned the version file our stale snapshot
-            #     was pinned to, our put-if-absent resurrected a dead
-            #     slot, and the chain never contained us.
-            # Distinguish by ancestry: walk the chain from CURRENT
-            # down to v+1 (those files exist above the old head;
-            # vacuum is stop-the-world by contract) and check the
-            # commit id.
-            # The walk follows PARENT LINKS, not bare version numbers:
-            # our own resurrected claim sits at v+1 in world (b) too,
-            # so a number-walk would wrongly "find" us — only a chain
-            # whose every child names its predecessor's cid proves
-            # adoption.
-            node = json.loads(cur_txt)
-            try:
-                while node.get("v", 0) > v + 1:
-                    prev = json.loads(
-                        self.fs.read_text(
-                            f"{self._path(table_name)}/{LOG_DIR}/"
-                            f"{node['v'] - 1:010d}.json"
-                        )
-                    )
-                    if not prev.get("cid") or prev["cid"] != node.get(
-                        "parent"
-                    ):
-                        break  # chain does not pass through v+1's file
-                    node = prev
-            except Exception:
-                node = {}
-            if node.get("v") == v + 1 and node.get("cid") == doc_d["cid"]:
-                return  # world (a): adopted — committed and published
-            # world (b): the claim must not shadow vacuumed history
-            self.fs.delete(vpath, recursive=False)
-        elif cur <= v:
-            # v+1 is owned by a rival still in flight (or a writer
-            # that crashed between claim and publish). Its claim file
-            # IS the complete committed document — the claim is the
-            # linearization point — so ROLL IT FORWARD rather than
-            # reclaiming it: overwriting here was a lost-update hole
-            # (a rival caught between its two steps had its committed
-            # rows silently replaced; the two-driver race test caught
-            # exactly that as vanished rows). The publish is
-            # idempotent with the owner's own — same bytes — and the
-            # owner detects the carried-forward pointer above and
-            # reports success. A crashed writer's commit likewise
-            # becomes durable at its claim; replay-safe retries use
-            # the txn= watermark, the same contract as every replayed
-            # write.
-            try:
-                rival_doc = self.fs.read_text(vpath)
-            except Exception:
-                # the rival reclaimed its own claim between our failed
-                # put-if-absent and this read (its world-(b) path) —
-                # nothing to roll forward; fall through to the
-                # ConcurrentWriteError below so callers' retry-on-
-                # conflict loops keep their contract instead of
-                # surfacing a raw FileNotFoundError
-                rival_doc = None
-            if rival_doc is not None:
-                self.fs.write_text_atomic(cur_path, rival_doc)
-                # a delayed publish here is the regression anomaly's
-                # origin: commits may have landed above v+1 while we
-                # were between read and write. Repair immediately so
-                # a crash right after this line cannot leave the
-                # pointer regressed indefinitely for external readers
-                # (in-repo readers heal via _manifest head resolution).
-                self._repair_regressed_pointer(
-                    table_name, cur_path, doc=rival_doc
-                )
         if skip_path is not None:
             # ours alone (writer-unique name) — safe to reclaim now
             self.fs.delete(skip_path, recursive=False)
         raise ConcurrentWriteError(
             f"commit of {table_name} v{v + 1} lost: table is at "
-            f"v{max(cur, v + 1)} (another writer committed). "
-            "Re-read and retry."
+            f"v{self._manifest(table_name)['v']} (another writer "
+            "committed). Re-read and retry."
         )
 
     def version_as_of(
@@ -1371,14 +1189,10 @@ class KeyedCatalog:
         if not self.has_table(table_name):
             raise NameError(f"no such table: {table_name}")
         ts_us = int(float(ts) * 1_000_000)
-        log_dir = f"{self._path(table_name)}/{LOG_DIR}"
         best = None
-        for f in self.fs.list_files(log_dir):
-            if not _is_version_file(f):
-                continue
-            man = json.loads(self.fs.read_text(f"{log_dir}/{f}"))
+        for man in kt_log.live_versions(self.fs, self._path(table_name)):
             if man.get("ts", 0) <= ts_us:
-                best = man["v"] if best is None else max(best, man["v"])
+                best = man["v"]
         if best is None:
             raise NameError(
                 f"table {table_name!r} has no snapshot at or before "
@@ -1395,25 +1209,18 @@ class KeyedCatalog:
         if not self.has_table(table_name):
             raise NameError(f"no such table: {table_name}")
         cur = self._manifest(table_name)["v"]
-        out = []
-        for f in self.fs.list_files(f"{self._path(table_name)}/{LOG_DIR}"):
-            if not _is_version_file(f):
-                continue
-            man = json.loads(
-                self.fs.read_text(f"{self._path(table_name)}/{LOG_DIR}/{f}")
-            )
-            out.append(
-                {
-                    "version": man["v"],
-                    "operation": man.get("op"),
-                    "operation_parameters": man.get("op_params"),
-                    "ts_us": man.get("ts"),
-                    "n_segments": len(man["segments"]),
-                    "n_paths": sum(len(b) for b in man["segments"].values()),
-                    "current": man["v"] == cur,
-                }
-            )
-        return sorted(out, key=lambda d: d["version"])
+        return [
+            {
+                "version": man["v"],
+                "operation": man.get("op"),
+                "operation_parameters": man.get("op_params"),
+                "ts_us": man.get("ts"),
+                "n_segments": len(man["segments"]),
+                "n_paths": sum(len(b) for b in man["segments"].values()),
+                "current": man["v"] == cur,
+            }
+            for man in kt_log.live_versions(self.fs, self._path(table_name))
+        ]
 
     def table_detail(
         self, table_name: str, *, schema: str | None = None
@@ -1461,7 +1268,9 @@ class KeyedCatalog:
             # vs the skipping payload only pruning probes read (0 /
             # absent file name while it still rides inline)
             "manifest_bytes": len(
-                self.fs.read_text(f"{self._path(table_name)}/{LOG_FILE}")
+                self.fs.read_text(
+                    kt_log.version_path(self._path(table_name), man["v"])
+                )
             ),
             "skip_sidecar_bytes": (
                 len(
@@ -1790,9 +1599,9 @@ class KeyedCatalog:
         exactly those of historical ``version``. The version chain
         only ever moves forward — the bad commits stay in history (and
         in ``table_changes``/``history()``), so a restore is itself
-        auditable and restorable, unlike rewinding the CURRENT
-        pointer, which would silently orphan commits and break the
-        OCC put-if-absent chain.
+        auditable and restorable, unlike rewinding the head, which
+        would silently orphan commits and break the OCC put-if-absent
+        chain.
 
         Metadata-only and O(manifest): segments are immutable, so
         re-referencing them costs one JSON write no matter how many
@@ -2460,72 +2269,52 @@ class KeyedCatalog:
         dry_run: bool = False,
         orphan_age_s: float = SKIP_ORPHAN_RETENTION_S,
     ) -> list[str]:
-        """Delete segments no longer referenced by the CURRENT manifest
+        """Delete segments no longer referenced by the head manifest
         (tombstoned by upserts or orphaned by a writer crash), then
         prune history snapshots that referenced them — vacuum truncates
         time travel, exactly the Delta/Iceberg VACUUM tradeoff.
         Returns deleted segment names.
 
-        Concurrent-writer safety (r10 verdict ask #8, Delta's
-        retention-window rule): a segment directory NO version file
-        has ever referenced is indistinguishable from an in-flight
-        commit's staged segment — _commit deliberately writes data
-        before claiming the manifest — so such directories are only
-        reclaimed once older than ``orphan_age_s`` (default mirrors
-        the skip-sidecar retention: no live commit spans an hour
-        between its two steps). Segments some version file DID
-        reference are committed-and-superseded garbage; no writer can
-        re-stage them, so they reclaim immediately regardless of age.
-        With the age gate at its default a vacuum can run while
-        writers commit (the soak test races three drivers against it);
-        ``orphan_age_s=0`` restores stop-the-world semantics for
-        offline crash cleanup, where a fresh claimless segment is
-        known dead. History pruning still requires writers' ancestry
-        walks to stay inside ``retain_last`` — keep a window of a few
-        versions when vacuuming hot tables.
+        A pruned version file is overwritten with a stub, never
+        deleted (:mod:`pandabase_spark.kt_log`): its slot stays used,
+        so a writer still planning on an old snapshot loses its claim
+        instead of committing below the head. The stubs are written
+        BEFORE the segments they referenced are deleted, so a crash in
+        between leaves unreferenced segments for the next vacuum,
+        never a live version pointing at missing data.
+
+        Concurrent-writer safety (Delta's retention-window rule): a
+        segment directory NO version file has ever referenced is
+        indistinguishable from an in-flight commit's staged segment —
+        _commit deliberately writes data before claiming its version
+        — so such directories are only reclaimed once older than
+        ``orphan_age_s`` (default mirrors the skip-sidecar retention:
+        no live commit spans an hour between staging and claiming).
+        Segments some version file DID reference are
+        committed-and-superseded garbage; no writer can re-stage them,
+        so they reclaim immediately regardless of age. With the age
+        gate at its default a vacuum can run while writers commit (the
+        soak test races three drivers against it); ``orphan_age_s=0``
+        restores stop-the-world semantics for offline crash cleanup,
+        where a fresh claimless segment is known dead.
 
         ``retain_last=N`` protects a RETENTION WINDOW (Delta's
         ``RETAIN``): segments and DV sidecars referenced by any of the
-        last N versions BELOW current stay on disk and those snapshots
-        stay readable/restorable — only history older than the window
-        is truncated. The default (0) keeps today's semantics: only
-        the current snapshot survives. At 100 TB this is what lets a
-        nightly vacuum coexist with readers pinned to recent
-        snapshots and with same-day RESTORE.
+        last N versions BELOW the head stay on disk and those
+        snapshots stay readable/restorable — only history older than
+        the window is truncated. The default (0) keeps only the head
+        snapshot. At 100 TB this is what lets a nightly vacuum coexist
+        with readers pinned to recent snapshots and with same-day
+        RESTORE.
 
         ``dry_run=True`` (Delta's ``VACUUM ... DRY RUN``) returns the
-        same list WITHOUT deleting anything — the safety preview
-        before truncating time travel (history files are left intact
-        too, since nothing they reference is removed)."""
+        same list WITHOUT writing or deleting anything — the safety
+        preview before truncating time travel."""
+        import time as _time
+
         table_name = self._qualify(table_name, schema)
+        tpath = self._path(table_name)
         cur_man = self._manifest(table_name)
-        # Repair a regressed CURRENT pointer BEFORE reclaiming
-        # anything: under the bounded delayed-publish anomaly the
-        # pointer can sit below the claim-chain head vacuum is about
-        # to treat as current. Pruning the intermediate version files
-        # would then strand the pointer's head-walk at the stale
-        # snapshot — whose tombstoned segments this very vacuum
-        # deletes — turning a benign, self-healing regression into
-        # unreadable data (caught by the r11 three-writer/vacuum
-        # soak work; deterministic repro in test_storage_v2.py).
-        if not dry_run:
-            cur_path = f"{self._path(table_name)}/{LOG_FILE}"
-
-            def _pointer_v() -> int:
-                if not self.fs.exists(cur_path):
-                    return 0
-                return json.loads(self.fs.read_text(cur_path))["v"]
-
-            try:
-                if _pointer_v() < cur_man["v"]:
-                    self._repair_regressed_pointer(table_name, cur_path)
-                if _pointer_v() < cur_man["v"]:
-                    # repair did not take (IO race / failure): vacuum
-                    # must NOT reclaim against a pointer it could not
-                    # heal — no-op and let the next commit publish
-                    return []
-            except Exception:
-                return []
         protected = [cur_man]
         for v in range(
             cur_man["v"] - 1, max(cur_man["v"] - 1 - retain_last, 0), -1
@@ -2533,49 +2322,43 @@ class KeyedCatalog:
             try:
                 protected.append(self._manifest(table_name, version=v))
             except NameError:
-                # a previously-vacuumed version leaves a GAP, not an
-                # end: intact older snapshots inside the requested
-                # window must still be protected
+                # a previously-vacuumed version is a stub, not an end:
+                # intact older snapshots inside the requested window
+                # must still be protected
                 continue
         live = {seg for man in protected for seg in man["segments"]}
         live_dvs = {
             f for man in protected for f in _man_dv_files(man)
         }
         protected_vs = {man["v"] for man in protected}
-        gone = []
-        import time as _time
-
         seg_horizon = _time.time() - orphan_age_s
         # Lazy log-history scan, shared by the segment and DV loops.
         # ONLY versions at or below the vacuum snapshot count as
         # "committed and superseded": a claim that landed ABOVE our
         # snapshot while we ran references segments/DVs that are LIVE
         # at the new head, not garbage — counting it would delete a
-        # racing writer's just-committed data (r11 review finding; the
-        # window between the _manifest read and this scan is narrow
-        # but real). The scan returns four sets: segments / DV files
-        # ever referenced ≤ snapshot, and segments / DV files
-        # referenced ABOVE the snapshot (a rival's committed data —
-        # never reclaimable by this vacuum). The future-SEGMENT set
-        # matters for exactly one op (r12 review finding): a racing
+        # racing writer's just-committed data. The scan returns four
+        # sets: segments / DV files ever referenced ≤ snapshot, and
+        # segments / DV files referenced ABOVE the snapshot (a rival's
+        # committed data — never reclaimable by this vacuum). The
+        # future-SEGMENT set matters for exactly one op: a racing
         # restore_table is metadata-only and re-references OLD
         # segments, so a segment that is both past-superseded and
         # future-restored must survive or the restored head becomes
         # unreadable.
-        log_dir0 = f"{self._path(table_name)}/{LOG_DIR}"
+        log_dir = f"{tpath}/{LOG_DIR}"
         _hist: "tuple[set, set, set, set] | None" = None
 
-        # Bounded walk (r12 verdict ask #4): at a 10^4-commit table
-        # the naive scan is 10^4 driver-side JSON reads per vacuum.
-        # Version files are IMMUTABLE once written (OCC claims never
-        # rewrite a version), so the union of segments/DVs referenced
-        # by versions <= some floor is immutable history — vacuum
-        # caches it in one summary sidecar and later vacuums read
-        # only manifests ABOVE the cached floor. The summary is a
-        # pure cache: unreadable/missing/ahead-of-snapshot (a
-        # regressed pointer must not let "future" data be classified
-        # "past") all fall back to the full scan.
-        summary_path = f"{log_dir0}/_vacuum_history.summary.json"
+        # Bounded walk: at a 10^4-commit table the naive scan is 10^4
+        # driver-side JSON reads per vacuum. A version file changes at
+        # most once after its claim — into a stub, once its segments
+        # stopped being live — so the union of segments/DVs referenced
+        # by versions <= some floor is immutable history: vacuum
+        # caches it in one summary sidecar and later vacuums read only
+        # manifests ABOVE the cached floor. The summary is a pure
+        # cache: unreadable/missing/ahead-of-snapshot all fall back to
+        # the full scan.
+        summary_path = f"{log_dir}/_vacuum_history.summary.json"
 
         def _history() -> "tuple[set, set, set, set]":
             nonlocal _hist
@@ -2596,25 +2379,13 @@ class KeyedCatalog:
             except Exception:
                 floor = -1
                 past_segs, past_dvs = set(), set()
-            if self.fs.exists(log_dir0):
-                for f in self.fs.list_files(log_dir0):
-                    if not _is_version_file(f):
-                        continue
-                    fv = int(f.split(".")[0])
-                    if fv <= floor:
-                        continue  # covered by the cached union
-                    try:
-                        man = json.loads(
-                            self.fs.read_text(f"{log_dir0}/{f}")
-                        )
-                    except Exception:
-                        continue
-                    if fv > cur_man["v"]:
-                        future_segs |= set(man.get("segments", {}))
-                        future_dvs |= _man_dv_files(man)
-                    else:
-                        past_segs |= set(man.get("segments", {}))
-                        past_dvs |= _man_dv_files(man)
+            for man in kt_log.live_versions(self.fs, tpath, above=floor):
+                if man["v"] > cur_man["v"]:
+                    future_segs |= set(man.get("segments", {}))
+                    future_dvs |= _man_dv_files(man)
+                else:
+                    past_segs |= set(man.get("segments", {}))
+                    past_dvs |= _man_dv_files(man)
             _hist = (past_segs, past_dvs, future_segs, future_dvs)
             if not dry_run:
                 try:
@@ -2627,29 +2398,27 @@ class KeyedCatalog:
                     pass  # cache refresh is best-effort
             return _hist
 
-        for d in self.fs.list_dirs(self._path(table_name)):
+        # table-relative paths of everything this vacuum reclaims
+        gone: list[str] = []
+        for d in self.fs.list_dirs(tpath):
             if not (d.startswith("seg-") and d not in live):
                 continue
-            p = f"{self._path(table_name)}/{d}"
+            p = f"{tpath}/{d}"
             if orphan_age_s > 0:
                 past_segs, _, future_segs, _ = _history()
                 if d in future_segs:
                     continue  # re-referenced above our snapshot (restore)
                 if d not in past_segs and self.fs.mtime(p) > seg_horizon:
                     continue  # possibly an in-flight writer's staged seg
-            if not dry_run:
-                self.fs.delete(p)
             gone.append(d)
         # DV sidecars get the SAME concurrent-writer protections as
-        # segments (r11 advice, high): a racing DV-path delete/update/
-        # merge stages its dv-* parquet BEFORE claiming the manifest,
-        # and a rival's DV committed above the vacuum snapshot is
-        # absent from live_dvs — both were previously reclaimed
-        # unconditionally, leaving the committed version unreadable.
-        # Now: never reclaim a DV some version ABOVE the snapshot
+        # segments: a racing DV-path delete/update/merge stages its
+        # dv-* parquet BEFORE claiming its version, and a rival's DV
+        # committed above the vacuum snapshot is absent from live_dvs.
+        # So: never reclaim a DV some version ABOVE the snapshot
         # references, and age-gate young DVs no version ≤ snapshot has
         # ever referenced (indistinguishable from an in-flight stage).
-        dv_root = f"{self._path(table_name)}/{DV_DIR}"
+        dv_root = f"{tpath}/{DV_DIR}"
         if self.fs.exists(dv_root):
             for d in self.fs.list_dirs(dv_root):
                 if d in live_dvs:
@@ -2661,67 +2430,59 @@ class KeyedCatalog:
                         continue  # a rival committed it above our snapshot
                     if d not in past_dvs and self.fs.mtime(p) > seg_horizon:
                         continue  # possibly an in-flight writer's staged DV
-                if not dry_run:
-                    self.fs.delete(p)
                 gone.append(f"{DV_DIR}/{d}")
         if dry_run:
             return gone
-        log_dir = f"{self._path(table_name)}/{LOG_DIR}"
         log_files = self.fs.list_files(log_dir)
         if not gone and not any(
             f.endswith(".skip.json") for f in log_files
         ):
-            # nothing reclaimed and no skip sidecars to cross-check:
-            # the prune/retention loops below would read every
-            # manifest only to keep everything — skip the O(versions)
-            # driver-side JSON walk (append-heavy tables hit this on
-            # every routine vacuum)
+            # nothing to reclaim and no skip sidecars to cross-check:
+            # every non-stub version at or below the head is either
+            # protected or references only segments that exist, so
+            # the O(versions) walk below would keep everything
             return gone
         kept_skips: set[str] = set()
-        for f in log_files:
-            if not _is_version_file(f):
-                continue
-            man = json.loads(self.fs.read_text(f"{log_dir}/{f}"))
-            man_dvs = _man_dv_files(man)
+        for man in kt_log.live_versions(self.fs, tpath):
             if (
                 gone
                 # versions ABOVE the vacuum snapshot are the FUTURE,
                 # not history: a rival's claim that landed while this
-                # vacuum ran is an acknowledged commit whose deletion
-                # would erase it from the chain (r11 review finding) —
-                # never prune upward, only truncate below the window
+                # vacuum ran is an acknowledged commit — never prune
+                # upward, only truncate below the window
                 and man["v"] <= cur_man["v"]
                 and man["v"] not in protected_vs
                 and (
                     not set(man["segments"]) <= live
-                    or not man_dvs <= live_dvs
+                    or not _man_dv_files(man) <= live_dvs
                 )
             ):
-                self.fs.delete(f"{log_dir}/{f}", recursive=False)
+                self.fs.write_text_atomic(
+                    kt_log.version_path(tpath, man["v"]),
+                    kt_log.stub(man["v"]),
+                )
             elif man.get("skip"):
                 kept_skips.add(man["skip"])
+        for d in gone:
+            self.fs.delete(f"{tpath}/{d}")
         # skipping sidecars live and die with their manifest; a
         # sidecar no surviving manifest references (its version was
         # pruned above, or its writer crashed/lost the OCC race before
-        # publishing) is reclaimed here. Guard: _commit deliberately
-        # writes the sidecar BEFORE claiming the manifest, so an
+        # claiming) is reclaimed here. Guard: _commit deliberately
+        # writes the sidecar BEFORE claiming its version, so an
         # IN-FLIGHT commit's sidecar is unreferenced but must survive
         # — its name encodes the version it is committing
         # (``{v:010d}-{writer}.skip.json``), which is strictly greater
-        # than the CURRENT version until the claim lands. Only
-        # sidecars at or below the current version (orphans by
-        # construction: their version already committed without them,
-        # or was vacuumed) are reclaimed — EXCEPT that an above-current
-        # sidecar whose writer crashed between sidecar and claim would
-        # otherwise leak forever on a cold table, so above-current
-        # sidecars older than a retention age (mirroring Delta's
-        # retention-window handling of staged files) are reclaimed
-        # too: no live commit attempt spans hours between its two
-        # steps, and vacuum is stop-the-world by contract anyway.
-        import time as _time
-
+        # than the head version until the claim lands. Only sidecars
+        # at or below the head (orphans by construction: their
+        # version already committed without them, or was vacuumed)
+        # are reclaimed — EXCEPT that an above-head sidecar whose
+        # writer crashed between sidecar and claim would otherwise
+        # leak forever on a cold table, so above-head sidecars older
+        # than a retention age (mirroring Delta's retention-window
+        # handling of staged files) are reclaimed too.
         horizon = _time.time() - SKIP_ORPHAN_RETENTION_S
-        for f in self.fs.list_files(log_dir):
+        for f in log_files:
             if not f.endswith(".skip.json") or f in kept_skips:
                 continue
             try:
@@ -2863,6 +2624,14 @@ class KeyedCatalog:
         ingest: "dict[str, int] | None" = None,
     ) -> None:
         exists = self.has_table(table_name)
+        if (
+            exists
+            and how == "create_only"
+            and self._manifest(table_name)["v"] == 0
+        ):
+            # a create that crashed between its meta write and its
+            # claim committed nothing: the retry creates afresh
+            exists = False
         if exists and self._txn_applied(table_name, txn):
             return
         if exists and constraints:
@@ -4051,6 +3820,16 @@ class KeyedCatalog:
         missing = [k for k in m.keys if k not in source.columns]
         if missing:
             raise NameError(f"source lacks key columns: {missing}")
+        # bucket hashing and the key join both need the TABLE's key
+        # types: xxhash64 of an int and of the equal long differ, so an
+        # uncast source key lands in the wrong bucket and never matches
+        recast = {
+            k: F.col(k).cast(m.schema[k].dataType)
+            for k in m.keys
+            if source.schema[k].dataType != m.schema[k].dataType
+        }
+        if recast:
+            source = source.withColumns(recast)
         if isinstance(when_matched_update, str) and when_matched_update != "all":
             raise ValueError(
                 "when_matched_update must be 'all', a mapping, or None"

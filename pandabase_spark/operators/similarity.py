@@ -1061,26 +1061,9 @@ def _append_index_batch(
     idempotence semantics). ``txn=(app, batch_id)`` → dynamic
     partition overwrite of the batch's own ``txn=`` sub-partitions
     (replay replaces, never double-inserts); no txn → plain append
-    under a fresh adhoc label. Legacy single-level trees (pre-r12
-    write_ivf_index) keep the old single-level at-least-once append;
-    txn= on them raises instead of corrupting partition discovery."""
+    under a fresh adhoc label."""
     import uuid
 
-    legacy = _legacy_cell_layout(spark, f"{path}/data")
-    if legacy and txn is not None:
-        raise ValueError(
-            "append with txn= needs the txn-partitioned index "
-            "layout; this index was written by an older write_ivf_index "
-            "(bare cell=N leaves) — rebuild it to use idempotent appends"
-        )
-    if legacy:
-        (
-            batch.repartition("cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(f"{path}/data")
-        )
-        return
     if txn is not None:
         app = str(txn[0])
         if app == "base" or app.startswith(("compact-", "adhoc-")):
@@ -1535,52 +1518,16 @@ def ann_topk_ivfpq_indexed(
     )
 
 
-def _legacy_cell_layout(spark, data_path: str) -> bool:
-    """True when the index's data tree is the pre-r12 single-level
-    ``cell=N/part-*.parquet`` shape (no ``txn=`` sub-partitions).
-    Non-recursive listings of cell directories — names only, same
-    mechanism as :func:`_existing_cells` — scanning until one yields
-    EVIDENCE either way: an early cell directory can legitimately be
-    empty (a dynamic-partition-overwrite replay that replaced a
-    batch's leaves, a manually cleaned cell), and deciding "current
-    layout" from an empty first dir would let a later untagged append
-    write bare ``cell=N/part-*.parquet`` files next to legacy leaves
-    in OTHER cells — a mixed-depth tree Spark partition discovery
-    rejects outright ("Conflicting directory structures"). Only when
-    NO cell directory yields evidence (empty index) do we assume the
-    current layout."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(data_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return False
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if not name.startswith("cell="):
-            continue
-        for sub in fs.listStatus(st.getPath()):
-            sub_name = sub.getPath().getName()
-            if sub_name.startswith("txn="):
-                return False
-            if sub_name.endswith(".parquet"):
-                return True
-        # this cell dir was empty/ambiguous: keep scanning — a later
-        # cell may still hold bare parquet leaves (legacy evidence)
-    return False
-
-
 def _existing_cells(spark, data_path: str) -> "set[int]":
     """Cell ids that actually have a ``cell=<c>`` partition directory
-    under ``data_path`` — one non-recursive Hadoop ``listStatus`` (names
-    only; works on any FileSystem the session can read). The quantizer
-    may legitimately contain cells no vector was assigned to; probing
+    under ``data_path`` — one non-recursive listing (names only; works
+    on any FileSystem the session can read). The quantizer may
+    legitimately contain cells no vector was assigned to; probing
     those must be a no-op, not a PATH_NOT_FOUND crash."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(data_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    from pandabase_spark.fs import HadoopFS
+
     out: "set[int]" = set()
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
+    for name in HadoopFS(spark).list_dirs(data_path):
         if name.startswith("cell="):
             try:
                 out.add(int(name[5:]))
@@ -1848,12 +1795,6 @@ def compact_index(
 
     fs = HadoopFS(spark)
     data = f"{path}/data"
-    if _legacy_cell_layout(spark, data):
-        raise ValueError(
-            "compact_index needs the txn-partitioned index layout; "
-            "this index was written by an older write_ivf_index (bare "
-            "cell=N leaves) — rebuild it to enable compaction"
-        )
     import time as _time
 
     state = _load_compaction_state(spark, path)

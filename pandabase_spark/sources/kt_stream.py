@@ -12,7 +12,8 @@ Semantics (same contract as Delta's table-as-source):
 
 - **Offsets are manifest versions.** ``initialOffset`` starts at
   ``starting_version`` (default 0 = the whole existing table streams
-  as the first batch); ``latestOffset`` is the CURRENT pointer. A
+  as the first batch); ``latestOffset`` is the log head (the newest
+  claimed version, whether or not its hint was written yet). A
   micro-batch (s, e] emits every (segment, bucket) leaf present at e
   but not at s — for append-only history that is exactly the new
   rows, each exactly once.
@@ -55,8 +56,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_LOG_DIR = "_pb_log"
-_LOG_FILE = "_pandabase_log.json"
+from pandabase_spark import kt_log
+
 _META_FILE = "_pandabase_meta.json"
 _PART_DIR = "_pb_b"
 
@@ -67,14 +68,18 @@ def _read_json(path: str) -> dict:
 
 
 def _manifest_at(table_dir: str, v: int) -> dict:
-    p = os.path.join(table_dir, _LOG_DIR, f"{v:010d}.json")
-    if not os.path.exists(p):
+    man = kt_log.read_version(kt_log.LocalFS, table_dir, v)
+    if man is None:
         raise ValueError(
             f"streaming source needs manifest v{v} of {table_dir!r} "
             "but it was truncated by vacuum(); restart the stream "
             "from a retained starting_version"
         )
-    return _read_json(p)
+    return man
+
+
+def _latest_offset(table_dir: str) -> dict:
+    return {"version": int(kt_log.head(kt_log.LocalFS, table_dir)["v"])}
 
 
 def _leaves(man: dict) -> "set[tuple[str, int]]":
@@ -108,10 +113,7 @@ class _KTStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self):
-        p = os.path.join(self._dir, _LOG_FILE)
-        if not os.path.exists(p):
-            return {"version": 0}
-        return {"version": int(_read_json(p)["v"])}
+        return _latest_offset(self._dir)
 
     def partitions(self, start, end):
         s, e = int(start["version"]), int(end["version"])
@@ -209,10 +211,7 @@ class _CommitEventsReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self):
-        p = os.path.join(self._dir, _LOG_FILE)
-        if not os.path.exists(p):
-            return {"version": 0}
-        return {"version": int(_read_json(p)["v"])}
+        return _latest_offset(self._dir)
 
     def partitions(self, start, end):
         s, e = int(start["version"]), int(end["version"])

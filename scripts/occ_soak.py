@@ -13,8 +13,8 @@ DETERMINISTIC restore round-trip runs on the soaked table: restore
 to an older surviving version must reproduce that snapshot exactly
 (time-travel read as the oracle), and restoring forward to the
 pre-exercise head must reproduce the model state. Records per-seed
-conflicts, pointer repairs, and all check outcomes to
-scripts/occ_soak_r12.json.
+conflicts and all check outcomes to
+scripts/occ_soak.json.
 
 Run: python scripts/occ_soak.py [n_seeds] [n_ops]
 """
@@ -124,27 +124,19 @@ def run_seed(seed: int, n_ops: int = 24) -> dict:
         # record the red signal instead of crashing the seed
         model_after_drop = False
 
-    # the vacuum-meets-roll-forward window, injected deterministically
-    # on the soaked table: regress CURRENT to an older surviving claim
-    # (the delayed-publish anomaly) and vacuum — it must republish the
-    # head BEFORE pruning (counted as a repaired-pointer event) and
-    # the table must still read the head snapshot
-    from pandabase_spark.io import LOG_DIR, LOG_FILE
+    # a stale hint on the soaked table: point it at an older surviving
+    # version and vacuum — vacuum must reclaim against the log head,
+    # and the table must still read the head snapshot
+    from pandabase_spark import kt_log
 
     tpath = boot._path("t")
-    head_v = boot._manifest("t")["v"]
-    for v in range(head_v - 1, 0, -1):
-        vf = f"{tpath}/{LOG_DIR}/{v:010d}.json"
-        if boot.fs.exists(vf):
-            boot.fs.write_text_atomic(
-                f"{tpath}/{LOG_FILE}", boot.fs.read_text(vf)
-            )
-            break
+    below_head = [h["version"] for h in boot.history("t")][:-1]
+    if below_head:
+        boot.fs.write_text_atomic(
+            kt_log.hint_path(tpath),
+            boot.fs.read_text(kt_log.version_path(tpath, below_head[-1])),
+        )
     boot.vacuum("t", retain_last=5)
-    repair_events = getattr(boot, "pointer_repairs", 0)
-    pointer_v = json.loads(
-        boot.fs.read_text(f"{tpath}/{LOG_FILE}")
-    )["v"]
     got2 = {r["k"]: r["v"] for r in boot.read_table("t").collect()}
 
     # deterministic restore round-trip on the soaked table (r11 ask
@@ -173,14 +165,10 @@ def run_seed(seed: int, n_ops: int = 24) -> dict:
         "seed": seed,
         "ops_applied": sum(len(r["applied"]) for r in reports),
         "conflicts": sum(r["conflicts"] for r in reports),
-        "pointer_repairs": sum(r.get("pointer_repairs", 0) for r in reports)
-        + repair_events,
-        "vacuum_repaired_pointer_to_head": pointer_v == head_v
-        and repair_events >= 1,
         "rows_expected": len(expected),
         "rows_got": len(got),
         "model_match": model_match,
-        "model_match_after_vacuum_repair": got2 == expected,
+        "model_match_after_stale_hint_vacuum": got2 == expected,
         "restore_roundtrip": restore_roundtrip,
         "schema_eras_ok": schema_eras_ok,
         "model_match_after_drop": model_after_drop,
@@ -203,8 +191,7 @@ def main() -> None:
         "seeds": seeds,
         "all_green": all(
             s["model_match"]
-            and s["model_match_after_vacuum_repair"]
-            and s["vacuum_repaired_pointer_to_head"]
+            and s["model_match_after_stale_hint_vacuum"]
             and s["restore_roundtrip"] in (True, None)
             and s["schema_eras_ok"]
             and s["model_match_after_drop"]
@@ -212,9 +199,8 @@ def main() -> None:
             for s in seeds
         ),
         "total_conflicts": sum(s["conflicts"] for s in seeds),
-        "total_pointer_repairs": sum(s["pointer_repairs"] for s in seeds),
     }
-    path = os.path.join(REPO, "scripts", "occ_soak_r13.json")
+    path = os.path.join(REPO, "scripts", "occ_soak.json")
     with open(path, "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps(out))

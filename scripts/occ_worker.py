@@ -186,7 +186,6 @@ def main() -> None:
             "worker": wid,
             "applied": applied,
             "conflicts": conflicts,
-            "pointer_repairs": getattr(cat, "pointer_repairs", 0),
         }
     ))
 

@@ -13,7 +13,7 @@ it two ways:
   sidecars to cross-check.
 
 This script synthesizes an N-version claim chain (structurally valid
-manifests: linked cid/parent, live segments) on a real table, plants
+manifests referencing the live segments) on a real table, plants
 reclaimable garbage, and measures:
 
   cold_reclaim_s   first reclaiming vacuum (full scan, writes cache)
@@ -70,21 +70,16 @@ def main() -> None:
         cat.fs.read_text(f"{tpath}/{LOG_DIR}/0000000001.json")
     )
 
-    # synthesize an N-version linked chain above v1: each version is
-    # a structurally valid manifest (fresh cid, parent = previous cid)
-    # referencing the SAME live segments — the append-heavy history
-    # shape where nothing is ever tombstoned
+    # synthesize an N-version chain above v1: each version is a
+    # structurally valid manifest referencing the SAME live segments —
+    # the append-heavy history shape where nothing is ever tombstoned
     t0 = time.time()
-    parent = base["cid"]
     man = dict(base)
     for v in range(2, N_VERSIONS + 1):
-        cid = uuid.uuid4().hex
-        man.update(v=v, cid=cid, parent=parent, op="append",
-                   ts=base["ts"] + v)
+        man.update(v=v, op="append", ts=base["ts"] + v)
         cat.fs.write_text_atomic(
             f"{tpath}/{LOG_DIR}/{v:010d}.json", json.dumps(man)
         )
-        parent = cid
     cat.fs.write_text_atomic(f"{tpath}/{LOG_FILE}", json.dumps(man))
     synth_s = round(time.time() - t0, 1)
 

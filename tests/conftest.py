@@ -20,24 +20,17 @@ from pandabase_spark.io import KeyedCatalog
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
-# Two-tier suite (r14 verdict ask #6): the DEFAULT invocation
-# (`python -m pytest tests/ -x -q`, the driver's fixed gate command)
-# runs every FUNCTIONAL test; the stress/fuzz tier below — randomized
+# Two-tier suite: the DEFAULT invocation (`python -m pytest tests/ -q`)
+# runs every FUNCTIONAL test; tests marked ``full_tier`` — randomized
 # model walks, multi-writer OCC soaks, the recall sweep, the
-# compaction-bound soak, ~5 min of the suite's wall that repeatedly
-# exercises paths the functional tests already cover once — is
-# skipped unless SPARK_GRAFT_FULL_TESTS=1. The full tier is what the
-# builder runs for round validation; the fast tier is what keeps the
-# driver's verify window from timing out (r14: tests_ok=false at 88%
-# with zero failures, purely a wall-clock overrun).
-_FULL_TIER_ONLY = {
-    "test_random_ddl_dml_walk_matches_model",
-    "test_random_dml_walk_matches_model",
-    "test_occ_three_writer_vacuum_soak",
-    "test_occ_two_driver_race",
-    "test_pq_recall_planted_and_corpus",
-    "test_auto_compact_bounds_live_segments",
-}
+# compaction-bound soak: minutes of wall that repeatedly exercise paths
+# the functional tests already cover once — are skipped unless
+# SPARK_GRAFT_FULL_TESTS=1.
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "full_tier: stress/fuzz test, run only with SPARK_GRAFT_FULL_TESTS=1",
+    )
 
 
 def pytest_collection_modifyitems(config, items):
@@ -47,7 +40,7 @@ def pytest_collection_modifyitems(config, items):
         reason="stress/fuzz tier — set SPARK_GRAFT_FULL_TESTS=1"
     )
     for it in items:
-        if it.name.split("[")[0] in _FULL_TIER_ONLY:
+        if it.get_closest_marker("full_tier"):
             it.add_marker(skip)
 
 

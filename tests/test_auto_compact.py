@@ -11,6 +11,7 @@ raw write path).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from pandabase_spark.io import KeyedCatalog
 
@@ -21,6 +22,7 @@ def _batch(spark, lo, hi):
     )
 
 
+@pytest.mark.full_tier
 def test_auto_compact_bounds_live_segments(spark, tmp_path):
     cat = KeyedCatalog(
         spark, str(tmp_path / "wh"), default_buckets=4,

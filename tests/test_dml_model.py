@@ -34,6 +34,7 @@ def _read(catalog, t):
     }
 
 
+@pytest.mark.full_tier
 @pytest.mark.parametrize("seed", [7, 23])
 def test_random_dml_walk_matches_model(spark, catalog, seed):
     rng = random.Random(seed)
@@ -121,6 +122,7 @@ def test_random_dml_walk_matches_model(spark, catalog, seed):
         assert got == snap, f"seed={seed} version={ver}"
 
 
+@pytest.mark.full_tier
 @pytest.mark.parametrize("seed", [11, 37, 59])
 def test_random_ddl_dml_walk_matches_model(spark, catalog, tmp_path, seed):
     """The round-8/9 extension of the walk: MERGE clauses (incl. WHEN

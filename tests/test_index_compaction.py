@@ -16,8 +16,7 @@ be the only mitigation. Contracts pinned here:
 - crash at any point (uncommitted fold leaves, committed-but-pending
   deletes) is never served wrong and a re-run converges;
 - reserved label shapes (base / adhoc-* / compact-*) cannot be
-  aliased by a user txn app id;
-- legacy (pre-txn) trees raise instead of corrupting discovery.
+  aliased by a user txn app id.
 
 The reference has no index maintenance surface at all (pandas +
 SQLAlchemy, reference:pandabase/pandabase.py); this is engine
@@ -274,23 +273,6 @@ def test_reserved_txn_app_prefixes_raise(spark, tmp_path):
     for bad in ("base", "compact-7", "adhoc-x"):
         with pytest.raises(ValueError, match="reserved"):
             append_ivf_index(emb.limit(5), path, txn=(bad, 0))
-
-
-def test_compact_legacy_layout_raises(spark, tmp_path):
-    import glob
-    import shutil
-
-    emb = _emb(spark)
-    path = str(tmp_path / "idx")
-    write_ivf_index(emb.limit(80), path, n_cells=2, iters=1)
-    # rebuild the pre-r12 single-level shape: hoist files out of txn=
-    for cell_dir in glob.glob(f"{path}/data/cell=*"):
-        for txn_dir in glob.glob(f"{cell_dir}/txn=*"):
-            for f_ in os.listdir(txn_dir):
-                shutil.move(f"{txn_dir}/{f_}", f"{cell_dir}/{f_}")
-            os.rmdir(txn_dir)
-    with pytest.raises(ValueError, match="legacy|older|rebuild"):
-        compact_index(spark, path)
 
 
 def test_compact_residual_ivfpq_serves_identical(spark, tmp_path):

@@ -37,6 +37,15 @@ def test_offsets_track_manifest_versions(spark, catalog):
     assert r.latestOffset() == {"version": 1}
     catalog.to_table(_batch(spark, 10, 20), "st_a", keys=["k"], how="append")
     assert r.latestOffset() == {"version": 2}
+    # the offset follows the claims, not the hint: a commit whose hint
+    # write never happened is offered to the stream at once
+    from pandabase_spark.io import LOG_FILE
+
+    hint = f"{catalog._path('st_a')}/{LOG_FILE}"
+    saved = catalog.fs.read_text(hint)
+    catalog.to_table(_batch(spark, 20, 30), "st_a", keys=["k"], how="append")
+    catalog.fs.write_text_atomic(hint, saved)
+    assert r.latestOffset() == {"version": 3}
 
 
 def _drain(reader, start, end):

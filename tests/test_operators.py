@@ -671,6 +671,7 @@ def test_co_occurrence_lift_known_values(spark):
                 if r["item_a"].startswith("m")]
 
 
+@pytest.mark.full_tier
 def test_pq_recall_planted_and_corpus(spark):
     """PQ asymmetric distance: planted near-identical vectors are
     top-1 (their codes quantize identically — the high-signal
@@ -1136,56 +1137,6 @@ def test_append_ivf_index_txn_replay_idempotent(spark, tmp_path):
     append_ivf_index(extra, path)
     append_ivf_index(extra, path)
     assert data().count() == n0 + 2 * extra.count()
-
-
-def test_append_ivf_index_legacy_layout_guard(spark, tmp_path):
-    """r12 review finding: an index persisted by the pre-txn writer
-    has bare parquet files at data/cell=N/; a txn-partitioned append
-    into that tree would hand Spark mixed-depth leaves and break
-    EVERY later read. append_ivf_index must sniff the layout: legacy
-    indexes keep the old single-level at-least-once append (and stay
-    readable), and txn= idempotence on them raises instead of
-    corrupting the tree."""
-    import glob
-    import os
-    import shutil
-
-    import pytest
-
-    from pandabase_spark.operators.similarity import (
-        ann_topk_indexed, append_ivf_index, cosine_topk,
-        write_ivf_index,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    path = str(tmp_path / "idx")
-    write_ivf_index(
-        emb.where("vec_id % 2 = 0"), path, n_cells=8, iters=2,
-        sample_mod=2,
-    )
-    # flatten to the pre-r12 layout: hoist each cell's parquet files
-    # out of its txn=base subdir
-    for cell_dir in glob.glob(f"{path}/data/cell=*"):
-        for txn_dir in glob.glob(f"{cell_dir}/txn=*"):
-            for f in os.listdir(txn_dir):
-                shutil.move(f"{txn_dir}/{f}", f"{cell_dir}/{f}")
-            os.rmdir(txn_dir)
-    # txn-idempotent append on a legacy tree: refused loudly
-    with pytest.raises(ValueError, match="older write_ivf_index"):
-        append_ivf_index(
-            emb.where("vec_id % 2 = 1"), path, txn=("app", 0)
-        )
-    # untagged append: lands single-level, index stays readable and
-    # full-probe still equals brute force over the whole corpus
-    append_ivf_index(emb.where("vec_id % 2 = 1"), path)
-    as_set = lambda df: {
-        (r["query_id"], r["vec_id"], round(r["cosine"], 6), r["rank"])
-        for r in df.collect()
-    }
-    got = as_set(ann_topk_indexed(
-        spark, path, emb.where("vec_id < 3"), k=8, nprobe=8,
-    ))
-    assert got == as_set(cosine_topk(emb, emb.where("vec_id < 3"), k=8))
 
 
 def test_ivfpq_persisted_index_serves_and_appends(spark, tmp_path):

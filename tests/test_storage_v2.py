@@ -36,8 +36,8 @@ def test_upsert_is_snapshot_atomic(spark, catalog):
     saved_manifest = catalog.fs.read_text(man_path)
 
     # do a real upsert, then roll BOTH commit artifacts back (the
-    # version-file claim is the linearization point, so a pre-commit
-    # crash means segment written, NO claim file, old CURRENT)
+    # version-file claim is the commit, so a pre-commit crash means
+    # segment written, NO claim file, old hint)
     patch = spark.range(50).select(
         F.col("id").alias("k"), F.lit(999.0).alias("v")
     )
@@ -404,19 +404,17 @@ def test_commit_detects_completed_concurrent_writer(spark, catalog):
 
 
 def test_crashed_writer_claim_rolls_forward(spark, catalog):
-    """A version file whose writer crashed between the claim and the
-    CURRENT publish is a COMPLETE commit (the claim is the
-    linearization point): readers resolve it as the head immediately,
-    and a rival committer rolls the pointer forward + raises
-    ConcurrentWriteError instead of overwriting it (the overwrite was
-    a lost-update hole under two racing drivers). The rival's retry
-    then lands on top of the recovered commit."""
+    """A writer that crashed after its claim but before writing the
+    hint has COMMITTED (the claim is the commit): readers see the
+    version at once, and a stale writer's claim on the same slot loses
+    without touching it. The loser's retry from the head lands on
+    top."""
     from pandabase_spark.io import ConcurrentWriteError, LOG_FILE, LOG_DIR
 
     df = spark.range(10).select(F.col("id").alias("k"), F.lit(1).alias("v"))
     catalog.to_table(df, "occ_o", keys=["k"])                    # v1
-    # simulate the crash: commit v2 for real, then roll ONLY the
-    # CURRENT pointer back (claim file stays — the crashed state)
+    # simulate the crash: commit v2 for real, then roll ONLY the hint
+    # back (claim file stays — the crashed state)
     cur_path = f"{catalog._path('occ_o')}/{LOG_FILE}"
     saved = catalog.fs.read_text(cur_path)
     catalog.to_table(
@@ -424,30 +422,98 @@ def test_crashed_writer_claim_rolls_forward(spark, catalog):
         keys=["k"], how="append",
     )                                                            # v2
     catalog.fs.write_text_atomic(cur_path, saved)
+    v2_path = f"{catalog._path('occ_o')}/{LOG_DIR}/0000000002.json"
+    v2_doc = catalog.fs.read_text(v2_path)
 
-    # readers resolve the head past the stale pointer
+    # readers resolve the head past the stale hint
     assert catalog._manifest("occ_o")["v"] == 2
     assert catalog.read_table("occ_o").count() == 20
 
-    # a rival committing against the resolved head simply wins (its
-    # snapshot was planned at v2); a rival pinned to the STALE pointer
-    # must conflict, not overwrite. Build the stale race by hand:
+    # a writer pinned to v1 loses the v2 claim and leaves it intact
     import pytest as _pytest
 
     man_v1 = catalog._manifest("occ_o", version=1)
-    with _pytest.raises(ConcurrentWriteError):
+    with _pytest.raises(ConcurrentWriteError, match="table is at v2"):
         catalog._commit("occ_o", dict(man_v1["segments"]), v=1)
-    # the crashed commit survived the loser and is now published
-    assert catalog.fs.exists(
-        f"{catalog._path('occ_o')}/{LOG_DIR}/0000000002.json"
-    )
+    assert catalog.fs.read_text(v2_path) == v2_doc
+    assert catalog.fs.read_text(cur_path) == saved
     assert catalog.read_table("occ_o").count() == 20
-    # the loser's retry from the fresh head lands cleanly
+    # the loser's retry from the head lands cleanly
     catalog.to_table(
         df.withColumn("k", F.col("k") + 200), "occ_o",
         keys=["k"], how="append",
     )
     assert catalog.read_table("occ_o").count() == 30
+
+
+def test_occ_smoke_two_threads(spark, tmp_path):
+    """Default-tier OCC smoke: two writers on one table, each through
+    its own catalog and thread. Their first commits are held at a
+    barrier so both plan against v1 and race for the v2 claim — one
+    must lose with ConcurrentWriteError, re-plan and retry; the final
+    table holds every row both writers committed."""
+    import threading
+
+    from pandabase_spark.io import ConcurrentWriteError
+
+    wh = str(tmp_path / "smoke_wh")
+    KeyedCatalog(spark, wh, default_buckets=2).to_table(
+        spark.createDataFrame([(0, 0.0)], "k bigint, v double"),
+        "smoke", keys=["k"],
+    )
+    barrier = threading.Barrier(2)
+    conflicts: list[int] = []
+    errors: list[Exception] = []
+
+    def writer(w: int) -> None:
+        cat = KeyedCatalog(spark, wh, default_buckets=2)
+        commit = cat._commit
+        gate = [True]
+
+        def gated(*args, **kwargs):
+            if gate[0]:
+                gate[0] = False
+                barrier.wait(timeout=300)
+            return commit(*args, **kwargs)
+
+        cat._commit = gated
+        keys = [1000 * w + i for i in range(5)]
+        batches = [
+            ("append", [(k, float(w)) for k in keys]),
+            ("upsert", [(k, float(k)) for k in keys[:2]]),
+        ]
+        try:
+            for how, rows in batches:
+                while True:
+                    try:
+                        cat.to_table(
+                            spark.createDataFrame(rows, "k bigint, v double"),
+                            "smoke", keys=["k"], how=how,
+                        )
+                        break
+                    except ConcurrentWriteError:
+                        conflicts.append(w)
+        except Exception as ex:  # surfaced by the main thread
+            errors.append(ex)
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads), "a writer hung"
+    assert not errors, errors
+    assert conflicts, "both writers claimed without a conflict"
+    model = {0: 0.0}
+    for w in (1, 2):
+        keys = [1000 * w + i for i in range(5)]
+        model.update({k: float(w) for k in keys})
+        model.update({k: float(k) for k in keys[:2]})
+    got = {
+        r["k"]: r["v"]
+        for r in KeyedCatalog(spark, wh).read_table("smoke").collect()
+    }
+    assert got == model
 
 
 def test_write_text_if_absent_put_semantics(spark, catalog):
@@ -458,13 +524,13 @@ def test_write_text_if_absent_put_semantics(spark, catalog):
 
 
 def test_stale_claim_after_vacuum_cannot_roll_back(spark, catalog):
-    """Vacuum prunes non-current version files, so a stale writer's
-    put-if-absent claim on an already-used version CAN succeed — the
-    commit must still detect that CURRENT moved on and raise instead
-    of republishing the stale document (which would roll the table
-    back past every newer commit)."""
+    """Vacuum prunes old version files by overwriting them with stubs,
+    never by deleting them, so a stale writer's put-if-absent claim on
+    an already-used version loses against the stub — it can neither
+    roll the table back nor reappear in the history."""
     import pytest as _pytest
 
+    from pandabase_spark import kt_log
     from pandabase_spark.io import LOG_DIR, ConcurrentWriteError
 
     df = spark.range(10).select(F.col("id").alias("k"), F.lit(1).alias("v"))
@@ -476,17 +542,16 @@ def test_stale_claim_after_vacuum_cannot_roll_back(spark, catalog):
         df.withColumn("v", F.lit(3)), "occ_v", keys=["k"], how="upsert"
     )                                                              # v3
     catalog.vacuum("occ_v")
-    log_dir = f"{catalog._path('occ_v')}/{LOG_DIR}"
-    # precondition: vacuum actually pruned v2's history file, so the
-    # stale claim below WILL win the put-if-absent
-    assert not catalog.fs.exists(f"{log_dir}/0000000002.json")
+    v2_file = f"{catalog._path('occ_v')}/{LOG_DIR}/0000000002.json"
+    # precondition: vacuum pruned v2 — its slot now holds a stub
+    assert kt_log.is_stub(json.loads(catalog.fs.read_text(v2_file)))
     with _pytest.raises(ConcurrentWriteError, match="v3"):
         catalog._commit("occ_v", {"seg-stale": [0]}, v=1)
-    # CURRENT untouched, and the stale claim file must not shadow the
-    # vacuumed snapshot in the history either
+    assert kt_log.is_stub(json.loads(catalog.fs.read_text(v2_file)))
     assert catalog._manifest("occ_v")["v"] == 3
-    assert not catalog.fs.exists(f"{log_dir}/0000000002.json")
-    assert [r["v"] for r in [catalog._manifest("occ_v")]] == [3]
+    assert [h["version"] for h in catalog.history("occ_v")] == [3]
+    with _pytest.raises(NameError, match="truncated by vacuum"):
+        catalog.read_table("occ_v", version=2)
     assert catalog.read_table("occ_v").agg(F.max("v")).first()[0] == 3
 
 
@@ -2012,6 +2077,7 @@ def test_compact_passes_retention_to_vacuum(spark, catalog):
     assert catalog.read_table("cr_t", version=2).count() == 160
 
 
+@pytest.mark.full_tier
 def test_occ_two_driver_race(spark, catalog, tmp_path):
     """THE 100 TB contention mode, for real: two INDEPENDENT Spark
     drivers (separate JVMs via subprocess, separate KeyedCatalog
@@ -2079,6 +2145,7 @@ def test_occ_two_driver_race(spark, catalog, tmp_path):
     boot.drop_table("occ_t")
 
 
+@pytest.mark.full_tier
 def test_occ_three_writer_vacuum_soak(spark, catalog, tmp_path):
     """r10 verdict ask #8: THREE independent Spark drivers race
     appends/upserts/deletes on one table while the third interleaves
@@ -2088,10 +2155,8 @@ def test_occ_three_writer_vacuum_soak(spark, catalog, tmp_path):
     segment dirs past the orphan retention) is what makes this safe:
     an in-flight rival's staged-but-unclaimed segment must survive the
     sweep. Asserts: every op applies, at least one genuine conflict,
-    zero rows lost or duplicated vs the order-independent model, and
-    the pointer-repair counter is reported per worker (the
-    roll-forward repair racing vacuum is exactly the r10 untested
-    window)."""
+    and zero rows lost or duplicated vs the order-independent
+    model."""
     import subprocess
     import sys as _sys
     import os as _os
@@ -2127,11 +2192,6 @@ def test_occ_three_writer_vacuum_soak(spark, catalog, tmp_path):
         f"three drivers interleaved {3 * n_ops} commits with zero "
         f"detected conflicts — OCC not exercised: {reports}"
     )
-    # repair observability: the counter rides every report (≥0; >0
-    # whenever a delayed publish actually regressed the pointer —
-    # frequency is race-dependent, correctness is the model check)
-    assert all("pointer_repairs" in r for r in reports), reports
-
     # order-independent model (same cycle as the two-driver test, one
     # more worker; vacuum slots change no rows)
     expected = {0: 0.0}
@@ -2230,70 +2290,69 @@ def test_key_equality_bucket_parser(spark, catalog):
         catalog.drop_table(t)
 
 
-def test_repair_regressed_pointer(spark, catalog):
-    """The bounded roll-forward anomaly, repaired at the source: when
-    CURRENT is regressed below the claim chain's head (a delayed
-    publish), _repair_regressed_pointer republishes the resolved head
-    so an EXTERNAL pointer-file reader (no _manifest head resolution)
-    never sees a stale snapshot past the repairing commit — the
-    ADVICE r9 crash-persistence hole."""
+def _stale_hint_table(spark, catalog, name):
+    """A three-version table (v = k, k + 1, k + 2) whose hint is forced
+    back to v1 while the log is at v3. Returns the hint's path."""
     from pandabase_spark.io import LOG_DIR
 
     df = spark.range(10).select(
         F.col("id").alias("k"), F.col("id").cast("double").alias("v")
     )
-    catalog.to_table(df, "rp_t", keys=["k"], num_buckets=2)            # v1
-    catalog.to_table(df.withColumn("v", F.col("v") + 1), "rp_t",
+    catalog.to_table(df, name, keys=["k"], num_buckets=2)              # v1
+    catalog.to_table(df.withColumn("v", F.col("v") + 1), name,
                      keys=["k"], how="upsert")                         # v2
-    catalog.to_table(df.withColumn("v", F.col("v") + 2), "rp_t",
+    catalog.to_table(df.withColumn("v", F.col("v") + 2), name,
                      keys=["k"], how="upsert")                         # v3
-    tpath = catalog._path("rp_t")
+    tpath = catalog._path(name)
     cur_path = f"{tpath}/{LOG_FILE}"
     v1_doc = catalog.fs.read_text(f"{tpath}/{LOG_DIR}/{1:010d}.json")
-    # simulate the delayed publish: pointer regressed to v1
     catalog.fs.write_text_atomic(cur_path, v1_doc)
     assert json.loads(catalog.fs.read_text(cur_path))["v"] == 1
-    # in-repo readers still heal through head resolution
+    return cur_path
+
+
+def test_repair_regressed_pointer(spark, catalog):
+    """A regressed hint (forced back to v1 while the log is at v3) is
+    advisory only: reads resolve the head through the version chain,
+    an append plans on the head and claims v4, and that commit — the
+    only writer of the hint — repairs it by rewriting it."""
+    cur_path = _stale_hint_table(spark, catalog, "rp_t")
+    head = {k: float(k + 2) for k in range(10)}
     assert catalog._manifest("rp_t")["v"] == 3
-    # the repair republishes the resolved head in place
-    catalog._repair_regressed_pointer("rp_t", cur_path)
-    assert json.loads(catalog.fs.read_text(cur_path))["v"] == 3
-    # idempotent when already at head
-    catalog._repair_regressed_pointer("rp_t", cur_path)
-    assert json.loads(catalog.fs.read_text(cur_path))["v"] == 3
+    assert {r["k"]: r["v"] for r in catalog.read_table("rp_t").collect()} == head
+    catalog.to_table(
+        spark.range(100, 110).select(
+            F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+        ),
+        "rp_t", keys=["k"], how="append",
+    )                                                                  # v4
+    assert json.loads(catalog.fs.read_text(cur_path))["v"] == 4
+    assert catalog._manifest("rp_t")["v"] == 4
+    got = {r["k"]: r["v"] for r in catalog.read_table("rp_t").collect()}
+    assert got == {**head, **{k: float(k) for k in range(100, 110)}}
     catalog.drop_table("rp_t")
 
 
 def test_vacuum_repairs_regressed_pointer_before_pruning(spark, catalog):
-    """Vacuum racing the delayed-publish anomaly (r10 verdict ask #8's
-    untested window, found REAL in r11): with CURRENT regressed below
-    the claim-chain head, pruning the intermediate version files would
-    strand the pointer's head-walk at the stale snapshot — whose
-    tombstoned segments the same vacuum deletes — leaving the table
-    unreadable. Vacuum must republish the resolved head FIRST (a
-    repaired-pointer event, counted), and if the repair cannot be
-    confirmed it must no-op rather than reclaim."""
+    """Vacuum under a regressed hint must not strand the table: it
+    reclaims against the head (v3), never against the hint (v1). It no
+    longer rewrites the hint; the stubs it leaves in v1's and v2's
+    slots keep the log free of holes, so the chase from the stale hint
+    still reaches v3 and the table reads the head's data — before this,
+    pruning under a regressed pointer left it stranded at v1 with v1's
+    segments gone (a PATH_NOT_FOUND read)."""
+    from pandabase_spark import kt_log
     from pandabase_spark.io import LOG_DIR
 
-    df = spark.range(10).select(
-        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
-    )
-    catalog.to_table(df, "vrp_t", keys=["k"], num_buckets=2)           # v1
-    catalog.to_table(df.withColumn("v", F.col("v") + 1), "vrp_t",
-                     keys=["k"], how="upsert")                         # v2
-    catalog.to_table(df.withColumn("v", F.col("v") + 2), "vrp_t",
-                     keys=["k"], how="upsert")                         # v3
+    cur_path = _stale_hint_table(spark, catalog, "vrp_t")
     tpath = catalog._path("vrp_t")
-    cur_path = f"{tpath}/{LOG_FILE}"
-    v1_doc = catalog.fs.read_text(f"{tpath}/{LOG_DIR}/{1:010d}.json")
-    catalog.fs.write_text_atomic(cur_path, v1_doc)  # delayed publish
-    before = getattr(catalog, "pointer_repairs", 0)
     gone = catalog.vacuum("vrp_t")
     assert gone, "tombstoned segments should still be reclaimed"
-    assert getattr(catalog, "pointer_repairs", 0) == before + 1
-    assert json.loads(catalog.fs.read_text(cur_path))["v"] == 3
-    # the table reads the HEAD snapshot — the pre-fix behavior was a
-    # PATH_NOT_FOUND crash (pointer stranded at v1, v1's segments gone)
+    for v in (1, 2):
+        doc = catalog.fs.read_text(f"{tpath}/{LOG_DIR}/{v:010d}.json")
+        assert kt_log.is_stub(json.loads(doc)), f"v{v} was not stubbed"
+    assert json.loads(catalog.fs.read_text(cur_path))["v"] == 1
+    assert catalog._manifest("vrp_t")["v"] == 3
     got = {r["k"]: r["v"] for r in catalog.read_table("vrp_t").collect()}
     assert got == {k: float(k + 2) for k in range(10)}
     catalog.drop_table("vrp_t")
@@ -2343,10 +2402,10 @@ def test_vacuum_stale_snapshot_never_eats_newer_commits(spark, catalog):
 
 
 def test_vacuum_dry_run_stays_readonly_under_regression(spark, catalog):
-    """r11 self-review probe: dry_run is the safety PREVIEW — even
-    with a regressed pointer it must neither repair the pointer nor
-    delete anything (an operator previews on a possibly-live table;
-    writes from a preview would defeat its purpose)."""
+    """dry_run is the safety PREVIEW — even with a stale hint it must
+    neither rewrite the hint nor delete or stub anything (an operator
+    previews on a possibly-live table; writes from a preview would
+    defeat its purpose)."""
     from pandabase_spark.io import LOG_DIR
 
     df = spark.range(10).select(
@@ -2361,11 +2420,12 @@ def test_vacuum_dry_run_stays_readonly_under_regression(spark, catalog):
     catalog.fs.write_text_atomic(cur_path, v1_doc)
     preview = catalog.vacuum("vdr_t", dry_run=True)
     assert preview, "tombstoned segment should appear in the preview"
-    # pointer untouched, nothing deleted
+    # hint untouched, nothing deleted
     assert json.loads(catalog.fs.read_text(cur_path))["v"] == 1
     segs = [d for d in catalog.fs.list_dirs(tpath) if d.startswith("seg-")]
     assert set(preview) <= set(segs), "dry run must not delete"
-    # in-repo readers still heal to the head through the chain walk
+    assert catalog.history("vdr_t")[0]["version"] == 1  # no stub
+    # readers still reach the head through the chain walk
     assert catalog._manifest("vdr_t")["v"] == 2
     catalog.drop_table("vdr_t")
 
@@ -2684,8 +2744,8 @@ def test_vacuum_history_summary_cache_bounds_and_survives(spark, catalog):
     excluded from history()/time-travel/version walks; (b) a second
     vacuum with the cache present reclaims correctly (same result as
     a cold scan); (c) a CORRUPT cache falls back to the full scan;
-    (d) a cache whose floor is AHEAD of the current snapshot (pointer
-    regression) is ignored — future data must never be classified
+    (d) a cache whose floor is AHEAD of the current snapshot (stale
+    hint) is ignored — future data must never be classified
     past."""
     import json as _json
 
@@ -2750,3 +2810,50 @@ def test_vacuum_noop_skips_manifest_walk(spark, catalog):
     # every historical snapshot still time-travels
     for v in versions_before:
         assert catalog.read_table("tnw", version=v).count() >= 200
+
+
+def test_merge_casts_source_keys_to_table_key_types(spark, catalog):
+    """An int-keyed source merged into a long-keyed table must match
+    on key VALUE: uncast, the int keys hash to other buckets, never
+    match, and insert as duplicates (144 rows for 100 keys)."""
+    catalog.to_table(
+        spark.range(100).select(
+            F.col("id").alias("k"), F.lit(0.0).alias("v")
+        ),
+        "mk_t", keys=["k"], num_buckets=4,
+    )
+    src = spark.range(0, 100, 2).select(
+        F.col("id").cast("int").alias("k"), F.lit(1.0).alias("v")
+    )
+    out = catalog.merge_table(src, "mk_t")
+    assert out == {"updated": 50, "deleted": 0, "inserted": 0}
+    got = catalog.read_table("mk_t")
+    assert got.count() == 100
+    assert got.select("k").distinct().count() == 100
+    assert got.where("v = 1.0").count() == 50
+    assert got.schema["k"].dataType.simpleString() == "bigint"
+
+
+def test_stats_bounds_accept_time_zone_aware_datetimes(spark, catalog):
+    """Stored timestamp stats are naive local wall-time strings; an
+    aware bound must be compared as the same instant, not as its
+    offset-suffixed string. Point reads at every row's instant, given
+    in UTC, +09:00 and -07:00, each return exactly that row."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
+    rows = [(i, t0 + dt.timedelta(hours=i)) for i in range(40)]
+    catalog.to_table(
+        spark.createDataFrame(rows, "k bigint, ts timestamp"),
+        "tz_t", keys=["k"], num_buckets=4, stats_columns=["ts"],
+    )
+    misses = []
+    for i, t in rows:
+        for tz in (0, 9, -7):
+            b = t.astimezone(dt.timezone(dt.timedelta(hours=tz)))
+            got = catalog.read_table(
+                "tz_t", stats_bounds={"ts": (b, b)}
+            ).select("k").collect()
+            if [r["k"] for r in got] != [i]:
+                misses.append((i, tz, got))
+    assert not misses, misses
