@@ -23,6 +23,39 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _build_aliases(names: list[str]) -> dict[str, str]:
+    """Short deterministic alias per timing name: the first letters of
+    each ``_``-separated word, widened per name (2..6 letters) until
+    unique — derived from the names only, so stable across rounds and
+    core counts. A name still ambiguous at width 6 keeps its full
+    name; if that equals an alias already given out, it takes the
+    first free numeric suffix (``name_2``, ``name_3``, ...)."""
+    from collections import Counter
+
+    out: dict[str, str] = {}
+    pend = sorted(names)
+    width = 2
+    while pend and width <= 6:
+        cand = {n: "".join(p[:width] for p in n.split("_")) for n in pend}
+        counts = Counter(cand.values())
+        nxt = []
+        for n, a in cand.items():
+            if counts[a] == 1 and a not in out.values():
+                out[n] = a
+            else:
+                nxt.append(n)
+        pend = nxt
+        width += 1
+    used = set(out.values())
+    for n in pend:
+        alias, i = n, 2
+        while alias in used:
+            alias, i = f"{n}_{i}", i + 1
+        out[n] = alias
+        used.add(alias)
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_name = os.path.basename(sf_dir.rstrip("/"))
@@ -807,37 +840,11 @@ def main() -> None:
     # back to {"see": "BENCH_DETAIL.json"} and the driver's per-query
     # and scaling comparisons came back EMPTY. When full names
     # overflow the cap, the line now carries every timing under a
-    # short DETERMINISTIC alias (first letters of each _-separated
-    # word, widened per-name until unique — derived from the full
-    # name only, so stable across rounds and core counts); the
-    # alias->name map is committed in BENCH_DETAIL.json under
-    # "query_aliases". Values stay seconds (3-decimal), the unit key
-    # is unchanged, and the full-name timings remain in
-    # BENCH_DETAIL.json "queries" exactly as before.
-    def _build_aliases(names: list[str]) -> dict[str, str]:
-        out: dict[str, str] = {}
-        pend = sorted(names)
-        width = 2
-        while pend and width <= 6:
-            from collections import Counter
-
-            cand = {
-                n: "".join(p[:width] for p in n.split("_")) for n in pend
-            }
-            counts = Counter(cand.values())
-            nxt = []
-            for n, a in cand.items():
-                if counts[a] == 1 and a not in out.values():
-                    out[n] = a
-                else:
-                    nxt.append(n)
-            pend = nxt
-            width += 1
-        for n in pend:  # pathological residue: fall back to the name
-            out[n] = n
-        assert len(set(out.values())) == len(out)
-        return out
-
+    # short DETERMINISTIC alias (_build_aliases); the alias->name map
+    # is committed in BENCH_DETAIL.json under "query_aliases". Values
+    # stay seconds (3-decimal), the unit key is unchanged, and the
+    # full-name timings remain in BENCH_DETAIL.json "queries" exactly
+    # as before.
     name_to_alias = _build_aliases(list(timings))
 
     detail = {

@@ -54,20 +54,12 @@ def _hyperplanes(planes: int, dim: int) -> list[list[float]]:
     return out
 
 
-def _array_literal(vals: list[float]) -> Column:
-    """Constant double-array column via ONE server-parsed expression.
-
-    ``F.array(*[F.lit(v) ...])`` (and ``F.lit(list)``, which desugars
-    to it) costs one py4j round trip per element — ~1.5s of pure driver
-    time for a 16×64 centroid set, repeated at every train/assign call.
-    A single ``F.expr`` string parses JVM-side in ~1ms (measured 40×
-    faster); ``repr(float)`` is shortest-round-trip so the parsed
-    doubles are bit-identical to the Python values.
-    """
-    return F.expr(_arr_sql(vals))
-
-
 def _arr_sql(vals: list[float]) -> str:
+    """SQL text of a constant double array. Composed as ONE
+    server-parsed string because ``F.array(*[F.lit(v) ...])`` costs one
+    py4j round trip per element (~1.5s of driver time for a 16×64
+    centroid set); ``repr(float)`` is shortest-round-trip, so the
+    parsed doubles are bit-identical to the Python values."""
     return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
 
 
@@ -81,10 +73,6 @@ def _dot_sql(vec_col: str, vals: list[float]) -> str:
         f"aggregate(zip_with(`{vec_col}`, {_arr_sql(vals)}, "
         "(x, y) -> cast(x as double) * y), 0D, (acc, v) -> acc + v)"
     )
-
-
-def _plane_literal(plane: list[float]) -> Column:
-    return _array_literal(plane)
 
 
 def hyperplane_buckets(
@@ -232,10 +220,6 @@ def ann_topk_lsh(
 # IVF (inverted-file) ANN — the coarse-quantizer scale path
 # ---------------------------------------------------------------------------
 
-def _centroid_literal(centroids: list[list[float]]) -> list[Column]:
-    return [_array_literal(c) for c in centroids]
-
-
 def _with_cell(
     df: DataFrame,
     vec_col: str,
@@ -314,7 +298,9 @@ def ivf_centroids(
 ) -> list[list[float]]:
     """Train a spherical-k-means coarse quantizer; returns unit-norm
     centroids as plain Python lists (n_cells × dim floats — an index
-    artifact, intentionally driver-side and broadcastable as literals).
+    artifact, intentionally driver-side and scored as literal folds,
+    the same carrier as :func:`pq_codebooks`). List position is the
+    cell id everywhere the quantizer is scored or persisted.
 
     Deterministic end to end: seeds are the ``n_cells`` rows with the
     smallest ``xxhash64(id)`` (a partial TakeOrdered, not a full sort),
@@ -354,8 +340,7 @@ def ivf_centroids(
         # otherwise run every Lloyd stage as one task). That is what
         # sample_mod is for at 100 TB: the sample is sized to fit the
         # cluster, while the full corpus is only ever touched by the
-        # one-pass assignment. Both trainers spread identically,
-        # preserving their parity pin.
+        # one-pass assignment.
         train = _train_sample(
             corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
         ).persist()
@@ -412,242 +397,21 @@ def ivf_centroids(
             train.unpersist()
 
 
-def _unit_expr(v: Column) -> Column:
-    """Unit-normalized double array of ``v`` (zero vectors unchanged)."""
-    dbl = F.transform(v, lambda x: x.cast("double"))
-    nrm = F.sqrt(
-        F.aggregate(dbl, F.lit(0.0), lambda a, x: a + x * x)
-    )
-    return F.when(nrm > 0, F.transform(dbl, lambda x: x / nrm)).otherwise(dbl)
-
-
-def _pack_centroids(centroids_df: DataFrame) -> DataFrame:
-    """1-row frame holding the whole quantizer as an
-    ``array<struct<cell,cvec>>`` sorted by cell — the broadcastable
-    DATA form of the centroid set (vs the codegen literal form)."""
-    return centroids_df.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("cell").alias("cell"), F.col("cvec").alias("cvec")
-                )
-            )
-        ).alias("_cents")
-    )
-
-
-def _with_cell_from_df(
-    df: DataFrame,
-    vec_col: str,
-    centroids_df: DataFrame,
-    *,
-    out: str = "cell",
-) -> DataFrame:
-    """:func:`_with_cell` with centroids as DATA instead of literals:
-    the packed 1-row centroid array broadcasts (a broadcast
-    nested-loop join of exactly one row — no shuffle), and the per-row
-    argmax runs as ``transform``/``aggregate`` higher-order functions
-    over that array column. Same argmax and lowest-cell tie-break as
-    the literal path (the packed array is cell-sorted and
-    ``array_position`` returns the first maximum).
-
-    Crossover: literals constant-fold into whole-stage codegen —
-    fastest while n_cells × dim stays small (the generated method grows
-    with every centroid; plan build is driver-side work per query). At
-    coarse-quantizer scale (tens of thousands of cells × 1k dims =
-    multi-GB of literal text) codegen is impossible; this path carries
-    the quantizer as one broadcast variable instead, which is exactly
-    how a 100 TB deployment should ship it.
-    """
-    packed = _pack_centroids(centroids_df)
-    staged = df.crossJoin(F.broadcast(packed)).withColumn(
-        "_pb_dots",
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.col(vec_col),
-                    c["cvec"],
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        ),
-    )
-    pos = F.array_position(F.col("_pb_dots"), F.array_max("_pb_dots"))
-    cell = F.element_at(F.col("_cents"), pos.cast("int"))["cell"]
-    return staged.withColumn(out, cell).drop("_pb_dots", "_cents")
-
-
-def ivf_centroids_df(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    iters: int = 2,
-    tol: "float | None" = None,
-    sample_mod: int | None = None,
-    info: "dict | None" = None,
-) -> DataFrame:
-    """:func:`ivf_centroids` with the quantizer kept CLUSTER-RESIDENT:
-    returns a ``(cell int, cvec array<double>)`` DataFrame and never
-    collects a centroid to the driver. Same algorithm — identical
-    seeding (n_cells smallest ``xxhash64(id)``), identical exact-mean
-    Lloyd updates, empty cells keep their previous centroid, identical
-    ``tol`` convergence stop (the movement check is a 1-scalar agg
-    over the two n_cells-row centroid frames — the only driver-side
-    value this trainer ever materializes, and it is O(1)) — so the
-    two trainers produce the same quantizer (pinned by the parity
-    test). Each Lloyd step reassembles means distributedly
-    (groupBy(cell) + sorted collect_list over dim elements) and
-    localCheckpoints to cut the iteration lineage.
-
-    Use above the literal-path crossover (see
-    :func:`_with_cell_from_df`): at tens of thousands of cells × 1k
-    dims the driver-resident list is a multi-GB literal; here the
-    quantizer moves only as a broadcast variable.
-    """
-    from pyspark.sql.window import Window
-
-    train = corpus.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    )
-    if sample_mod is not None:
-        train = train.where(
-            F.pmod(F.xxhash64("_id"), F.lit(sample_mod)) == 0
-        )
-    # persist + spread the TRAINING SAMPLE for the seed job + Lloyd
-    # loop (same rationale and the same repartition as ivf_centroids,
-    # so the two trainers stay parity-identical); the centroid frames
-    # are already lineage-cut via localCheckpoint
-    train = train.repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism
-    ).persist()
-    try:
-        order = F.xxhash64(F.col("_id").cast("string"))
-        seeds = train.orderBy(order).limit(n_cells)
-        n_seeds = seeds.count()
-        if n_seeds < n_cells:
-            raise ValueError(
-                f"need at least n_cells={n_cells} training vectors, "
-                f"got {n_seeds}"
-            )
-        # the window runs over the n_cells-row limit result — a single
-        # tiny partition, not a global sort of the corpus
-        w = Window.orderBy(order)
-        cents = seeds.select(
-            (F.row_number().over(w) - 1).cast("int").alias("cell"),
-            _unit_expr(F.col("_v")).alias("cvec"),
-        ).localCheckpoint(eager=True)
-        iters_run, move = 0, None
-        for _ in range(iters):
-            assigned = _with_cell_from_df(
-                train, "_v", cents, out="_cell"
-            ).select("_cell", F.posexplode("_v").alias("_pos", "_x"))
-            new = (
-                assigned.groupBy("_cell", "_pos")
-                .agg(F.avg("_x").alias("_m"))
-                .groupBy("_cell")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("_pos").alias("p"),
-                                F.col("_m").alias("m"),
-                            )
-                        )
-                    ).alias("_pm")
-                )
-                .select(
-                    F.col("_cell").alias("cell"),
-                    _unit_expr(
-                        F.transform("_pm", lambda s: s["m"])
-                    ).alias("cvec"),
-                )
-            )
-            empty = cents.join(new.select("cell"), on="cell", how="left_anti")
-            prev = cents
-            cents = new.unionByName(empty).localCheckpoint(eager=True)
-            iters_run += 1
-            if tol is not None:
-                # max per-centroid L2 movement, same break rule as the
-                # driver-side trainer; both frames are checkpointed
-                # n_cells-row artifacts so this agg is O(n_cells × dim)
-                move = (
-                    prev.select(
-                        "cell", F.col("cvec").alias("_ov")
-                    )
-                    .join(
-                        cents.select(
-                            "cell", F.col("cvec").alias("_nv")
-                        ),
-                        on="cell",
-                    )
-                    .select(
-                        F.sqrt(
-                            F.aggregate(
-                                F.zip_with(
-                                    "_ov", "_nv",
-                                    lambda a, b: (a - b) * (a - b),
-                                ),
-                                F.lit(0.0),
-                                lambda acc, x: acc + x,
-                            )
-                        ).alias("_mv")
-                    )
-                    .agg(F.max("_mv"))
-                    .first()[0]
-                )
-                if move <= tol:
-                    break
-    finally:
-        train.unpersist()
-    if info is not None:
-        info["iters_run"] = iters_run
-        info["final_move"] = move
-    return cents
-
-
 def _with_cells_topn(
     df: DataFrame,
     vec_col: str,
-    centroids: "list[list[float]] | DataFrame",
+    centroids: "list[list[float]]",
     n: int,
     *,
     out: str = "cells",
 ) -> DataFrame:
     """Attach the ``n`` NEAREST cells as an array column (top-1 is
     :func:`ivf_assign`'s cell) — the multi-assignment used for
-    bucketed near-dup candidate generation, so a pair straddling a
-    cell boundary still shares at least one bucket. Same
-    literal-vs-broadcast-data quantizer crossover as everywhere else;
-    ties break to the lower cell id (stable sort on (negdot, cell))."""
-    if isinstance(centroids, DataFrame):
-        staged = df.crossJoin(F.broadcast(_pack_centroids(centroids)))
-        structs = F.zip_with(
-            F.col("_cents"),
-            F.transform(
-                F.col("_cents"),
-                lambda c: F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col),
-                        c["cvec"],
-                        lambda x, y: x.cast("double") * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-            ),
-            lambda c, d: F.struct(
-                (-d).alias("negdot"), c["cell"].alias("cell")
-            ),
-        )
-        cells = F.transform(
-            F.slice(F.array_sort(structs), 1, n), lambda s: s["cell"]
-        )
-        return staged.withColumn(out, cells).drop("_cents")
+    bucketed near-dup candidate generation (a pair straddling a cell
+    boundary still shares at least one bucket) and the per-query probe
+    expansion of every IVF serve path. One expression: sort the
+    (−dot, cell) struct array, slice; ties break to the lower cell id
+    (stable sort on (negdot, cell))."""
     arr = (
         "array("
         + ",".join(
@@ -663,6 +427,16 @@ def _with_cells_topn(
     )
 
 
+def _probe_cells(
+    q: DataFrame, centroids: "list[list[float]]", nprobe: int
+) -> DataFrame:
+    """Expand each (query_id, _qvec) row to its ``nprobe`` nearest
+    cells: one (query_id, _qvec, cell) row per probe."""
+    return _with_cells_topn(q, "_qvec", centroids, nprobe).select(
+        "query_id", "_qvec", F.explode("cells").alias("cell")
+    )
+
+
 def ivf_neardup_pairs(
     corpus: DataFrame,
     *,
@@ -673,7 +447,7 @@ def ivf_neardup_pairs(
     nassign: int = 2,
     iters: int = 2,
     sample_mod: "int | None" = None,
-    centroids: "list[list[float]] | DataFrame | None" = None,
+    centroids: "list[list[float]] | None" = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs at corpus scale: candidates are
     confined to IVF cells (each vector multi-assigned to its
@@ -686,19 +460,16 @@ def ivf_neardup_pairs(
     Recall misses only pairs whose cell sets are disjoint; raising
     ``nassign`` (or ``n_cells`` resolution) trades candidate volume
     for recall, pinned against the exact join in pytest. Pass
-    ``centroids`` to reuse a trained quantizer (e.g. the persisted
-    index's sidecar); threshold semantics match
-    :func:`embedding layer <cosine_topk>` cosine."""
-    cents = (
-        centroids
-        if centroids is not None
-        else _auto_centroids(
+    ``centroids`` to reuse a trained quantizer (e.g. a persisted
+    index's sidecar via :func:`_load_centroids`); threshold semantics
+    match :func:`embedding layer <cosine_topk>` cosine."""
+    if centroids is None:
+        centroids = ivf_centroids(
             corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
             iters=iters, sample_mod=sample_mod,
         )
-    )
     assigned = _with_cells_topn(
-        corpus.select(id_col, vec_col), vec_col, cents, nassign
+        corpus.select(id_col, vec_col), vec_col, centroids, nassign
     ).select(
         F.col(id_col), F.col(vec_col), F.explode("cells").alias("cell")
     )
@@ -725,61 +496,16 @@ def ivf_neardup_pairs(
 
 def ivf_assign(
     df: DataFrame,
-    centroids: "list[list[float]] | DataFrame",
+    centroids: "list[list[float]]",
     *,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Attach the IVF ``cell`` column (one projection, no shuffle).
-
-    ``centroids`` may be the driver-resident list
-    (:func:`ivf_centroids` — codegen-literal scoring, small
-    quantizers) or the cluster-resident DataFrame
-    (:func:`ivf_centroids_df` — broadcast-data scoring, large
-    quantizers); see :func:`_with_cell_from_df` for the crossover.
+    """Attach the IVF ``cell`` column (one projection, no shuffle)
+    against the :func:`ivf_centroids` list, scored as literal folds.
     At scale, run once at ingest and persist partitioned by ``cell`` —
     then every probe is a partition-pruned read.
     """
-    if isinstance(centroids, DataFrame):
-        return _with_cell_from_df(df, vec_col, centroids, out="cell")
     return _with_cell(df, vec_col, centroids, out="cell")
-
-
-# Literal-path crossover for the coarse quantizer: the codegen'd
-# literal scorer inlines every centroid component into the expression
-# tree (n_cells x dim scoring terms); past this many terms, plan size
-# and codegen time dominate and the cluster-resident DataFrame
-# quantizer (same algorithm, broadcast data) wins. ann_topk_ivf
-# auto-picks via _auto_centroids when no prebuilt quantizer is given.
-IVF_LITERAL_MAX_TERMS = 65_536
-
-
-def _auto_centroids(
-    corpus: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    n_cells: int,
-    iters: int,
-    sample_mod: "int | None",
-    tol: "float | None" = None,
-    info: "dict | None" = None,
-):
-    """Train the coarse quantizer on the side of the literal-path
-    crossover the index size calls for: driver-resident literal list
-    below ``IVF_LITERAL_MAX_TERMS`` = n_cells x dim scoring terms,
-    the cluster-resident DataFrame (:func:`ivf_centroids_df`) above
-    it. The two trainers are pinned to produce the identical
-    quantizer (parity test), so the switch never changes results —
-    only where the quantizer lives and how scoring compiles."""
-    row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = row["d"] if row else 0
-    kw = dict(
-        id_col=id_col, vec_col=vec_col, n_cells=n_cells,
-        iters=iters, tol=tol, sample_mod=sample_mod, info=info,
-    )
-    if n_cells * dim > IVF_LITERAL_MAX_TERMS:
-        return ivf_centroids_df(corpus, **kw)
-    return ivf_centroids(corpus, **kw)
 
 
 def ann_topk_ivf(
@@ -794,7 +520,7 @@ def ann_topk_ivf(
     nprobe: int = 3,
     iters: int = 2,
     sample_mod: int | None = None,
-    centroids: "list[list[float]] | DataFrame | None" = None,
+    centroids: "list[list[float]] | None" = None,
 ) -> DataFrame:
     """Approximate top-k via an IVF index: exact cosine, but only inside
     the ``nprobe`` cells nearest each query (the FAISS IVF-flat recipe).
@@ -803,15 +529,13 @@ def ann_topk_ivf(
     expression: sort the (−dot, cell) struct array, slice, explode — and
     joins the cell-assigned corpus on ``cell``. Work per query is
     ~nprobe/n_cells of the corpus; recall is tuned by ``nprobe``.
-    Pass a prebuilt ``centroids`` list (small quantizers, codegen
-    literals) or DataFrame (:func:`ivf_centroids_df` — large
-    quantizers, broadcast data; same struct sort and tie-break) to skip
-    training (the ingest-time pattern).
+    Pass a prebuilt :func:`ivf_centroids` list to skip training (the
+    ingest-time pattern).
     Returns (query_id, vec_id, cosine, rank).
     """
     qid = query_id_col or id_col
     if centroids is None:
-        centroids = _auto_centroids(
+        centroids = ivf_centroids(
             corpus, id_col=id_col, vec_col=vec_col,
             n_cells=n_cells, iters=iters, sample_mod=sample_mod,
         )
@@ -819,45 +543,7 @@ def ann_topk_ivf(
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    if isinstance(centroids, DataFrame):
-        q = q.crossJoin(F.broadcast(_pack_centroids(centroids)))
-        cell_structs = F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                (
-                    -F.aggregate(
-                        F.zip_with(
-                            F.col("_qvec"),
-                            c["cvec"],
-                            lambda x, y: x.cast("double") * y,
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                ).alias("negdot"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    else:
-        cell_structs = F.expr(
-            "array("
-            + ",".join(
-                f"named_struct('negdot', -({_dot_sql('_qvec', c)}), "
-                f"'cell', cast({i} as int))"
-                for i, c in enumerate(centroids)
-            )
-            + ")"
-        )
-    probes = q.select(
-        "query_id",
-        "_qvec",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(cell_structs), 1, nprobe),
-                lambda s: s["cell"],
-            )
-        ).alias("cell"),
-    )
+    probes = _probe_cells(q, centroids, nprobe)
     scored = c_assigned.join(F.broadcast(probes), on="cell").select(
         "query_id",
         F.col(id_col),
@@ -873,7 +559,6 @@ def ann_topk_ivf(
         .where(F.col("rank") <= k)
         .select("query_id", id_col, "cosine", "rank")
     )
-
 
 
 # ---------------------------------------------------------------------------
@@ -947,20 +632,12 @@ def write_ivf_index(
     listed, so query IO is ~nprobe/n_cells of the corpus at any
     corpus size. Deterministic end to end (hash-seeded k-means):
     rebuilding the index reproduces it bit-identically."""
-    spark = corpus.sparkSession
-    # train on the right side of the literal-path crossover: large
-    # quantizers stay cluster-resident end to end (never collected)
-    centroids = _auto_centroids(
+    centroids = ivf_centroids(
         corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
         iters=iters, tol=tol, sample_mod=sample_mod, info=info,
     )
-    if isinstance(centroids, DataFrame):
-        cdf = centroids
-    else:
-        cdf = _centroids_literal_df(spark, centroids)
-    cdf.coalesce(1).write.mode("errorifexists").parquet(
-        f"{path}/centroids"
-    )
+    cdf = _centroids_literal_df(corpus.sparkSession, centroids)
+    cdf.coalesce(1).write.mode("errorifexists").parquet(f"{path}/centroids")
     (
         ivf_assign(corpus, centroids, vec_col=vec_col)
         # the txn sub-partition exists for append_ivf_index's
@@ -986,7 +663,7 @@ def _load_append_artifacts(
     sidecar reads + driver collects). Pass the returned dict to
     ``append_ivf_index``/``append_ivfpq_index`` via ``_artifacts``."""
     art: dict = {
-        "centroids": spark.read.parquet(f"{path}/centroids"),
+        "centroids": _load_centroids(spark, path),
         "residual": _index_is_residual(spark, path),
     }
     art["anchors"] = (
@@ -1044,12 +721,12 @@ def append_ivf_index(
     pruning is untouched: ``cell`` stays the leading partition level
     and probes never filter on ``txn``."""
     spark = new_vectors.sparkSession
-    cdf = (
+    centroids = (
         _artifacts["centroids"]
         if _artifacts is not None
-        else spark.read.parquet(f"{path}/centroids")
+        else _load_centroids(spark, path)
     )
-    assigned = ivf_assign(new_vectors, cdf, vec_col=vec_col)
+    assigned = ivf_assign(new_vectors, centroids, vec_col=vec_col)
     _append_index_batch(spark, assigned, path, txn)
 
 
@@ -1222,10 +899,7 @@ def write_ivfpq_index(
     finally:
         if shared_train is not None:
             shared_train.unpersist()
-    cdf = (
-        centroids if isinstance(centroids, DataFrame)
-        else _centroids_literal_df(spark, centroids)
-    )
+    cdf = _centroids_literal_df(spark, centroids)
     staged = ivf_assign(corpus, centroids, vec_col=vec_col)
     anchors_df = None
     if residual:
@@ -1375,10 +1049,9 @@ def _index_is_residual(spark, path: str) -> bool:
     RAISE, not silently treat a residual index as raw (encoding a
     batch without the anchor shift would corrupt it permanently —
     r12 review)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/meta")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
+    from pandabase_spark.fs import HadoopFS
+
+    if not HadoopFS(spark).exists(f"{path}/meta"):
         return False
     # schema known by construction (this module wrote the sidecar):
     # saves the per-serve driver-side footer inference (r15)
@@ -1388,6 +1061,31 @@ def _index_is_residual(spark, path: str) -> bool:
         .first()
     )
     return bool(row["residual"]) if row is not None else False
+
+
+def _load_centroids(spark, path: str) -> "list[list[float]]":
+    """The persisted quantizer sidecar back as the :func:`ivf_centroids`
+    list every scorer takes: one collect of n_cells rows, sorted by
+    ``cell`` on the driver. The literal scorers name a cell by its list
+    position, so the sidecar's cells must be exactly 0..n-1 — anything
+    else raises here instead of silently renumbering cells against the
+    ``cell=<c>`` directories already on disk."""
+    # schema known by construction (_centroids_literal_df): no
+    # footer-inference job
+    rows = sorted(
+        spark.read.schema("cell int, cvec array<double>")
+        .parquet(f"{path}/centroids")
+        .collect(),
+        key=lambda r: r["cell"],
+    )
+    cells = [r["cell"] for r in rows]
+    if not rows or cells != list(range(len(rows))):
+        raise ValueError(
+            f"centroid sidecar at {path}/centroids must hold cells "
+            f"0..n-1 exactly once; {len(rows)} rows, first cells "
+            f"{cells[:8]}"
+        )
+    return [[float(x) for x in r["cvec"]] for r in rows]
 
 
 def _load_codebooks(spark, path: str) -> "list[list[list[float]]]":
@@ -1434,18 +1132,18 @@ def append_ivfpq_index(
     re-collecting the codebooks per micro-batch (r15)."""
     spark = new_vectors.sparkSession
     if _artifacts is not None:
-        cdf = _artifacts["centroids"]
+        centroids = _artifacts["centroids"]
         books = _artifacts["codebooks"]
         residual = _artifacts["residual"]
         anchors_df = _artifacts["anchors"]
     else:
-        cdf = spark.read.parquet(f"{path}/centroids")
+        centroids = _load_centroids(spark, path)
         books = _load_codebooks(spark, path)
         residual = _index_is_residual(spark, path)
         anchors_df = (
             spark.read.parquet(f"{path}/anchors") if residual else None
         )
-    staged = ivf_assign(new_vectors, cdf, vec_col=vec_col)
+    staged = ivf_assign(new_vectors, centroids, vec_col=vec_col)
     if residual:
         staged = _subtract_cell_anchor(staged, anchors_df, vec_col)
     encoded = pq_encode(
@@ -1482,12 +1180,12 @@ def ann_topk_ivfpq_indexed(
     from pyspark.sql.window import Window
 
     qid = query_id_col or id_col
-    cdf = spark.read.parquet(f"{path}/centroids")
+    centroids = _load_centroids(spark, path)
     books = _load_codebooks(spark, path)
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    probes, cells = _expand_probes(spark, cdf, q, nprobe)
+    probes, cells = _expand_probes(centroids, q, nprobe)
     existing = _existing_cells(spark, f"{path}/data")
     cells = [c for c in cells if c in existing]
     if not cells:
@@ -1536,67 +1234,18 @@ def _existing_cells(spark, data_path: str) -> "set[int]":
     return out
 
 
-def _expand_probes(spark, cdf: DataFrame, q: DataFrame, nprobe: int):
+def _expand_probes(
+    centroids: "list[list[float]]", q: DataFrame, nprobe: int
+):
     """Shared probe expansion for the persisted-index serve paths
     (:func:`ann_topk_indexed` and :func:`ann_topk_ivfpq_indexed` —
     one definition so the quantizer scoring can never diverge): pick
-    each query's ``nprobe`` nearest cells against the persisted
-    quantizer and return ``(probes, cells)`` — the per-query
+    each query's ``nprobe`` nearest cells against the loaded quantizer
+    list and return ``(probes, cells)`` — the per-query
     (query_id, _qvec, cell) probe frame (localCheckpointed: it is
     consumed twice) and the sorted distinct probed cell list for the
-    planning-time ``cell IN`` predicate. Applies the same
-    literal-vs-DataFrame crossover as the in-memory path: a large
-    quantizer scores as broadcast DATA (one-row cross join +
-    higher-order functions), never as a multi-MB codegen literal."""
-    # quantizer facts in ONE job (the sidecar is one tiny file; every
-    # extra action here is a fixed per-probe cost)
-    meta = cdf.agg(
-        F.count("cell").alias("n"), F.max(F.size("cvec")).alias("d")
-    ).first()
-    n_cells = int(meta["n"] or 0)
-    dim = int(meta["d"] or 0)
-    if n_cells * dim > IVF_LITERAL_MAX_TERMS:
-        q = q.crossJoin(F.broadcast(_pack_centroids(cdf)))
-        cell_structs = F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                (
-                    -F.aggregate(
-                        F.zip_with(
-                            F.col("_qvec"),
-                            c["cvec"],
-                            lambda x, y: x.cast("double") * y,
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                ).alias("negdot"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    else:
-        crows = cdf.orderBy("cell").collect()
-        centroids = [list(r["cvec"]) for r in crows]
-        cell_structs = F.expr(
-            "array("
-            + ",".join(
-                f"named_struct('negdot', -({_dot_sql('_qvec', c)}), "
-                f"'cell', cast({i} as int))"
-                for i, c in enumerate(centroids)
-            )
-            + ")"
-        )
-    probes = q.select(
-        "query_id",
-        "_qvec",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(cell_structs), 1, nprobe),
-                lambda s: s["cell"],
-            )
-        ).alias("cell"),
-    )
-    probes = probes.localCheckpoint(eager=True)
+    planning-time ``cell IN`` predicate."""
+    probes = _probe_cells(q, centroids, nprobe).localCheckpoint(eager=True)
     cells = sorted(
         r["cell"] for r in probes.select("cell").distinct().collect()
     )
@@ -2002,11 +1651,11 @@ def ann_topk_indexed(
     from pyspark.sql.window import Window
 
     qid = query_id_col or id_col
-    cdf = spark.read.parquet(f"{path}/centroids")
+    centroids = _load_centroids(spark, path)
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    probes, cells = _expand_probes(spark, cdf, q, nprobe)
+    probes, cells = _expand_probes(centroids, q, nprobe)
     # open ONLY the probed cells' directories (basePath keeps `cell` a
     # partition column): at 10^5+ cells a full partition FILE discovery
     # of <path>/data is itself a fixed listing cost — the probe should
@@ -2511,25 +2160,7 @@ def ann_topk_ivfpq(
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    cell_structs = F.expr(
-        "array("
-        + ",".join(
-            f"named_struct('negdot', -({_dot_sql('_qvec', c)}), "
-            f"'cell', cast({i} as int))"
-            for i, c in enumerate(centroids)
-        )
-        + ")"
-    )
-    probes = q.select(
-        "query_id",
-        "_qvec",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(cell_structs), 1, nprobe),
-                lambda s: s["cell"],
-            )
-        ).alias("cell"),
-    )
+    probes = _probe_cells(q, centroids, nprobe)
     w = Window.partitionBy("query_id").orderBy(
         F.col("approx_dist").asc(), F.col("vec_id")
     )

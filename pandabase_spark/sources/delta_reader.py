@@ -73,6 +73,7 @@ from pyspark.sql.types import (
     LongType, StringType, StructField, StructType,
 )
 
+from pandabase_spark.fs import HadoopFS
 from pandabase_spark.localframe import local_frame
 
 LOG_SUBDIR = "_delta_log"
@@ -103,12 +104,6 @@ PHYSICAL_NAME_KEY = "delta.columnMapping.physicalName"
 
 class DeltaProtocolError(ValueError):
     """The table needs a reader capability this subset refuses."""
-
-
-def _fs(spark: SparkSession):
-    from pandabase_spark.fs import HadoopFS
-
-    return HadoopFS(spark)
 
 
 def _commit_version(name: str) -> "int | None":
@@ -343,7 +338,7 @@ def _replay(spark: SparkSession, path: str, version: "int | None") -> dict:
     "history": [...]}``. Tombstones are removes not later re-added —
     what a conformant checkpoint must carry inside the retention
     window."""
-    fs = _fs(spark)
+    fs = HadoopFS(spark)
     log_dir = f"{path}/{LOG_SUBDIR}"
     if not fs.exists(log_dir):
         raise NameError(f"not a Delta table (no {LOG_SUBDIR}): {path}")
@@ -704,7 +699,7 @@ def delta_scan(
                 "pass either version= or timestamp=, not both"
             )
         version = _resolve_timestamp(
-            _fs(spark), f"{path}/{LOG_SUBDIR}", timestamp
+            HadoopFS(spark), f"{path}/{LOG_SUBDIR}", timestamp
         )
     state = _replay(spark, path, version)
     schema: StructType = state["schema"]
@@ -1061,7 +1056,7 @@ def delta_scan_changes(
     union legs. Raises NameError when the range reaches below the
     retained JSON tail (CDF needs the per-commit actions, which a
     checkpoint does not preserve)."""
-    fs = _fs(spark)
+    fs = HadoopFS(spark)
     log_dir = f"{path}/{LOG_SUBDIR}"
     if ending_version is None:
         ending_version = delta_table_version(spark, path)
@@ -1279,7 +1274,7 @@ def delta_table_version(spark: SparkSession, path: str) -> int:
     """Newest version of the Delta table at ``path`` — from the JSON
     tail when one exists, else the checkpoint (a fully-cleaned log is
     still a readable table)."""
-    fs = _fs(spark)
+    fs = HadoopFS(spark)
     vs = [
         v
         for v in (

@@ -50,17 +50,12 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pandabase_spark.fs import HadoopFS
 from pandabase_spark.sources.delta_reader import (
     LOG_SUBDIR,
     DeltaProtocolError,
     _replay,
 )
-
-
-def _fs(spark: SparkSession):
-    from pandabase_spark.fs import HadoopFS
-
-    return HadoopFS(spark)
 
 
 def _unescape_hive(name: str) -> "str | None":
@@ -214,7 +209,7 @@ def _stage_data_files(
     human-navigable. Callers DELETE the staged subdir when the commit
     fails — an unreferenced c-<uuid> directory would otherwise leak
     forever (no tombstone will ever cover it; r13 advisory)."""
-    fs = _fs(df.sparkSession)
+    fs = HadoopFS(df.sparkSession)
     sub = f"c-{uuid.uuid4().hex[:12]}"
     staged = f"{table}/{sub}"
     w = df.write.mode("errorifexists")
@@ -348,7 +343,7 @@ def delta_create(
     protocol + metaData + the initial adds). Raises if a Delta log
     already exists there."""
     spark = df.sparkSession
-    fs = _fs(spark)
+    fs = HadoopFS(spark)
     log_dir = f"{table}/{LOG_SUBDIR}"
     if fs.exists(log_dir) and fs.list_files(log_dir):
         raise FileExistsError(f"Delta table already exists at {table}")
@@ -397,7 +392,7 @@ def _commit_with_retry(
     optimistic-commit loop over the put-if-absent LogStore primitive.
     The caller's already-replayed state seeds attempt 1 (the common
     uncontended case pays ONE log replay, not two)."""
-    fs = _fs(spark)
+    fs = HadoopFS(spark)
     log_dir = f"{table}/{LOG_SUBDIR}"
     for attempt in range(max_attempts):
         state = (
@@ -426,7 +421,7 @@ def _cleanup_staged_if_unreferenced(
     deleting the data files of a committed version corrupts the table
     permanently (r14 review finding). The uuid-unique subdir name
     appearing in any tail commit's JSON is proof of reference."""
-    fs = _fs(spark)
+    fs = HadoopFS(spark)
     log_dir = f"{table}/{LOG_SUBDIR}"
     from pandabase_spark.sources.delta_reader import _commit_version
 
@@ -591,7 +586,7 @@ def delta_vacuum(
     the deletes themselves are metadata calls, no data moves."""
     from pandabase_spark.sources.dv import dv_relative_path
 
-    fs = _fs(spark)
+    fs = HadoopFS(spark)
     state = _replay(spark, table, None)
     meta = state.get("metadata_raw") or {}
     if retention_ms is None:
@@ -721,7 +716,7 @@ def delta_checkpoint(spark: SparkSession, table: str) -> int:
     verbatim — and the remove actions still inside
     ``delta.deletedFileRetentionDuration``, or third-party vacuum
     would never see them."""
-    fs = _fs(spark)
+    fs = HadoopFS(spark)
     state = _replay(spark, table, None)
     v = int(state["version"])
     log_dir = f"{table}/{LOG_SUBDIR}"

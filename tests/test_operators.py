@@ -119,12 +119,11 @@ def test_embedding_near_dup_lsh_finds_planted(spark):
 def test_ivf_neardup_pairs_recall_and_parity(spark):
     """IVF-bucketed semantic near-dup: planted exact near-duplicates
     must all surface (their cosine ~1 puts both vectors in the same
-    nearest cells), candidates stay cell-confined, and the two
-    quantizer carriers (codegen literal vs broadcast DataFrame)
-    return identical pairs."""
+    nearest cells), candidates stay cell-confined, a prebuilt
+    quantizer returns the same pairs as the one trained inside, and
+    the top-1 of the multi-assignment is ivf_assign's cell."""
     from pandabase_spark.operators.similarity import (
-        _with_cells_topn, ivf_centroids, ivf_centroids_df,
-        ivf_neardup_pairs,
+        _with_cells_topn, ivf_assign, ivf_centroids, ivf_neardup_pairs,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
@@ -146,25 +145,16 @@ def test_ivf_neardup_pairs_recall_and_parity(spark):
     # sanity on the threshold: every returned pair really is >= 0.999
     assert pairs.where(F.col("cosine") < 0.999).count() == 0
 
-    # carrier parity: same trained quantizer through both forms
+    # a prebuilt quantizer is the one the operator would train itself
     lit_c = ivf_centroids(corpus, n_cells=8)
-    df_c = ivf_centroids_df(corpus, n_cells=8)
-    p_lit = {
+    prebuilt = {
         (r.id_1, r.id_2)
         for r in ivf_neardup_pairs(
-            corpus, threshold=0.9, centroids=lit_c
+            corpus, threshold=0.999, centroids=lit_c
         ).collect()
     }
-    p_df = {
-        (r.id_1, r.id_2)
-        for r in ivf_neardup_pairs(
-            corpus, threshold=0.9, centroids=df_c
-        ).collect()
-    }
-    assert p_lit == p_df
+    assert prebuilt == found
     # top-1 of the multi-assignment equals ivf_assign's cell
-    from pandabase_spark.operators.similarity import ivf_assign
-
     top1 = _with_cells_topn(corpus, "embedding", lit_c, 1).select(
         "vec_id", F.element_at("cells", 1).alias("cell")
     )
@@ -250,85 +240,111 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert len(exact & approx) / len(exact) >= 0.5
 
 
-def test_ivf_dataframe_centroids_parity(spark):
-    """The cluster-resident trainer (ivf_centroids_df) runs the same
-    seeding and Lloyd updates as the driver-resident one, so the two
-    quantizers must agree to float tolerance — and the DataFrame-path
-    search must return the same result set as the literal path when
-    given the equivalent quantizer."""
+def _numpy_ivf_centroids(spark, corpus, n_cells, iters):
+    """NumPy reference of ivf_centroids' algorithm: seeds are the
+    ``n_cells`` rows with the smallest xxhash64(id) (``_seed_vectors``),
+    each Lloyd step assigns every vector to its max-dot centroid (ties
+    to the lowest cell), takes exact per-cell means, unit-normalizes,
+    and an empty cell keeps its previous centroid. Dots are summed left
+    to right in double, as the literal fold does, so assignments
+    match bit for bit. Returns (centroids, number of empty-cell
+    updates)."""
+    import numpy as np
+
     from pandabase_spark.operators.similarity import (
-        ann_topk_ivf, ivf_centroids, ivf_centroids_df,
+        _seed_vectors, _train_sample,
     )
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    lists = ivf_centroids(emb, n_cells=8, iters=2)
-    cdf = ivf_centroids_df(emb, n_cells=8, iters=2)
-    got = {
-        r["cell"]: list(r["cvec"])
-        for r in cdf.collect()
-    }
-    assert set(got) == set(range(8))
-    for cell, vec in enumerate(lists):
-        assert got[cell] == pytest.approx(vec, abs=1e-9), f"cell {cell}"
+    def unit(v):
+        n = sum(float(x) * float(x) for x in v) ** 0.5
+        return v / n if n > 0 else v
 
-    q = emb.where(F.col("vec_id") < 5)
-    lit_res = {
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in ann_topk_ivf(
-            emb, q, k=10, nprobe=3, centroids=lists
-        ).collect()
-    }
-    df_res = {
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in ann_topk_ivf(
-            emb, q, k=10, nprobe=3, centroids=cdf
-        ).collect()
-    }
-    assert lit_res == df_res
+    train = _train_sample(
+        corpus, id_col="vec_id", vec_col="embedding", sample_mod=None
+    )
+    seeds = _seed_vectors(train, n_cells)
+    cents = np.array(
+        [unit(np.asarray(r["_v"], dtype=np.float64)) for r in seeds]
+    )
+    X = np.array(
+        [r["embedding"] for r in corpus.select("embedding").collect()],
+        dtype=np.float64,
+    )
+    empties = 0
+    for _ in range(iters):
+        dots = np.zeros((len(X), n_cells))
+        for j in range(X.shape[1]):
+            dots = dots + X[:, j : j + 1] * cents[:, j][None, :]
+        cell = np.argmax(dots, axis=1)
+        empties += n_cells - len(set(cell.tolist()))
+        cents = np.array(
+            [
+                unit(X[cell == c].mean(axis=0)) if (cell == c).any()
+                else cents[c]
+                for c in range(n_cells)
+            ]
+        )
+    return cents, empties
+
+
+def test_ivf_dataframe_centroids_parity(spark):
+    """ivf_centroids against an independent NumPy reference of the
+    same algorithm (seeding, exact per-cell means, unit norm, empty
+    cells keep their centroid) — on the driver embeddings, and on a
+    degenerate corpus of 2 distinct vectors where a 3-cell quantizer
+    must carry an empty cell forward."""
+    from pandabase_spark.operators.similarity import ivf_centroids
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    got = ivf_centroids(emb, n_cells=8, iters=2)
+    ref, _ = _numpy_ivf_centroids(spark, emb, 8, 2)
+    assert len(got) == 8
+    for cell, vec in enumerate(got):
+        assert vec == pytest.approx(list(ref[cell]), abs=1e-9), cell
+
+    base = [[1.0, 0.0, 0.0], [0.6, 0.8, 0.0]]
+    tiny = spark.createDataFrame(
+        [(i, base[i % 2]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    got = ivf_centroids(tiny, n_cells=3, iters=3)
+    ref, empties = _numpy_ivf_centroids(spark, tiny, 3, 3)
+    # 3 seeds over 2 distinct vectors: a duplicate seed loses every
+    # tie to the lower cell, so some cell is empty on every update
+    assert empties >= 3
+    for cell, vec in enumerate(got):
+        assert vec == pytest.approx(list(ref[cell]), abs=1e-9), cell
 
 
 def test_ivf_convergence_tol_stops_both_trainers(spark):
     """``tol`` turns iters into a cap: Lloyd stops once max centroid
-    movement falls to tol — and BOTH trainers make the identical stop
-    decision (the early exit must never break the parity pin). Pinned
-    without guessing the data's convergence rate: probe the actual
-    movement of iteration 2, then rerun with tol just above it and
-    assert the loop stops exactly there with the iters=2 quantizer."""
-    from pandabase_spark.operators.similarity import (
-        ivf_centroids, ivf_centroids_df,
-    )
+    movement falls to tol. Pinned without guessing the data's
+    convergence rate: probe the actual movement of iteration 2, then
+    rerun with tol just above it and assert the loop stops exactly
+    there with the iters=2 quantizer."""
+    from pandabase_spark.operators.similarity import ivf_centroids
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
     # a tol no update can exceed (unit-norm centroids move <= 2)
-    # stops after exactly one iteration, both trainers
-    i1, i1df = {}, {}
+    # stops after exactly one iteration
+    i1 = {}
     one = ivf_centroids(emb, n_cells=8, iters=5, tol=10.0, info=i1)
-    one_df = ivf_centroids_df(emb, n_cells=8, iters=5, tol=10.0, info=i1df)
-    assert i1["iters_run"] == 1 and i1df["iters_run"] == 1
+    assert i1["iters_run"] == 1
     fixed1 = ivf_centroids(emb, n_cells=8, iters=1)
     for a, b in zip(one, fixed1):
         assert a == pytest.approx(b, abs=1e-12)
-    got = {r["cell"]: list(r["cvec"]) for r in one_df.collect()}
-    for cell, vec in enumerate(one):
-        assert got[cell] == pytest.approx(vec, abs=1e-9)
 
     # probe iteration 2's movement, then stop ON it mid-loop
     probe: dict = {}
     fixed2 = ivf_centroids(emb, n_cells=8, iters=2, tol=0.0, info=probe)
     assert probe["iters_run"] == 2 and probe["final_move"] > 0.0
     tol = probe["final_move"] * (1 + 1e-9)
-    mid, middf = {}, {}
+    mid = {}
     stopped = ivf_centroids(emb, n_cells=8, iters=8, tol=tol, info=mid)
-    stopped_df = ivf_centroids_df(
-        emb, n_cells=8, iters=8, tol=tol, info=middf
-    )
-    assert mid["iters_run"] == 2 and middf["iters_run"] == 2
+    assert mid["iters_run"] == 2
     for a, b in zip(stopped, fixed2):
         assert a == pytest.approx(b, abs=1e-12)
-    got2 = {r["cell"]: list(r["cvec"]) for r in stopped_df.collect()}
-    for cell, vec in enumerate(stopped):
-        assert got2[cell] == pytest.approx(vec, abs=1e-9)
 
 
 def test_winnow_guarantee_shared_substring(spark):
@@ -890,44 +906,6 @@ def test_ivfpq_planted_recall(spark):
     assert hits >= 9
 
 
-def test_ivf_auto_crossover_picks_trainer_by_index_size(spark, monkeypatch):
-    """ann_topk_ivf with no prebuilt quantizer trains on the side of
-    the literal-path crossover the index size calls for: literal list
-    below IVF_LITERAL_MAX_TERMS = n_cells x dim, cluster-resident
-    DataFrame above. Results are identical either side (the trainers
-    are parity-pinned); only the quantizer's residence switches."""
-    import pandabase_spark.operators.similarity as sim
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    dim = emb.select(F.size("embedding")).first()[0]
-    q = emb.where("vec_id < 3")
-
-    calls = []
-    orig_list, orig_df = sim.ivf_centroids, sim.ivf_centroids_df
-    monkeypatch.setattr(
-        sim, "ivf_centroids",
-        lambda *a, **k: (calls.append("list"), orig_list(*a, **k))[1],
-    )
-    monkeypatch.setattr(
-        sim, "ivf_centroids_df",
-        lambda *a, **k: (calls.append("df"), orig_df(*a, **k))[1],
-    )
-
-    # below the crossover: 8 cells x dim << default threshold
-    monkeypatch.setattr(sim, "IVF_LITERAL_MAX_TERMS", 8 * dim + 1)
-    low = sim.ann_topk_ivf(emb, q, k=5, n_cells=8, nprobe=8)
-    low_rows = {(r["query_id"], r["vec_id"]) for r in low.collect()}
-    assert calls == ["list"]
-
-    # above it: same workload, threshold lowered under 8 x dim
-    monkeypatch.setattr(sim, "IVF_LITERAL_MAX_TERMS", 8 * dim - 1)
-    high = sim.ann_topk_ivf(emb, q, k=5, n_cells=8, nprobe=8)
-    high_rows = {(r["query_id"], r["vec_id"]) for r in high.collect()}
-    assert calls == ["list", "df"]
-    # identical results — the switch changes residence, not answers
-    assert low_rows == high_rows
-
-
 def test_persisted_ivf_index_identical_to_in_memory(spark, tmp_path):
     """write_ivf_index + ann_topk_indexed return rows IDENTICAL to
     ann_topk_ivf under the same (deterministic, hash-seeded)
@@ -1004,26 +982,26 @@ def test_persisted_ivf_index_empty_and_missing_cells(spark, tmp_path):
     assert bare.columns == ["query_id", "vec_id", "cosine", "rank"]
 
 
-def test_persisted_ivf_index_df_branch_parity(spark, tmp_path, monkeypatch):
-    """Above the literal-path crossover the persisted index trains AND
-    serves cluster-resident (DataFrame quantizer, broadcast-data
-    scoring) — and returns exactly the rows of the literal path."""
-    import pandabase_spark.operators.similarity as sim
+def test_load_centroids_requires_dense_cell_ids(spark, tmp_path):
+    """The literal scorers name a cell by its list position, so the
+    persisted sidecar must hold cells 0..n-1: rows in any file order
+    load sorted by cell, and a gap ({0, 2}) raises instead of quietly
+    renumbering cell 2 as cell 1."""
+    from pandabase_spark.operators.similarity import _load_centroids
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.where("vec_id < 3")
-    as_set = lambda df: {
-        (r["query_id"], r["vec_id"], round(r["cosine"], 9), r["rank"])
-        for r in df.collect()
-    }
-    lit_path = str(tmp_path / "idx_lit")
-    sim.write_ivf_index(emb, lit_path, n_cells=8, iters=2, sample_mod=2)
-    lit = as_set(sim.ann_topk_indexed(spark, lit_path, q, k=5, nprobe=4))
-    monkeypatch.setattr(sim, "IVF_LITERAL_MAX_TERMS", 1)
-    df_path = str(tmp_path / "idx_df")
-    sim.write_ivf_index(emb, df_path, n_cells=8, iters=2, sample_mod=2)
-    dfr = as_set(sim.ann_topk_indexed(spark, df_path, q, k=5, nprobe=4))
-    assert lit == dfr
+    schema = "cell int, cvec array<double>"
+    ok = str(tmp_path / "ok")
+    spark.createDataFrame(
+        [(1, [0.0, 1.0]), (0, [1.0, 0.0])], schema
+    ).coalesce(1).write.parquet(f"{ok}/centroids")
+    assert _load_centroids(spark, ok) == [[1.0, 0.0], [0.0, 1.0]]
+
+    gap = str(tmp_path / "gap")
+    spark.createDataFrame(
+        [(0, [1.0, 0.0]), (2, [0.0, 1.0])], schema
+    ).coalesce(1).write.parquet(f"{gap}/centroids")
+    with pytest.raises(ValueError, match="0..n-1"):
+        _load_centroids(spark, gap)
 
 
 def test_append_ivf_index_matches_rebuild_and_bruteforce(spark, tmp_path):
