@@ -564,13 +564,11 @@ def main() -> None:
         append_ivfpq_index, compact_index,
     )
 
-    from pandabase_spark.operators.similarity import (
-        _load_append_artifacts,
-    )
+    from pandabase_spark.operators.similarity import _load_index
 
     # frozen artifacts loaded once for the 6-batch append loop (same
     # hoist as the streaming ingest queries — r15)
-    _pq_art = _load_append_artifacts(spark, pq_path, codebooks=True)
+    _pq_art = _load_index(spark, pq_path)
     for b in range(6):
         append_ivfpq_index(
             emb.where(F.col("vec_id") % 97 == b), pq_path,

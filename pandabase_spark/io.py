@@ -96,6 +96,7 @@ from pandabase_spark.types import (
     narrowing_aggs_grouped,
     pandas_to_spark,
     spark_to_logical,
+    stat_json,
 )
 
 AUTO_INDEX_NAME = "pandabase_auto_generated_index"  # reference:pandabase/helpers.py:13
@@ -497,26 +498,6 @@ class KeyedCatalog:
             return dataclasses.replace(m, num_buckets=nb)
         return m
 
-    @staticmethod
-    def _json_stat(v: Any):
-        """JSON-safe form of a min/max stat value. Datetimes/dates use
-        ISO strings — their lexicographic order IS their temporal
-        order, so bound compares after round-trip stay correct."""
-        import datetime
-
-        if v is None:
-            return None
-        if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-            # stored stats are naive local wall time (what collect()
-            # returns for a timestamp), so an aware bound is compared
-            # as the same instant in that representation
-            v = v.astimezone().replace(tzinfo=None)
-        if isinstance(v, (datetime.datetime, datetime.date)):
-            return v.isoformat()
-        if isinstance(v, (int, float, str, bool)):
-            return v
-        return str(v)
-
     def _segment_frame(
         self,
         table_name: str,
@@ -594,8 +575,8 @@ class KeyedCatalog:
         return {
             str(r[PART_DIR]): {
                 c: [
-                    self._json_stat(r[f"_lo_{c}"]),
-                    self._json_stat(r[f"_hi_{c}"]),
+                    stat_json(r[f"_lo_{c}"]),
+                    stat_json(r[f"_hi_{c}"]),
                 ]
                 for c in m.stats_columns
             }
@@ -4848,10 +4829,20 @@ class KeyedCatalog:
                 rng = st.get(col)
                 if not rng or rng[0] is None or rng[1] is None:
                     continue
-                lo_j = self._json_stat(lo) if lo is not None else None
-                hi_j = self._json_stat(hi) if hi is not None else None
-                if (hi_j is not None and rng[0] > hi_j) or (
-                    lo_j is not None and rng[1] < lo_j
+                lo_j = stat_json(lo)
+                hi_j = stat_json(hi)
+                # a string never orders against a number: manifests
+                # written before decimal stats became numbers hold
+                # them as strings, and those leaves are read, not
+                # skipped
+                if (
+                    hi_j is not None
+                    and isinstance(rng[0], str) == isinstance(hi_j, str)
+                    and rng[0] > hi_j
+                ) or (
+                    lo_j is not None
+                    and isinstance(rng[1], str) == isinstance(lo_j, str)
+                    and rng[1] < lo_j
                 ):
                     return True
             return False

@@ -461,7 +461,7 @@ def ivf_neardup_pairs(
     ``nassign`` (or ``n_cells`` resolution) trades candidate volume
     for recall, pinned against the exact join in pytest. Pass
     ``centroids`` to reuse a trained quantizer (e.g. a persisted
-    index's sidecar via :func:`_load_centroids`); threshold semantics
+    index's ``centroids`` via :func:`_load_index`); threshold semantics
     match :func:`embedding layer <cosine_topk>` cosine."""
     if centroids is None:
         centroids = ivf_centroids(
@@ -565,6 +565,17 @@ def ann_topk_ivf(
 # Persisted IVF index: the cell-partitioned, partition-pruned serving shape
 # ---------------------------------------------------------------------------
 
+# The sidecars' schemas, known by construction (the index writers
+# produce exactly these): _load_index reads with them and never runs
+# a footer-inference job.
+_SIDECAR_SCHEMAS = {
+    "centroids": "cell int, cvec array<double>",
+    "codebooks": "j int, code int, cvec array<double>",
+    "meta": "residual boolean",
+    "anchors": "cell int, avec array<double>",
+}
+
+
 def _centroids_literal_df(spark, centroids: "list[list[float]]") -> DataFrame:
     """Driver-side centroid list as a JVM-literal DataFrame.
 
@@ -651,29 +662,6 @@ def write_ivf_index(
     )
 
 
-def _load_append_artifacts(
-    spark, path: str, *, codebooks: bool = False
-) -> dict:
-    """Load the FROZEN serving artifacts a per-batch append needs,
-    once: the streaming foreachBatch hoist (guide §4.5 applied at the
-    micro-batch level — the quantizer/codebooks never change between
-    batches by the add-after-train contract, so re-reading the
-    sidecars and re-collecting the codebooks per micro-batch bought
-    nothing; at a month of 1-minute triggers that is ~43k redundant
-    sidecar reads + driver collects). Pass the returned dict to
-    ``append_ivf_index``/``append_ivfpq_index`` via ``_artifacts``."""
-    art: dict = {
-        "centroids": _load_centroids(spark, path),
-        "residual": _index_is_residual(spark, path),
-    }
-    art["anchors"] = (
-        spark.read.parquet(f"{path}/anchors") if art["residual"] else None
-    )
-    if codebooks:
-        art["codebooks"] = _load_codebooks(spark, path)
-    return art
-
-
 def append_ivf_index(
     new_vectors: DataFrame,
     path: str,
@@ -687,8 +675,8 @@ def append_ivf_index(
     without rebuilding it — the FAISS add-after-train contract and the
     100 TB maintenance story: at scale the corpus arrives continuously
     and a full retrain+rewrite per batch would be O(corpus) when the
-    new data is O(batch). The persisted quantizer is loaded (tiny
-    sidecar read), the batch is cell-assigned against those FROZEN
+    new data is O(batch). The persisted quantizer is loaded (one job,
+    :func:`_load_index`), the batch is cell-assigned against those FROZEN
     centroids (one projection, no shuffle beyond the partition write),
     and the rows land as additional parquet files inside their cells'
     existing ``cell=<c>`` directories (``mode("append")`` +
@@ -719,14 +707,13 @@ def append_ivf_index(
     directory layout, not of bookkeeping. Without ``txn`` the write is
     a plain at-least-once append under a fresh unique label. Cell
     pruning is untouched: ``cell`` stays the leading partition level
-    and probes never filter on ``txn``."""
+    and probes never filter on ``txn``.
+
+    ``_artifacts``: a :func:`_load_index` dict loaded once by the
+    caller (the streaming sinks' hoist out of ``foreachBatch``)."""
     spark = new_vectors.sparkSession
-    centroids = (
-        _artifacts["centroids"]
-        if _artifacts is not None
-        else _load_centroids(spark, path)
-    )
-    assigned = ivf_assign(new_vectors, centroids, vec_col=vec_col)
+    index = _artifacts if _artifacts is not None else _load_index(spark, path)
+    assigned = ivf_assign(new_vectors, index["centroids"], vec_col=vec_col)
     _append_index_batch(spark, assigned, path, txn)
 
 
@@ -907,7 +894,7 @@ def write_ivfpq_index(
             anchors_df = local_frame(
                 spark,
                 [(i, [float(x) for x in a]) for i, a in enumerate(anchors)],
-                "cell int, avec array<double>",
+                _SIDECAR_SCHEMAS["anchors"],
             )
         else:
             anchors_df = _cell_mean_anchors(staged, vec_col).persist()
@@ -937,13 +924,13 @@ def write_ivfpq_index(
         ("centroids", cdf),
         (
             "codebooks",
-            local_frame(
-                spark, book_rows, "j int, code int, cvec array<double>"
-            ),
+            local_frame(spark, book_rows, _SIDECAR_SCHEMAS["codebooks"]),
         ),
         (
             "meta",
-            local_frame(spark, [(bool(residual),)], "residual boolean"),
+            local_frame(
+                spark, [(bool(residual),)], _SIDECAR_SCHEMAS["meta"]
+            ),
         ),
     ]
     if anchors_df is not None:
@@ -1042,70 +1029,94 @@ def _cell_mean_anchors(assigned: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
-def _index_is_residual(spark, path: str) -> bool:
-    """The persisted ``residual`` flag; indexes written before the
-    meta sidecar existed are raw-encoding by construction. ONLY the
-    sidecar's absence maps to False — a transient read failure must
-    RAISE, not silently treat a residual index as raw (encoding a
-    batch without the anchor shift would corrupt it permanently —
-    r12 review)."""
+def _load_index(spark, path: str) -> dict:
+    """Every FROZEN artifact of a persisted index in ONE Spark job:
+    the sidecars that exist, scanned with their known schemas, tagged,
+    unioned by name and collected once. The dict holds
+
+    - ``centroids``: the :func:`ivf_centroids` list, sorted by cell.
+      The literal scorers name a cell by its list position, so the
+      cells must be exactly 0..n-1; anything else raises instead of
+      renumbering cells against the ``cell=<c>`` directories on disk.
+    - ``codebooks``: the PQ books, or None for a raw IVF index. A
+      codebook sidecar that exists but is empty raises.
+    - ``residual``: only a MISSING meta sidecar means raw (indexes
+      from before it are raw by construction). One that cannot be read
+      fails the load: encoding a batch of a residual index without the
+      anchor shift would corrupt it permanently.
+    - ``anchors``: the residual anchors as a driver-local
+      ``(cell, avec)`` frame, or None for a raw index.
+
+    The serve and append paths take this dict; a streaming sink loads
+    it once outside ``foreachBatch`` and passes it as ``_artifacts``
+    (the artifacts never change after training)."""
+    import functools
+
     from pandabase_spark.fs import HadoopFS
 
-    if not HadoopFS(spark).exists(f"{path}/meta"):
-        return False
-    # schema known by construction (this module wrote the sidecar):
-    # saves the per-serve driver-side footer inference (r15)
-    row = (
-        spark.read.schema("residual boolean")
-        .parquet(f"{path}/meta")
-        .first()
+    fs = HadoopFS(spark)
+    names = ["centroids"] + [
+        n for n in ("codebooks", "meta", "anchors")
+        if fs.exists(f"{path}/{n}")
+    ]
+    scan = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            spark.read.schema(_SIDECAR_SCHEMAS[n])
+            .parquet(f"{path}/{n}")
+            .withColumn("_sidecar", F.lit(n))
+            for n in names
+        ],
     )
-    return bool(row["residual"]) if row is not None else False
+    rows: "dict[str, list]" = {n: [] for n in names}
+    for r in scan.collect():
+        rows[r["_sidecar"]].append(r)
 
-
-def _load_centroids(spark, path: str) -> "list[list[float]]":
-    """The persisted quantizer sidecar back as the :func:`ivf_centroids`
-    list every scorer takes: one collect of n_cells rows, sorted by
-    ``cell`` on the driver. The literal scorers name a cell by its list
-    position, so the sidecar's cells must be exactly 0..n-1 — anything
-    else raises here instead of silently renumbering cells against the
-    ``cell=<c>`` directories already on disk."""
-    # schema known by construction (_centroids_literal_df): no
-    # footer-inference job
-    rows = sorted(
-        spark.read.schema("cell int, cvec array<double>")
-        .parquet(f"{path}/centroids")
-        .collect(),
-        key=lambda r: r["cell"],
-    )
-    cells = [r["cell"] for r in rows]
-    if not rows or cells != list(range(len(rows))):
+    cent = sorted(rows["centroids"], key=lambda r: r["cell"])
+    cells = [r["cell"] for r in cent]
+    if not cent or cells != list(range(len(cent))):
         raise ValueError(
             f"centroid sidecar at {path}/centroids must hold cells "
-            f"0..n-1 exactly once; {len(rows)} rows, first cells "
+            f"0..n-1 exactly once; {len(cent)} rows, first cells "
             f"{cells[:8]}"
         )
-    return [[float(x) for x in r["cvec"]] for r in rows]
+    books = None
+    if "codebooks" in rows:
+        code_rows = sorted(
+            rows["codebooks"], key=lambda r: (r["j"], r["code"])
+        )
+        if not code_rows:
+            raise ValueError(f"empty codebook sidecar at {path}/codebooks")
+        books = [[] for _ in range(1 + code_rows[-1]["j"])]
+        for r in code_rows:
+            books[r["j"]].append([float(x) for x in r["cvec"]])
+    meta = rows.get("meta")
+    residual = bool(meta[0]["residual"]) if meta else False
+    anchors = None
+    if residual:
+        if "anchors" not in rows:
+            raise ValueError(
+                f"residual index at {path} has no anchors sidecar"
+            )
+        anchors = local_frame(
+            spark,
+            sorted((r["cell"], r["avec"]) for r in rows["anchors"]),
+            _SIDECAR_SCHEMAS["anchors"],
+        )
+    return {
+        "centroids": [[float(x) for x in r["cvec"]] for r in cent],
+        "codebooks": books,
+        "residual": residual,
+        "anchors": anchors,
+    }
 
 
-def _load_codebooks(spark, path: str) -> "list[list[list[float]]]":
-    """The persisted codebook sidecar back as the in-memory
-    list-of-books shape every PQ entry point shares. Bounded driver
-    state by construction: m×k rows."""
-    # schema known by construction (write_ivfpq_index's local_frame
-    # DDL): saves the per-serve driver-side footer inference (r15)
-    rows = (
-        spark.read.schema("j int, code int, cvec array<double>")
-        .parquet(f"{path}/codebooks")
-        .collect()
-    )
-    if not rows:
-        raise ValueError(f"empty codebook sidecar at {path}/codebooks")
-    m = 1 + max(r["j"] for r in rows)
-    books: "list[list[list[float]]]" = [[] for _ in range(m)]
-    for r in sorted(rows, key=lambda r: (r["j"], r["code"])):
-        books[r["j"]].append([float(x) for x in r["cvec"]])
-    return books
+def _index_codebooks(index: dict, path: str) -> "list[list[list[float]]]":
+    """The loaded codebooks of an IVFPQ index; a raw IVF index has
+    none, and PQ serving or encoding against it is a caller error."""
+    if index["codebooks"] is None:
+        raise ValueError(f"no codebook sidecar: {path} is not an IVFPQ index")
+    return index["codebooks"]
 
 
 def append_ivfpq_index(
@@ -1126,26 +1137,15 @@ def append_ivfpq_index(
     replay-idempotent (dynamic partition overwrite of the batch's own
     ``txn=`` sub-partitions), untagged appends are at-least-once.
 
-    ``_artifacts``: the :func:`_load_append_artifacts` hoist — a
-    streaming sink loads the frozen quantizer/codebooks/anchors ONCE
-    outside ``foreachBatch`` instead of re-reading every sidecar and
-    re-collecting the codebooks per micro-batch (r15)."""
+    ``_artifacts``: a :func:`_load_index` dict loaded once by the
+    caller — a streaming sink hoists it out of ``foreachBatch``, so a
+    micro-batch pays no sidecar load at all."""
     spark = new_vectors.sparkSession
-    if _artifacts is not None:
-        centroids = _artifacts["centroids"]
-        books = _artifacts["codebooks"]
-        residual = _artifacts["residual"]
-        anchors_df = _artifacts["anchors"]
-    else:
-        centroids = _load_centroids(spark, path)
-        books = _load_codebooks(spark, path)
-        residual = _index_is_residual(spark, path)
-        anchors_df = (
-            spark.read.parquet(f"{path}/anchors") if residual else None
-        )
-    staged = ivf_assign(new_vectors, centroids, vec_col=vec_col)
-    if residual:
-        staged = _subtract_cell_anchor(staged, anchors_df, vec_col)
+    index = _artifacts if _artifacts is not None else _load_index(spark, path)
+    books = _index_codebooks(index, path)
+    staged = ivf_assign(new_vectors, index["centroids"], vec_col=vec_col)
+    if index["residual"]:
+        staged = _subtract_cell_anchor(staged, index["anchors"], vec_col)
     encoded = pq_encode(
         staged, books, vec_col=vec_col
     ).select(F.col(id_col), "cell", "pq_code")
@@ -1164,10 +1164,10 @@ def ann_topk_ivfpq_indexed(
     nprobe: int = 4,
 ) -> DataFrame:
     """Serve IVFADC top-k from a :func:`write_ivfpq_index` index: load
-    the two tiny sidecars, expand each query's ``nprobe`` nearest
-    cells through the SHARED :func:`_expand_probes` (same quantizer
-    scoring as the raw-vector serve path, planning-time ``cell IN``
-    pruning), and score ONLY the probed cells' (id, pq_code) rows with
+    every sidecar in one job (:func:`_load_index`), expand each query's
+    ``nprobe`` nearest cells in one collect through the SHARED
+    :func:`_expand_probes` (same quantizer scoring as the raw-vector
+    serve path, planning-time ``cell IN`` pruning), and score ONLY the probed cells' (id, pq_code) rows with
     the production :func:`_adc_expr` — per candidate m code lookups
     over ~16-32×-compressed state, never a raw vector. This is the
     100 TB query shape: index IO ≈ (nprobe/n_cells) × (compressed
@@ -1180,12 +1180,12 @@ def ann_topk_ivfpq_indexed(
     from pyspark.sql.window import Window
 
     qid = query_id_col or id_col
-    centroids = _load_centroids(spark, path)
-    books = _load_codebooks(spark, path)
+    index = _load_index(spark, path)
+    books = _index_codebooks(index, path)
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    probes, cells = _expand_probes(centroids, q, nprobe)
+    probes, cells = _expand_probes(index["centroids"], q, nprobe)
     existing = _existing_cells(spark, f"{path}/data")
     cells = [c for c in cells if c in existing]
     if not cells:
@@ -1194,16 +1194,14 @@ def ann_topk_ivfpq_indexed(
         )
     data = _pruned_cells_read(spark, path, cells)
     scored = data.join(F.broadcast(probes), on="cell")
-    if _index_is_residual(spark, path):
+    if index["residual"]:
         # residual encoding (the true IVFADC): the stored codes
         # quantize x − a[cell], and ||q − x|| == ||(q − a) − (x − a)||
         # under any common per-cell shift, so the query shifts by the
         # SAME persisted anchor before ADC — one broadcast left join
         # on the probed cells (no-anchor cells shift by zero, the
         # encode-side rule)
-        scored = _subtract_cell_anchor(
-            scored, spark.read.parquet(f"{path}/anchors"), "_qvec"
-        )
+        scored = _subtract_cell_anchor(scored, index["anchors"], "_qvec")
     w = Window.partitionBy("query_id").orderBy(
         F.col("approx_dist").asc(), F.col(id_col)
     )
@@ -1242,14 +1240,15 @@ def _expand_probes(
     one definition so the quantizer scoring can never diverge): pick
     each query's ``nprobe`` nearest cells against the loaded quantizer
     list and return ``(probes, cells)`` — the per-query
-    (query_id, _qvec, cell) probe frame (localCheckpointed: it is
-    consumed twice) and the sorted distinct probed cell list for the
-    planning-time ``cell IN`` predicate."""
-    probes = _probe_cells(q, centroids, nprobe).localCheckpoint(eager=True)
-    cells = sorted(
-        r["cell"] for r in probes.select("cell").distinct().collect()
-    )
-    return probes, cells
+    (query_id, _qvec, cell) probe frame and the sorted distinct probed
+    cell list for the planning-time ``cell IN`` predicate. One collect
+    serves both: the rows come back as a driver-local frame, which the
+    serve paths' broadcast join would have materialized on the driver
+    anyway."""
+    expanded = _probe_cells(q, centroids, nprobe)
+    rows = expanded.collect()
+    probes = local_frame(q.sparkSession, rows, expanded.schema)
+    return probes, sorted({r["cell"] for r in rows})
 
 
 def _empty_topk(spark, q, existing, path, id_col, score_col):
@@ -1639,11 +1638,12 @@ def ann_topk_indexed(
     nprobe: int = 3,
 ) -> DataFrame:
     """Serve approximate top-k from a :func:`write_ivf_index` index:
-    load the quantizer sidecar (tiny), pick each query's ``nprobe``
-    nearest cells, and scan ONLY those cells' partitions — the probed
-    cell set is collected to a literal ``cell IN (...)`` predicate
-    (<= n_queries x nprobe ints), so pruning happens at PLANNING time
-    and unprobed directories are never opened. Scoring inside the
+    load the quantizer (one job, :func:`_load_index`), pick each
+    query's ``nprobe`` nearest cells, and scan ONLY those cells'
+    partitions — the probed cell set is collected to a literal
+    ``cell IN (...)`` predicate (<= n_queries x nprobe ints), so
+    pruning happens at PLANNING time and unprobed directories are
+    never opened. Scoring inside the
     probed cells is :func:`ann_topk_ivf`'s exact cosine; with the
     same quantizer the two return IDENTICAL rows (pinned in pytest) —
     persistence changes where the inverted lists live, never the
@@ -1651,7 +1651,7 @@ def ann_topk_indexed(
     from pyspark.sql.window import Window
 
     qid = query_id_col or id_col
-    centroids = _load_centroids(spark, path)
+    centroids = _load_index(spark, path)["centroids"]
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("_qvec")
     )

@@ -56,6 +56,7 @@ from pandabase_spark.sources.delta_reader import (
     DeltaProtocolError,
     _replay,
 )
+from pandabase_spark.types import stat_json
 
 
 def _unescape_hive(name: str) -> "str | None":
@@ -105,24 +106,6 @@ def _statable(dt) -> bool:
         T.FloatType, T.DoubleType, T.DecimalType, T.StringType,
         T.DateType, T.TimestampType, T.TimestampNTZType,
     ))
-
-
-def _json_stat(v):
-    """A min/max aggregate -> its JSON-ready stats value, or None to
-    omit (non-finite floats are not valid JSON; Delta omits them)."""
-    import datetime
-    import decimal
-    import math
-
-    if v is None:
-        return None
-    if isinstance(v, float) and not math.isfinite(v):
-        return None
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    return v
 
 
 def _collect_staged_stats(
@@ -180,10 +163,10 @@ def _collect_staged_stats(
         for name, dt in cols:
             nulls[name] = int(r[f"__z_{name}"])
             if _statable(dt):
-                v = _json_stat(r[f"__mn_{name}"])
+                v = stat_json(r[f"__mn_{name}"])
                 if v is not None:
                     mn[name] = v
-                v = _json_stat(r[f"__mx_{name}"])
+                v = stat_json(r[f"__mx_{name}"])
                 if v is not None:
                     mx[name] = v
         out[r["__rel"]] = json.dumps({

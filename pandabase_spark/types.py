@@ -428,3 +428,37 @@ def pandas_to_spark(
         elif isinstance(f.dataType, T.TimestampType):
             use[f.name] = pd.to_datetime(col, utc=True)
     return spark.createDataFrame(use, schema=schema)
+
+
+def stat_json(v):
+    """JSON form of a min/max stat value: the one rule keyed-table
+    manifests and Delta file stats share. None means "no stat" (a
+    reader never skips on it).
+
+    - Datetimes and dates become ISO strings, whose lexicographic
+      order is their temporal order. An aware datetime first becomes
+      naive local wall time (what ``collect()`` returns for a
+      timestamp), so an aware bound compares as the same instant.
+    - Decimals become floats. ``Decimal -> float`` is monotone: two
+      decimals may tie as floats but never swap order, so a skip test
+      (a strict inequality) never drops a matching leaf.
+    - Non-finite floats are dropped (not valid JSON; Delta omits them).
+    - Other numbers, strings and booleans stay; anything else becomes
+      its ``str``."""
+    import datetime
+    import decimal
+    import math
+
+    if v is None:
+        return None
+    if isinstance(v, float) and not math.isfinite(v):
+        return None
+    if isinstance(v, decimal.Decimal):
+        return float(v)
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        v = v.astimezone().replace(tzinfo=None)
+    if isinstance(v, (datetime.datetime, datetime.date)):
+        return v.isoformat()
+    if isinstance(v, (int, float, str, bool)):
+        return v
+    return str(v)

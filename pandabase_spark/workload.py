@@ -4944,11 +4944,9 @@ def streaming_ann_index_ingest(
     # hoist the FROZEN quantizer out of foreachBatch: per-batch
     # sidecar re-reads buy nothing by the add-after-train contract
     # (r15, guide §4.5 at the micro-batch level)
-    from pandabase_spark.operators.similarity import (
-        _load_append_artifacts,
-    )
+    from pandabase_spark.operators.similarity import _load_index
 
-    art = _load_append_artifacts(spark, path)
+    art = _load_index(spark, path)
     with _stream_cycle(spark):
         stream = (
             spark.readStream.schema(rest.schema)
@@ -5319,11 +5317,9 @@ def streaming_ivfpq_index_ingest(
     # foreachBatch: the per-batch sidecar re-reads and the per-batch
     # codebook driver collect buy nothing by the add-after-train
     # contract (r15, guide §4.5 at the micro-batch level)
-    from pandabase_spark.operators.similarity import (
-        _load_append_artifacts,
-    )
+    from pandabase_spark.operators.similarity import _load_index
 
-    art = _load_append_artifacts(spark, path, codebooks=True)
+    art = _load_index(spark, path)
     with _stream_cycle(spark):
         stream = (
             spark.readStream.schema(rest.schema)

@@ -987,21 +987,102 @@ def test_load_centroids_requires_dense_cell_ids(spark, tmp_path):
     persisted sidecar must hold cells 0..n-1: rows in any file order
     load sorted by cell, and a gap ({0, 2}) raises instead of quietly
     renumbering cell 2 as cell 1."""
-    from pandabase_spark.operators.similarity import _load_centroids
+    from pandabase_spark.operators.similarity import _load_index
 
     schema = "cell int, cvec array<double>"
     ok = str(tmp_path / "ok")
     spark.createDataFrame(
         [(1, [0.0, 1.0]), (0, [1.0, 0.0])], schema
     ).coalesce(1).write.parquet(f"{ok}/centroids")
-    assert _load_centroids(spark, ok) == [[1.0, 0.0], [0.0, 1.0]]
+    assert _load_index(spark, ok)["centroids"] == [[1.0, 0.0], [0.0, 1.0]]
 
     gap = str(tmp_path / "gap")
     spark.createDataFrame(
         [(0, [1.0, 0.0]), (2, [0.0, 1.0])], schema
     ).coalesce(1).write.parquet(f"{gap}/centroids")
     with pytest.raises(ValueError, match="0..n-1"):
-        _load_centroids(spark, gap)
+        _load_index(spark, gap)
+
+
+def test_load_index_sidecar_rules(spark, tmp_path):
+    """The one-job loader keeps the per-sidecar rules: no ``meta`` dir
+    means a raw index; a ``meta`` dir that cannot be read makes the
+    load raise (never a silent raw); a ``codebooks`` sidecar that
+    exists but is empty raises."""
+    from py4j.protocol import Py4JJavaError
+
+    from pandabase_spark.operators.similarity import _load_index
+
+    def index_with_centroids(name):
+        path = str(tmp_path / name)
+        spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+            "cell int, cvec array<double>",
+        ).coalesce(1).write.parquet(f"{path}/centroids")
+        return path
+
+    raw = _load_index(spark, index_with_centroids("raw"))
+    assert raw["residual"] is False
+    assert raw["codebooks"] is None and raw["anchors"] is None
+
+    bad = index_with_centroids("bad_meta")
+    (tmp_path / "bad_meta" / "meta").mkdir()
+    (tmp_path / "bad_meta" / "meta" / "part-00000.parquet").write_bytes(
+        b"not a parquet file"
+    )
+    with pytest.raises(Py4JJavaError, match="meta/part-00000.parquet"):
+        _load_index(spark, bad)
+
+    empty = index_with_centroids("empty_books")
+    spark.createDataFrame(
+        [], "j int, code int, cvec array<double>"
+    ).coalesce(1).write.parquet(f"{empty}/codebooks")
+    with pytest.raises(ValueError, match="empty codebook"):
+        _load_index(spark, empty)
+
+
+def test_persisted_index_job_counts(spark, tmp_path):
+    """Serving a persisted index costs one job to load every sidecar,
+    one to expand the probes and the scan itself; a txn append costs
+    the load and the write. Counted per verb in its own job group."""
+    from pandabase_spark.operators.similarity import (
+        ann_topk_indexed, ann_topk_ivfpq_indexed, append_ivfpq_index,
+        ivf_centroids, pq_codebooks, write_ivf_index, write_ivfpq_index,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = ivf_centroids(emb, n_cells=8, iters=2, sample_mod=2)
+    books = pq_codebooks(emb, m=8, k=16, iters=2, sample_mod=2)
+    pq_path = str(tmp_path / "ivfpq")
+    write_ivfpq_index(
+        emb.where("vec_id >= 100"), pq_path, centroids=cents,
+        codebooks=books,
+    )
+    ivf_path = str(tmp_path / "ivf")
+    write_ivf_index(emb, ivf_path, n_cells=8, iters=2, sample_mod=2)
+    q = emb.where("vec_id < 2")
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n = jobs("pin-ivfpq-query", lambda: ann_topk_ivfpq_indexed(
+        spark, pq_path, q, k=10, nprobe=4
+    ).collect())
+    assert n <= 6, f"ann_topk_ivfpq_indexed ran {n} jobs (budget 6)"
+    n = jobs("pin-ivf-query", lambda: ann_topk_indexed(
+        spark, ivf_path, q, k=10, nprobe=4
+    ).collect())
+    assert n <= 6, f"ann_topk_indexed ran {n} jobs (budget 6)"
+    n = jobs("pin-ivfpq-append", lambda: append_ivfpq_index(
+        emb.where("vec_id < 100"), pq_path, txn=("pin", 0)
+    ))
+    assert n <= 3, f"append_ivfpq_index ran {n} jobs (budget 3)"
 
 
 def test_append_ivf_index_matches_rebuild_and_bruteforce(spark, tmp_path):

@@ -2857,3 +2857,63 @@ def test_stats_bounds_accept_time_zone_aware_datetimes(spark, catalog):
             if [r["k"] for r in got] != [i]:
                 misses.append((i, tz, got))
     assert not misses, misses
+
+
+def test_stats_bounds_on_decimal_columns(spark, catalog, monkeypatch):
+    """DECIMAL stats compare as numbers: point and range reads over a
+    decimal column with Decimal, int and float bounds return exactly
+    the matching rows, and the leaves below the range are still
+    skipped. A manifest written when decimal stats were stored as
+    strings is read without a wrong skip and without a TypeError."""
+    from decimal import Decimal
+
+    import pandabase_spark.io as kio
+
+    prices = [Decimal(50 + 23 * i) / 100 for i in range(48)]  # 0.50..11.31
+    rows = list(enumerate(prices))
+    frame = lambda part: spark.createDataFrame(
+        part, "k bigint, price decimal(12,2)"
+    )
+
+    def build(name):
+        catalog.to_table(frame(rows[:24]), name, keys=["k"],
+                         num_buckets=4, stats_columns=["price"])
+        catalog.to_table(frame(rows[24:]), name, keys=["k"], how="append")
+
+    build("dec_t")
+    legacy_stat = kio.stat_json
+    monkeypatch.setattr(
+        kio, "stat_json",
+        lambda v: str(v) if isinstance(v, Decimal) else legacy_stat(v),
+    )
+    build("dec_legacy")
+    monkeypatch.undo()
+
+    def keys(name, lo, hi):
+        got = catalog.read_table(name, stats_bounds={"price": (lo, hi)})
+        return sorted(r["k"] for r in got.select("k").collect())
+
+    def want(lo, hi):
+        return [
+            k for k, p in rows
+            if (lo is None or p >= Decimal(str(lo)))
+            and (hi is None or p <= Decimal(str(hi)))
+        ]
+
+    bounds = [(p, p) for p in prices[::5]]
+    bounds += [(float(p), float(p)) for p in prices[1::5]]
+    bounds += [(1, 1), (Decimal("9.20"), None), (9.2, None), (None, 2),
+               (Decimal("3.5"), 7.0), (9, 12)]
+    misses = [
+        (name, lo, hi)
+        for name in ("dec_t", "dec_legacy")
+        for lo, hi in bounds
+        if keys(name, lo, hi) != want(lo, hi)
+    ]
+    assert not misses, misses
+    assert len(want(Decimal("9.20"), None)) == 10
+
+    # every leaf of the first segment sits below 5.80 and is skipped
+    got = catalog.read_table("dec_t", stats_bounds={"price": (9.2, None)})
+    files = {r[0] for r in got.select(F.input_file_name()).collect()}
+    assert len({f.split("/dec_t/")[1].split("/")[0] for f in files}) == 1
