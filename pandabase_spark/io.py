@@ -84,7 +84,12 @@ from pyspark.sql import types as T
 
 from pandabase_spark import kt_log
 from pandabase_spark.fs import HadoopFS
-from pandabase_spark.kt_log import LOG_DIR, LOG_FILE  # noqa: F401
+from pandabase_spark.kt_log import (  # noqa: F401
+    LOG_DIR,
+    LOG_FILE,
+    META_FILE,
+    PART_DIR,
+)
 from pandabase_spark.localframe import local_frame
 from pandabase_spark.names import clean_name, is_clean
 from pandabase_spark.types import (
@@ -100,8 +105,6 @@ from pandabase_spark.types import (
 )
 
 AUTO_INDEX_NAME = "pandabase_auto_generated_index"  # reference:pandabase/helpers.py:13
-PART_DIR = "_pb_b"
-META_FILE = "_pandabase_meta.json"
 DV_DIR = "_pb_dv"
 WRITE_MODES = ("create_only", "append", "upsert")
 
@@ -507,8 +510,8 @@ class KeyedCatalog:
         buckets: "Sequence[int] | None" = None,
     ) -> DataFrame:
         """One segment's rows under the CURRENT logical schema — the
-        single place the per-segment metadata readers (stats, blooms,
-        sketches) get their frames, so a segment written before a
+        single place the per-segment metadata readers (the skipping
+        pass, sketches) get their frames, so a segment written before a
         column rename is read through its manifest ``segcols`` name
         map instead of null-filling the renamed column (which would
         silently corrupt the recomputed metadata). ``buckets``
@@ -541,106 +544,88 @@ class KeyedCatalog:
             .select(*aliases)
         )
 
-    def _segment_stats(
+    def _segment_skipping(
         self,
         table_name: str,
         seg: str,
         m: TableMeta,
         man: "dict | None" = None,
         buckets: "Sequence[int] | None" = None,
-    ) -> dict:
-        """Per-(bucket) min/max of ``m.stats_columns`` for one segment,
-        read back from the files actually on disk (a column-pruned
-        scan of just the stat columns — parquet footers do most of the
-        work). ``buckets`` restricts to the segment's LIVE buckets so
-        a commit-time recompute after partial-bucket DML neither
-        rescans superseded leaves nor records dead entries. Shape:
-        {str(bucket): {col: [min, max]}}."""
-        df = self._segment_frame(table_name, seg, m, man, buckets=buckets)
+    ) -> "tuple[dict, dict]":
+        """Per-(bucket) data-skipping metadata for one segment, read
+        back from the files actually on disk in ONE grouped aggregate
+        (the write-time skipping pass of Delta Lake): min/max of
+        ``m.stats_columns`` and Bloom bitsets of ``m.bloom_columns``.
+        ``buckets`` restricts to the segment's LIVE leaves, so a
+        commit-time recompute after partial-bucket DML neither rescans
+        superseded leaves nor records dead entries.
+
+        The bucket is the file's own leaf directory (the last
+        ``_pb_b=N`` path component), never an earlier match in the
+        catalog path. Each row is repeated once per hash seed
+        (BLOOM_K), and each Bloom column folds its JVM-side
+        ``xxhash64(col, seed) mod BLOOM_M`` positions into one
+        ``collect_set`` per bucket — bounded by BLOOM_M (8192)
+        regardless of row count, so the collect is metadata-sized.
+        The stats' min/max ignore the repeats. NULLs set no bits
+        (a bloom probe is an equality probe; NULL never equals), and a
+        (bucket, column) whose values are all NULL gets no entry.
+
+        Returns ``(stats, blooms)`` shaped
+        {str(bucket): {col: [min, max]}} and
+        {str(bucket): {col: {"m": .., "k": .., "b64": ..}}}.
+
+        Sketches stay a separate pass (:meth:`_segment_sketches`): they
+        are per segment, not per bucket, and carry forward only while
+        the live bucket list is unchanged."""
+        df = self._segment_frame(
+            table_name, seg, m, man, buckets=buckets
+        ).withColumn(
+            PART_DIR,
+            F.regexp_extract(
+                F.col("_metadata.file_path"),
+                f"/{PART_DIR}=(\\d+)/[^/]*$",
+                1,
+            ).cast("int"),
+        )
         aggs = []
         for c in m.stats_columns:
             aggs.append(F.min(c).alias(f"_lo_{c}"))
             aggs.append(F.max(c).alias(f"_hi_{c}"))
-        rows = (
-            df.withColumn(
-                PART_DIR,
-                F.regexp_extract(
-                    F.input_file_name(), f"{PART_DIR}=(\\d+)", 1
-                ).cast("int"),
+        if m.bloom_columns:
+            df = df.withColumn(
+                "_pb_seed",
+                F.explode(F.sequence(F.lit(0), F.lit(BLOOM_K - 1))),
             )
-            .groupBy(PART_DIR)
-            .agg(*aggs)
-            .collect()
-        )
-        return {
-            str(r[PART_DIR]): {
-                c: [
-                    stat_json(r[f"_lo_{c}"]),
-                    stat_json(r[f"_hi_{c}"]),
-                ]
+        for ci, c in enumerate(m.bloom_columns):
+            aggs.append(
+                F.collect_set(
+                    F.when(
+                        F.col(c).isNotNull(),
+                        F.pmod(
+                            F.xxhash64(F.col(c), F.col("_pb_seed")),
+                            F.lit(BLOOM_M),
+                        ),
+                    )
+                ).alias(f"_bl_{ci}")
+            )
+        rows = df.groupBy(PART_DIR).agg(*aggs).collect()
+        stats: dict = {}
+        blooms: dict = {}
+        for r in rows:
+            b = str(r[PART_DIR])
+            stats[b] = {
+                c: [stat_json(r[f"_lo_{c}"]), stat_json(r[f"_hi_{c}"])]
                 for c in m.stats_columns
             }
-            for r in rows
-        }
-
-    def _segment_blooms(
-        self,
-        table_name: str,
-        seg: str,
-        m: TableMeta,
-        man: "dict | None" = None,
-        buckets: "Sequence[int] | None" = None,
-    ) -> dict:
-        """Per-(bucket) Bloom bitsets of ``m.bloom_columns`` for one
-        segment — equality data skipping a tier above min/max stats
-        (high-cardinality string/id columns where ranges prune
-        nothing). One distributed job for ALL columns: every row emits
-        BLOOM_K candidate bit positions per column (JVM-side
-        ``xxhash64(col, seed) mod BLOOM_M``), one explode, then
-        ``collect_set`` per (bucket, column) — the set is bounded by
-        BLOOM_M (8192) regardless of row count, so the collect is
-        metadata-sized. NULLs set no bits (a bloom probe is an
-        equality probe; NULL never equals). Shape:
-        {str(bucket): {col: {"m": .., "k": .., "b64": ..}}}.
-        ``buckets`` restricts to live leaves, as in _segment_stats."""
-        df = self._segment_frame(table_name, seg, m, man, buckets=buckets)
-        probes = []
-        for ci, c in enumerate(m.bloom_columns):
-            for s in range(BLOOM_K):
-                probes.append(
-                    F.struct(
-                        F.lit(ci).alias("ci"),
-                        F.when(
-                            F.col(c).isNotNull(),
-                            F.pmod(
-                                F.xxhash64(F.col(c), F.lit(s)),
-                                F.lit(BLOOM_M),
-                            ),
-                        ).alias("p"),
-                    )
-                )
-        rows = (
-            df.withColumn(
-                PART_DIR,
-                F.regexp_extract(
-                    F.input_file_name(), f"{PART_DIR}=(\\d+)", 1
-                ).cast("int"),
-            )
-            .select(PART_DIR, F.explode(F.array(*probes)).alias("cp"))
-            .where(F.col("cp.p").isNotNull())
-            .groupBy(PART_DIR, F.col("cp.ci").alias("ci"))
-            .agg(F.collect_set("cp.p").alias("ps"))
-            .collect()
-        )
-        out: dict = {}
-        for r in rows:
-            col = m.bloom_columns[r["ci"]]
-            out.setdefault(str(r[PART_DIR]), {})[col] = {
-                "m": BLOOM_M,
-                "k": BLOOM_K,
-                "b64": _bloom_b64(r["ps"]),
-            }
-        return out
+            for ci, c in enumerate(m.bloom_columns):
+                if r[f"_bl_{ci}"]:
+                    blooms.setdefault(b, {})[c] = {
+                        "m": BLOOM_M,
+                        "k": BLOOM_K,
+                        "b64": _bloom_b64(r[f"_bl_{ci}"]),
+                    }
+        return stats, blooms
 
     def _segment_sketches(
         self,
@@ -950,13 +935,14 @@ class KeyedCatalog:
         vacuum leaves a stub there, never a hole."""
         import time as _time
 
-        # Data-skipping stats ride in the manifest, keyed by SEGMENT
-        # NAME — segments are immutable, so a segment's stats are valid
-        # in every manifest that references it. Merge order: caller-
-        # provided (clone carry-over) → prior CURRENT manifest (retained
-        # segments) → computed fresh for new segments when the table
-        # declares stats_columns. A segment with no stats entry is
-        # simply never pruned — stats are advisory, absence is safe.
+        # Data-skipping metadata rides in the manifest, keyed by
+        # SEGMENT NAME — segments are immutable, so a segment's stats,
+        # blooms and sketches are valid in every manifest that
+        # references it. Merge order: caller-provided (clone
+        # carry-over) → prior CURRENT manifest (retained segments) →
+        # computed fresh for new segments when the table declares the
+        # columns. A segment with no entry is simply never pruned —
+        # skipping metadata is advisory, absence is safe.
         # ``meta`` overrides the on-disk TableMeta: schema-changing
         # ops (rename/drop/restore) pass their POST-op meta so this
         # commit's snapshot reflects the operation it records, even
@@ -964,49 +950,38 @@ class KeyedCatalog:
         m = meta if meta is not None else self.meta(table_name)
         prior_man = self._manifest(table_name)
         prior_skip = self._skipping(table_name, prior_man)
+        # Stats and Bloom filters share one merge discipline, per
+        # segment: the caller's entry, else the prior manifest's entry
+        # pruned to the LIVE bucket list (partial-bucket DML
+        # tombstones buckets, and dead entries would bloat every later
+        # manifest), else computed fresh. A segment lacking either
+        # entry pays ONE skipping pass (_segment_skipping) for both.
         allstats: dict = {}
-        if m.stats_columns:
-            prior = prior_skip.get("stats", {})
-            for seg in segments:
-                if stats and seg in stats:
-                    allstats[seg] = stats[seg]
-                elif seg in prior:
-                    # prune carried per-bucket entries to the LIVE
-                    # bucket list — partial-bucket DML tombstones
-                    # buckets, and dead entries would bloat every
-                    # later manifest
-                    live = {str(b) for b in segments[seg]}
-                    allstats[seg] = {
-                        b: st
-                        for b, st in prior[seg].items()
-                        if b in live
-                    }
-                else:
-                    allstats[seg] = self._segment_stats(
-                        table_name, seg, m, man=prior_man,
-                        buckets=segments[seg],
-                    )
-        # bloom filters follow the same merge discipline: segment-
-        # immutable, carried forward verbatim, computed once for
-        # segments that lack an entry. Absence is advisory-safe.
         allblooms: dict = {}
-        if m.bloom_columns:
-            priorb = prior_skip.get("blooms", {})
-            for seg in segments:
-                if blooms and seg in blooms:
-                    allblooms[seg] = blooms[seg]
-                elif seg in priorb:
-                    live = {str(b) for b in segments[seg]}
-                    allblooms[seg] = {
-                        b: bl
-                        for b, bl in priorb[seg].items()
-                        if b in live
+        kinds = [
+            (i, out, given or {}, prior_skip.get(key, {}))
+            for i, (cols, out, given, key) in enumerate((
+                (m.stats_columns, allstats, stats, "stats"),
+                (m.bloom_columns, allblooms, blooms, "blooms"),
+            ))
+            if cols
+        ]
+        for seg, bs in segments.items():
+            live = {str(b) for b in bs}
+            fresh = None
+            for i, out, given, prior in kinds:
+                if seg in given:
+                    out[seg] = given[seg]
+                elif seg in prior:
+                    out[seg] = {
+                        b: e for b, e in prior[seg].items() if b in live
                     }
                 else:
-                    allblooms[seg] = self._segment_blooms(
-                        table_name, seg, m, man=prior_man,
-                        buckets=segments[seg],
-                    )
+                    if fresh is None:
+                        fresh = self._segment_skipping(
+                            table_name, seg, m, man=prior_man, buckets=bs
+                        )
+                    out[seg] = fresh[i]
         allsketches: dict = {}
         if m.sketch_columns:
             priors = prior_skip.get("sketches", {})

@@ -2,8 +2,10 @@
 
 Layout under a table directory::
 
+    _pandabase_meta.json      table meta: keys, buckets, schema
     _pb_log/{v:010d}.json     version v's manifest, or a vacuum stub
     _pandabase_log.json       hint: a copy of a recent version's manifest
+    seg-<uuid>/_pb_b=<n>/     one segment's rows in hash bucket n
 
 The rule is the Delta Lake log protocol (Armbrust et al., VLDB 2020):
 a writer that planned against version ``v`` commits by creating
@@ -30,8 +32,10 @@ import json
 import os
 from typing import Iterator
 
+META_FILE = "_pandabase_meta.json"
 LOG_FILE = "_pandabase_log.json"
 LOG_DIR = "_pb_log"
+PART_DIR = "_pb_b"
 
 
 def version_path(table_path: str, v: int) -> str:

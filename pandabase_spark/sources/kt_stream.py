@@ -58,9 +58,6 @@ from pyspark.sql.datasource import (
 
 from pandabase_spark import kt_log
 
-_META_FILE = "_pandabase_meta.json"
-_PART_DIR = "_pb_b"
-
 
 def _read_json(path: str) -> dict:
     with open(path) as fh:
@@ -138,7 +135,7 @@ class _KTStreamReader(DataSourceStreamReader):
                     )
                 prev = cur
         meta = man_e.get("meta_schema") or _read_json(
-            os.path.join(self._dir, _META_FILE)
+            os.path.join(self._dir, kt_log.META_FILE)
         )
         fields = [
             f["name"]
@@ -158,7 +155,7 @@ class _KTStreamReader(DataSourceStreamReader):
             for b in bs:
                 if (seg, b) in base_leaves:
                     continue
-                leaf = os.path.join(self._dir, seg, f"{_PART_DIR}={b}")
+                leaf = os.path.join(self._dir, seg, f"{kt_log.PART_DIR}={b}")
                 files = sorted(glob.glob(os.path.join(leaf, "*.parquet")))
                 if files:
                     parts.append(_LeafPartition(files, rename, fields))
@@ -261,7 +258,7 @@ class KeyedTableStreamSource(DataSource):
         if self._commits_mode():
             return _COMMITS_SCHEMA
         meta = _read_json(
-            os.path.join(self.options["path"], _META_FILE)
+            os.path.join(self.options["path"], kt_log.META_FILE)
         )
         return T.StructType.fromJson(json.loads(meta["schema_json"]))
 

@@ -1,0 +1,106 @@
+#!/usr/bin/env python
+"""Spark jobs per write verb, each with the call site that launched it.
+
+Builds a generated keyed table with ``stats_columns`` and
+``bloom_columns`` plus a Delta copy in a temporary warehouse, then runs
+create, append, upsert, merge, compact, delta_append and
+delta_checkpoint, each in its own Spark job group. For every verb it
+prints the job count and, per job, the call sites Spark records as its
+stage names: the phase tree behind the verb's count. Needs no test
+data. Usage:
+
+    python scripts/jobtrace.py [rows]    # default 2000
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import sys
+import tempfile
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+def main() -> None:
+    rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "2")
+    os.environ.setdefault("PANDABASE_DRIVER_MEM", "2g")
+    from pyspark.sql import functions as F
+
+    from pandabase_spark.io import KeyedCatalog
+    from pandabase_spark.session import get_spark
+    from pandabase_spark.sources import delta_writer as dw
+
+    spark = get_spark("jobtrace")
+    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    wh = tempfile.mkdtemp(prefix="jobtrace_")
+    cat = KeyedCatalog(spark, f"{wh}/kt", default_buckets=8)
+    bronze = f"{wh}/bronze"
+    df = spark.range(rows).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 2.0).alias("v"),
+        F.concat(F.lit("p"), F.col("id") % 97).alias("p"),
+    )
+
+    def where(site: str) -> str:
+        """``site`` plus the enclosing function of a repo call site."""
+        path, _, line = site.rpartition(" at ")[2].rpartition(":")
+        if not path.endswith(".py") or not line.isdigit():
+            return site
+        with open(os.path.join(ROOT, path)) as fh:
+            defs = [
+                ln.split("def ", 1)[1].split("(", 1)[0]
+                for ln in fh.readlines()[: int(line)]
+                if ln.lstrip().startswith("def ")
+            ]
+        return f"{site} ({defs[-1]})" if defs else site
+
+    def trace(verb: str, fn) -> None:
+        group = f"jobtrace-{verb}"
+        sc.setJobGroup(group, verb)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        jids = sorted(st.getJobIdsForGroup(group))
+        print(f"{verb}: {len(jids)} jobs")
+        for j in jids:
+            info = st.getJobInfo(j)
+            sites = []
+            for sid in sorted(info.stageIds if info else []):
+                stage = st.getStageInfo(sid)
+                name = stage.name.replace(ROOT + "/", "") if stage else "?"
+                if (name := where(name)) not in sites:
+                    sites.append(name)
+            print(f"  job {j}: {' | '.join(sites)}")
+
+    try:
+        trace("create", lambda: cat.to_table(
+            df, "t", keys=["k"], stats_columns=["v"], bloom_columns=["p"]))
+        trace("append", lambda: cat.to_table(
+            df.withColumn("k", F.col("k") + rows), "t", keys=["k"],
+            how="append"))
+        trace("upsert", lambda: cat.to_table(
+            df.where(F.col("k") < 3).withColumn("v", F.col("v") + 1.0),
+            "t", keys=["k"], how="upsert"))
+        trace("merge", lambda: cat.merge_table(
+            df.where(F.col("k") < 3)
+            .withColumn("k", F.col("k") + rows - 1)
+            .withColumn("v", F.col("v") - 1.0),
+            "t", when_matched_update="all"))
+        trace("compact", lambda: cat.compact("t"))
+        dw.delta_create(df, bronze)
+        trace("delta_append", lambda: dw.delta_append(
+            df.withColumn("k", F.col("k") + rows), bronze))
+        trace("delta_checkpoint", lambda: dw.delta_checkpoint(spark, bronze))
+    finally:
+        spark.stop()
+        shutil.rmtree(wh, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    main()

@@ -2917,3 +2917,109 @@ def test_stats_bounds_on_decimal_columns(spark, catalog, monkeypatch):
     got = catalog.read_table("dec_t", stats_bounds={"price": (9.2, None)})
     files = {r[0] for r in got.select(F.input_file_name()).collect()}
     assert len({f.split("/dec_t/")[1].split("/")[0] for f in files}) == 1
+
+
+def _skipping_from_rows(spark, catalog, name):
+    """The stats and blooms a table's manifest should hold, derived
+    without the commit's aggregate: each live leaf's rows are read
+    back, bucketed with ``_bucket_expr``, summarized in pandas, and
+    every non-NULL bloom value is hashed with ``_bloom_positions``."""
+    from pandabase_spark.io import (
+        BLOOM_K, BLOOM_M, PART_DIR, _bloom_b64, _bucket_expr,
+    )
+
+    m = catalog.meta(name)
+    man = catalog._manifest(name)
+    nb = man.get("nb") or m.num_buckets
+    stats, blooms, positions = {}, {}, {}
+    for seg, live in man["segments"].items():
+        pdf = (
+            spark.read.parquet(f"{catalog._path(name)}/{seg}")
+            .drop(PART_DIR)
+            .withColumn("_b", _bucket_expr(m.keys, nb))
+            .where(F.col("_b").isin(list(live)))
+            .toPandas()
+        )
+        st, bl = stats.setdefault(seg, {}), blooms.setdefault(seg, {})
+        for b, grp in pdf.groupby("_b"):
+            st[str(b)] = {
+                c: ([None, None] if grp[c].isna().all()
+                    else [float(grp[c].min()), float(grp[c].max())])
+                for c in m.stats_columns
+            }
+            for c in m.bloom_columns:
+                bits = set()
+                for val in grp[c].dropna():
+                    if val not in positions:
+                        positions[val] = catalog._bloom_positions(
+                            val, m.schema[c].dataType
+                        )
+                    bits.update(positions[val])
+                if bits:
+                    bl.setdefault(str(b), {})[c] = {
+                        "m": BLOOM_M, "k": BLOOM_K, "b64": _bloom_b64(bits),
+                    }
+    return stats, blooms
+
+
+def test_skipping_metadata_matches_rows_after_every_write(spark, catalog):
+    """The per-(segment, bucket) stats and blooms the commit records
+    equal an independent recompute from the rows on disk after create,
+    append, upsert and compact — including a bucket whose bloom column
+    is all NULL (no bloom entry) and one whose stats column is all NULL
+    ([None, None])."""
+    from pandabase_spark.io import _bucket_expr
+
+    def batch(lo, hi, shift=0.0):
+        b = _bucket_expr(["k"], 4)
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            F.when(b != 1, F.col("id") * 1.5 + shift).alias("v"),
+            F.when(b != 0, F.concat(F.lit("p"), F.col("id") % 37)).alias("p"),
+        )
+
+    def check():
+        man = catalog._manifest("sk_t")
+        skip = catalog._skipping("sk_t", man)
+        stats, blooms = _skipping_from_rows(spark, catalog, "sk_t")
+        assert skip["stats"] == stats
+        assert skip["blooms"] == blooms
+        for seg in man["segments"]:
+            assert stats[seg]["1"]["v"] == [None, None]
+            assert "0" in stats[seg] and "0" not in blooms[seg]
+
+    catalog.to_table(batch(0, 60), "sk_t", keys=["k"], num_buckets=4,
+                     stats_columns=["v"], bloom_columns=["p"])
+    check()
+    catalog.to_table(batch(100, 130), "sk_t", keys=["k"], how="append")
+    check()
+    catalog.to_table(batch(50, 110, shift=0.25), "sk_t", keys=["k"],
+                     how="upsert")
+    check()
+    catalog.compact("sk_t")
+    assert len(catalog._manifest("sk_t")["segments"]) == 1
+    check()
+
+
+def test_skipping_bucket_is_the_leaf_dir_not_the_catalog_path(spark, tmp_path):
+    """A catalog whose own path contains ``_pb_b=3/`` still records one
+    stats and bloom entry per live bucket, each with that bucket's real
+    range — not one entry for bucket 3 spanning the whole segment."""
+    cat = KeyedCatalog(spark, str(tmp_path / "_pb_b=3" / "wh"))
+    df = spark.range(800).select(
+        F.col("id").alias("k"),
+        F.col("id").cast("double").alias("v"),
+        (F.col("id") % 11).alias("p"),
+    )
+    cat.to_table(df, "pb_t", keys=["k"], num_buckets=4,
+                 stats_columns=["v"], bloom_columns=["p"])
+    man = cat._manifest("pb_t")
+    skip = cat._skipping("pb_t", man)
+    stats, blooms = _skipping_from_rows(spark, cat, "pb_t")
+    (seg, live), = man["segments"].items()
+    assert sorted(live) == [0, 1, 2, 3]
+    assert set(skip["stats"][seg]) == set(skip["blooms"][seg]) == {
+        "0", "1", "2", "3"
+    }
+    assert skip["stats"] == stats
+    assert skip["blooms"] == blooms
