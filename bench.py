@@ -783,15 +783,12 @@ def main() -> None:
         "aqe_skew_join_split": aqe_skew_fact(),
     }
 
-    # Manifest-size fact: the commit JSON must stay O(segments), with
+    # Manifest-size fact: the commit JSON must stay O(segments) — the
     # leaf-proportional skipping metadata (stats/blooms/sketches)
-    # offloaded to a sidecar past SKIP_INLINE_MAX (io.py) — at 100 TB
-    # (10^5-10^6 leaves) an inline manifest would be the new
-    # bottleneck: every reader of every version re-parses it just to
-    # learn the segment list. Recorded: bytes, leaves, bytes/leaf for
-    # the bloom-bearing bench table, and whether the offload engaged.
-    # The size-vs-leaves curve is documented in SURVEY.md §8 (measured
-    # by scripts/manifest_curve.py).
+    # lives in each segment's _pb_skip.json, never in a version file,
+    # so at 100 TB (10^5-10^6 leaves) every reader of every version
+    # still parses only the segment list. Recorded: bytes, leaves,
+    # bytes/leaf for the bloom-bearing bench table.
     import json as _json
 
     _man = cat._manifest("b_bloom_cust")
@@ -802,7 +799,6 @@ def main() -> None:
     plan_checks["manifest_bytes_per_leaf"] = round(
         _man_bytes / max(_leaves, 1), 1
     )
-    plan_checks["manifest_skip_offloaded"] = "skip" in _man
 
     # Input-layout fact: parquet scan parallelism is bounded by ROW
     # GROUPS, not spark.sql.files.maxPartitionBytes — a single-row-

@@ -166,8 +166,8 @@ class HadoopFS:
 
     def mtime(self, p: str) -> float:
         """Last-modification time of ``p`` in epoch seconds (0.0 if
-        absent) — one stat call; vacuum's sidecar retention horizon
-        uses it the way Delta's retention window uses file age."""
+        absent) — one stat call; vacuum's staged-segment retention
+        horizon uses it the way Delta's retention window uses file age."""
         local = self._local_os_path(p)
         if local is not None:
             import os as _os

@@ -17,6 +17,8 @@ version log::
         _pb_log/<v>.json            manifest v: {segment -> live bucket list}
         _pandabase_log.json         hint: a copy of a recent manifest
         seg-<uuid>/_pb_b=<n>/*.parquet
+        seg-<uuid>/_pb_skip.json    the segment's per-bucket skipping
+                                    entries (stats, Blooms, sketches)
 
 Rows are hash-bucketed: ``pmod(xxhash64(key...), num_buckets)`` names the
 partition directory inside each segment. The manifest maps every segment
@@ -89,6 +91,7 @@ from pandabase_spark.kt_log import (  # noqa: F401
     LOG_FILE,
     META_FILE,
     PART_DIR,
+    SKIP_FILE,
 )
 from pandabase_spark.localframe import local_frame
 from pandabase_spark.names import clean_name, is_clean
@@ -108,24 +111,12 @@ AUTO_INDEX_NAME = "pandabase_auto_generated_index"  # reference:pandabase/helper
 DV_DIR = "_pb_dv"
 WRITE_MODES = ("create_only", "append", "upsert")
 
-# Data-skipping metadata (stats/blooms/sketches) rides INLINE in the
-# manifest while its serialized form stays under this budget; above it,
-# the commit writes the whole skipping dict to a per-version sidecar
-# (<v>.skip.json) and the manifest holds only the reference. Rationale
-# at 100 TB: per-(segment,bucket) entries grow with the LEAF count
-# (10^5-10^6 leaves), and every reader of every version would otherwise
-# re-parse megabytes of skipping JSON just to learn the segment list —
-# the Delta checkpoint / Iceberg manifest-file separation. 256 KiB
-# keeps small tables zero-extra-IO (one file read, as today) and caps
-# the manifest itself at O(segments), not O(leaves).
-SKIP_INLINE_MAX = 256 * 1024
-
-# vacuum keeps an above-current .skip.json (a possibly in-flight
-# commit's sidecar, written before its claim) unless it is older than
-# this — a writer that crashed between sidecar and claim must not leak
-# its sidecar forever on a cold table. One hour dwarfs any real gap
-# between a commit's two steps, and vacuum is stop-the-world anyway.
-SKIP_ORPHAN_RETENTION_S = 3600.0
+# vacuum leaves an unreferenced segment directory younger than this
+# alone (the default of ``vacuum(orphan_age_s=)``): a writer stages its
+# segment — data and skipping file — before it claims the version, so
+# a young unreferenced segment may be an in-flight commit. One hour
+# dwarfs any real gap between a commit's two steps.
+STAGED_SEGMENT_RETENTION_S = 3600.0
 
 
 def _op_str(v) -> "str | None":
@@ -141,8 +132,8 @@ def _op_str(v) -> "str | None":
 DV_AUTO_MAX_ROWS = 10_000
 
 # read_table(stats_bounds=...) planner gate: when the bounded column
-# also carries manifest sketches, the range's selectivity is estimated
-# first (estimate_range_rows — O(#segments) metadata, no data scan);
+# also carries segment sketches, the range's selectivity is estimated
+# first (estimate_range_rows — O(#leaves) metadata, no data scan);
 # a range this unselective skips the per-leaf min/max probe entirely
 # (it would prune ~nothing) and warns — the CBO use of the sketch
 # surface. Results are identical either way (bounds re-apply as
@@ -317,10 +308,6 @@ class KeyedCatalog:
         # DataFrames persisted mid-write (auto-index staging) that must
         # be released once the segment write has materialized them
         self._pending_unpersist: list[DataFrame] = []
-        # memoized sidecar skipping dicts, keyed (table, sidecar file):
-        # sidecars are immutable once written, so entries never go
-        # stale; bounded FIFO keeps driver memory O(1)
-        self._skip_cache: "dict[tuple[str, str], dict]" = {}
         # decision trail of the last read_table(stats_bounds=...) —
         # {col: {est_rows, total_est, frac, probed}} when sketch
         # selectivity gated the min/max leaf probe
@@ -413,31 +400,42 @@ class KeyedCatalog:
             )
         return man
 
+    def _seg_path(self, table_name: str, seg: str) -> str:
+        """A segment's directory; a "/" in the name marks an external
+        reference (from :meth:`clone_table`), warehouse-relative."""
+        return (
+            f"{self.warehouse}/{seg}"
+            if "/" in seg
+            else f"{self._path(table_name)}/{seg}"
+        )
+
     def _skipping(self, table_name: str, man: dict) -> dict:
-        """The data-skipping dict ({stats, blooms, sketches}) of a
-        manifest — inline for small tables, loaded (and memoized) from
-        the ``<v>.skip.json`` sidecar once a commit's skipping payload
-        outgrew :data:`SKIP_INLINE_MAX`. Every reader goes through
-        here, so the offload is invisible above this line.
-        ``table_name`` must be qualified."""
-        ref = man.get("skip")
-        if not ref:
-            return {
-                k: man.get(k, {})
-                for k in ("stats", "blooms", "sketches")
-            }
-        key = (table_name, ref)
-        hit = self._skip_cache.get(key)
-        if hit is None:
-            hit = json.loads(
-                self.fs.read_text(
-                    f"{self._path(table_name)}/{LOG_DIR}/{ref}"
-                )
-            )
-            if len(self._skip_cache) >= 8:
-                self._skip_cache.pop(next(iter(self._skip_cache)))
-            self._skip_cache[key] = hit
-        return hit
+        """The data-skipping dict of a manifest's live leaves:
+        ``{"stats" | "blooms" | "sketches": {seg: {bucket: {col: ..}}}}``.
+        Each segment's entries live in its own immutable
+        ``_pb_skip.json``, written once by :meth:`_write_segment` and
+        keyed by stable column identity. Here they are read for the
+        live segments, cut to each segment's live buckets
+        (partial-bucket DML tombstones buckets) and keyed by the
+        current column names, so a segment written before a rename
+        answers under the new name. A segment without the file has no
+        entry and is never pruned. ``table_name`` must be qualified."""
+        m = self.meta(table_name)
+        names = {m.colmap.get(c, c): c for c in m.schema.names}
+        out: dict = {"stats": {}, "blooms": {}, "sketches": {}}
+        for seg, bs in man["segments"].items():
+            path = f"{self._seg_path(table_name, seg)}/{SKIP_FILE}"
+            if not self.fs.exists(path):
+                continue  # no skipping file: this segment is always read
+            live = {str(b) for b in bs}
+            doc = json.loads(self.fs.read_text(path))
+            for kind, per_bucket in doc.items():
+                out[kind][seg] = {
+                    b: {names[c]: e for c, e in cols.items() if c in names}
+                    for b, cols in per_bucket.items()
+                    if b in live
+                }
+        return out
 
     def _maybe_auto_compact(self, table_name: str) -> None:
         """Write-path compaction trigger (see ``auto_compact_segments``
@@ -501,92 +499,52 @@ class KeyedCatalog:
             return dataclasses.replace(m, num_buckets=nb)
         return m
 
-    def _segment_frame(
-        self,
-        table_name: str,
-        seg: str,
-        m: TableMeta,
-        man: "dict | None" = None,
-        buckets: "Sequence[int] | None" = None,
-    ) -> DataFrame:
-        """One segment's rows under the CURRENT logical schema — the
-        single place the per-segment metadata readers (the skipping
-        pass, sketches) get their frames, so a segment written before a
-        column rename is read through its manifest ``segcols`` name
-        map instead of null-filling the renamed column (which would
-        silently corrupt the recomputed metadata). ``buckets``
-        restricts to the live leaf dirs."""
-        base = (
-            f"{self.warehouse}/{seg}"
-            if "/" in seg
-            else f"{self._path(table_name)}/{seg}"
-        )
-        want = None if buckets is None else {int(b) for b in buckets}
-        leaves = [
-            f"{base}/{d}"
-            for d in self.fs.list_dirs(base)
-            if d.startswith(f"{PART_DIR}=")
-            and (want is None or int(d.split("=", 1)[1]) in want)
-        ]
-        schema = m.schema
-        sc = (man or {}).get("segcols", {}).get(seg)
-        if not sc:
-            return self.spark.read.schema(schema).parquet(*leaves)
-        phys_fields, aliases = [], []
-        for f in schema.fields:
-            stable = m.colmap.get(f.name, f.name)
-            phys = sc.get(stable, f.name)
-            phys_fields.append(T.StructField(phys, f.dataType, True))
-            aliases.append(F.col(phys).alias(f.name))
-        return (
-            self.spark.read.schema(T.StructType(phys_fields))
-            .parquet(*leaves)
-            .select(*aliases)
-        )
-
     def _segment_skipping(
-        self,
-        table_name: str,
-        seg: str,
-        m: TableMeta,
-        man: "dict | None" = None,
-        buckets: "Sequence[int] | None" = None,
-    ) -> "tuple[dict, dict]":
-        """Per-(bucket) data-skipping metadata for one segment, read
-        back from the files actually on disk in ONE grouped aggregate
-        (the write-time skipping pass of Delta Lake): min/max of
-        ``m.stats_columns`` and Bloom bitsets of ``m.bloom_columns``.
-        ``buckets`` restricts to the segment's LIVE leaves, so a
-        commit-time recompute after partial-bucket DML neither rescans
-        superseded leaves nor records dead entries.
+        self, seg_path: str, buckets: Sequence[int], m: TableMeta
+    ) -> dict:
+        """The skipping entries of one freshly written segment, read
+        back from its files in ONE grouped aggregate (the write-time
+        skipping pass of Delta Lake): per bucket, min/max of
+        ``m.stats_columns``, Bloom bitsets of ``m.bloom_columns`` and
+        KLL/HLL sketches of ``m.sketch_columns``.
 
         The bucket is the file's own leaf directory (the last
         ``_pb_b=N`` path component), never an earlier match in the
-        catalog path. Each row is repeated once per hash seed
-        (BLOOM_K), and each Bloom column folds its JVM-side
-        ``xxhash64(col, seed) mod BLOOM_M`` positions into one
-        ``collect_set`` per bucket — bounded by BLOOM_M (8192)
+        catalog path. With Bloom columns, each row is repeated once
+        per hash seed (BLOOM_K), and each Bloom column folds its
+        JVM-side ``xxhash64(col, seed) mod BLOOM_M`` positions into
+        one ``collect_set`` per bucket — bounded by BLOOM_M (8192)
         regardless of row count, so the collect is metadata-sized.
-        The stats' min/max ignore the repeats. NULLs set no bits
-        (a bloom probe is an equality probe; NULL never equals), and a
-        (bucket, column) whose values are all NULL gets no entry.
+        min/max and HLL ignore the repeats; KLL counts rows, so it
+        sees seed 0 only. NULLs set no bits (a bloom probe is an
+        equality probe; NULL never equals), and a (bucket, column)
+        whose values are all NULL gets no Bloom entry.
 
-        Returns ``(stats, blooms)`` shaped
-        {str(bucket): {col: [min, max]}} and
-        {str(bucket): {col: {"m": .., "k": .., "b64": ..}}}.
+        KLL (quantiles/ranks) runs over the numeric try_cast, so a
+        non-numeric value contributes NULL and is skipped (string
+        sketch columns keep HLL distinct counts without crashing the
+        cast under ANSI mode); HLL (distinct count) runs over the
+        canonical string form. Both are Spark-native DataSketches
+        aggregates and MERGEABLE: table statistics fold the live
+        (segment, bucket) entries, and the data is never rescanned.
 
-        Sketches stay a separate pass (:meth:`_segment_sketches`): they
-        are per segment, not per bucket, and carry forward only while
-        the live bucket list is unchanged."""
-        df = self._segment_frame(
-            table_name, seg, m, man, buckets=buckets
-        ).withColumn(
-            PART_DIR,
-            F.regexp_extract(
-                F.col("_metadata.file_path"),
-                f"/{PART_DIR}=(\\d+)/[^/]*$",
-                1,
-            ).cast("int"),
+        Returns ``{kind: {str(bucket): {col_id: entry}}}`` for each
+        declared kind, ``col_id`` being the stable column identity:
+        stats ``[min, max]``, blooms ``{"m", "k", "b64"}``, sketches
+        ``{"kll": b64, "hll": b64}``."""
+        import base64
+
+        df = (
+            self.spark.read.schema(m.schema)
+            .parquet(*[f"{seg_path}/{PART_DIR}={b}" for b in buckets])
+            .withColumn(
+                PART_DIR,
+                F.regexp_extract(
+                    F.col("_metadata.file_path"),
+                    f"/{PART_DIR}=(\\d+)/[^/]*$",
+                    1,
+                ).cast("int"),
+            )
         )
         aggs = []
         for c in m.stats_columns:
@@ -609,61 +567,11 @@ class KeyedCatalog:
                     )
                 ).alias(f"_bl_{ci}")
             )
-        rows = df.groupBy(PART_DIR).agg(*aggs).collect()
-        stats: dict = {}
-        blooms: dict = {}
-        for r in rows:
-            b = str(r[PART_DIR])
-            stats[b] = {
-                c: [stat_json(r[f"_lo_{c}"]), stat_json(r[f"_hi_{c}"])]
-                for c in m.stats_columns
-            }
-            for ci, c in enumerate(m.bloom_columns):
-                if r[f"_bl_{ci}"]:
-                    blooms.setdefault(b, {})[c] = {
-                        "m": BLOOM_M,
-                        "k": BLOOM_K,
-                        "b64": _bloom_b64(r[f"_bl_{ci}"]),
-                    }
-        return stats, blooms
-
-    def _segment_sketches(
-        self,
-        table_name: str,
-        seg: str,
-        m: TableMeta,
-        buckets: "Sequence[int] | None" = None,
-        man: "dict | None" = None,
-    ) -> dict:
-        """Per-segment mergeable sketches of ``m.sketch_columns`` —
-        KLL (quantiles/ranks) over the numeric try_cast (non-numeric
-        values contribute NULL → skipped, so string sketch columns
-        keep HLL distinct counts without crashing the KLL cast under
-        ANSI mode) and HLL (distinct count) over the canonical string
-        form, both Spark-4 native DataSketches aggregates (JVM,
-        codegen'd). ``buckets`` restricts the scan to the segment's
-        LIVE buckets — required when a partial-bucket DML shrank the
-        segment, where a whole-segment sketch would double-count the
-        replaced buckets' rows against the rewriting segment's own
-        sketch. One column-pruned job per segment for ALL columns;
-        each sketch is a few KB of base64 in the manifest regardless
-        of segment size. Because the sketch families are MERGEABLE,
-        table-level statistics come from folding the per-segment
-        entries — O(#segments) metadata, the data itself is never
-        rescanned (the incremental, ANALYZE-free form of table
-        stats). Shape: {col: {"kll": b64, "hll": b64}}."""
-        import base64
-
-        df = self._segment_frame(
-            table_name, seg, m, man, buckets=buckets
-        )
-        aggs = []
         for c in m.sketch_columns:
-            aggs.append(
-                F.kll_sketch_agg_double(
-                    F.col(c).try_cast("double")
-                ).alias(f"_kll_{c}")
-            )
+            x = F.col(c).try_cast("double")
+            if m.bloom_columns:
+                x = F.when(F.col("_pb_seed") == 0, x)
+            aggs.append(F.kll_sketch_agg_double(x).alias(f"_kll_{c}"))
             # HLL accepts int/long/string/binary only — hash any other
             # type through its canonical string form (distinct-count
             # preserving; doubles stringify uniquely)
@@ -672,14 +580,45 @@ class KeyedCatalog:
                     f"_hll_{c}"
                 )
             )
-        row = df.agg(*aggs).first()
-        out = {}
-        for c in m.sketch_columns:
-            kll, hll = row[f"_kll_{c}"], row[f"_hll_{c}"]
-            out[c] = {
-                "kll": base64.b64encode(kll).decode() if kll else None,
-                "hll": base64.b64encode(hll).decode() if hll else None,
-            }
+        rows = df.groupBy(PART_DIR).agg(*aggs).collect()
+
+        def b64(v):
+            return base64.b64encode(v).decode() if v else None
+
+        ident = {c: m.colmap.get(c, c) for c in m.schema.names}
+        out: dict = {
+            kind: {}
+            for kind, cols in (
+                ("stats", m.stats_columns),
+                ("blooms", m.bloom_columns),
+                ("sketches", m.sketch_columns),
+            )
+            if cols
+        }
+        for r in rows:
+            b = str(r[PART_DIR])
+            if m.stats_columns:
+                out["stats"][b] = {
+                    ident[c]: [
+                        stat_json(r[f"_lo_{c}"]), stat_json(r[f"_hi_{c}"])
+                    ]
+                    for c in m.stats_columns
+                }
+            for ci, c in enumerate(m.bloom_columns):
+                if r[f"_bl_{ci}"]:
+                    out["blooms"].setdefault(b, {})[ident[c]] = {
+                        "m": BLOOM_M,
+                        "k": BLOOM_K,
+                        "b64": _bloom_b64(r[f"_bl_{ci}"]),
+                    }
+            if m.sketch_columns:
+                out["sketches"][b] = {
+                    ident[c]: {
+                        "kll": b64(r[f"_kll_{c}"]),
+                        "hll": b64(r[f"_hll_{c}"]),
+                    }
+                    for c in m.sketch_columns
+                }
         return out
 
     def table_sketch_stats(
@@ -691,19 +630,17 @@ class KeyedCatalog:
         schema: str | None = None,
         version: int | None = None,
     ) -> DataFrame:
-        """Table-level statistics from MANIFEST SKETCHES ONLY — no
-        data scan: decode every live segment's KLL/HLL entry for
-        ``column``, fold them with the native merge aggregates, and
-        emit one row (n_rows, distinct_est, q_<..> per requested
-        quantile). At 100 TB this answers "what does this column look
-        like" in O(#segments) metadata time; accuracy is the sketch
-        families' published bounds (KLL ~1.65% rank error at the
-        default k, HLL ~2% at lgK=12), pinned in pytest. Raises if
-        the table was not created with ``sketch_columns`` covering
-        the column, or some segment predates the declaration (stats
-        here must never silently under-count)."""
-        import base64
-
+        """Table-level statistics from SEGMENT SKETCHES ONLY — no
+        data scan: decode every live (segment, bucket) leaf's KLL/HLL
+        entry for ``column``, fold them with the native merge
+        aggregates, and emit one row (n_rows, distinct_est, q_<..>
+        per requested quantile). At 100 TB this answers "what does
+        this column look like" in O(#leaves) metadata time; accuracy
+        is the sketch families' published bounds (KLL ~1.65% rank
+        error at the default k, HLL ~2% at lgK=12), pinned in pytest.
+        Raises if the table was not created with ``sketch_columns``
+        covering the column, or some segment lacks its sketches
+        (stats here must never silently under-count)."""
         table_name = self._qualify(table_name, schema)
         m = self.meta(table_name)
         if column not in m.sketch_columns:
@@ -712,24 +649,7 @@ class KeyedCatalog:
                 f"(table sketch_columns={m.sketch_columns})"
             )
         man = self._manifest(table_name, version=version)
-        sketches = self._skipping(table_name, man).get("sketches", {})
-        entries = []
-        for seg in man["segments"]:
-            ent = sketches.get(seg, {}).get(column)
-            if not ent or not ent.get("kll"):
-                raise ValueError(
-                    f"segment {seg} of {table_name!r} carries no "
-                    f"sketch for {column!r} — cannot answer from "
-                    "metadata without under-counting"
-                )
-            entries.append(
-                (
-                    bytearray(base64.b64decode(ent["kll"])),
-                    bytearray(base64.b64decode(ent["hll"]))
-                    if ent.get("hll")
-                    else None,
-                )
-            )
+        entries = self._sketch_entries(table_name, man, column)
         if not entries:
             # zero live segments (every row deleted): n_rows=0 and
             # NULL quantiles, not a NULL-everything row — same empty
@@ -786,14 +706,12 @@ class KeyedCatalog:
         """Selectivity estimation from manifest sketches: approximate
         COUNT(*) WHERE lo <= col <= hi without touching data — the
         query-planner primitive (join-order / strategy choices need
-        row estimates, not exact counts). Folds the live segments'
+        row estimates, not exact counts). Folds the live leaves'
         KLL entries and differences the rank estimates at the bounds;
-        cost is O(#segments) metadata, error is KLL's rank bound
+        cost is O(#leaves) metadata, error is KLL's rank bound
         (~1.65% of N at the default k). Either bound may be None
         (open side). Requires ``sketch_columns`` coverage — raises
         rather than guessing."""
-        import base64
-
         table_name = self._qualify(table_name, schema)
         m = self.meta(table_name)
         if column not in m.sketch_columns:
@@ -804,23 +722,43 @@ class KeyedCatalog:
         # ONE manifest fetch serves validation and decoding — a rival
         # commit cannot slip between a check and a re-read
         man = self._manifest(table_name, version=version)
-        sketches = self._skipping(table_name, man).get("sketches", {})
-        entries = []
-        for seg in man["segments"]:
-            ent = sketches.get(seg, {}).get(column)
-            if not ent or not ent.get("kll"):
-                raise ValueError(
-                    f"segment {seg} of {table_name!r} carries no "
-                    f"sketch for {column!r} — cannot estimate from "
-                    "metadata without under-counting"
-                )
-            entries.append(
-                (bytearray(base64.b64decode(ent["kll"])),)
-            )
+        entries = self._sketch_entries(table_name, man, column)
         if not entries:
             return 0  # zero live segments = zero rows, exactly
         est, _ = self._kll_range_estimate(entries, lo, hi)
         return est
+
+    def _sketch_entries(
+        self, table_name: str, man: dict, column: str
+    ) -> "list[tuple]":
+        """Decoded ``(kll, hll)`` sketches of ``column`` for every live
+        (segment, bucket) leaf of ``man`` — the one sketch reader of
+        :meth:`table_sketch_stats`, :meth:`estimate_range_rows` and
+        read_table's selectivity gate. Raises ValueError when a live
+        leaf has no sketch: statistics folded from the rest would
+        under-count."""
+        import base64
+
+        sketches = self._skipping(table_name, man)["sketches"]
+        entries = []
+        for seg, bs in man["segments"].items():
+            for b in bs:
+                ent = sketches.get(seg, {}).get(str(b), {}).get(column)
+                if not ent or not ent.get("kll"):
+                    raise ValueError(
+                        f"segment {seg} of {table_name!r} carries no "
+                        f"sketch for {column!r} — cannot answer from "
+                        "metadata without under-counting"
+                    )
+                entries.append(
+                    (
+                        bytearray(base64.b64decode(ent["kll"])),
+                        bytearray(base64.b64decode(ent["hll"]))
+                        if ent.get("hll")
+                        else None,
+                    )
+                )
+        return entries
 
     def _kll_range_estimate(
         self,
@@ -829,12 +767,13 @@ class KeyedCatalog:
         hi: "float | None",
     ) -> "tuple[int, int]":
         """(estimated rows in [lo, hi], total rows) from one merged-KLL
-        aggregation — a single tiny Spark job serves both numbers, so
-        callers needing the selectivity FRACTION (read_table's probe
-        gate) don't pay a second estimation pass."""
+        aggregation over :meth:`_sketch_entries` — a single tiny Spark
+        job serves both numbers, so callers needing the selectivity
+        FRACTION (read_table's probe gate) don't pay a second
+        estimation pass."""
         sk = local_frame(
             self.spark,
-            entries,
+            [(kll,) for kll, _ in entries],
             T.StructType([T.StructField("_kll", T.BinaryType())]),
         )
         merged = F.kll_merge_agg_double(F.col("_kll"))
@@ -887,9 +826,6 @@ class KeyedCatalog:
         table_name: str,
         segments: dict[str, list[int]],
         v: int,
-        stats: dict | None = None,
-        blooms: dict | None = None,
-        sketches: dict | None = None,
         op: str = "write",
         nb: int | None = None,
         segcols: dict | None = None,
@@ -935,72 +871,14 @@ class KeyedCatalog:
         vacuum leaves a stub there, never a hole."""
         import time as _time
 
-        # Data-skipping metadata rides in the manifest, keyed by
-        # SEGMENT NAME — segments are immutable, so a segment's stats,
-        # blooms and sketches are valid in every manifest that
-        # references it. Merge order: caller-provided (clone
-        # carry-over) → prior CURRENT manifest (retained segments) →
-        # computed fresh for new segments when the table declares the
-        # columns. A segment with no entry is simply never pruned —
-        # skipping metadata is advisory, absence is safe.
         # ``meta`` overrides the on-disk TableMeta: schema-changing
         # ops (rename/drop/restore) pass their POST-op meta so this
         # commit's snapshot reflects the operation it records, even
         # though the meta file itself is written after the commit.
+        # Skipping metadata is not in the manifest: each segment
+        # carries its own (:meth:`_write_segment`, :meth:`_skipping`).
         m = meta if meta is not None else self.meta(table_name)
         prior_man = self._manifest(table_name)
-        prior_skip = self._skipping(table_name, prior_man)
-        # Stats and Bloom filters share one merge discipline, per
-        # segment: the caller's entry, else the prior manifest's entry
-        # pruned to the LIVE bucket list (partial-bucket DML
-        # tombstones buckets, and dead entries would bloat every later
-        # manifest), else computed fresh. A segment lacking either
-        # entry pays ONE skipping pass (_segment_skipping) for both.
-        allstats: dict = {}
-        allblooms: dict = {}
-        kinds = [
-            (i, out, given or {}, prior_skip.get(key, {}))
-            for i, (cols, out, given, key) in enumerate((
-                (m.stats_columns, allstats, stats, "stats"),
-                (m.bloom_columns, allblooms, blooms, "blooms"),
-            ))
-            if cols
-        ]
-        for seg, bs in segments.items():
-            live = {str(b) for b in bs}
-            fresh = None
-            for i, out, given, prior in kinds:
-                if seg in given:
-                    out[seg] = given[seg]
-                elif seg in prior:
-                    out[seg] = {
-                        b: e for b, e in prior[seg].items() if b in live
-                    }
-                else:
-                    if fresh is None:
-                        fresh = self._segment_skipping(
-                            table_name, seg, m, man=prior_man, buckets=bs
-                        )
-                    out[seg] = fresh[i]
-        allsketches: dict = {}
-        if m.sketch_columns:
-            priors = prior_skip.get("sketches", {})
-            prior_segs = prior_man.get("segments", {})
-            for seg, bs in segments.items():
-                if sketches and seg in sketches:
-                    allsketches[seg] = sketches[seg]
-                elif seg in priors and sorted(bs) == sorted(
-                    prior_segs.get(seg, [])
-                ):
-                    # carry ONLY while the live bucket list is
-                    # unchanged — a partial-bucket DML shrank the
-                    # segment, and the whole-segment sketch would
-                    # double-count the replaced buckets' rows
-                    allsketches[seg] = priors[seg]
-                else:
-                    allsketches[seg] = self._segment_sketches(
-                        table_name, seg, m, buckets=bs, man=prior_man
-                    )
         # commit wall-clock in micros: the resolution key for
         # AS-OF-timestamp time travel (version_as_of). Clock skew
         # between writers can only mis-order commits by the skew
@@ -1008,8 +886,8 @@ class KeyedCatalog:
         # per-segment physical column names, keyed by stable column
         # identity: a segment written BEFORE a rename keeps its
         # on-disk names here, so reads can map them to the current
-        # logical schema without rewriting data. Carried forward like
-        # stats; new segments record the current mapping.
+        # logical schema without rewriting data. Carried forward;
+        # new segments record the current mapping.
         cur_sc = {
             m.colmap.get(f.name, f.name): f.name
             for f in m.schema.fields
@@ -1053,7 +931,7 @@ class KeyedCatalog:
             # rename/drop back along with the segment set — schema,
             # column mapping, AND the declaration lists/constraints
             # that reference column names (Delta RESTORE semantics).
-            # A few hundred bytes per commit, far below stats/blooms.
+            # A few hundred bytes per commit.
             "meta_schema": json.loads(m.to_json()),
         }
         if op_params:
@@ -1076,37 +954,6 @@ class KeyedCatalog:
             doc_d["ingest"] = loaded
         if alldvs:
             doc_d["dvs"] = alldvs
-        skipping = {
-            k: d
-            for k, d in (
-                ("stats", allstats),
-                ("blooms", allblooms),
-                ("sketches", allsketches),
-            )
-            if d
-        }
-        skip_path = None
-        if skipping:
-            blob = json.dumps(skipping)
-            if len(blob) > SKIP_INLINE_MAX:
-                # leaf-proportional skipping metadata moves to a
-                # per-version sidecar; the manifest stays O(segments).
-                # Written BEFORE the claim: a crash leaves an orphan
-                # sidecar (reclaimed by vacuum), never a manifest
-                # pointing at a missing file. The name carries a
-                # writer-unique suffix so a rival's same-version
-                # sidecar can never be overwritten or deleted by a
-                # loser's cleanup.
-                skip_file = (
-                    f"{v + 1:010d}-{uuid.uuid4().hex[:8]}.skip.json"
-                )
-                skip_path = (
-                    f"{self._path(table_name)}/{LOG_DIR}/{skip_file}"
-                )
-                self.fs.write_text_atomic(skip_path, blob)
-                doc_d["skip"] = skip_file
-            else:
-                doc_d.update(skipping)
         doc = json.dumps(doc_d)
         tpath = self._path(table_name)
         claim = kt_log.version_path(tpath, v + 1)
@@ -1116,9 +963,6 @@ class KeyedCatalog:
             except Exception:
                 pass  # only a hint: readers chase to the head without it
             return
-        if skip_path is not None:
-            # ours alone (writer-unique name) — safe to reclaim now
-            self.fs.delete(skip_path, recursive=False)
         raise ConcurrentWriteError(
             f"commit of {table_name} v{v + 1} lost: table is at "
             f"v{self._manifest(table_name)['v']} (another writer "
@@ -1185,7 +1029,7 @@ class KeyedCatalog:
         the table's physical facts — location, current version, live
         segment/leaf counts and on-disk bytes, bucket count, keys,
         clustering and declared index columns, live DV count,
-        constraint names. O(manifest + one du per segment); no job
+        constraint names. O(manifest + two du per segment); no job
         runs and no data is read — at 100 TB this answers "how big is
         this table and how is it laid out" without a scan."""
         table_name = self._qualify(table_name, schema)
@@ -1193,12 +1037,7 @@ class KeyedCatalog:
         man = self._manifest(table_name)
         m = self._resolve_nb(m, man)
         size = sum(
-            self.fs.du(
-                f"{self.warehouse}/{s}"
-                if "/" in s
-                else f"{self._path(table_name)}/{s}"
-            )
-            for s in man["segments"]
+            self.fs.du(self._seg_path(table_name, s)) for s in man["segments"]
         )
         return {
             "name": table_name,
@@ -1220,23 +1059,17 @@ class KeyedCatalog:
             "generated": dict(m.generated),
             "constraints": sorted(m.constraints),
             "auto_index": m.auto_index,
-            # metadata-size facts: the manifest every reader parses
-            # vs the skipping payload only pruning probes read (0 /
-            # absent file name while it still rides inline)
+            # metadata-size facts: the version file every reader
+            # parses, and the live segments' skipping files that only
+            # pruning probes and sketch reads open
             "manifest_bytes": len(
                 self.fs.read_text(
                     kt_log.version_path(self._path(table_name), man["v"])
                 )
             ),
-            "skip_sidecar_bytes": (
-                len(
-                    self.fs.read_text(
-                        f"{self._path(table_name)}/{LOG_DIR}/"
-                        f"{man['skip']}"
-                    )
-                )
-                if man.get("skip")
-                else 0
+            "skip_sidecar_bytes": sum(
+                self.fs.du(f"{self._seg_path(table_name, s)}/{SKIP_FILE}")
+                for s in man["segments"]
             ),
         }
 
@@ -1378,11 +1211,7 @@ class KeyedCatalog:
             chosen = [
                 s
                 for s in segs
-                if self.fs.du(
-                    f"{self.warehouse}/{s}"
-                    if "/" in s
-                    else f"{self._path(table_name)}/{s}"
-                )
+                if self.fs.du(self._seg_path(table_name, s))
                 < target_bytes
             ]
         if len(chosen) <= 1:
@@ -1463,24 +1292,8 @@ class KeyedCatalog:
             for seg in man["segments"]
         }
         segments = {rename[seg]: bs for seg, bs in man["segments"].items()}
-        # stats carry over under the renamed keys so the clone stays
-        # O(manifest) — nothing is rescanned for a metadata-only fork
-        src_skip = self._skipping(src_q, man)
-        stats = {
-            rename[seg]: st
-            for seg, st in src_skip.get("stats", {}).items()
-            if seg in rename
-        }
-        blooms = {
-            rename[seg]: bl
-            for seg, bl in src_skip.get("blooms", {}).items()
-            if seg in rename
-        }
-        sketches = {
-            rename[seg]: sk
-            for seg, sk in src_skip.get("sketches", {}).items()
-            if seg in rename
-        }
+        # skipping entries live in the segments themselves, so the
+        # clone reads the source's files and nothing is rescanned
         segcols = {
             rename[seg]: sc
             for seg, sc in man.get("segcols", {}).items()
@@ -1535,8 +1348,7 @@ class KeyedCatalog:
             }
         self._write_meta(dst_q, m)
         self._commit(
-            dst_q, segments, v=0, stats=stats or None,
-            blooms=blooms or None, sketches=sketches or None, op="clone",
+            dst_q, segments, v=0, op="clone",
             op_params={"src": src_q, "version": version},
             nb=man.get("nb") or m.num_buckets,
             segcols=segcols or None,
@@ -1587,11 +1399,7 @@ class KeyedCatalog:
         missing = [
             seg
             for seg in target["segments"]
-            if not self.fs.exists(
-                f"{self.warehouse}/{seg}"
-                if "/" in seg
-                else f"{self._path(table_name)}/{seg}"
-            )
+            if not self.fs.exists(self._seg_path(table_name, seg))
         ]
         missing += [
             f"{DV_DIR}/{dv['file']}"
@@ -1639,14 +1447,10 @@ class KeyedCatalog:
             m2.retired_names = [
                 n for n in merged_retired if n not in live
             ]
-        t_skip = self._skipping(table_name, target)
         self._commit(
             table_name,
             dict(target["segments"]),
             v=cur["v"],
-            stats=t_skip.get("stats") or None,
-            blooms=t_skip.get("blooms") or None,
-            sketches=t_skip.get("sketches") or None,
             op="restore",
             op_params={"version": version},
             nb=target.get("nb") or m.num_buckets,
@@ -1701,11 +1505,11 @@ class KeyedCatalog:
         immutable (they define bucketing and PK semantics); columns
         referenced by CHECK constraints are refused (constraint
         expressions store the name). Stats/bloom/sketch declarations
-        and their manifest entries follow the rename, so data
-        skipping keeps working. Crash between the history commit and
+        follow the rename; the segments' skipping entries are keyed
+        by stable column identity, so they answer under the new name
+        with nothing rewritten. Crash between the history commit and
         the meta write leaves the table un-renamed and fully
-        consistent (stats keyed under the new name simply stop
-        matching until retried — skipping is advisory)."""
+        consistent."""
         table_name = self._qualify(table_name, schema)
         m = self.meta(table_name)
         if old not in m.schema.names:
@@ -1741,29 +1545,6 @@ class KeyedCatalog:
         def ren(lst):
             return [new if c == old else c for c in lst]
 
-        def ren_keys(per_seg: dict) -> dict:
-            # stats/blooms shape: {seg: {bucket: {col: payload}}}
-            return {
-                seg: {
-                    b: {
-                        (new if c == old else c): v
-                        for c, v in cols.items()
-                    }
-                    for b, cols in ent.items()
-                }
-                for seg, ent in per_seg.items()
-            }
-
-        # manifest entry keys follow the rename so skipping lookups
-        # under the NEW name keep matching (stats/blooms are keyed
-        # {seg: {bucket: {col: ...}}}, sketches {seg: {col: ...}})
-        man_skip = self._skipping(table_name, man)
-        stats = ren_keys(man_skip.get("stats", {})) or None
-        blooms = ren_keys(man_skip.get("blooms", {})) or None
-        sketches = {
-            seg: {(new if c == old else c): v for c, v in ent.items()}
-            for seg, ent in man_skip.get("sketches", {}).items()
-        } or None
         import dataclasses
 
         fields = [
@@ -1790,9 +1571,6 @@ class KeyedCatalog:
             table_name,
             dict(man["segments"]),
             v=man["v"],
-            stats=stats,
-            blooms=blooms,
-            sketches=sketches,
             op="rename_column",
             meta=m2,
         )
@@ -1829,7 +1607,7 @@ class KeyedCatalog:
             if col in lst:
                 raise NameError(
                     f"column {col!r} is declared in {fam}; it backs "
-                    "manifest skipping metadata and cannot be dropped"
+                    "segment skipping metadata and cannot be dropped"
                 )
         for cname, expr in m.constraints.items():
             if self._constraint_references(m, col, expr):
@@ -2223,7 +2001,7 @@ class KeyedCatalog:
         schema: str | None = None,
         retain_last: int = 0,
         dry_run: bool = False,
-        orphan_age_s: float = SKIP_ORPHAN_RETENTION_S,
+        orphan_age_s: float = STAGED_SEGMENT_RETENTION_S,
     ) -> list[str]:
         """Delete segments no longer referenced by the head manifest
         (tombstoned by upserts or orphaned by a writer crash), then
@@ -2244,8 +2022,10 @@ class KeyedCatalog:
         indistinguishable from an in-flight commit's staged segment —
         _commit deliberately writes data before claiming its version
         — so such directories are only reclaimed once older than
-        ``orphan_age_s`` (default mirrors the skip-sidecar retention:
-        no live commit spans an hour between staging and claiming).
+        ``orphan_age_s`` (default :data:`STAGED_SEGMENT_RETENTION_S`:
+        no live commit spans an hour between staging and claiming). A
+        segment's skipping file lives inside its directory, so it is
+        spared and reclaimed with the segment.
         Segments some version file DID reference are
         committed-and-superseded garbage; no writer can re-stage them,
         so they reclaim immediately regardless of age. With the age
@@ -2389,24 +2169,19 @@ class KeyedCatalog:
                 gone.append(f"{DV_DIR}/{d}")
         if dry_run:
             return gone
-        log_files = self.fs.list_files(log_dir)
-        if not gone and not any(
-            f.endswith(".skip.json") for f in log_files
-        ):
-            # nothing to reclaim and no skip sidecars to cross-check:
-            # every non-stub version at or below the head is either
-            # protected or references only segments that exist, so
-            # the O(versions) walk below would keep everything
+        if not gone:
+            # nothing to reclaim: every non-stub version at or below
+            # the head is either protected or references only segments
+            # that exist, so the O(versions) walk below would keep
+            # everything
             return gone
-        kept_skips: set[str] = set()
         for man in kt_log.live_versions(self.fs, tpath):
             if (
-                gone
                 # versions ABOVE the vacuum snapshot are the FUTURE,
                 # not history: a rival's claim that landed while this
                 # vacuum ran is an acknowledged commit — never prune
                 # upward, only truncate below the window
-                and man["v"] <= cur_man["v"]
+                man["v"] <= cur_man["v"]
                 and man["v"] not in protected_vs
                 and (
                     not set(man["segments"]) <= live
@@ -2417,41 +2192,8 @@ class KeyedCatalog:
                     kt_log.version_path(tpath, man["v"]),
                     kt_log.stub(man["v"]),
                 )
-            elif man.get("skip"):
-                kept_skips.add(man["skip"])
         for d in gone:
             self.fs.delete(f"{tpath}/{d}")
-        # skipping sidecars live and die with their manifest; a
-        # sidecar no surviving manifest references (its version was
-        # pruned above, or its writer crashed/lost the OCC race before
-        # claiming) is reclaimed here. Guard: _commit deliberately
-        # writes the sidecar BEFORE claiming its version, so an
-        # IN-FLIGHT commit's sidecar is unreferenced but must survive
-        # — its name encodes the version it is committing
-        # (``{v:010d}-{writer}.skip.json``), which is strictly greater
-        # than the head version until the claim lands. Only sidecars
-        # at or below the head (orphans by construction: their
-        # version already committed without them, or was vacuumed)
-        # are reclaimed — EXCEPT that an above-head sidecar whose
-        # writer crashed between sidecar and claim would otherwise
-        # leak forever on a cold table, so above-head sidecars older
-        # than a retention age (mirroring Delta's retention-window
-        # handling of staged files) are reclaimed too.
-        horizon = _time.time() - SKIP_ORPHAN_RETENTION_S
-        for f in log_files:
-            if not f.endswith(".skip.json") or f in kept_skips:
-                continue
-            try:
-                sv = int(f.split("-", 1)[0])
-            except ValueError:
-                sv = None
-            if (
-                sv is not None
-                and sv > cur_man["v"]
-                and self.fs.mtime(f"{log_dir}/{f}") > horizon
-            ):
-                continue  # possibly an in-flight commit's sidecar
-            self.fs.delete(f"{log_dir}/{f}", recursive=False)
         return gone
 
     # ------------------------------------------------------------------
@@ -2500,25 +2242,25 @@ class KeyedCatalog:
         duplicates rows nor trips the PK check; it is simply skipped.
 
         ``stats_columns`` (create only): column names whose per-
-        (segment, bucket) min/max ride in every manifest commit,
-        enabling ``read_table(stats_bounds=...)`` file skipping on
-        NON-KEY ranges. Segments are immutable, so stats are computed
+        (segment, bucket) min/max enable
+        ``read_table(stats_bounds=...)`` file skipping on NON-KEY
+        ranges. Segments are immutable, so the entries are computed
         once per new segment (one column-pruned scan of the freshly
-        written files) and carried forward verbatim by later commits.
+        written files) and stored beside it in ``_pb_skip.json``;
+        version files list segments only.
 
         ``sketch_columns`` (create only): column names whose per-
-        segment KLL (quantiles) + HLL (distinct) sketches ride in
-        every manifest commit; :meth:`table_sketch_stats` then answers
+        (segment, bucket) KLL (quantiles) + HLL (distinct) sketches
+        live in the same file; :meth:`table_sketch_stats` then answers
         table-level distribution questions from metadata alone —
         incremental, ANALYZE-free statistics (mergeable sketches fold
-        across segments without rescanning data).
+        across leaves without rescanning data).
 
         ``bloom_columns`` (create only): column names whose per-
-        (segment, bucket) Bloom bitsets ride in every manifest commit,
+        (segment, bucket) Bloom bitsets live in the same file,
         enabling ``read_table(bloom_point=...)`` file skipping on
         NON-KEY equality probes — the high-cardinality complement to
-        min/max stats (the Delta bloom-filter-index shape, kept in the
-        manifest instead of sidecar files).
+        min/max stats (the Delta bloom-filter-index shape).
 
         ``constraints`` (create only): named CHECK expressions every
         row of every future write must satisfy (TRUE — a NULL result
@@ -2947,7 +2689,13 @@ class KeyedCatalog:
         (zero skipping), a clustered one serves ``k BETWEEN lo AND hi``
         from the few row-groups that overlap. The bucket list is read
         back from the written directory names — no extra Spark job.
-        Nothing is live until the manifest commit.
+
+        When the table declares stats, Bloom or sketch columns, the
+        segment's skipping entries are then read back from its files
+        (:meth:`_segment_skipping`) and written ONCE beside them, as
+        ``seg-*/_pb_skip.json``: a ``_``-prefixed file Spark's reader
+        skips, immutable like the data and deleted with its segment
+        directory. Nothing is live until the manifest commit.
 
         ``pre_bucketed``: the caller already attached ``PART_DIR`` and
         repartitioned on it — skip both here, so the validation jobs
@@ -2992,6 +2740,13 @@ class KeyedCatalog:
             for d in self.fs.list_dirs(seg_path)
             if d.startswith(f"{PART_DIR}=")
         )
+        if buckets and (
+            m.stats_columns or m.bloom_columns or m.sketch_columns
+        ):
+            self.fs.write_text_atomic(
+                f"{seg_path}/{SKIP_FILE}",
+                json.dumps(self._segment_skipping(seg_path, buckets, m)),
+            )
         return seg, buckets
 
     def _create(
@@ -4794,7 +4549,7 @@ class KeyedCatalog:
         blooms = skip.get("blooms", {}) if bloom_probe else {}
 
         def skippable(seg: str, b: int) -> bool:
-            # manifest-level data skipping: drop a (segment, bucket)
+            # leaf-level data skipping: drop a (segment, bucket)
             # leaf when its recorded [min, max] provably misses the
             # requested range. Missing stats → never skip (advisory).
             st = stats.get(seg, {}).get(str(b))
@@ -4844,17 +4599,10 @@ class KeyedCatalog:
                     return True
             return False
 
-        # a "/" in the segment name marks an external reference (from
-        # clone_table) — warehouse-relative instead of table-relative.
         # Pairs (seg, path): callers needing only counts len() the
         # list; _read_raw groups by segment for column-mapped reads.
         return [
-            (
-                seg,
-                f"{self.warehouse}/{seg}/{PART_DIR}={b}"
-                if "/" in seg
-                else f"{self._path(table_name)}/{seg}/{PART_DIR}={b}",
-            )
+            (seg, f"{self._seg_path(table_name, seg)}/{PART_DIR}={b}")
             for seg, bs in man["segments"].items()
             for b in bs
             if (want is None or b in want)
@@ -5030,7 +4778,7 @@ class KeyedCatalog:
 
         ``bloom_point={col: value}`` is the EQUALITY companion to
         ``stats_bounds`` for tables created with ``bloom_columns``:
-        (segment, bucket) leaves whose manifest Bloom filter proves
+        (segment, bucket) leaves whose Bloom filter proves
         the value absent are skipped before the scan plans. Built for
         high-cardinality columns where min/max ranges never prune
         (ids, hashes, emails): at 100 TB a needle-in-haystack point
@@ -5042,7 +4790,7 @@ class KeyedCatalog:
 
         ``stats_bounds={col: (lo, hi)}`` (either side may be None) is
         the NON-KEY range read for tables created with
-        ``stats_columns``: (segment, bucket) leaves whose manifest
+        ``stats_columns``: (segment, bucket) leaves whose recorded
         [min, max] provably miss the range are skipped before the scan
         plans — at 100 TB that skips file OPENS, a tier above parquet
         row-group pruning (which still applies to the survivors via
@@ -5143,7 +4891,7 @@ class KeyedCatalog:
             }
         # Selectivity-gated skipping (the sketch surface consumed as
         # a planner primitive): for a bounds column that also carries
-        # manifest sketches, estimate the range's row fraction first;
+        # segment sketches, estimate the range's row fraction first;
         # an unselective range (> STATS_PROBE_MAX_FRAC of the table)
         # skips the per-leaf min/max probe — it would prune ~nothing —
         # and warns the caller. The decision trail is kept on
@@ -5160,20 +4908,11 @@ class KeyedCatalog:
                     try:
                         # decode from the ALREADY-pinned manifest and
                         # estimate range + total in ONE tiny job —
-                        # no extra manifest fetch, no second pass
-                        import base64
-
-                        _sk = self._skipping(table_name, _man).get(
-                            "sketches", {}
+                        # no extra manifest fetch, no second pass; an
+                        # uncovered leaf raises ValueError (probe)
+                        entries = self._sketch_entries(
+                            table_name, _man, col
                         )
-                        entries = []
-                        for seg in _man["segments"]:
-                            ent = _sk.get(seg, {}).get(col)
-                            if not ent or not ent.get("kll"):
-                                raise ValueError("uncovered segment")
-                            entries.append(
-                                (bytearray(base64.b64decode(ent["kll"])),)
-                            )
                         if not entries:
                             raise ValueError("no live segments")
                         est, tot = self._kll_range_estimate(

@@ -6,6 +6,8 @@ Layout under a table directory::
     _pb_log/{v:010d}.json     version v's manifest, or a vacuum stub
     _pandabase_log.json       hint: a copy of a recent version's manifest
     seg-<uuid>/_pb_b=<n>/     one segment's rows in hash bucket n
+    seg-<uuid>/_pb_skip.json  that segment's skipping entries, per
+                              bucket: min/max stats, Blooms, sketches
 
 The rule is the Delta Lake log protocol (Armbrust et al., VLDB 2020):
 a writer that planned against version ``v`` commits by creating
@@ -36,6 +38,7 @@ META_FILE = "_pandabase_meta.json"
 LOG_FILE = "_pandabase_log.json"
 LOG_DIR = "_pb_log"
 PART_DIR = "_pb_b"
+SKIP_FILE = "_pb_skip.json"
 
 
 def version_path(table_path: str, v: int) -> str:
@@ -48,11 +51,8 @@ def hint_path(table_path: str) -> str:
 
 def is_version_file(name: str) -> bool:
     """True for version files (``{v:010d}.json``) — excludes the
-    ``.skip.json`` sidecars and the vacuum history summary, which share
-    the log directory."""
-    if not name.endswith(".json") or name.endswith(".skip.json"):
-        return False
-    return name.split(".")[0].isdigit()
+    vacuum history summary, which shares the log directory."""
+    return name.endswith(".json") and name.split(".")[0].isdigit()
 
 
 def stub(v: int) -> str:

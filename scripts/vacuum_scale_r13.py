@@ -9,8 +9,7 @@ it two ways:
   (_vacuum_history.summary.json), so the lazy ``_history()`` scan
   reads only manifests ABOVE the cached floor;
 - the no-reclaim vacuum (append-heavy tables' routine case) returns
-  before the history-prune walk entirely when there are no skip
-  sidecars to cross-check.
+  before the history-prune walk entirely.
 
 This script synthesizes an N-version claim chain (structurally valid
 manifests referencing the live segments) on a real table, plants

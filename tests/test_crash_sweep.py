@@ -13,6 +13,10 @@ crash:
 3. ``vacuum(orphan_age_s=0)`` leaves no ``seg-*`` directory the head
    manifest does not reference.
 
+The table declares stats and Bloom columns, so every segment write
+also writes the segment's ``_pb_skip.json`` — one more crash point per
+write verb — and every segment the surviving head lists must carry it.
+
 Throughout, every version the log still lists (``history()``) must
 reference only segments that exist: vacuum stubs a version before it
 deletes the segments, never after.
@@ -23,7 +27,7 @@ from __future__ import annotations
 import pytest
 
 from pandabase_spark import kt_log
-from pandabase_spark.io import KeyedCatalog
+from pandabase_spark.io import SKIP_FILE, KeyedCatalog
 from tests.test_dml_model import _mk_df, _read, _rows
 
 MUTATING = frozenset(
@@ -31,6 +35,7 @@ MUTATING = frozenset(
 )
 TXN = ("sweep", 1)
 T = "t"
+SKIP = dict(stats_columns=["v"], bloom_columns=["s"])
 
 
 class Crash(BaseException):
@@ -69,7 +74,7 @@ BASE = _rows(range(40))
 
 
 def _base(spark, cat, n_segments=1):
-    cat.to_table(_mk_df(spark, BASE), T, keys=["k"], num_buckets=2)
+    cat.to_table(_mk_df(spark, BASE), T, keys=["k"], num_buckets=2, **SKIP)
     for i in range(1, n_segments):
         cat.to_table(
             _mk_df(spark, _rows(range(1000 * i, 1000 * i + 5))), T,
@@ -95,7 +100,8 @@ def _case(verb: str):
         return (
             lambda spark, cat: None,
             lambda spark, cat: cat.to_table(
-                _mk_df(spark, BASE), T, keys=["k"], num_buckets=2, txn=TXN
+                _mk_df(spark, BASE), T, keys=["k"], num_buckets=2, txn=TXN,
+                **SKIP,
             ),
             {},
             _model(BASE),
@@ -165,6 +171,16 @@ def _unreferenced_segments(cat) -> "set[str]":
     return on_disk - set(cat._manifest(T)["segments"])
 
 
+def _segments_without_skip_file(cat) -> "list[str]":
+    if not cat.has_table(T):
+        return []
+    return [
+        seg
+        for seg in cat._manifest(T)["segments"]
+        if not cat.fs.exists(f"{cat._path(T)}/{seg}/{SKIP_FILE}")
+    ]
+
+
 def _dangling_versions(cat) -> "list[int]":
     """Listed versions that reference a segment no longer on disk."""
     on_disk = set(cat.fs.list_dirs(cat._path(T)))
@@ -205,6 +221,9 @@ def test_crash_at_every_mutating_call(spark, tmp_path, verb):
         got = _state(cat)
         assert got in (pre, post), f"{verb} crashed at call {k}: torn state"
         assert not _dangling_versions(cat), f"{verb} crashed at call {k}"
+        assert not _segments_without_skip_file(cat), (
+            f"{verb} crashed at call {k}"
+        )
         op(spark, cat)
         assert _state(cat) == post, f"{verb} crashed at call {k}: retry"
         cat.vacuum(T, orphan_age_s=0)

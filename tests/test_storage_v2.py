@@ -795,8 +795,9 @@ def test_stats_columns_file_skipping(spark, catalog):
     catalog.to_table(b, "st_t", keys=["k"], how="append")
     man = catalog._manifest("st_t")
     assert len(man["segments"]) == 2
-    assert set(man["stats"]) == set(man["segments"])
-    for seg, st in man["stats"].items():
+    stats = catalog._skipping("st_t", man)["stats"]
+    assert set(stats) == set(man["segments"])
+    for seg, st in stats.items():
         for bucket, cols in st.items():
             lo, hi = cols["v"]
             assert lo is not None and lo <= hi
@@ -838,18 +839,23 @@ def test_stats_survive_dml_compact_and_clone(spark, catalog):
                      stats_columns=["ts"])
     catalog.delete_rows("st_d", "k < 10")
     man = catalog._manifest("st_d")
-    assert set(man["stats"]) == set(man["segments"])
+    stats = catalog._skipping("st_d", man)["stats"]
+    assert set(stats) == set(man["segments"])
     # timestamp stats serialized as ISO strings, ordered correctly
-    for st in man["stats"].values():
+    for st in stats.values():
         for cols in st.values():
             lo, hi = cols["ts"]
             assert isinstance(lo, str) and lo <= hi
     catalog.compact("st_d")
     man2 = catalog._manifest("st_d")
-    assert set(man2["stats"]) == set(man2["segments"])
+    assert set(catalog._skipping("st_d", man2)["stats"]) == set(
+        man2["segments"]
+    )
     catalog.clone_table("st_d", "st_d2")
     man3 = catalog._manifest("st_d2")
-    assert set(man3["stats"]) == set(man3["segments"])
+    assert set(catalog._skipping("st_d2", man3)["stats"]) == set(
+        man3["segments"]
+    )
     # timestamp-bounded skipping read on the clone
     cut = datetime.datetime(2020, 9, 23)
     got = catalog.read_table("st_d2", stats_bounds={"ts": (None, cut)})
@@ -1071,96 +1077,122 @@ def test_merge_by_source_delete_false_is_none(spark, catalog):
     catalog.drop_table("bsf_t")
 
 
-def test_vacuum_spares_inflight_commit_sidecar(spark, catalog, monkeypatch):
-    """_commit writes the skipping sidecar BEFORE claiming the
-    manifest; a vacuum racing that window must not reclaim it (the
-    commit would then publish a manifest whose skip reference is a
-    missing file). Sidecars whose encoded version is above CURRENT
-    are left alone; true orphans (version <= CURRENT) are reclaimed."""
-    import pandabase_spark.io as io_mod
+def _stage_segment(catalog, spark, name, lo, hi):
+    """Write a segment of keys [lo, hi) without committing it — the
+    state a writer is in between staging and claiming its version."""
+    rows = spark.range(lo, hi).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+    )
+    return catalog._write_segment(rows, name, catalog.meta(name))
 
-    monkeypatch.setattr(io_mod, "SKIP_INLINE_MAX", 1)  # always offload
-    df = _mk(spark, 50)
-    catalog.to_table(df, "vac_t", keys=["k"], stats_columns=["v"])
-    log_dir = f"{catalog._path('vac_t')}/{io_mod.LOG_DIR}"
-    cur_v = catalog._manifest("vac_t")["v"]
 
-    # simulate the in-flight window: a sidecar for version cur+1
-    # exists but its manifest has not been claimed yet
-    inflight = f"{cur_v + 1:010d}-deadbeef.skip.json"
-    catalog.fs.write_text_atomic(f"{log_dir}/{inflight}", "{}")
-    # and a true orphan: a sidecar at the CURRENT version that no
-    # manifest references (its writer lost the race long ago)
-    orphan = f"{cur_v:010d}-0badc0de.skip.json"
-    catalog.fs.write_text_atomic(f"{log_dir}/{orphan}", "{}")
+def test_vacuum_spares_inflight_commit_sidecar(spark, catalog):
+    """A writer stages its segment — parquet and ``_pb_skip.json`` —
+    BEFORE claiming its version. A vacuum racing that window must
+    spare the whole staged directory, skipping file included (inside
+    ``orphan_age_s``), so the commit that lands afterwards reads its
+    rows and prunes with its entries."""
+    from pandabase_spark.io import SKIP_FILE
 
-    catalog.vacuum("vac_t")
-    files = set(catalog.fs.list_files(log_dir))
-    assert inflight in files, "in-flight commit's sidecar was reclaimed"
-    assert orphan not in files, "true orphan sidecar survived vacuum"
-    # the referenced sidecar of the CURRENT manifest survives too
-    cur_skip = catalog._manifest("vac_t").get("skip")
-    assert cur_skip and cur_skip in files
+    catalog.to_table(_mk(spark, 50), "vac_t", keys=["k"],
+                     stats_columns=["v"])
+    seg, buckets = _stage_segment(catalog, spark, "vac_t", 1000, 1040)
+    seg_dir = f"{catalog._path('vac_t')}/{seg}"
+    assert catalog.fs.exists(f"{seg_dir}/{SKIP_FILE}")
+
+    assert catalog.vacuum("vac_t") == []
+    assert catalog.fs.exists(f"{seg_dir}/{SKIP_FILE}")
+
+    man = catalog._manifest("vac_t")
+    catalog._commit("vac_t", {**man["segments"], seg: buckets}, v=man["v"])
+    assert catalog.read_table("vac_t").count() == 90
+    man = catalog._manifest("vac_t")
+    assert set(catalog._skipping("vac_t", man)["stats"][seg]) == {
+        str(b) for b in buckets
+    }
+    got = catalog.read_table("vac_t", stats_bounds={"v": (1000.0, None)})
+    assert got.count() == 40
+    assert len(
+        catalog._live_paths("vac_t", stats_bounds={"v": (1000.0, None)})
+    ) == len(buckets)
     catalog.drop_table("vac_t")
 
 
-def test_skipping_sidecar_offload(spark, catalog, monkeypatch):
-    """Past SKIP_INLINE_MAX the commit moves stats/blooms/sketches to
-    a <v>-<writer>.skip.json sidecar: the manifest stays O(segments),
-    every skipping consumer (leaf pruning, bloom probe, sketch stats,
-    clone, rename, restore, vacuum) resolves through _skipping, and
-    vacuum reclaims sidecars with their manifests."""
-    import pandabase_spark.io as io
+def test_skipping_sidecar_offload(spark, catalog):
+    """A version file stays O(segments) while the skipping entries
+    live in the segment: each append adds one segment's name, bucket
+    list and column map to the version file — not its per-bucket
+    stats, Blooms and sketches, which are written once into
+    ``seg-*/_pb_skip.json``. Every skipping consumer (leaf pruning,
+    bloom probe, sketch stats, clone, rename, restore) reads them
+    there, and vacuum removes them with their segment."""
+    from pandabase_spark import kt_log
+    from pandabase_spark.io import SKIP_FILE
 
-    monkeypatch.setattr(io, "SKIP_INLINE_MAX", 64)
-    df = spark.range(400).select(
-        F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")
-    )
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")
+        )
+
     catalog.to_table(
-        df, "skp_t", keys=["k"], num_buckets=4,
+        rows(0, 400), "skp_t", keys=["k"], num_buckets=8,
         stats_columns=["v"], bloom_columns=["k"], sketch_columns=["v"],
     )
-    man = catalog._manifest("skp_t")
-    assert man.get("skip", "").endswith(".skip.json")
-    assert "stats" not in man and "blooms" not in man
-    log_dir = f"{catalog._path('skp_t')}/{io.LOG_DIR}"
-    assert man["skip"] in catalog.fs.list_files(log_dir)
+    tpath = catalog._path("skp_t")
+    sizes = []
+    for i in range(1, 4):
+        catalog.to_table(rows(1000 * i, 1000 * i + 50), "skp_t",
+                         keys=["k"], how="append")
+        man = catalog._manifest("skp_t")
+        assert not {"stats", "blooms", "sketches", "skip"} & set(man)
+        sizes.append(
+            len(catalog.fs.read_text(kt_log.version_path(tpath, man["v"])))
+        )
+    skip_bytes = [
+        catalog.fs.du(f"{tpath}/{seg}/{SKIP_FILE}")
+        for seg in man["segments"]
+    ]
+    assert all(skip_bytes)
+    # one more segment costs the version file a few hundred bytes; its
+    # skipping file (8 buckets of stats, Blooms and sketches) is far
+    # larger and is never copied into a later version
+    growth = sizes[-1] - sizes[-2]
+    assert 0 < growth < 400 and growth * 10 < min(skip_bytes), (
+        sizes, skip_bytes,
+    )
+    assert catalog.table_detail("skp_t")["skip_sidecar_bytes"] == sum(
+        skip_bytes
+    )
 
-    # every skipping consumer still works through the sidecar
+    # every skipping consumer reads the segments' files
     got = catalog.read_table("skp_t", stats_bounds={"v": (10.0, 20.0)})
     assert got.count() == 11
     hit = catalog.read_table("skp_t", bloom_point={"k": 7})
     assert hit.where(F.col("k") == 7).count() == 1
     st = catalog.table_sketch_stats("skp_t", "v").first()
-    assert st["n_rows"] == 400
-    # history / AS OF never parse a sidecar as a manifest
-    assert [h["version"] for h in catalog.history("skp_t")] == [1]
-
-    # a second commit carries the skipping forward into its own sidecar
-    catalog.to_table(
-        spark.range(400, 500).select(
-            F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")
-        ),
-        "skp_t", keys=["k"], how="append",
-    )
-    man2 = catalog._manifest("skp_t")
-    assert man2["skip"] != man["skip"]
-    # clone resolves the source sidecar (stats carried, nothing rescanned)
+    assert st["n_rows"] == 550
+    assert [h["version"] for h in catalog.history("skp_t")] == [1, 2, 3, 4]
     catalog.clone_table("skp_t", "skp_c")
     got_c = catalog.read_table("skp_c", stats_bounds={"v": (10.0, 20.0)})
     assert got_c.count() == 11
-    # vacuum reclaims the superseded version's sidecar with it
-    catalog.to_table(
-        df.limit(5), "skp_t", keys=["k"], how="upsert"
-    )
-    catalog.vacuum("skp_t")
-    files = catalog.fs.list_files(log_dir)
-    skips = [f for f in files if f.endswith(".skip.json")]
-    cur_skip = catalog._manifest("skp_t").get("skip")
-    assert skips == [cur_skip]
-    assert catalog.read_table("skp_t").count() == 500
-    catalog.drop_table("skp_t")
+    assert len(
+        catalog._live_paths("skp_c", stats_bounds={"v": (10.0, 20.0)})
+    ) < len(catalog._live_paths("skp_c"))
+    catalog.rename_column("skp_t", "v", "val")
+    assert len(
+        catalog._live_paths("skp_t", stats_bounds={"val": (10.0, 20.0)})
+    ) < len(catalog._live_paths("skp_t"))
+    catalog.restore_table("skp_t", 1)
+    assert catalog.table_sketch_stats("skp_t", "v").first()["n_rows"] == 400
+
+    # vacuum deletes a superseded segment's file with its directory
     catalog.drop_table("skp_c")
+    old = set(catalog._manifest("skp_t", version=4)["segments"])
+    catalog.vacuum("skp_t")
+    for seg in old - set(catalog._manifest("skp_t")["segments"]):
+        assert not catalog.fs.exists(f"{tpath}/{seg}")
+    assert catalog.read_table("skp_t").count() == 400
+    catalog.drop_table("skp_t")
 
 
 def test_merge_by_source_clauses(spark, catalog):
@@ -1462,7 +1494,9 @@ def test_bloom_point_skips_leaves_exactly(spark, catalog):
                      num_buckets=4)
     catalog.to_table(b, "bl_t", keys=["k"], how="append")
     man = catalog._manifest("bl_t")
-    assert set(man["blooms"]) == set(man["segments"])
+    assert set(catalog._skipping("bl_t", man)["blooms"]) == set(
+        man["segments"]
+    )
     all_leaves = catalog._live_paths("bl_t")
     probe = {
         "tag": catalog._bloom_positions(
@@ -1495,7 +1529,9 @@ def test_bloom_nulls_set_no_bits_and_carry_through_compact(spark, catalog):
     catalog.compact("bln_t")
     man = catalog._manifest("bln_t")
     assert len(man["segments"]) == 1
-    assert set(man["blooms"]) == set(man["segments"])
+    assert set(catalog._skipping("bln_t", man)["blooms"]) == set(
+        man["segments"]
+    )
     got = catalog.read_table("bln_t", bloom_point={"tag": "x120"})
     assert got.count() == 1
     # NULL-tag rows are reachable by ordinary reads, never via bloom
@@ -1691,10 +1727,10 @@ def test_rename_and_drop_column_mapping(spark, catalog):
 
 def test_sketch_stats_exact_after_partial_bucket_dml(spark, catalog):
     """Regression (review finding): a partial-bucket upsert shrinks a
-    segment's live bucket list — carried whole-segment sketches would
-    double-count the replaced buckets' rows. After the fix, sketches
-    recompute over the LIVE buckets only, so n stays exact through
-    upsert, delete, and merge."""
+    segment's live bucket list — whole-segment sketches would
+    double-count the replaced buckets' rows. Sketches are per
+    (segment, bucket) and readers fold only the LIVE buckets, so n
+    stays exact through upsert, delete, and merge."""
     df = spark.range(1000).select(
         F.col("id").alias("k"), (F.col("id") % 97).cast("double").alias("v")
     )
@@ -1725,10 +1761,11 @@ def test_sketch_columns_on_strings(spark, catalog):
 
 def test_sketch_recompute_reads_renamed_segments_correctly(spark, catalog):
     """Regression (review finding): after a metadata-only rename, a
-    partial-bucket DML forces sketch recompute on PRE-RENAME segments
-    — the reader must translate their on-disk names through segcols
-    instead of null-filling the renamed column (which silently zeroed
-    the recomputed statistics)."""
+    partial-bucket DML shrinks a PRE-RENAME segment's bucket list.
+    Nothing recomputes: the segment's per-bucket sketches, keyed by
+    stable column identity, answer under the new name with the dead
+    buckets dropped (an earlier recompute null-filled the renamed
+    column and silently zeroed the statistics)."""
     df = spark.range(1000).select(
         F.col("id").alias("k"), (F.col("id") % 97).cast("double").alias("v")
     )
@@ -1761,6 +1798,35 @@ def test_sketch_recompute_reads_renamed_segments_correctly(spark, catalog):
     assert got.count() == 1
 
 
+def test_sketch_time_travel_across_rename(spark, catalog):
+    """Sketch entries are keyed by stable column identity, so a
+    version written before a rename answers under the column's
+    current name: ``table_sketch_stats`` and ``estimate_range_rows``
+    at the create version see all 1000 rows under ``val``."""
+    df = spark.range(1000).select(
+        F.col("id").alias("k"), (F.col("id") % 97).cast("double").alias("v")
+    )
+    catalog.to_table(df, "sktt_t", keys=["k"], sketch_columns=["v"],
+                     num_buckets=8)
+    created = catalog._manifest("sktt_t")["v"]
+    catalog.rename_column("sktt_t", "v", "val")
+    catalog.to_table(
+        spark.createDataFrame([(5, 999.0)], ["k", "val"]),
+        "sktt_t", keys=["k"], how="upsert",
+    )
+    r = catalog.table_sketch_stats(
+        "sktt_t", "val", quantiles=(), version=created
+    ).first()
+    assert r["n_rows"] == 1000, r
+    est = catalog.estimate_range_rows(
+        "sktt_t", "val", None, None, version=created
+    )
+    assert est == 1000
+    assert catalog.table_sketch_stats(
+        "sktt_t", "val", quantiles=()
+    ).first()["n_rows"] == 1000
+
+
 def test_sketch_stats_empty_table_returns_zero(spark, catalog):
     """Deleting every row leaves zero live segments; metadata stats
     must answer n_rows=0 / distinct_est=0 (NULL quantiles), mirroring
@@ -1781,9 +1847,9 @@ def test_sketch_stats_empty_table_returns_zero(spark, catalog):
 
 def test_partial_dml_keeps_only_live_bucket_stats(spark, catalog):
     """Partial-bucket DML tombstones buckets inside a segment; the
-    next commit's stats/bloom manifest entries must cover EXACTLY the
-    live bucket list — dead entries bloat every later manifest, and
-    the recompute path must not rescan superseded leaves."""
+    stats/bloom entries a reader gets must cover EXACTLY the live
+    bucket list — the reader cuts the dead buckets' entries from the
+    segment's skipping file, and nothing rescans superseded leaves."""
     df = spark.range(1000).select(
         F.col("id").alias("k"), F.col("id").cast("double").alias("v")
     )
@@ -1794,10 +1860,11 @@ def test_partial_dml_keeps_only_live_bucket_stats(spark, catalog):
     catalog.delete_rows("st_p", "k = 7", strategy="rewrite")
     man = catalog._manifest("st_p")
     assert len(man["segments"]) == 2  # tombstoned base + survivors
+    skip = catalog._skipping("st_p", man)
     for seg, bs in man["segments"].items():
         live = {str(b) for b in bs}
-        assert set(man["stats"][seg]) == live
-        assert set(man["blooms"][seg]) == live
+        assert set(skip["stats"][seg]) == live
+        assert set(skip["blooms"][seg]) == live
     # the tombstoned bucket is gone from the base segment's entries
     base = min(man["segments"], key=lambda s: len(man["segments"][s]) * -1)
     assert len(man["segments"][base]) >= 7
@@ -2431,31 +2498,29 @@ def test_vacuum_dry_run_stays_readonly_under_regression(spark, catalog):
 
 
 def test_vacuum_reclaims_aged_orphan_sidecar(spark, catalog):
-    """An above-current .skip.json is normally protected (possibly an
-    in-flight commit's sidecar, written before its claim) — but one
-    whose writer crashed between sidecar and claim must not leak
-    forever on a cold table: past SKIP_ORPHAN_RETENTION_S it is
-    reclaimed (ADVICE r9), while a FRESH above-current sidecar
-    survives."""
+    """A staged segment no version references is spared while younger
+    than ``orphan_age_s`` (possibly an in-flight commit), but one
+    whose writer crashed before its claim must not leak forever on a
+    cold table: past the age it is reclaimed, its skipping file with
+    it, while a FRESH staged segment survives."""
     import os
     import time
 
-    from pandabase_spark.io import LOG_DIR, SKIP_ORPHAN_RETENTION_S
+    from pandabase_spark.io import SKIP_FILE, STAGED_SEGMENT_RETENTION_S
 
-    df = spark.range(10).select(
-        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
-    )
-    catalog.to_table(df, "sv_t", keys=["k"], num_buckets=2)           # v1
-    log_dir = f"{catalog._path('sv_t')}/{LOG_DIR}"
-    aged = f"{log_dir}/{7:010d}-deadbeef.skip.json"
-    fresh = f"{log_dir}/{8:010d}-cafebabe.skip.json"
-    catalog.fs.write_text_atomic(aged, "{}")
-    catalog.fs.write_text_atomic(fresh, "{}")
-    old = time.time() - SKIP_ORPHAN_RETENTION_S - 60
-    os.utime(aged, (old, old))
-    catalog.vacuum("sv_t")
-    assert not catalog.fs.exists(aged)    # crashed writer's leak: gone
-    assert catalog.fs.exists(fresh)       # possibly in-flight: kept
+    catalog.to_table(_mk(spark, 10), "sv_t", keys=["k"], num_buckets=2,
+                     bloom_columns=["v"])                                # v1
+    tpath = catalog._path("sv_t")
+    aged, _ = _stage_segment(catalog, spark, "sv_t", 100, 110)
+    fresh, _ = _stage_segment(catalog, spark, "sv_t", 200, 210)
+    for seg in (aged, fresh):
+        assert catalog.fs.exists(f"{tpath}/{seg}/{SKIP_FILE}")
+    old = time.time() - STAGED_SEGMENT_RETENTION_S - 60
+    os.utime(f"{tpath}/{aged}", (old, old))
+    assert catalog.vacuum("sv_t") == [aged]
+    assert not catalog.fs.exists(f"{tpath}/{aged}")    # crashed writer's leak
+    assert catalog.fs.exists(f"{tpath}/{fresh}/{SKIP_FILE}")  # in flight
+    assert catalog.read_table("sv_t").count() == 10
     catalog.drop_table("sv_t")
 
 
@@ -2963,12 +3028,21 @@ def _skipping_from_rows(spark, catalog, name):
 
 
 def test_skipping_metadata_matches_rows_after_every_write(spark, catalog):
-    """The per-(segment, bucket) stats and blooms the commit records
+    """The per-(segment, bucket) stats and blooms each segment records
     equal an independent recompute from the rows on disk after create,
     append, upsert and compact — including a bucket whose bloom column
     is all NULL (no bloom entry) and one whose stats column is all NULL
-    ([None, None])."""
-    from pandabase_spark.io import _bucket_expr
+    ([None, None]). The entries live only in each live segment's
+    ``_pb_skip.json``: no version file carries them, and each stays
+    small. A head written in the old inline format (entries in the
+    version file, a ``skip`` reference, no segment files) still reads
+    the right rows, never prunes, and prunes again after a compact."""
+    import json
+
+    from pandabase_spark import kt_log
+    from pandabase_spark.io import SKIP_FILE, _bucket_expr
+
+    tpath = catalog._path("sk_t")
 
     def batch(lo, hi, shift=0.0):
         b = _bucket_expr(["k"], 4)
@@ -2987,6 +3061,15 @@ def test_skipping_metadata_matches_rows_after_every_write(spark, catalog):
         for seg in man["segments"]:
             assert stats[seg]["1"]["v"] == [None, None]
             assert "0" in stats[seg] and "0" not in blooms[seg]
+            assert catalog.fs.exists(f"{tpath}/{seg}/{SKIP_FILE}")
+        for v in catalog.history("sk_t"):
+            text = catalog.fs.read_text(
+                kt_log.version_path(tpath, v["version"])
+            )
+            assert len(text) < 2048, (v, len(text))
+            assert not {"stats", "blooms", "sketches", "skip"} & set(
+                json.loads(text)
+            )
 
     catalog.to_table(batch(0, 60), "sk_t", keys=["k"], num_buckets=4,
                      stats_columns=["v"], bloom_columns=["p"])
@@ -2996,8 +3079,44 @@ def test_skipping_metadata_matches_rows_after_every_write(spark, catalog):
     catalog.to_table(batch(50, 110, shift=0.25), "sk_t", keys=["k"],
                      how="upsert")
     check()
+    catalog.to_table(batch(200, 230), "sk_t", keys=["k"], how="append")
+    check()
+
+    # the old inline format at the head, with no segment files
+    man = catalog._manifest("sk_t")
+    skip = catalog._skipping("sk_t", man)
+    legacy = json.dumps({
+        **man, "stats": skip["stats"], "blooms": skip["blooms"],
+        "skip": f"{man['v']:010d}-deadbeef.skip.json",
+    })
+    catalog.fs.write_text_atomic(kt_log.version_path(tpath, man["v"]), legacy)
+    catalog.fs.write_text_atomic(kt_log.hint_path(tpath), legacy)
+    for seg in man["segments"]:
+        catalog.fs.delete(f"{tpath}/{seg}/{SKIP_FILE}", recursive=False)
+    def table_rows():
+        return sorted(
+            tuple(r) for r in catalog.read_table("sk_t").select(
+                "k", "v", "p"
+            ).collect()
+        )
+
+    want = table_rows()
+    assert len(want) == 160 and len(man["segments"]) == 2
+    # a range above every value: each leaf with stats could be skipped
+    bounds = {"v": (1e6, None)}
+    assert catalog._live_paths("sk_t", stats_bounds=bounds) == (
+        catalog._live_paths("sk_t")
+    )
+    got = catalog.read_table("sk_t", stats_bounds={"v": (0.0, 10.0)})
+    assert got.count() == sum(
+        1 for _, v, _ in want if v is not None and 0.0 <= v <= 10.0
+    ) > 0
     catalog.compact("sk_t")
     assert len(catalog._manifest("sk_t")["segments"]) == 1
+    assert len(catalog._live_paths("sk_t", stats_bounds=bounds)) < len(
+        catalog._live_paths("sk_t")
+    )
+    assert table_rows() == want
     check()
 
 

@@ -31,7 +31,16 @@ def test_table_detail_metadata_facts(spark, catalog):
     assert d["constraints"] == ["v_pos"]
     assert d["n_live_dvs"] == 0
     assert d["manifest_bytes"] > 0
-    assert d["skip_sidecar_bytes"] == 0  # inline while small
+    # the live segments' skipping files; the version file lists
+    # segments only
+    from pandabase_spark.io import SKIP_FILE
+
+    man = catalog._manifest("dt_t")
+    assert d["skip_sidecar_bytes"] == sum(
+        len(catalog.fs.read_text(f"{catalog._path('dt_t')}/{s}/{SKIP_FILE}"))
+        for s in man["segments"]
+    ) > 0
+    assert d["manifest_bytes"] < 2048
     assert d["generated"] == {}
     catalog.delete_rows("dt_t", "k = 1", strategy="dv")
     assert catalog.table_detail("dt_t")["n_live_dvs"] == 1
