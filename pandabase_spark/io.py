@@ -409,7 +409,9 @@ class KeyedCatalog:
             else f"{self._path(table_name)}/{seg}"
         )
 
-    def _skipping(self, table_name: str, man: dict) -> dict:
+    def _skipping(
+        self, table_name: str, man: dict, m: "TableMeta | None" = None
+    ) -> dict:
         """The data-skipping dict of a manifest's live leaves:
         ``{"stats" | "blooms" | "sketches": {seg: {bucket: {col: ..}}}}``.
         Each segment's entries live in its own immutable
@@ -419,8 +421,10 @@ class KeyedCatalog:
         (partial-bucket DML tombstones buckets) and keyed by the
         current column names, so a segment written before a rename
         answers under the new name. A segment without the file has no
-        entry and is never pruned. ``table_name`` must be qualified."""
-        m = self.meta(table_name)
+        entry and is never pruned. ``table_name`` must be qualified;
+        ``m`` is its meta when the caller already holds it."""
+        if m is None:
+            m = self.meta(table_name)
         names = {m.colmap.get(c, c): c for c in m.schema.names}
         out: dict = {"stats": {}, "blooms": {}, "sketches": {}}
         for seg, bs in man["segments"].items():
@@ -649,7 +653,9 @@ class KeyedCatalog:
                 f"(table sketch_columns={m.sketch_columns})"
             )
         man = self._manifest(table_name, version=version)
-        entries = self._sketch_entries(table_name, man, column)
+        entries = self._sketch_entries(
+            table_name, man, column, self._skipping(table_name, man, m)
+        )
         if not entries:
             # zero live segments (every row deleted): n_rows=0 and
             # NULL quantiles, not a NULL-everything row — same empty
@@ -722,24 +728,27 @@ class KeyedCatalog:
         # ONE manifest fetch serves validation and decoding — a rival
         # commit cannot slip between a check and a re-read
         man = self._manifest(table_name, version=version)
-        entries = self._sketch_entries(table_name, man, column)
+        entries = self._sketch_entries(
+            table_name, man, column, self._skipping(table_name, man, m)
+        )
         if not entries:
             return 0  # zero live segments = zero rows, exactly
         est, _ = self._kll_range_estimate(entries, lo, hi)
         return est
 
     def _sketch_entries(
-        self, table_name: str, man: dict, column: str
+        self, table_name: str, man: dict, column: str, skip: dict
     ) -> "list[tuple]":
         """Decoded ``(kll, hll)`` sketches of ``column`` for every live
-        (segment, bucket) leaf of ``man`` — the one sketch reader of
+        (segment, bucket) leaf of ``man``, from ``skip`` (its
+        :meth:`_skipping` dict) — the one sketch reader of
         :meth:`table_sketch_stats`, :meth:`estimate_range_rows` and
         read_table's selectivity gate. Raises ValueError when a live
         leaf has no sketch: statistics folded from the rest would
         under-count."""
         import base64
 
-        sketches = self._skipping(table_name, man)["sketches"]
+        sketches = skip["sketches"]
         entries = []
         for seg, bs in man["segments"].items():
             for b in bs:
@@ -4529,6 +4538,7 @@ class KeyedCatalog:
         manifest: dict | None = None,
         stats_bounds: "Mapping[str, tuple] | None" = None,
         bloom_probe: "Mapping[str, list[int]] | None" = None,
+        skip: "dict | None" = None,
     ) -> "list[tuple[str, str]]":
         # ``manifest=`` pins the read to a caller-captured snapshot so
         # DML rewrites read and commit against the SAME version — a
@@ -4540,11 +4550,14 @@ class KeyedCatalog:
             else self._manifest(table_name, version=version)
         )
         want = None if buckets is None else set(buckets)
-        skip = (
-            self._skipping(table_name, man)
-            if (stats_bounds or bloom_probe)
-            else {}
-        )
+        # ``skip=``: the manifest's _skipping dict, when the caller
+        # already loaded it
+        if skip is None:
+            skip = (
+                self._skipping(table_name, man)
+                if (stats_bounds or bloom_probe)
+                else {}
+            )
         stats = skip.get("stats", {}) if stats_bounds else {}
         blooms = skip.get("blooms", {}) if bloom_probe else {}
 
@@ -4618,10 +4631,13 @@ class KeyedCatalog:
         manifest: dict | None = None,
         stats_bounds: "Mapping[str, tuple] | None" = None,
         bloom_probe: "Mapping[str, list[int]] | None" = None,
+        m: "TableMeta | None" = None,
+        skip: "dict | None" = None,
     ) -> DataFrame:
         if not self.has_table(table_name):
             raise NameError(f"no such table: {table_name}")
-        m = self.meta(table_name)
+        if m is None:
+            m = self.meta(table_name)
         schema = m.schema
         man = (
             manifest
@@ -4634,6 +4650,7 @@ class KeyedCatalog:
             manifest=man,
             stats_bounds=stats_bounds,
             bloom_probe=bloom_probe,
+            skip=skip,
         )
         if not pairs:
             return local_frame(self.spark, [], schema)
@@ -4889,6 +4906,13 @@ class KeyedCatalog:
                 col: self._bloom_positions(val, tbl_schema[col].dataType)
                 for col, val in bloom_point.items()
             }
+        # ONE load of the skipping metadata (and the meta already in
+        # hand) serves the selectivity gate and the leaf pruning
+        skip = (
+            self._skipping(table_name, _man, m)
+            if (stats_bounds or bloom_probe) and _man is not None
+            else None
+        )
         # Selectivity-gated skipping (the sketch surface consumed as
         # a planner primitive): for a bounds column that also carries
         # segment sketches, estimate the range's row fraction first;
@@ -4911,7 +4935,7 @@ class KeyedCatalog:
                         # no extra manifest fetch, no second pass; an
                         # uncovered leaf raises ValueError (probe)
                         entries = self._sketch_entries(
-                            table_name, _man, col
+                            table_name, _man, col, skip
                         )
                         if not entries:
                             raise ValueError("no live segments")
@@ -4951,6 +4975,8 @@ class KeyedCatalog:
             manifest=_man,
             stats_bounds=eff_bounds,
             bloom_probe=bloom_probe,
+            m=m,
+            skip=skip,
         )
         if bloom_point:
             for col, val in bloom_point.items():

@@ -28,9 +28,10 @@ from __future__ import annotations
 import hashlib
 import struct
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
-from pandabase_spark.functions.vector import cosine_similarity, dot
+from pandabase_spark.functions.vector import cosine_similarity
 from pandabase_spark.localframe import local_frame
 
 
@@ -247,40 +248,142 @@ def _with_cell(
     return staged.withColumn(out, cell).drop("_pb_dots")
 
 
-def _train_sample(
+# FAISS's default ``max_points_per_centroid``: Lloyd training reads at
+# most this many sample rows per centroid (IVF cell or PQ code).
+TRAIN_POINTS_PER_CENTROID = 256
+
+
+def _train_rows(
     corpus: DataFrame, *, id_col: str, vec_col: str,
-    sample_mod: "int | None",
-) -> DataFrame:
-    """The (_id, _v) k-means training frame both trainers iterate
-    over: the deterministic 1/mod hash-sample of the corpus, spread
-    across the cluster (a sampled single-file source would otherwise
-    run every Lloyd stage as one task). Callers persist it for the
-    Lloyd loop and release it when training ends."""
-    train = corpus.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    )
+    sample_mod: "int | None", n_centroids: int,
+) -> np.ndarray:
+    """The training matrix of both trainers, in ONE collect: after the
+    deterministic 1/``sample_mod`` hash-sample, the
+    ``TRAIN_POINTS_PER_CENTROID × n_centroids`` rows with the smallest
+    ``xxhash64(cast(id as string))``, in that order, as float64 rows.
+    The order is a property of the rows, so any shorter prefix is
+    exactly what a smaller cap would have collected: a trainer asked
+    for fewer centroids reads the same leading rows, and its first
+    rows are its seeds.
+
+    When the optimizer already bounds the sample under the cap (an
+    in-memory corpus), Spark would drop the limit and plan a
+    range-partitioned sort (3 jobs); the rows are collected as they
+    are and sorted here instead, which for a local relation runs no
+    job at all."""
+    cap = TRAIN_POINTS_PER_CENTROID * n_centroids
     if sample_mod is not None:
-        train = train.where(
-            F.pmod(F.xxhash64("_id"), F.lit(sample_mod)) == 0
+        corpus = corpus.where(
+            F.pmod(F.xxhash64(id_col), F.lit(sample_mod)) == 0
         )
-    return train.repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism
+    train = corpus.select(
+        F.xxhash64(F.col(id_col).cast("string")).alias("_h"),
+        F.col(vec_col).alias("_v"),
     )
+    bound = train._jdf.queryExecution().optimizedPlan().maxRows()
+    if bound.isDefined() and bound.get() <= cap:
+        rows = sorted(train.collect(), key=lambda r: r["_h"])
+    else:
+        rows = train.orderBy("_h").limit(cap).collect()
+    return np.array([r["_v"] for r in rows], dtype=np.float64)
 
 
-def _seed_vectors(train: DataFrame, n: int) -> list:
-    """The ``n`` training rows with the smallest ``xxhash64(id)`` —
-    the deterministic k-means seeds (a partial TakeOrdered, not a
-    full sort). One collect serves every trainer drawing seeds from
-    the same sample: the ordering is a property of the rows, so the
-    first ``n_cells`` (or ``k``) rows of one ordered prefix are
-    exactly what each trainer would have collected itself."""
-    return (
-        train.orderBy(F.xxhash64(F.col("_id").cast("string")))
-        .limit(n)
-        .select("_v")
-        .collect()
-    )
+def _folded(X: np.ndarray, C: np.ndarray, sqdist: bool) -> np.ndarray:
+    """(rows × centroids) dots, or squared L2 distances, accumulated
+    left to right over the dimensions in double: the order in which
+    :func:`_dot_sql` / :func:`_sqdist_sql` fold, so a row is assigned
+    here exactly as the Spark scorer assigns it, ties included (a
+    BLAS matmul sums in another order)."""
+    out = np.zeros((len(X), len(C)))
+    for j in range(X.shape[1]):
+        if sqdist:
+            diff = X[:, j : j + 1] - C[:, j]
+            out += diff * diff
+        else:
+            out += X[:, j : j + 1] * C[:, j]
+    return out
+
+
+def _cell_means(X: np.ndarray, cell: np.ndarray, C: np.ndarray):
+    """(per-cell means of ``X``'s rows, mask of non-empty cells); an
+    empty cell keeps its row of ``C``."""
+    sums = np.zeros_like(C)
+    np.add.at(sums, cell, X)
+    counts = np.bincount(cell, minlength=len(C))
+    hit = counts > 0
+    out = C.copy()
+    out[hit] = sums[hit] / counts[hit, None]
+    return out, hit
+
+
+def _unit_rows(V: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; a zero row stays as it is."""
+    norms = np.sqrt((V * V).sum(axis=1, keepdims=True))
+    return np.divide(V, norms, out=V.copy(), where=norms > 0)
+
+
+def _spherical_kmeans(
+    X: np.ndarray, n_cells: int, iters: int,
+    tol: "float | None" = None, info: "dict | None" = None,
+) -> "list[list[float]]":
+    """Spherical Lloyd over the first ``TRAIN_POINTS_PER_CENTROID ×
+    n_cells`` rows of ``X``: the first ``n_cells`` rows, unit-normed,
+    seed; each step assigns every row to its max-dot centroid (ties to
+    the lowest cell), takes exact per-cell means and unit-norms them;
+    an empty cell keeps its centroid."""
+    X = X[: TRAIN_POINTS_PER_CENTROID * n_cells]
+    if len(X) < n_cells:
+        raise ValueError(
+            f"need at least n_cells={n_cells} training vectors, "
+            f"got {len(X)}"
+        )
+    C = _unit_rows(X[:n_cells])
+    iters_run, move = 0, None
+    for _ in range(iters):
+        cell = np.argmax(_folded(X, C, sqdist=False), axis=1)
+        means, hit = _cell_means(X, cell, C)
+        updated = C.copy()
+        updated[hit] = _unit_rows(means[hit])
+        iters_run += 1
+        if tol is not None:
+            move = float(np.sqrt(((C - updated) ** 2).sum(axis=1)).max())
+        C = updated
+        if tol is not None and move <= tol:
+            break
+    if info is not None:
+        info["iters_run"] = iters_run
+        info["final_move"] = move
+    return C.tolist()
+
+
+def _pq_kmeans(
+    X: np.ndarray, m: int, k: int, iters: int
+) -> "list[list[list[float]]]":
+    """Per-subspace L2 Lloyd over the first ``TRAIN_POINTS_PER_CENTROID
+    × k`` rows of ``X``: the first ``k`` rows' subvectors seed; each
+    step assigns every row to its min-distance code (ties to the
+    lowest code) and takes exact per-code means; an empty code keeps
+    its subcentroid."""
+    X = X[: TRAIN_POINTS_PER_CENTROID * k]
+    if not len(X):
+        raise ValueError("cannot train PQ on an empty corpus")
+    if len(X) < k:
+        raise ValueError(
+            f"need at least k={k} training vectors, got {len(X)}"
+        )
+    dim = X.shape[1]
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    d = dim // m
+    books = []
+    for j in range(m):
+        S = X[:, j * d : (j + 1) * d]
+        B = S[:k].copy()
+        for _ in range(iters):
+            code = np.argmin(_folded(S, B, sqdist=True), axis=1)
+            B, _ = _cell_means(S, code, B)
+        books.append(B.tolist())
+    return books
 
 
 def ivf_centroids(
@@ -293,8 +396,6 @@ def ivf_centroids(
     tol: "float | None" = None,
     sample_mod: int | None = None,
     info: "dict | None" = None,
-    _train: "DataFrame | None" = None,
-    _seed_rows: "list | None" = None,
 ) -> list[list[float]]:
     """Train a spherical-k-means coarse quantizer; returns unit-norm
     centroids as plain Python lists (n_cells × dim floats — an index
@@ -302,99 +403,33 @@ def ivf_centroids(
     the same carrier as :func:`pq_codebooks`). List position is the
     cell id everywhere the quantizer is scored or persisted.
 
-    Deterministic end to end: seeds are the ``n_cells`` rows with the
-    smallest ``xxhash64(id)`` (a partial TakeOrdered, not a full sort),
-    and Lloyd updates use exact per-cell means via posexplode →
-    groupBy(cell, pos) → avg — one narrow scan plus one
-    (cell × dim)-key aggregate per iteration, partial-combined map-side.
+    One collect (at most one Spark job), then NumPy on the driver. It
+    fetches the training sample: after ``sample_mod`` (train on the deterministic
+    1/m hash-sample), the ``TRAIN_POINTS_PER_CENTROID × n_cells``
+    (256 × n_cells) rows with the smallest ``xxhash64(id)``, in that
+    order. The cap is FAISS's default ``max_points_per_centroid``
+    (Jégou et al., TPAMI 2011; Johnson et al., 2017): centroid quality
+    needs a bounded sample, not the corpus, so a corpus larger than the
+    cap trains on its capped hash prefix, and the driver holds at most
+    256 × n_cells × dim × 8 bytes. The full corpus is only touched by
+    the one-pass cell assignment afterwards.
+
+    Deterministic end to end: the first ``n_cells`` rows of the prefix
+    are the seeds; each Lloyd step assigns by max dot, summed in the
+    same order as the Spark scorer (ties to the lowest cell), and takes
+    exact per-cell means; an empty cell keeps its centroid.
 
     ``tol`` turns ``iters`` from a fixed count into a CAP: the loop
     stops once the largest per-centroid L2 movement of an update falls
-    to ``tol`` or below — k-means converges at data-dependent speed,
-    and every iteration past convergence is a full scan+aggregate of
-    the training sample bought for nothing. ``info`` (optional dict)
-    receives ``iters_run`` and ``final_move`` so callers can record
-    the convergence fact next to the build time.
-
-    100 TB shape: pass ``sample_mod=m`` to train on the deterministic
-    1/m hash-sample of the corpus (standard IVF practice — centroid
-    quality needs samples, not the corpus); the full corpus is only
-    touched by the one-pass cell assignment afterwards.
-
-    ``_train`` / ``_seed_rows`` are the builder-sharing seam (r14):
-    a caller that trains BOTH a coarse quantizer and PQ codebooks on
-    the same sample (``write_ivfpq_index``) builds the persisted
-    sample and runs the one seed TakeOrdered once, passing both in —
-    the rows and their ordering are identical to what this function
-    would compute itself, so the trained artifact is unchanged while
-    the duplicate sample materialization and seed job disappear.
-    A provided ``_train`` must be the persisted :func:`_train_sample`
-    frame; its lifecycle belongs to the caller.
+    to ``tol`` or below. ``info`` (optional dict) receives
+    ``iters_run`` and ``final_move`` so callers can record the
+    convergence fact next to the build time.
     """
-    if _train is not None:
-        train = _train
-    else:
-        # the TRAINING SAMPLE is re-scanned once per Lloyd iteration
-        # plus the seed job — persist it for the loop, spread across
-        # the cluster first (a sampled single-file source would
-        # otherwise run every Lloyd stage as one task). That is what
-        # sample_mod is for at 100 TB: the sample is sized to fit the
-        # cluster, while the full corpus is only ever touched by the
-        # one-pass assignment.
-        train = _train_sample(
-            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
-        ).persist()
-    try:
-        seeds = (
-            _seed_rows[:n_cells] if _seed_rows is not None
-            else _seed_vectors(train, n_cells)
-        )
-        if len(seeds) < n_cells:
-            raise ValueError(
-                f"need at least n_cells={n_cells} training vectors, "
-                f"got {len(seeds)}"
-            )
-
-        def _unit(vec: list[float]) -> list[float]:
-            n = sum(x * x for x in vec) ** 0.5
-            return [x / n for x in vec] if n > 0 else list(vec)
-
-        centroids = [_unit([float(x) for x in r["_v"]]) for r in seeds]
-        iters_run, move = 0, None
-        for _ in range(iters):
-            assigned = _with_cell(
-                train, "_v", centroids, out="_cell"
-            ).select("_cell", F.posexplode("_v").alias("_pos", "_x"))
-            means = (
-                assigned.groupBy("_cell", "_pos")
-                .agg(F.avg("_x").alias("_m"))
-                .collect()
-            )
-            by_cell: dict[int, dict[int, float]] = {}
-            for r in means:
-                by_cell.setdefault(r["_cell"], {})[r["_pos"]] = r["_m"]
-            updated = [
-                _unit([by_cell[c][p] for p in sorted(by_cell[c])])
-                if c in by_cell
-                else centroids[c]  # empty cell keeps its previous centroid
-                for c in range(n_cells)
-            ]
-            iters_run += 1
-            if tol is not None:
-                move = max(
-                    sum((a - b) ** 2 for a, b in zip(o, n)) ** 0.5
-                    for o, n in zip(centroids, updated)
-                )
-            centroids = updated
-            if tol is not None and move <= tol:
-                break
-        if info is not None:
-            info["iters_run"] = iters_run
-            info["final_move"] = move
-        return centroids
-    finally:
-        if _train is None:
-            train.unpersist()
+    X = _train_rows(
+        corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod,
+        n_centroids=n_cells,
+    )
+    return _spherical_kmeans(X, n_cells, iters, tol, info)
 
 
 def _with_cells_topn(
@@ -800,6 +835,13 @@ def write_ivfpq_index(
     ingest-time pattern, and how the lossless-PQ exactness gate
     injects enumerated codebooks).
 
+    Training both artifacts here is one collect of the
+    ``TRAIN_POINTS_PER_CENTROID × max(n_cells, n_codes)`` hash-ordered
+    sample rows (the cap of :func:`ivf_centroids`; the driver holds at
+    most cap × dim × 8 bytes). Each trainer reads its own 256 × n
+    prefix, so each artifact equals its standalone training, and no
+    Spark job depends on ``iters``.
+
     ``residual=True`` stores Jégou et al.'s ACTUAL IVFADC encoding:
     each vector's PQ code quantizes its RESIDUAL against its cell's
     ANCHOR rather than ``x`` itself. The coarse quantizer absorbs the
@@ -817,75 +859,23 @@ def write_ivfpq_index(
     cell at query time — ADC distances are L2-identical under any
     common per-cell shift)."""
     spark = corpus.sparkSession
-    # builder sharing (r14): when BOTH the coarse quantizer and the
-    # codebooks train here on the raw corpus (the non-residual
-    # trained path), they iterate over the SAME deterministic sample
-    # and draw seeds from the SAME ordered prefix — so materialize
-    # the persisted sample once and run one TakeOrdered of
-    # max(n_cells, n_codes) rows instead of two pipelines each paying
-    # its own sample scan + seed job. The centroid trainer sees rows,
-    # partitioning and seed values identical to its standalone path
-    # (bit-identical quantizer); pq training runs over the shared
-    # spread frame, which is also its correct 100 TB shape.
-    shared_train = None
-    try:
-        if (
-            centroids is None and codebooks is None
-            and not exact_codebooks and not residual
-        ):
-            shared_train = _train_sample(
-                corpus, id_col=id_col, vec_col=vec_col,
-                sample_mod=sample_mod,
-            ).persist()
-            shared_seeds = _seed_vectors(
-                shared_train, max(n_cells, n_codes)
-            )
-            # the two trainers are INDEPENDENT given the shared seeds
-            # and iterate the same ALREADY-MATERIALIZED cache (the
-            # seed collect warmed it), so run them concurrently (r15,
-            # guide §2.6): each trainer's own aggregates see identical
-            # rows, partitioning and seeds, so both artifacts stay
-            # bit-identical to the sequential path (pinned by
-            # test_ivfpq_shared_training_matches_sequential) — the
-            # overlap just back-fills one trainer's tiny per-iteration
-            # collect latencies with the other's tasks.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark.util import inheritable_thread_target
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_c = pool.submit(
-                    inheritable_thread_target(spark)(
-                        lambda: ivf_centroids(
-                            corpus, id_col=id_col, vec_col=vec_col,
-                            n_cells=n_cells, iters=iters,
-                            sample_mod=sample_mod,
-                            _train=shared_train,
-                            _seed_rows=shared_seeds,
-                        )
-                    )
-                )
-                fut_b = pool.submit(
-                    inheritable_thread_target(spark)(
-                        lambda: pq_codebooks(
-                            corpus, id_col=id_col, vec_col=vec_col,
-                            m=m, k=n_codes, iters=iters,
-                            sample_mod=sample_mod,
-                            _train=shared_train,
-                            _seed_rows=shared_seeds,
-                        )
-                    )
-                )
-                centroids = fut_c.result()
-                codebooks = fut_b.result()
-        if centroids is None:
-            centroids = ivf_centroids(
-                corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
-                iters=iters, sample_mod=sample_mod,
-            )
-    finally:
-        if shared_train is not None:
-            shared_train.unpersist()
+    if (
+        centroids is None and codebooks is None
+        and not exact_codebooks and not residual
+    ):
+        # both trainers read the raw corpus: one collect of the longer
+        # prefix serves both, each trainer slicing its own cap
+        X = _train_rows(
+            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod,
+            n_centroids=max(n_cells, n_codes),
+        )
+        centroids = _spherical_kmeans(X, n_cells, iters)
+        codebooks = _pq_kmeans(X, m, n_codes, iters)
+    if centroids is None:
+        centroids = ivf_centroids(
+            corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
+            iters=iters, sample_mod=sample_mod,
+        )
     cdf = _centroids_literal_df(spark, centroids)
     staged = ivf_assign(corpus, centroids, vec_col=vec_col)
     anchors_df = None
@@ -1743,8 +1733,6 @@ def pq_codebooks(
     k: int = 16,
     iters: int = 2,
     sample_mod: int | None = None,
-    _train: "DataFrame | None" = None,
-    _seed_rows: "list | None" = None,
 ) -> "list[list[list[float]]]":
     """Train product-quantization codebooks (Jégou et al. 2011): the
     vector is split into ``m`` equal subspaces and each gets its own
@@ -1755,124 +1743,19 @@ def pq_codebooks(
     Returns ``codebooks[j][c] = subcentroid`` as plain Python lists
     (m·k·(d/m) floats — an index artifact, deliberately driver-side
     and literal-broadcastable, same contract as :func:`ivf_centroids`).
-    Deterministic: subspace seeds come from the ``k`` rows with the
-    smallest ``xxhash64(id)``; Lloyd updates are exact per-(subspace,
-    cell, position) means. ``sample_mod`` trains on the deterministic
-    1/mod hash-sample — codebook quality needs samples, not the
-    corpus.
 
-    Cost shape: ALL ``m`` subspaces train in ONE job per Lloyd
-    iteration — per row the m cell assignments are staged literal
-    folds, then a single posexplode keys the means by (subspace,
-    cell, position) — instead of m independent pipelines re-scanning
-    the sample m×iters times. The training frame is persisted across
-    iterations and released in a ``finally``.
-
-    ``_train`` / ``_seed_rows``: the builder-sharing seam (r14, same
-    contract as :func:`ivf_centroids`) — ``write_ivfpq_index`` trains
-    the coarse quantizer and the codebooks on the SAME sample, so it
-    materializes one persisted :func:`_train_sample` frame and one
-    seed TakeOrdered prefix and passes both trainers their slice.
+    One collect, then NumPy on the driver, sampled and capped as in
+    :func:`ivf_centroids` with ``k`` in place of ``n_cells``. The first
+    ``k`` rows' subvectors seed; each Lloyd step assigns per subspace
+    by min squared distance, summed in the Spark encoder's order (ties
+    to the lowest code), and takes exact per-code means; an empty code
+    keeps its subcentroid.
     """
-    if _train is not None:
-        train = _train
-    else:
-        # the SAME frame the sharing seam materializes — including its
-        # defaultParallelism repartition (r15 advisory fix): float mean
-        # accumulation order follows partition layout, so training the
-        # standalone path over a differently-partitioned frame made
-        # the shared-vs-sequential parity byte-equality layout-
-        # dependent; identical construction makes it hold by
-        # construction. The spread is also this path's correct 100 TB
-        # shape — a sampled single-file source would otherwise run
-        # every Lloyd stage as one task.
-        train = _train_sample(
-            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
-        ).persist()
-    try:
-        seed_rows = (
-            _seed_rows[:k] if _seed_rows is not None
-            else _seed_vectors(train, k)
-        )
-        if not seed_rows:
-            raise ValueError("cannot train PQ on an empty corpus")
-        if len(seed_rows) < k:
-            raise ValueError(
-                f"need at least k={k} training vectors, "
-                f"got {len(seed_rows)}"
-            )
-        # dimensionality from the seeds already on the driver — the
-        # separate select(size(vec)).first() probe was one whole Spark
-        # job bought for a single integer (r14 optimization)
-        dim = len(seed_rows[0]["_v"])
-        if dim % m != 0:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        d = dim // m
-        books = [
-            [
-                [float(x) for x in r["_v"][j * d : (j + 1) * d]]
-                for r in seed_rows
-            ]
-            for j in range(m)
-        ]
-        for _ in range(iters):
-            staged = train
-            cell_cols = []
-            for j in range(m):
-                sv = f"_pb_sv{j}"
-                staged = staged.withColumn(
-                    sv, F.slice("_v", j * d + 1, d)
-                ).withColumn(
-                    f"_pb_d{j}",
-                    F.expr(
-                        "array("
-                        + ",".join(
-                            _sqdist_sql(sv, c) for c in books[j]
-                        )
-                        + ")"
-                    ),
-                )
-                cell_cols.append(
-                    (
-                        F.array_position(
-                            F.col(f"_pb_d{j}"),
-                            F.array_min(f"_pb_d{j}"),
-                        )
-                        - 1
-                    ).cast("int")
-                )
-            ex = (
-                staged.withColumn("_cells", F.array(*cell_cols))
-                .select("_cells", F.posexplode("_v").alias("_pos", "_x"))
-                .withColumn(
-                    "_j", F.expr(f"_pos div {d}").cast("int")
-                )
-                .withColumn("_sp", F.pmod("_pos", F.lit(d)))
-                .withColumn(
-                    "_cell", F.element_at("_cells", F.col("_j") + 1)
-                )
-            )
-            means = (
-                ex.groupBy("_j", "_cell", "_sp")
-                .agg(F.avg("_x").alias("_m"))
-                .collect()
-            )
-            upd: dict[tuple, dict[int, float]] = {}
-            for r in means:
-                upd.setdefault((r["_j"], r["_cell"]), {})[r["_sp"]] = r["_m"]
-            books = [
-                [
-                    [upd[(j, c)][sp] for sp in sorted(upd[(j, c)])]
-                    if (j, c) in upd
-                    else books[j][c]  # empty cell keeps its centroid
-                    for c in range(k)
-                ]
-                for j in range(m)
-            ]
-    finally:
-        if _train is None:
-            train.unpersist()
-    return books
+    X = _train_rows(
+        corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod,
+        n_centroids=k,
+    )
+    return _pq_kmeans(X, m, k, iters)
 
 
 def pq_encode(
@@ -2098,50 +1981,13 @@ def ann_topk_ivfpq(
 
     qid = query_id_col or id_col
     if centroids is None and codebooks is None:
-        # both trainers iterate the same sample — share its persisted
-        # materialization and the seed TakeOrdered (r14, the
-        # write_ivfpq_index builder-sharing seam)
-        shared_train = _train_sample(
-            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
-        ).persist()
-        try:
-            shared_seeds = _seed_vectors(
-                shared_train, max(n_cells, n_codes)
-            )
-            # independent trainers over the warmed cache run
-            # concurrently — same rationale and bit-identity argument
-            # as write_ivfpq_index's seam (r15, guide §2.6)
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark.util import inheritable_thread_target
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_c = pool.submit(
-                    inheritable_thread_target(corpus.sparkSession)(
-                        lambda: ivf_centroids(
-                            corpus, id_col=id_col, vec_col=vec_col,
-                            n_cells=n_cells, iters=iters,
-                            sample_mod=sample_mod,
-                            _train=shared_train,
-                            _seed_rows=shared_seeds,
-                        )
-                    )
-                )
-                fut_b = pool.submit(
-                    inheritable_thread_target(corpus.sparkSession)(
-                        lambda: pq_codebooks(
-                            corpus, id_col=id_col, vec_col=vec_col,
-                            m=m, k=n_codes, iters=iters,
-                            sample_mod=sample_mod,
-                            _train=shared_train,
-                            _seed_rows=shared_seeds,
-                        )
-                    )
-                )
-                centroids = fut_c.result()
-                codebooks = fut_b.result()
-        finally:
-            shared_train.unpersist()
+        # one collect serves both trainers (see write_ivfpq_index)
+        X = _train_rows(
+            corpus, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod,
+            n_centroids=max(n_cells, n_codes),
+        )
+        centroids = _spherical_kmeans(X, n_cells, iters)
+        codebooks = _pq_kmeans(X, m, n_codes, iters)
     if centroids is None:
         centroids = ivf_centroids(
             corpus, id_col=id_col, vec_col=vec_col,

@@ -4,12 +4,17 @@
 Builds a generated keyed table with ``stats_columns`` and
 ``bloom_columns`` plus a Delta copy in a temporary warehouse, then runs
 create, append, upsert, merge, compact, delta_append and
-delta_checkpoint, each in its own Spark job group. For every verb it
-prints the job count and, per job, the call sites Spark records as its
-stage names: the phase tree behind the verb's count. Needs no test
-data. Usage:
+delta_checkpoint. Then it writes seeded, clustered 64-dimensional unit
+vectors to parquet and runs the persisted IVFADC verbs on them:
+write_ivfpq_index (16 cells, m=8, 16 codes), append_ivfpq_index with
+``txn=``, compact_index and a single-vector ann_topk_ivfpq_indexed.
+Each verb runs in its own Spark job group. For every verb it prints
+the job count and, per job, the call sites Spark records as its stage
+names: the phase tree behind the verb's count. Needs no test data.
+Usage:
 
-    python scripts/jobtrace.py [rows]    # default 2000
+    python scripts/jobtrace.py [rows]    # default 2000 keyed rows
+                                         # and 2000 vectors
 """
 
 from __future__ import annotations
@@ -21,6 +26,39 @@ import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+
+def trace_ann(spark, trace, root: str, rows: int) -> None:
+    """The persisted IVFADC verbs on ``rows`` + ``rows // 10`` seeded
+    unit vectors (16 clusters, dim 64), read back from parquet."""
+    import numpy as np
+
+    from pandabase_spark.operators.similarity import (
+        ann_topk_ivfpq_indexed, append_ivfpq_index, compact_index,
+        write_ivfpq_index,
+    )
+
+    rng = np.random.default_rng(1)
+    centers = rng.standard_normal((16, 64))
+    n = rows + rows // 10
+    vecs = centers[rng.integers(0, 16, n)] + 0.3 * rng.standard_normal((n, 64))
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    ).write.parquet(f"{root}/vectors")
+    vectors = spark.read.parquet(f"{root}/vectors")
+    corpus = vectors.where(f"vec_id < {rows}")
+    batch = vectors.where(f"vec_id >= {rows}")
+    query = vectors.where("vec_id = 0")
+    path = f"{root}/index"
+    trace("ivfpq_build", lambda: write_ivfpq_index(
+        corpus, path, n_cells=16, m=8, n_codes=16))
+    trace("ivfpq_append", lambda: append_ivfpq_index(
+        batch, path, txn=("jobtrace", 0)))
+    trace("ivfpq_compact", lambda: compact_index(spark, path, keep_last=0))
+    trace("ivfpq_query", lambda: ann_topk_ivfpq_indexed(
+        spark, path, query, k=10, nprobe=4).collect())
 
 
 def main() -> None:
@@ -97,6 +135,7 @@ def main() -> None:
         trace("delta_append", lambda: dw.delta_append(
             df.withColumn("k", F.col("k") + rows), bronze))
         trace("delta_checkpoint", lambda: dw.delta_checkpoint(spark, bronze))
+        trace_ann(spark, trace, f"{wh}/ann", rows)
     finally:
         spark.stop()
         shutil.rmtree(wh, ignore_errors=True)

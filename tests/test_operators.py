@@ -240,36 +240,27 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert len(exact & approx) / len(exact) >= 0.5
 
 
-def _numpy_ivf_centroids(spark, corpus, n_cells, iters):
-    """NumPy reference of ivf_centroids' algorithm: seeds are the
-    ``n_cells`` rows with the smallest xxhash64(id) (``_seed_vectors``),
-    each Lloyd step assigns every vector to its max-dot centroid (ties
-    to the lowest cell), takes exact per-cell means, unit-normalizes,
-    and an empty cell keeps its previous centroid. Dots are summed left
-    to right in double, as the literal fold does, so assignments
-    match bit for bit. Returns (centroids, number of empty-cell
-    updates)."""
+def _numpy_ivf_centroids(spark, corpus, n_cells, iters, cap=None):
+    """NumPy reference of ivf_centroids' algorithm: the training rows
+    are ordered by xxhash64(cast(vec_id as string)) (computed by Spark,
+    sorted here) and cut to the first ``cap`` rows when given; the
+    first ``n_cells`` of them seed, each Lloyd step assigns every
+    vector to its max-dot centroid (ties to the lowest cell), takes
+    exact per-cell means, unit-normalizes, and an empty cell keeps its
+    previous centroid. Dots are summed left to right in double, as the
+    literal fold does, so assignments match bit for bit. Returns
+    (centroids, number of empty-cell updates)."""
     import numpy as np
-
-    from pandabase_spark.operators.similarity import (
-        _seed_vectors, _train_sample,
-    )
 
     def unit(v):
         n = sum(float(x) * float(x) for x in v) ** 0.5
         return v / n if n > 0 else v
 
-    train = _train_sample(
-        corpus, id_col="vec_id", vec_col="embedding", sample_mod=None
-    )
-    seeds = _seed_vectors(train, n_cells)
-    cents = np.array(
-        [unit(np.asarray(r["_v"], dtype=np.float64)) for r in seeds]
-    )
-    X = np.array(
-        [r["embedding"] for r in corpus.select("embedding").collect()],
-        dtype=np.float64,
-    )
+    pdf = corpus.select(
+        F.xxhash64(F.col("vec_id").cast("string")).alias("h"), "embedding"
+    ).toPandas().sort_values("h", kind="stable")
+    X = np.array(pdf["embedding"].tolist(), dtype=np.float64)[:cap]
+    cents = np.array([unit(x) for x in X[:n_cells]])
     empties = 0
     for _ in range(iters):
         dots = np.zeros((len(X), n_cells))
@@ -301,6 +292,10 @@ def test_ivf_dataframe_centroids_parity(spark):
     assert len(got) == 8
     for cell, vec in enumerate(got):
         assert vec == pytest.approx(list(ref[cell]), abs=1e-9), cell
+    # an in-memory copy is bounded under the cap, so its sample is
+    # sorted on the driver instead of by Spark: the same quantizer
+    in_memory = spark.createDataFrame(emb.toPandas())
+    assert ivf_centroids(in_memory, n_cells=8, iters=2) == got
 
     base = [[1.0, 0.0, 0.0], [0.6, 0.8, 0.0]]
     tiny = spark.createDataFrame(
@@ -314,6 +309,41 @@ def test_ivf_dataframe_centroids_parity(spark):
     assert empties >= 3
     for cell, vec in enumerate(got):
         assert vec == pytest.approx(list(ref[cell]), abs=1e-9), cell
+
+
+def test_ivf_training_sample_is_capped_hash_prefix(spark):
+    """A corpus larger than TRAIN_POINTS_PER_CENTROID × n_cells trains
+    on exactly its first 256 × n_cells rows in xxhash64(id) order; with
+    ``sample_mod`` the hash-sample filter applies first and the cap
+    second."""
+    import numpy as np
+
+    from pandabase_spark.operators.similarity import (
+        TRAIN_POINTS_PER_CENTROID, ivf_centroids,
+    )
+
+    cap = TRAIN_POINTS_PER_CENTROID * 2
+    rng = np.random.default_rng(7)
+    centers = rng.standard_normal((3, 6))
+    vecs = centers[np.arange(1400) % 3] + 0.6 * rng.standard_normal((1400, 6))
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def check(frame, got):
+        assert frame.count() > cap
+        ref, _ = _numpy_ivf_centroids(spark, frame, 2, 3, cap=cap)
+        for cell, vec in enumerate(got):
+            assert vec == pytest.approx(list(ref[cell]), abs=1e-9), cell
+        # the cap binds: the same training on every row differs
+        full, _ = _numpy_ivf_centroids(spark, frame, 2, 3)
+        assert np.abs(np.array(got) - full).max() > 1e-6
+
+    head = corpus.where(F.col("vec_id") < 600)
+    check(head, ivf_centroids(head, n_cells=2, iters=3))
+    sampled = corpus.where(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 0)
+    check(sampled, ivf_centroids(corpus, n_cells=2, iters=3, sample_mod=2))
 
 
 def test_ivf_convergence_tol_stops_both_trainers(spark):

@@ -691,6 +691,47 @@ def test_skipping_write_job_budgets(spark, tmp_path):
         assert not over, f"{skip}: jobs {counts} over budget {budget}"
 
 
+def test_ivfpq_build_job_budget(spark, tmp_path):
+    """Training the quantizer and the codebooks is ONE collect of the
+    capped hash-ordered sample; Lloyd runs on the driver. On a
+    parquet-backed corpus the whole build (collect, three sidecar
+    writes, the cell-partitioned data write) stays within 6 jobs, and
+    no job depends on the Lloyd iteration count: a per-iteration Spark
+    aggregate would add 2 jobs per iteration per trainer. An in-memory
+    corpus under the cap is collected without a sort, so it costs no
+    more."""
+    import numpy as np
+    import pandas as pd
+
+    from pandabase_spark.operators.similarity import write_ivfpq_index
+
+    rng = np.random.default_rng(5)
+    pdf = pd.DataFrame({
+        "vec_id": np.arange(600, dtype=np.int64),
+        "embedding": list(rng.standard_normal((600, 16)).astype(np.float32)),
+    })
+    in_memory = spark.createDataFrame(pdf)
+    src = str(tmp_path / "corpus")
+    in_memory.write.parquet(src)
+    sc = spark.sparkContext
+
+    def jobs(corpus, tag: str, iters: int) -> int:
+        group = f"ivfpq-build-{tag}-{iters}"
+        sc.setJobGroup(group, group)
+        write_ivfpq_index(
+            corpus, str(tmp_path / f"ix-{tag}-{iters}"), n_cells=4, m=4,
+            n_codes=4, iters=iters,
+        )
+        sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for tag, corpus in (
+        ("parquet", spark.read.parquet(src)), ("memory", in_memory)
+    ):
+        counts = {iters: jobs(corpus, tag, iters) for iters in (2, 6)}
+        assert counts[2] == counts[6] <= 6, (tag, counts)
+
+
 def test_indexed_ann_probe_prunes_partitions(spark, tmp_path):
     """The persisted IVF index serves probes via PLANNING-time
     partition pruning: the data scan carries a PartitionFilters entry

@@ -16,9 +16,9 @@ Each test pins one of the five r14 ADVICE items:
    local-frame fast path defers to classic createDataFrame inference
    (which merges [1, 2.5] to double) instead of pinning LongType and
    raising;
-5. standalone ``pq_codebooks`` trains over the SAME
-   ``_train_sample``-shaped frame as the shared-training seam, so the
-   byte-equality parity test holds by construction at any core count.
+5. standalone ``pq_codebooks`` trains on the same hash-ordered sample
+   prefix as ``write_ivfpq_index``'s shared collect, so the persisted
+   codebooks equal the standalone ones by construction.
 """
 
 from __future__ import annotations
@@ -143,29 +143,30 @@ def test_mixed_probe_rows_defer_to_classic_inference(spark):
         spark.createDataFrame(rows, ["v", "est_count"])
 
 
-def test_standalone_pq_codebooks_matches_shared_training(spark):
-    """Parity by construction: the standalone trained path and the
-    sharing seam iterate the SAME repartitioned sample, so codebooks
-    are byte-identical (this was layout-dependent before r15)."""
+def test_standalone_pq_codebooks_matches_shared_training(spark, tmp_path):
+    """Parity by construction: write_ivfpq_index trains both artifacts
+    from ONE collect of the longer hash-ordered prefix (256 × n_cells
+    rows here) and the codebooks read its first 256 × n_codes rows, so
+    the persisted codebooks equal standalone pq_codebooks exactly. The
+    sample is larger than the codebook cap, so the slice matters."""
+    import numpy as np
+
     from pandabase_spark.operators.similarity import (
-        _seed_vectors, _train_sample, pq_codebooks,
+        pq_codebooks, write_ivfpq_index,
     )
 
+    rng = np.random.default_rng(3)
     emb = spark.createDataFrame(
-        [(i, [float((i * 7 + j) % 5 - 2) for j in range(8)])
-         for i in range(64)],
+        [(i, [float(x) for x in rng.standard_normal(8)])
+         for i in range(1500)],
         "vec_id long, embedding array<double>",
     )
-    standalone = pq_codebooks(emb, m=4, k=4, iters=2, sample_mod=2)
-    train = _train_sample(
-        emb, id_col="vec_id", vec_col="embedding", sample_mod=2
-    ).persist()
-    try:
-        seeds = _seed_vectors(train, 4)
-        shared = pq_codebooks(
-            emb, m=4, k=4, iters=2, sample_mod=2,
-            _train=train, _seed_rows=seeds,
-        )
-    finally:
-        train.unpersist()
+    standalone = pq_codebooks(emb, m=4, k=2, iters=2, sample_mod=2)
+    path = str(tmp_path / "ix")
+    write_ivfpq_index(
+        emb, path, n_cells=4, m=4, n_codes=2, iters=2, sample_mod=2
+    )
+    shared = [[None] * 2 for _ in range(4)]
+    for r in spark.read.parquet(f"{path}/codebooks").collect():
+        shared[r["j"]][r["code"]] = list(r["cvec"])
     assert standalone == shared

@@ -2084,6 +2084,47 @@ def test_range_read_consumes_selectivity_estimate(spark, catalog):
     assert got2.count() == 40000
 
 
+def test_range_read_loads_skipping_metadata_once(spark, catalog):
+    """One read_table(stats_bounds=...) on a stats + sketch table reads
+    each live segment's skipping file once and the table meta once:
+    the selectivity gate and the leaf pruning share one load."""
+    from pandabase_spark.io import META_FILE, SKIP_FILE
+
+    df = spark.range(400).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+    )
+    catalog.to_table(
+        df.where("v < 200"), "once_t", keys=["k"], num_buckets=2,
+        stats_columns=["v"], sketch_columns=["v"],
+    )
+    catalog.to_table(df.where("v >= 200"), "once_t", keys=["k"], how="append")
+    assert len(catalog._manifest("once_t")["segments"]) == 2
+
+    class CountingFS:
+        def __init__(self, inner):
+            self._inner = inner
+            self.reads: list[str] = []
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def read_text(self, path, *args, **kwargs):
+            self.reads.append(path)
+            return self._inner.read_text(path, *args, **kwargs)
+
+    real = catalog.fs
+    catalog.fs = counting = CountingFS(real)
+    try:
+        got = catalog.read_table("once_t", stats_bounds={"v": (0.0, 20.0)})
+    finally:
+        catalog.fs = real
+    assert catalog._last_range_decision["v"]["probed"]
+    assert got.count() == 21
+    names = [p.rsplit("/", 1)[1] for p in counting.reads]
+    assert names.count(SKIP_FILE) == 2, counting.reads
+    assert names.count(META_FILE) == 1, counting.reads
+
+
 def test_vacuum_retention_window_protects_time_travel(spark, catalog):
     """vacuum(retain_last=N) truncates only history OLDER than the
     window: the last N versions below current stay readable and
