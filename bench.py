@@ -574,16 +574,16 @@ def main() -> None:
             emb.where(F.col("vec_id") % 97 == b), pq_path,
             txn=("bench", b), _artifacts=_pq_art,
         )
-    import glob as _glob
-    _leaves_pre = len(_glob.glob(f"{pq_path}/data/cell=*/txn=*"))
+    _cstats = {}
     timed("ivfpq_index_compact",
-          lambda: compact_index(spark, pq_path, keep_last=2), repeat=1)
-    # run stats via a second no-op call (first call did the work)
-    _cstats = compact_index(spark, pq_path, keep_last=2)
-    _leaves_now = len(_glob.glob(f"{pq_path}/data/cell=*/txn=*"))
+          lambda: _cstats.update(compact_index(spark, pq_path, keep_last=2)),
+          repeat=1)
+    # a second call has nothing left to fold
+    _noop = compact_index(spark, pq_path, keep_last=2)
     query_facts["ivfpq_index_compact"].update(
-        leaves_before=_leaves_pre, leaves_after=_leaves_now,
-        noop_folds=_cstats["folded_labels"],
+        leaves_before=_cstats["leaves_before"],
+        leaves_after=_cstats["leaves_after"],
+        noop_folds=_noop["folded_labels"],
     )
     # post-compaction serve still answers (count only; exactness is
     # pinned in tests/test_index_compaction.py)

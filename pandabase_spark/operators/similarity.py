@@ -26,11 +26,15 @@ extension surface for the driver's ``embeddings`` table.
 from __future__ import annotations
 
 import hashlib
+import json
+import math
 import struct
+import time
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
+from pandabase_spark import kt_log
 from pandabase_spark.functions.vector import cosine_similarity
 from pandabase_spark.localframe import local_frame
 
@@ -599,37 +603,111 @@ def ann_topk_ivf(
 # ---------------------------------------------------------------------------
 # Persisted IVF index: the cell-partitioned, partition-pruned serving shape
 # ---------------------------------------------------------------------------
+#
+# Layout under an index directory:
+#
+#     _pb_log/{v:010d}.json       version v: the live leaves, the
+#                                 per-app txn watermarks, the data
+#                                 schema and the artifacts name
+#     _pandabase_log.json         hint: a copy of a recent version
+#     artifacts-<label>/          quantizer, codebooks, residual flag
+#                                 and anchors, as one tagged parquet
+#     data/cell=<c>/txn=<label>/  a leaf: one write's rows in cell c
+#     _staging/<label>/           a write in flight, or a crashed one
+#
+# Every index write follows the keyed table's log rule (kt_log): land
+# the leaves, then claim {v+1}.json put-if-absent. A leaf that no
+# version lists is never read; compact_index deletes it once no reader
+# can still use it.
 
-# The sidecars' schemas, known by construction (the index writers
-# produce exactly these): _load_index reads with them and never runs
-# a footer-inference job.
-_SIDECAR_SCHEMAS = {
-    "centroids": "cell int, cvec array<double>",
-    "codebooks": "j int, code int, cvec array<double>",
-    "meta": "residual boolean",
-    "anchors": "cell int, avec array<double>",
-}
+# The artifacts file's schema, known by construction: one row per
+# centroid (cell, vec), codebook entry (j, code, vec) and anchor
+# (cell, vec), and one meta row (residual), tagged by ``_sidecar``.
+_ARTIFACTS_SCHEMA = (
+    "_sidecar string, cell int, j int, code int, residual boolean, "
+    "vec array<double>"
+)
+_ANCHORS_SCHEMA = "cell int, avec array<double>"
 
 
-def _centroids_literal_df(spark, centroids: "list[list[float]]") -> DataFrame:
-    """Driver-side centroid list as a JVM-literal DataFrame.
+def _label(kind: str) -> str:
+    """A fresh leaf label. Every write attempt lands under its own, so
+    a retry never meets the files of a crashed attempt."""
+    import uuid
 
-    ``spark.createDataFrame`` would also work, but a Python-built
-    LocalRelation pays a measured ~5s Python-runner round trip on
-    EVERY write job that consumes it (a count of the same frame is
-    0.15s; a JVM-built equivalent writes in 0.25s) — and this frame
-    exists precisely to be written as the index's centroid sidecar.
-    ``repr(float)`` literals round-trip IEEE doubles exactly, so the
-    persisted quantizer is bit-identical to the trained one.
+    return f"{kind}-{uuid.uuid4().hex[:16]}"
 
-    Non-finite centroid components are rejected loudly: Python repr
-    spells them ``inf``/``nan``, which Spark's non-ANSI string→double
-    cast parses to NULL — a corpus containing a non-finite embedding
-    would otherwise silently persist a quantizer with null array
-    elements (every later probe distance against that cell would be
-    null) instead of failing the index build."""
-    import math
 
+def _leaf(path: str, cell: int, label: str) -> str:
+    return f"{path}/data/cell={cell}/txn={label}"
+
+
+def _index_head(fs, path: str) -> dict:
+    """The newest committed version of the index at ``path``."""
+    man = kt_log.head(fs, path)
+    if not man["v"]:
+        raise FileNotFoundError(f"no persisted index at {path}")
+    return man
+
+
+def _commit(fs, path: str, man: dict, change) -> dict:
+    """Claim version ``man["v"] + 1`` holding ``change(man)``,
+    put-if-absent, and return the committed version. A lost claim
+    re-reads the head and applies ``change`` to it again. ``change``
+    returns None when nothing is left to commit (the head is returned)
+    and raises when the change no longer applies.
+
+    The hint follows the claim, best-effort. Version 1 writes none, so
+    a build's claim is its last step: a crashed build committed
+    nothing, and a plain re-run starts clean."""
+    while True:
+        doc = change(man)
+        if doc is None:
+            return man
+        doc = {**doc, "v": man["v"] + 1, "ts": round(time.time(), 3)}
+        text = json.dumps(doc, sort_keys=True, separators=(",", ":"))
+        if fs.write_text_if_absent(kt_log.version_path(path, doc["v"]), text):
+            if doc["v"] > 1:
+                try:
+                    fs.write_text_atomic(kt_log.hint_path(path), text)
+                except Exception:
+                    pass  # only a hint: readers chase to the head without it
+            return doc
+        man = kt_log.head(fs, path)
+
+
+def _land(fs, frame: DataFrame, path: str, label: str) -> "list[int]":
+    """Write ``frame`` (it has a ``cell`` column) ``partitionBy("cell")``
+    into a fresh staging directory, then rename each cell's output into
+    place as the leaf ``data/cell=<c>/txn=<label>``. Returns the cells
+    written; no reader sees them until a version lists them."""
+    stage = f"{path}/_staging/{label}"
+    frame.repartition("cell").write.partitionBy("cell").parquet(stage)
+    cells = sorted(
+        int(d[5:]) for d in fs.list_dirs(stage) if d.startswith("cell=")
+    )
+    # a rename needs its parent: create the cell directories that are new
+    have = set(fs.list_dirs(f"{path}/data"))
+    for c in cells:
+        if f"cell={c}" not in have:
+            fs.mkdirs(f"{path}/data/cell={c}")
+        fs.rename_dir(f"{stage}/cell={c}", _leaf(path, c, label))
+    fs.delete(stage)
+    return cells
+
+
+def _write_artifacts(
+    spark, path: str, label: str, centroids, codebooks=None,
+    residual: bool = False, anchors=None,
+) -> str:
+    """Write every frozen artifact of a new index as one parquet file
+    (one Spark job) from one tagged driver-local frame, and return its
+    name. ``anchors`` is a list of ``(cell, vector)`` pairs.
+
+    Non-finite centroid components are rejected: every probe distance
+    against such a cell would be NaN, so a corpus holding a non-finite
+    embedding fails the build instead of persisting a broken
+    quantizer."""
     for i, c in enumerate(centroids):
         for x in c:
             if not math.isfinite(x):
@@ -638,20 +716,87 @@ def _centroids_literal_df(spark, centroids: "list[list[float]]") -> DataFrame:
                     f"clean the corpus (drop or clamp non-finite "
                     f"embedding values) before building the index"
                 )
-    rows = ", ".join(
-        "struct(cast({} as int) as cell, array({}) as cvec)".format(
-            i,
-            ", ".join(
-                f"cast('{float(x)!r}' as double)" for x in c
-            ),
-        )
+    rows = [
+        ("centroids", i, None, None, None, [float(x) for x in c])
         for i, c in enumerate(centroids)
+    ]
+    rows += [
+        ("codebooks", None, j, code, None, [float(x) for x in vec])
+        for j, book in enumerate(codebooks or [])
+        for code, vec in enumerate(book)
+    ]
+    rows.append(("meta", None, None, None, bool(residual), None))
+    rows += [("anchors", c, None, None, None, a) for c, a in anchors or []]
+    name = f"artifacts-{label}"
+    local_frame(spark, rows, _ARTIFACTS_SCHEMA).coalesce(1).write.parquet(
+        f"{path}/{name}"
     )
-    return (
-        spark.range(1)
-        .select(F.explode(F.expr(f"array({rows})")).alias("_s"))
-        .select(F.col("_s.cell").alias("cell"), F.col("_s.cvec").alias("cvec"))
+    return name
+
+
+def _new_index(spark, path: str):
+    """The ``HadoopFS`` for a build at ``path``; raises if an index is
+    already committed there."""
+    from pandabase_spark.fs import HadoopFS
+
+    fs = HadoopFS(spark)
+    if kt_log.head(fs, path)["v"]:
+        raise FileExistsError(f"an index already exists at {path}")
+    return fs
+
+
+def _publish_build(fs, path: str, frame: DataFrame, **artifacts) -> None:
+    """Land a new index: its artifacts file, its leaves, then the claim
+    of version 1 (lost only to another build of the same path)."""
+    label = _label("base")
+    name = _write_artifacts(frame.sparkSession, path, label, **artifacts)
+    cells = _land(fs, frame, path, label)
+
+    def change(head):
+        if head["v"]:
+            raise FileExistsError(f"an index already exists at {path}")
+        return {
+            "artifacts": name,
+            "schema": ", ".join(
+                f"`{f.name.replace('`', '``')}` {f.dataType.simpleString()}"
+                for f in frame.drop("cell").schema
+            ),
+            "txns": {},
+            "leaves": (
+                {label: {"cells": cells, "app": None, "batch": None}}
+                if cells else {}
+            ),
+        }
+
+    _commit(fs, path, {"v": 0}, change)
+
+
+def _read_leaves(
+    spark, path: str, man: dict, *, labels=None, cells=None
+) -> "DataFrame | None":
+    """The rows of the leaves version ``man`` lists (only ``labels``,
+    only in ``cells``, when given) as one scan of their exact paths,
+    with the schema the version records: no listing of ``data/`` and
+    no footer inference. ``cell`` stays a partition column, and the
+    ``cell IN`` filter keeps pruning a planning-time fact. None when
+    no listed leaf matches."""
+    want = None if cells is None else set(cells)
+    paths = [
+        _leaf(path, c, lb)
+        for lb, leaf in sorted(man["leaves"].items())
+        if labels is None or lb in labels
+        for c in leaf["cells"]
+        if want is None or c in want
+    ]
+    if not paths:
+        return None
+    df = (
+        spark.read.schema(f"{man['schema']}, cell int, txn string")
+        .option("basePath", f"{path}/data")
+        .parquet(*paths)
+        .drop("txn")
     )
+    return df if cells is None else df.where(F.col("cell").isin(list(cells)))
 
 
 def write_ivf_index(
@@ -668,32 +813,26 @@ def write_ivf_index(
 ) -> None:
     """Build the IVF index ONCE at ingest and persist it
     cell-partitioned — the 100 TB serving shape the in-memory
-    :func:`ann_topk_ivf` docstrings promise: ``<path>/data`` holds the
-    cell-assigned corpus written ``partitionBy("cell")`` (one
-    directory per inverted list); ``<path>/centroids`` holds the
-    trained quantizer as (cell, cvec) rows. A probe then reads ONLY
-    its probed cells' directories via Spark partition pruning
-    (PartitionFilters on ``cell``, plan-asserted in
-    tests/test_plan_shapes.py) — unprobed cells are never even
-    listed, so query IO is ~nprobe/n_cells of the corpus at any
-    corpus size. Deterministic end to end (hash-seeded k-means):
-    rebuilding the index reproduces it bit-identically."""
+    :func:`ann_topk_ivf` docstrings promise: the cell-assigned corpus
+    lands as one ``data/cell=<c>/txn=<label>`` leaf per cell (one
+    directory per inverted list), the trained quantizer as the
+    ``(cell, vec)`` rows of the artifacts file, and version 1 of the
+    index log lists both. A probe then reads ONLY its probed cells'
+    leaves via Spark partition pruning (PartitionFilters on ``cell``,
+    plan-asserted in tests/test_plan_shapes.py), so query IO is
+    ~nprobe/n_cells of the corpus at any corpus size. Deterministic
+    end to end (hash-seeded k-means): rebuilding the index reproduces
+    it bit-identically. Raises ``FileExistsError`` if an index is
+    already committed at ``path``; a crashed build leaves nothing a
+    plain re-run trips over."""
+    fs = _new_index(corpus.sparkSession, path)
     centroids = ivf_centroids(
         corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
         iters=iters, tol=tol, sample_mod=sample_mod, info=info,
     )
-    cdf = _centroids_literal_df(corpus.sparkSession, centroids)
-    cdf.coalesce(1).write.mode("errorifexists").parquet(f"{path}/centroids")
-    (
-        ivf_assign(corpus, centroids, vec_col=vec_col)
-        # the txn sub-partition exists for append_ivf_index's
-        # replay-idempotent writes; the base build is one atomic
-        # errorifexists write and takes the constant label
-        .withColumn("txn", F.lit("base"))
-        .repartition("cell")
-        .write.mode("errorifexists")
-        .partitionBy("cell", "txn")
-        .parquet(f"{path}/data")
+    _publish_build(
+        fs, path, ivf_assign(corpus, centroids, vec_col=vec_col),
+        centroids=centroids,
     )
 
 
@@ -711,38 +850,26 @@ def append_ivf_index(
     100 TB maintenance story: at scale the corpus arrives continuously
     and a full retrain+rewrite per batch would be O(corpus) when the
     new data is O(batch). The persisted quantizer is loaded (one job,
-    :func:`_load_index`), the batch is cell-assigned against those FROZEN
-    centroids (one projection, no shuffle beyond the partition write),
-    and the rows land as additional parquet files inside their cells'
-    existing ``cell=<c>`` directories (``mode("append")`` +
-    ``partitionBy`` — untouched cells gain no files, probes keep
-    pruning to the probed directories). Serving code needs no changes:
-    :func:`ann_topk_indexed` reads the union transparently, and with
-    ``nprobe = n_cells`` the appended index must still hash-match
-    brute force over the FULL corpus (the driver-gated
-    ``ann_topk_ivf_appended_full`` contract — any assignment or write
-    bug surfaces as a missing/duplicated/mis-ranked row).
+    :func:`_load_index`), the batch is cell-assigned against those
+    FROZEN centroids (one projection, no shuffle beyond the partition
+    write), and the rows land as one new leaf per touched cell
+    (untouched cells gain nothing, probes keep pruning). Serving code
+    needs no changes: with ``nprobe = n_cells`` the appended index
+    must still hash-match brute force over the FULL corpus (the
+    driver-gated ``ann_topk_ivf_appended_full`` contract).
 
     Quantizer drift is the deliberate trade (same as FAISS ``add``):
     appended vectors get the nearest EXISTING cell, so recall degrades
     only as the data distribution drifts from the training sample —
-    re-train+rewrite (a fresh ``write_ivf_index``) is the periodic
-    compaction, not the per-batch cost. Id uniqueness across appends
-    is the caller's contract, same as the base writer's.
+    re-train+rewrite is the periodic remedy, not the per-batch cost.
+    Id uniqueness across appends is the caller's contract.
 
-    Replay idempotence (r11 verdict ask #6): pass ``txn=(app_id,
-    batch_id)`` — Delta's txnAppId/txnVersion shape, the same contract
-    the keyed-table streaming sinks ride — and the batch lands as a
-    DYNAMIC PARTITION OVERWRITE of its own ``txn=<app>:<batch>``
-    sub-partitions inside each cell directory: a re-delivered
-    micro-batch (lost checkpoint, foreachBatch retry after a
-    committed-but-unacknowledged epoch) REPLACES its previous attempt
-    instead of double-inserting, with no ledger file and therefore no
-    write-then-record crash window — idempotence is a property of the
-    directory layout, not of bookkeeping. Without ``txn`` the write is
-    a plain at-least-once append under a fresh unique label. Cell
-    pruning is untouched: ``cell`` stays the leading partition level
-    and probes never filter on ``txn``.
+    ``txn=(app_id, batch_id)`` is the keyed table's replay contract
+    (Delta's txnAppId/txnVersion): a batch id at or below the app's
+    committed watermark is a no-op, so a re-delivered micro-batch
+    never double-inserts; the claim that lists the batch's leaf also
+    raises the watermark, and an empty batch commits the watermark
+    alone. Without ``txn`` the append is at-least-once.
 
     ``_artifacts``: a :func:`_load_index` dict loaded once by the
     caller (the streaming sinks' hoist out of ``foreachBatch``)."""
@@ -755,53 +882,35 @@ def append_ivf_index(
 def _append_index_batch(
     spark, batch: DataFrame, path: str, txn: "tuple[str, int] | None"
 ) -> None:
-    """Shared cell-partitioned batch landing for the persisted-index
-    append paths (raw IVF and IVFPQ — one definition of the txn
-    idempotence semantics). ``txn=(app, batch_id)`` → dynamic
-    partition overwrite of the batch's own ``txn=`` sub-partitions
-    (replay replaces, never double-inserts); no txn → plain append
-    under a fresh adhoc label."""
-    import uuid
+    """Land one batch as a new leaf and claim a version that lists it,
+    shared by the raw IVF and IVFPQ appends. Appends commute: a lost
+    claim re-reads the head and claims again on top of it, unless the
+    new head already holds this ``txn`` batch (its leaf is then never
+    listed)."""
+    from pandabase_spark.fs import HadoopFS
 
-    if txn is not None:
-        app = str(txn[0])
-        if app == "base" or app.startswith(("compact-", "adhoc-")):
-            # these label shapes are structural: "base" is the initial
-            # build, "adhoc-*" the untagged appends, "compact-<gen>"
-            # the compaction folds — an app id aliasing them would let
-            # user batches be folded/filtered as index machinery
-            raise ValueError(
-                f"txn app id {app!r} collides with a reserved index "
-                "label prefix (base / adhoc- / compact-)"
-            )
-        # a batch at-or-below the committed compaction watermark was
-        # folded into a compact-<gen> leaf; replaying it must be a
-        # NO-OP (its own txn= sub-partitions no longer exist, so the
-        # dynamic overwrite would INSERT a duplicate copy). One tiny
-        # sidecar read, only on tagged appends.
-        state = _load_compaction_state(spark, path)
-        if state is not None and int(txn[1]) <= state[
-            "watermarks"
-        ].get(str(txn[0]), float("-inf")):
-            return
-    label = (
-        f"{txn[0]}:{txn[1]}" if txn is not None
-        else f"adhoc-{uuid.uuid4().hex[:16]}"
-    )
-    writer = (
-        batch.withColumn("txn", F.lit(label))
-        .repartition("cell")
-        .write.partitionBy("cell", "txn")
-    )
-    if txn is not None:
-        # per-write option (not the session conf): replaces ONLY the
-        # (cell, txn=label) leaves present in this batch
-        writer = writer.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        )
-    else:
-        writer = writer.mode("append")
-    writer.parquet(f"{path}/data")
+    fs = HadoopFS(spark)
+    app, bid = (str(txn[0]), int(txn[1])) if txn is not None else (None, None)
+
+    def done(head: dict) -> bool:
+        return app is not None and bid <= head["txns"].get(app, float("-inf"))
+
+    man = _index_head(fs, path)
+    if done(man):
+        return
+    label = _label("add")
+    cells = _land(fs, batch, path, label)
+
+    def change(head: dict):
+        if done(head) or (app is None and not cells):
+            return None
+        leaves = dict(head["leaves"])
+        if cells:
+            leaves[label] = {"cells": cells, "app": app, "batch": bid}
+        txns = head["txns"] if app is None else {**head["txns"], app: bid}
+        return {**head, "leaves": leaves, "txns": txns}
+
+    _commit(fs, path, man, change)
 
 
 def write_ivfpq_index(
@@ -822,18 +931,18 @@ def write_ivfpq_index(
     anchors: "list[list[float]] | None" = None,
 ) -> None:
     """Persist the FULL FAISS-style IVFADC index — the billion-scale
-    serving artifact :func:`ann_topk_ivfpq`'s docstring promises:
-    ``<path>/centroids`` holds the coarse quantizer,
-    ``<path>/codebooks`` the PQ codebooks ((j, code, cvec) rows — an
-    m×k sidecar, tiny by construction), and ``<path>/data`` the
-    corpus as (id, pq_code) rows cell-partitioned under the same
-    ``cell=<c>/txn=<label>`` layout as :func:`write_ivf_index` — NO
-    raw vectors on the serving path: each row is m small ints
-    (~16-32× less index IO than the raw-vector index), and a probe
-    reads ~nprobe/n_cells of THAT. Both artifacts are deterministic
-    and prebuildable via ``centroids=`` / ``codebooks=`` (the
-    ingest-time pattern, and how the lossless-PQ exactness gate
-    injects enumerated codebooks).
+    serving artifact :func:`ann_topk_ivfpq`'s docstring promises: one
+    artifacts file holds the coarse quantizer and the PQ codebooks
+    ((j, code, vec) rows — an m×k table, tiny by construction), and
+    the corpus lands as (id, pq_code) rows under the same
+    ``data/cell=<c>/txn=<label>`` layout and log as
+    :func:`write_ivf_index` — NO raw vectors on the serving path: each
+    row is m small ints (~16-32× less index IO than the raw-vector
+    index), and a probe reads ~nprobe/n_cells of THAT. Both artifacts
+    are deterministic and prebuildable via ``centroids=`` /
+    ``codebooks=`` (the ingest-time pattern, and how the lossless-PQ
+    exactness gate injects enumerated codebooks). The build is one
+    job for the artifacts file and the data write, plus training.
 
     Training both artifacts here is one collect of the
     ``TRAIN_POINTS_PER_CENTROID × max(n_cells, n_codes)`` hash-ordered
@@ -848,17 +957,17 @@ def write_ivfpq_index(
     between-cell variance, so the codebooks spend their codes on the
     much tighter within-cell distribution — the composition that
     makes m·log₂(k) bits per vector work at billion scale. The anchor
-    defaults to the PER-CELL MEAN (the spherical quantizer's
-    unit-norm directions are right for assignment but useless as
-    shifts — measured r12); ``anchors=`` overrides it with an
-    explicit per-cell list (how the exactness gate keeps residual
+    defaults to the PER-CELL MEAN (one collect; the spherical
+    quantizer's unit-norm directions are right for assignment but
+    useless as shifts — measured r12); ``anchors=`` overrides it with
+    an explicit per-cell list (how the exactness gate keeps residual
     arithmetic integer-exact). Codebooks (when trained here) train on
-    the residual frame; the flag persists in a ``meta`` sidecar and
-    the anchors in an ``anchors`` sidecar, so serve/append
-    transparently apply the same shift (``q − a[cell]`` per probed
-    cell at query time — ADC distances are L2-identical under any
-    common per-cell shift)."""
+    the residual frame; the flag and the anchors persist in the
+    artifacts file, so serve/append transparently apply the same shift
+    (``q − a[cell]`` per probed cell at query time — ADC distances are
+    L2-identical under any common per-cell shift)."""
     spark = corpus.sparkSession
+    fs = _new_index(spark, path)
     if (
         centroids is None and codebooks is None
         and not exact_codebooks and not residual
@@ -876,19 +985,22 @@ def write_ivfpq_index(
             corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
             iters=iters, sample_mod=sample_mod,
         )
-    cdf = _centroids_literal_df(spark, centroids)
     staged = ivf_assign(corpus, centroids, vec_col=vec_col)
-    anchors_df = None
+    anchor_rows = None
     if residual:
-        if anchors is not None:
-            anchors_df = local_frame(
-                spark,
-                [(i, [float(x) for x in a]) for i, a in enumerate(anchors)],
-                _SIDECAR_SCHEMAS["anchors"],
+        # driver-held, so the encode below and the persisted artifact
+        # shift by the very same doubles
+        anchor_rows = (
+            [(i, [float(x) for x in a]) for i, a in enumerate(anchors)]
+            if anchors is not None
+            else sorted(
+                (r["cell"], list(r["avec"]))
+                for r in _cell_mean_anchors(staged, vec_col).collect()
             )
-        else:
-            anchors_df = _cell_mean_anchors(staged, vec_col).persist()
-        staged = _subtract_cell_anchor(staged, anchors_df, vec_col)
+        )
+        staged = _subtract_cell_anchor(
+            staged, local_frame(spark, anchor_rows, _ANCHORS_SCHEMA), vec_col
+        )
     if codebooks is None:
         if exact_codebooks:
             # enumerate the distinct (residual) subvectors that
@@ -905,67 +1017,13 @@ def write_ivfpq_index(
                 staged, id_col=id_col, vec_col=vec_col, m=m, k=n_codes,
                 iters=iters, sample_mod=sample_mod,
             )
-    book_rows = [
-        (j, c, [float(x) for x in vec])
-        for j, book in enumerate(codebooks)
-        for c, vec in enumerate(book)
-    ]
-    sidecars = [
-        ("centroids", cdf),
-        (
-            "codebooks",
-            local_frame(spark, book_rows, _SIDECAR_SCHEMAS["codebooks"]),
-        ),
-        (
-            "meta",
-            local_frame(
-                spark, [(bool(residual),)], _SIDECAR_SCHEMAS["meta"]
-            ),
-        ),
-    ]
-    if anchors_df is not None:
-        sidecars.append(("anchors", anchors_df))
     encoded = pq_encode(
         staged, codebooks, vec_col=vec_col
     ).select(F.col(id_col), "cell", "pq_code")
-
-    def _write_sidecar(pair) -> None:
-        name, frame = pair
-        frame.coalesce(1).write.mode("errorifexists").parquet(
-            f"{path}/{name}"
-        )
-
-    # the four sidecar writes and the encoded-data write are
-    # independent one-shot jobs over disjoint directories — overlap
-    # them (guide-style concurrent independent jobs) instead of
-    # paying four sequential tiny-job latencies before the big write
-    # even starts. inheritable_thread_target keeps job group/
-    # description properties correct in the worker threads.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(_write_sidecar), s)
-            for s in sidecars
-        ]
-        (
-            encoded.withColumn("txn", F.lit("base"))
-            .repartition("cell")
-            .write.mode("errorifexists")
-            .partitionBy("cell", "txn")
-            .parquet(f"{path}/data")
-        )
-        for f_ in futures:
-            f_.result()
-    if anchors_df is not None:
-        # unpersist only AFTER the encoded write: its lineage shifts
-        # by these anchors, and recomputing the mean aggregation is
-        # both a full extra corpus pass and (float avg being
-        # partition-order dependent) an ulp-drift risk vs the
-        # persisted sidecar the query side reads (r12 review)
-        anchors_df.unpersist()
+    _publish_build(
+        fs, path, encoded, centroids=centroids, codebooks=codebooks,
+        residual=residual, anchors=anchor_rows,
+    )
 
 
 def _subtract_cell_anchor(
@@ -1021,80 +1079,64 @@ def _cell_mean_anchors(assigned: DataFrame, vec_col: str) -> DataFrame:
 
 def _load_index(spark, path: str) -> dict:
     """Every FROZEN artifact of a persisted index in ONE Spark job:
-    the sidecars that exist, scanned with their known schemas, tagged,
-    unioned by name and collected once. The dict holds
+    the head version names the artifacts file, which is scanned with
+    its known schema and collected once. The dict holds
 
+    - ``head``: the version read. Serving reads the leaves it lists;
+      appends re-read the head, which moves on with every write.
     - ``centroids``: the :func:`ivf_centroids` list, sorted by cell.
       The literal scorers name a cell by its list position, so the
       cells must be exactly 0..n-1; anything else raises instead of
-      renumbering cells against the ``cell=<c>`` directories on disk.
-    - ``codebooks``: the PQ books, or None for a raw IVF index. A
-      codebook sidecar that exists but is empty raises.
-    - ``residual``: only a MISSING meta sidecar means raw (indexes
-      from before it are raw by construction). One that cannot be read
-      fails the load: encoding a batch of a residual index without the
-      anchor shift would corrupt it permanently.
+      renumbering cells.
+    - ``codebooks``: the PQ books, or None for a raw IVF index.
+    - ``residual``: the flag of the file's one meta row; a file
+      without exactly one meta row raises.
     - ``anchors``: the residual anchors as a driver-local
       ``(cell, avec)`` frame, or None for a raw index.
 
     The serve and append paths take this dict; a streaming sink loads
     it once outside ``foreachBatch`` and passes it as ``_artifacts``
-    (the artifacts never change after training)."""
-    import functools
-
+    (the artifacts never change after the build)."""
     from pandabase_spark.fs import HadoopFS
 
-    fs = HadoopFS(spark)
-    names = ["centroids"] + [
-        n for n in ("codebooks", "meta", "anchors")
-        if fs.exists(f"{path}/{n}")
-    ]
-    scan = functools.reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-        [
-            spark.read.schema(_SIDECAR_SCHEMAS[n])
-            .parquet(f"{path}/{n}")
-            .withColumn("_sidecar", F.lit(n))
-            for n in names
-        ],
-    )
-    rows: "dict[str, list]" = {n: [] for n in names}
-    for r in scan.collect():
+    man = _index_head(HadoopFS(spark), path)
+    src = f"{path}/{man['artifacts']}"
+    rows: "dict[str, list]" = {
+        n: [] for n in ("centroids", "codebooks", "meta", "anchors")
+    }
+    for r in spark.read.schema(_ARTIFACTS_SCHEMA).parquet(src).collect():
         rows[r["_sidecar"]].append(r)
 
     cent = sorted(rows["centroids"], key=lambda r: r["cell"])
     cells = [r["cell"] for r in cent]
     if not cent or cells != list(range(len(cent))):
         raise ValueError(
-            f"centroid sidecar at {path}/centroids must hold cells "
-            f"0..n-1 exactly once; {len(cent)} rows, first cells "
-            f"{cells[:8]}"
+            f"the quantizer in {src} must hold cells 0..n-1 exactly "
+            f"once; {len(cent)} rows, first cells {cells[:8]}"
+        )
+    if len(rows["meta"]) != 1:
+        raise ValueError(
+            f"{src} must hold one meta row; it holds {len(rows['meta'])}"
         )
     books = None
-    if "codebooks" in rows:
+    if rows["codebooks"]:
         code_rows = sorted(
             rows["codebooks"], key=lambda r: (r["j"], r["code"])
         )
-        if not code_rows:
-            raise ValueError(f"empty codebook sidecar at {path}/codebooks")
         books = [[] for _ in range(1 + code_rows[-1]["j"])]
         for r in code_rows:
-            books[r["j"]].append([float(x) for x in r["cvec"]])
-    meta = rows.get("meta")
-    residual = bool(meta[0]["residual"]) if meta else False
+            books[r["j"]].append([float(x) for x in r["vec"]])
+    residual = bool(rows["meta"][0]["residual"])
     anchors = None
     if residual:
-        if "anchors" not in rows:
-            raise ValueError(
-                f"residual index at {path} has no anchors sidecar"
-            )
         anchors = local_frame(
             spark,
-            sorted((r["cell"], r["avec"]) for r in rows["anchors"]),
-            _SIDECAR_SCHEMAS["anchors"],
+            sorted((r["cell"], r["vec"]) for r in rows["anchors"]),
+            _ANCHORS_SCHEMA,
         )
     return {
-        "centroids": [[float(x) for x in r["cvec"]] for r in cent],
+        "head": man,
+        "centroids": [[float(x) for x in r["vec"]] for r in cent],
         "codebooks": books,
         "residual": residual,
         "anchors": anchors,
@@ -1105,7 +1147,7 @@ def _index_codebooks(index: dict, path: str) -> "list[list[list[float]]]":
     """The loaded codebooks of an IVFPQ index; a raw IVF index has
     none, and PQ serving or encoding against it is a caller error."""
     if index["codebooks"] is None:
-        raise ValueError(f"no codebook sidecar: {path} is not an IVFPQ index")
+        raise ValueError(f"no codebooks: {path} is not an IVFPQ index")
     return index["codebooks"]
 
 
@@ -1122,14 +1164,14 @@ def append_ivfpq_index(
     add-after-train for the composed artifact): the batch is
     cell-assigned against the persisted quantizer AND encoded against
     the persisted codebooks — O(batch), no retrain, no rewrite — and
-    lands through the same :func:`_append_index_batch` txn semantics
-    as the raw index: ``txn=(app, batch_id)`` appends are
-    replay-idempotent (dynamic partition overwrite of the batch's own
-    ``txn=`` sub-partitions), untagged appends are at-least-once.
+    lands through the same :func:`_append_index_batch` commit as the
+    raw index: a ``txn=(app, batch_id)`` batch at or below the app's
+    committed watermark is a no-op, untagged appends are
+    at-least-once.
 
     ``_artifacts``: a :func:`_load_index` dict loaded once by the
     caller — a streaming sink hoists it out of ``foreachBatch``, so a
-    micro-batch pays no sidecar load at all."""
+    micro-batch pays no artifacts load at all."""
     spark = new_vectors.sparkSession
     index = _artifacts if _artifacts is not None else _load_index(spark, path)
     books = _index_codebooks(index, path)
@@ -1154,15 +1196,16 @@ def ann_topk_ivfpq_indexed(
     nprobe: int = 4,
 ) -> DataFrame:
     """Serve IVFADC top-k from a :func:`write_ivfpq_index` index: load
-    every sidecar in one job (:func:`_load_index`), expand each query's
-    ``nprobe`` nearest cells in one collect through the SHARED
+    the artifacts in one job (:func:`_load_index`), expand each
+    query's ``nprobe`` nearest cells in one collect through the SHARED
     :func:`_expand_probes` (same quantizer scoring as the raw-vector
-    serve path, planning-time ``cell IN`` pruning), and score ONLY the probed cells' (id, pq_code) rows with
-    the production :func:`_adc_expr` — per candidate m code lookups
-    over ~16-32×-compressed state, never a raw vector. This is the
-    100 TB query shape: index IO ≈ (nprobe/n_cells) × (compressed
-    corpus). With lossless codebooks and ``nprobe == n_cells`` the
-    result provably equals brute-force L2 top-k (the
+    serve path), and score ONLY the head version's leaves in the
+    probed cells (planning-time ``cell IN`` pruning) with the
+    production :func:`_adc_expr` — per candidate m code lookups over
+    ~16-32×-compressed state, never a raw vector. This is the 100 TB
+    query shape: index IO ≈ (nprobe/n_cells) × (compressed corpus).
+    With lossless codebooks and ``nprobe == n_cells`` the result
+    provably equals brute-force L2 top-k (the
     ``ann_topk_ivfpq_indexed_full`` driver gate); the lossy
     configurations share every line and carry the pytest
     persisted==in-memory pin plus the family recall floors. Returns
@@ -1176,13 +1219,9 @@ def ann_topk_ivfpq_indexed(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
     probes, cells = _expand_probes(index["centroids"], q, nprobe)
-    existing = _existing_cells(spark, f"{path}/data")
-    cells = [c for c in cells if c in existing]
-    if not cells:
-        return _empty_topk(
-            spark, q, existing, path, id_col, "approx_dist"
-        )
-    data = _pruned_cells_read(spark, path, cells)
+    data = _read_leaves(spark, path, index["head"], cells=cells)
+    if data is None:
+        return _empty_topk(spark, q, index["head"], id_col, "approx_dist")
     scored = data.join(F.broadcast(probes), on="cell")
     if index["residual"]:
         # residual encoding (the true IVFADC): the stored codes
@@ -1204,24 +1243,6 @@ def ann_topk_ivfpq_indexed(
     )
 
 
-def _existing_cells(spark, data_path: str) -> "set[int]":
-    """Cell ids that actually have a ``cell=<c>`` partition directory
-    under ``data_path`` — one non-recursive listing (names only; works
-    on any FileSystem the session can read). The quantizer may
-    legitimately contain cells no vector was assigned to; probing
-    those must be a no-op, not a PATH_NOT_FOUND crash."""
-    from pandabase_spark.fs import HadoopFS
-
-    out: "set[int]" = set()
-    for name in HadoopFS(spark).list_dirs(data_path):
-        if name.startswith("cell="):
-            try:
-                out.add(int(name[5:]))
-            except ValueError:
-                continue
-    return out
-
-
 def _expand_probes(
     centroids: "list[list[float]]", q: DataFrame, nprobe: int
 ):
@@ -1241,125 +1262,28 @@ def _expand_probes(
     return probes, sorted({r["cell"] for r in rows})
 
 
-def _empty_topk(spark, q, existing, path, id_col, score_col):
-    """The zero-probed-cells contract result, shared by both persisted
-    serve paths (r12 review dedup): no probed cell holds data (empty
-    query set, every probed cell empty, or an index built from an
-    EMPTY corpus — whose data dir has no cell partitions and would
-    make a full read raise 'unable to infer schema'). Construct the
-    empty frame directly: zero listing, zero scan, zero jobs. The id
-    column's type comes from one footer of one existing cell when any
-    exists, else the documented long contract."""
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+def _empty_topk(spark, q, man, id_col, score_col):
+    """The zero-probed-leaves result, shared by both persisted serve
+    paths: no listed leaf lies in a probed cell (an empty query set,
+    only empty cells probed, or an index built from an EMPTY corpus).
+    The frame is built directly, typed from the version's data schema:
+    zero listing, zero scan, zero jobs."""
+    from pyspark.sql import types as T
 
-    if existing:
-        one = sorted(existing)[0]
-        peek = spark.read.option(
-            "basePath", f"{path}/data"
-        ).parquet(f"{path}/data/cell={one}")
-        id_type = peek.schema[id_col].dataType
-    else:
-        id_type = LongType()
-    qid_type = q.schema["query_id"].dataType
     return local_frame(
         spark,
         [],
-        StructType(
+        T.StructType(
             [
-                StructField("query_id", qid_type),
-                StructField(id_col, id_type),
-                StructField(score_col, DoubleType()),
-                StructField("rank", IntegerType()),
+                T.StructField("query_id", q.schema["query_id"].dataType),
+                T.StructField(
+                    id_col,
+                    T.StructType.fromDDL(man["schema"])[id_col].dataType,
+                ),
+                T.StructField(score_col, T.DoubleType()),
+                T.StructField("rank", T.IntegerType()),
             ]
         ),
-    )
-
-
-def _pruned_cells_read(spark, path, cells):
-    """Open ONLY the probed cells' directories (basePath keeps
-    ``cell`` a partition column); the residual isin filter keeps
-    semantics explicit and the PartitionFilters plan fact asserted in
-    test_plan_shapes.py. When the index has a compaction state
-    sidecar (:func:`compact_index`), the read additionally ignores
-    (a) ``compact-<g>`` leaves from generations ABOVE the committed
-    one — a crashed compaction's partial rewrite must never be
-    served — and (b) superseded leaves still pending physical delete
-    (the tiny ``exclude`` window between a compaction's commit and
-    its cleanup). Both predicates hit only partition columns of the
-    already-pruned probe set; the common steady state (no sidecar, or
-    empty exclude) adds one cheap gen comparison."""
-    # state FIRST, listing second (r13 review finding): a compaction
-    # committing between the two steps must leave this reader on a
-    # consistent snapshot. With state-first the stale reader keeps the
-    # OLD generation filter and serves the OLD leaves — which is why
-    # online compaction defers physical deletes behind retention_s
-    # (see compact_index); the immediate-delete default is the
-    # documented stop-the-world mode.
-    state = _load_compaction_state(spark, path)
-    df = (
-        spark.read.option("basePath", f"{path}/data")
-        .parquet(*[f"{path}/data/cell={c}" for c in cells])
-        .where(F.col("cell").isin(cells))
-    )
-    if state is not None:
-        gen_ok = F.when(
-            F.col("txn").startswith("compact-"),
-            F.split(F.col("txn"), "-").getItem(1).cast("long")
-            <= F.lit(int(state["gen"])),
-        ).otherwise(F.lit(True))
-        df = df.where(gen_ok)
-        if state["exclude"]:
-            df = df.where(~F.col("txn").isin(list(state["exclude"])))
-    return df
-
-
-_COMPACTION_STATE = "compaction/state.json"
-
-
-def _unescape_partition(name: str) -> str:
-    """Compaction's label inventory/deletes work on listed directory
-    NAMES while its read filters work on DECODED values — shared
-    decoder in :mod:`pandabase_spark.fs`."""
-    from pandabase_spark.fs import unescape_partition
-
-    return unescape_partition(name)
-
-
-def _load_compaction_state(spark, path: str) -> "dict | None":
-    """Committed compaction state for a persisted index at ``path``
-    (None when the index has never been compacted): ``{"gen": int,
-    "watermarks": {app: max_compacted_batch}, "exclude": [labels
-    pending physical delete]}``. One tiny sidecar read — same cost
-    class as the quantizer sidecar the serve paths already load."""
-    import json
-
-    from pandabase_spark.fs import HadoopFS
-
-    fs = HadoopFS(spark)
-    sp = f"{path}/{_COMPACTION_STATE}"
-    if not fs.exists(sp):
-        return None
-    state = json.loads(fs.read_text(sp))
-    state.setdefault("gen", 0)
-    state.setdefault("watermarks", {})
-    state.setdefault("exclude", [])
-    state.setdefault("exclude_until", {})
-    return state
-
-
-def _commit_compaction_state(spark, path: str, state: dict) -> None:
-    import json
-
-    from pandabase_spark.fs import HadoopFS
-
-    HadoopFS(spark).write_text_atomic(
-        f"{path}/{_COMPACTION_STATE}", json.dumps(state, sort_keys=True)
     )
 
 
@@ -1368,252 +1292,124 @@ def compact_index(
     path: str,
     *,
     keep_last: int = 2,
-    watermarks: "dict[str, int] | None" = None,
     retention_s: float = 0.0,
 ) -> dict:
-    """Coalesce a persisted index's accumulated ``txn=`` leaves — the
-    long-horizon maintenance the streaming ingest story needs (r12
-    verdict ask #2): :func:`_append_index_batch` lands one
-    ``cell=<c>/txn=<label>`` sub-partition per cell per micro-batch,
-    so a month of 1-minute triggers leaves ~43k sub-directories per
-    cell, degrading listing and scan planning on the serve path. The
-    documented mitigation used to be a full retrain+rewrite —
-    O(corpus) for an O(accumulated leaves) problem. This is the
-    O(live leaves) fix: fold every leaf BELOW a replay watermark into
-    ONE ``txn=compact-<gen>`` leaf per cell, leaving the layout (and
-    therefore cell pruning, serve code, and append code) untouched.
+    """Coalesce a persisted index's accumulated leaves — the
+    long-horizon maintenance the streaming ingest story needs: every
+    append lands one ``cell=<c>/txn=<label>`` leaf per touched cell,
+    so a month of 1-minute triggers leaves ~43k leaves per cell,
+    degrading scan planning on the serve path. This is the O(live
+    leaves) fix, where a retrain+rewrite would be O(corpus): fold the
+    head version's leaves into ONE new leaf per cell, leaving the
+    layout (and therefore cell pruning, serve code, and append code)
+    untouched. Works on both index kinds — raw IVF and IVFPQ share the
+    layout, and compaction never looks at the row payload.
 
-    Works on both persisted index kinds — raw IVF
-    (:func:`write_ivf_index`) and IVFPQ (:func:`write_ivfpq_index`)
-    share the ``<path>/data`` layout, and compaction never looks at
-    the row payload.
+    What gets folded: every listed leaf except each ``txn`` app's
+    newest ``keep_last`` batches — the build's leaf, untagged appends
+    and earlier folds included. Fewer than two such leaves is a no-op.
+    The fold is one scan of the exact leaf paths and one write, landed
+    under a fresh label, then committed by claiming a version that
+    lists it in place of the folded leaves. A lost claim re-reads the
+    head and claims again only if every folded leaf is still live
+    (appends commute with a fold); otherwise it raises
+    ``ConcurrentWriteError``. The ``txn`` watermarks are untouched, so
+    a replayed batch at or below its app's watermark stays a no-op
+    whether or not its leaf was folded.
 
-    What gets folded: all untagged ``adhoc-*`` leaves (at-least-once
-    by contract, never replayed), every ``app:batch`` leaf with
-    ``batch <= watermark[app]`` (derived: all but the newest
-    ``keep_last`` batch ids per app, monotonic across runs; an
-    explicit ``watermarks=`` entry raises it further), the original
-    ``base`` leaf, and prior ``compact-<g>`` generations. Batches
-    ABOVE the watermark keep their own leaves, so their
-    dynamic-partition-overwrite replay idempotence is untouched. A
-    replayed batch at-or-below the watermark is a NO-OP (pinned in
-    pytest): its rows already live in a compact leaf, and
-    :func:`_append_index_batch` consults the committed watermark
-    before writing.
+    Every run then deletes what no reader can still use: leaves,
+    staging directories and artifacts files that the head does not
+    list, that no version listed within the last ``retention_s``
+    seconds (a reader holding that version may still scan them) and
+    that were written more than ``retention_s`` ago (a concurrent
+    append may be about to claim them). The default (0) deletes at
+    once — correct when no query or write runs concurrently (the
+    paused-stream maintenance window). For online use, size
+    ``retention_s`` above the longest query, like Delta's retention
+    window. A run after a crash at any point converges: a crashed
+    fold's leaves were never listed, and the re-run folds again.
 
-    Crash safety (resumable, never served wrong): uncommitted
-    ``compact-<g>`` leaves from a crashed fold (g above the committed
-    generation) are deleted up front — a later run with a DIFFERENT
-    watermark must never let a stale partial fold ride its commit
-    (r13 review finding) — then the fold is staged to a sibling dir
-    and renamed per cell as the new generation (the serve filter
-    ignores generations above the committed one), then the state
-    sidecar commits ``gen+1`` with the folded labels as ``exclude``
-    (serve ignores them from that instant), then the folded leaves
-    are physically deleted, then ``exclude`` clears. Re-running
-    :func:`compact_index` after a crash at ANY point converges: step
-    one finishes pending deletes before starting a new fold.
-
-    ``retention_s`` governs ONLINE use. The default (0) deletes
-    superseded leaves immediately — correct when no query runs
-    concurrently (the paused-stream maintenance window; vacuum's
-    ``orphan_age_s=0`` analogue). With ``retention_s > 0`` the
-    physical deletes are DEFERRED: superseded leaves stay on disk
-    (new readers exclude them via the committed state; a reader that
-    loaded the pre-commit state keeps serving the old leaves — its
-    consistent snapshot) until a later :func:`compact_index` run
-    finds them older than the retention window. Size it above the
-    longest query, exactly like Delta's tombstone retention.
-
-    Returns a stats dict: ``{"gen", "folded_labels", "leaves_before",
-    "leaves_after"}`` (``folded_labels == 0`` → nothing to fold; no
-    write happened, though pending retention deletes may still have
-    run)."""
+    Returns ``{"gen", "folded_labels", "leaves_before",
+    "leaves_after"}``: the head version after the run, the number of
+    leaves folded (0: nothing was written), and the (cell, leaf) pairs
+    the head listed before and after."""
     from pandabase_spark.fs import HadoopFS
+    from pandabase_spark.io import ConcurrentWriteError
 
     fs = HadoopFS(spark)
-    data = f"{path}/data"
-    import time as _time
-
-    state = _load_compaction_state(spark, path)
-    if state is None:
-        # establish the sidecar BEFORE any fold is staged (r13 second
-        # review pass): without it, a crash during the FIRST-ever
-        # compaction leaves uncommitted compact-1 leaves that the
-        # serve path — which applies no generation filter when no
-        # state exists — would read as live duplicates
-        state = {"gen": 0, "watermarks": {}, "exclude": []}
-        _commit_compaction_state(spark, path, state)
-    state.setdefault("exclude_until", {})
-    cell_dirs = [
-        d for d in fs.list_dirs(data) if d.startswith("cell=")
-    ]
-
-    def _sweep_excluded() -> None:
-        """Physically delete superseded (excluded) leaves whose
-        retention DEADLINE has passed, then shrink the committed
-        exclude set to the labels that still have leaves. Each
-        label's deadline was fixed at EXCLUSION time (now +
-        retention_s of the run that excluded it) — a later run with a
-        shorter window cannot break the promise an earlier run made
-        to its in-flight readers (r13 second review pass; Delta
-        persists retention for the same reason). Runs at entry
-        (resume of a crashed/deferred prior run) and after this run's
-        own commit; a sweep that deletes nothing recommits nothing."""
-        nonlocal state
-        if not state["exclude"]:
-            return
-        now = _time.time()
-        pending = set(state["exclude"])
-        aged = {
-            lb for lb in pending
-            # legacy/crash-window state without a deadline: due now
-            if float(state["exclude_until"].get(lb, 0)) <= now
-        }
-        if not aged:
-            return
-        remaining: "set[str]" = set()
-        for cd in cell_dirs:
-            for td in fs.list_dirs(f"{data}/{cd}"):
-                if not td.startswith("txn="):
-                    continue
-                lb = _unescape_partition(td[4:])
-                if lb in aged:
-                    fs.delete(f"{data}/{cd}/{td}")
-                elif lb in pending:
-                    remaining.add(lb)
-        state = {
-            **state,
-            "exclude": sorted(remaining),
-            "exclude_until": {
-                lb: ts for lb, ts in state["exclude_until"].items()
-                if lb in remaining
-            },
-        }
-        _commit_compaction_state(spark, path, state)
-
-    _sweep_excluded()
-
-    # inventory the live leaves (names only, one listing per cell dir
-    # — the same O(dirs) scan any maintenance of this tree implies).
-    # Leaves still pending retention delete are DEAD copies (their
-    # rows live in a committed compact leaf) — never re-foldable.
-    # Uncommitted compact-<g> leaves (g above the committed gen, a
-    # crashed fold) are deleted on sight: a re-run under a DIFFERENT
-    # watermark might not rewrite that cell, and committing would
-    # then serve the stale partial fold as live (duplicates).
-    dead = set(state["exclude"])
-    labels: "set[str]" = set()
-    leaves_before = 0
-    for cd in cell_dirs:
-        for td in fs.list_dirs(f"{data}/{cd}"):
-            if not td.startswith("txn="):
-                continue
-            lb = _unescape_partition(td[4:])
-            if (
-                lb.startswith("compact-")
-                and lb[8:].isdigit()
-                and int(lb[8:]) > state["gen"]
-            ):
-                fs.delete(f"{data}/{cd}/{td}")
-                continue
-            leaves_before += 1
-            if lb not in dead:
-                labels.add(lb)
-
-    by_app: "dict[str, list[int]]" = {}
-    adhoc: "set[str]" = set()
-    folds: "set[str]" = set()  # base + old compact gens, folded too
-    for lb in labels:
-        if lb == "base" or (
-            lb.startswith("compact-")
-            and lb[8:].isdigit()
-            and int(lb[8:]) <= state["gen"]
-        ):
-            folds.add(lb)
-        elif lb.startswith("adhoc-"):
-            adhoc.add(lb)
-        elif ":" in lb:
-            app, _, b = lb.rpartition(":")
-            if b.lstrip("-").isdigit():
-                by_app.setdefault(app, []).append(int(b))
-
-    new_marks = dict(state["watermarks"])
-    folded_batches: "set[str]" = set()
-    for app, ids in by_app.items():
-        ids.sort()
-        derived = ids[-keep_last - 1] if len(ids) > keep_last else None
-        cands = [
-            x for x in (
-                derived,
-                (watermarks or {}).get(app),
-                state["watermarks"].get(app),
-            ) if x is not None
-        ]
-        if not cands:
-            continue
-        mark = max(cands)
-        new_marks[app] = max(new_marks.get(app, mark), mark)
-        folded_batches |= {
-            f"{app}:{b}" for b in ids if b <= new_marks[app]
-        }
-
-    movable = adhoc | folded_batches
-    if not movable:
-        return {
-            "gen": state["gen"], "folded_labels": 0,
-            "leaves_before": leaves_before,
-            "leaves_after": leaves_before,
-        }
-    fold_set = sorted(movable | folds)
-    newgen = state["gen"] + 1
-    # fold through a sibling staging dir, then rename each cell's
-    # output into place as its txn=compact-<gen> leaf: Spark refuses
-    # to overwrite a path it is also reading from, and staging keeps
-    # the fold O(folded rows) with no executor-memory checkpoint. A
-    # crash mid-rename leaves some cells holding an UNCOMMITTED
-    # compact-<newgen> leaf — the serve filter ignores generations
-    # above the committed one, and the re-run below deletes and
-    # re-renames them.
-    tmp = f"{path}/_compact_tmp"
-    fs.delete(tmp)
-    (
-        spark.read.option("basePath", data).parquet(data)
-        .where(F.col("txn").isin(fold_set))
-        .drop("txn")
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    for cd in (d for d in fs.list_dirs(tmp) if d.startswith("cell=")):
-        dest = f"{data}/{cd}/txn=compact-{newgen}"
-        fs.delete(dest)
-        fs.rename_dir(f"{tmp}/{cd}", dest)
-    fs.delete(tmp)
-    deadline = _time.time() + retention_s
-    state = {
-        "gen": newgen,
-        "watermarks": new_marks,
-        # carry forward any labels still inside their retention window
-        "exclude": sorted(set(state["exclude"]) | set(fold_set)),
-        "exclude_until": {
-            **state["exclude_until"],
-            **{lb: deadline for lb in fold_set},
-        },
+    man = _index_head(fs, path)
+    newest: "dict[str, list]" = {}
+    for lb, leaf in man["leaves"].items():
+        if leaf["app"] is not None:
+            newest.setdefault(leaf["app"], []).append((leaf["batch"], lb))
+    keep = {
+        lb
+        for xs in newest.values()
+        for _, lb in sorted(xs)[max(0, len(xs) - keep_last):]
     }
-    _commit_compaction_state(spark, path, state)
-    _sweep_excluded()
-    leaves_after = sum(
-        1
-        for cd in cell_dirs
-        for td in fs.list_dirs(f"{data}/{cd}")
-        if td.startswith("txn=")
-    )
+    fold = sorted(set(man["leaves"]) - keep)
+    before = _pairs(man)
+    if len(fold) < 2:
+        fold = []
+    else:
+        label = _label("compact")
+        cells = _land(
+            fs, _read_leaves(spark, path, man, labels=set(fold)), path, label
+        )
+
+        def change(head: dict) -> dict:
+            if not set(fold) <= set(head["leaves"]):
+                raise ConcurrentWriteError(
+                    f"compaction of {path} lost: a concurrent write "
+                    "removed leaves it folded. Re-run it."
+                )
+            leaves = {
+                lb: x for lb, x in head["leaves"].items() if lb not in fold
+            }
+            leaves[label] = {"cells": cells, "app": None, "batch": None}
+            return {**head, "leaves": leaves}
+
+        man = _commit(fs, path, man, change)
+    _vacuum(fs, path, man, retention_s)
     return {
-        "gen": newgen, "folded_labels": len(fold_set),
-        "leaves_before": leaves_before, "leaves_after": leaves_after,
+        "gen": man["v"], "folded_labels": len(fold),
+        "leaves_before": before, "leaves_after": _pairs(man),
     }
+
+
+def _pairs(man: dict) -> int:
+    """The (cell, leaf) pairs version ``man`` lists."""
+    return sum(len(leaf["cells"]) for leaf in man["leaves"].values())
+
+
+def _vacuum(fs, path: str, man: dict, retention_s: float) -> None:
+    """Delete the leaves, staging directories and artifacts files that
+    no reader of the index can still use (see :func:`compact_index`)."""
+    horizon = time.time() - retention_s
+    live = set(man["leaves"]) | {man["artifacts"]}
+    cur = man
+    # a version superseded inside the window may still be in a reader's
+    # hands: keep what it lists
+    while cur["ts"] > horizon and cur["v"] > 1:
+        cur = kt_log.read_version(fs, path, cur["v"] - 1)
+        if cur is None:
+            break
+        live |= set(cur["leaves"])
+
+    def drop(p: str) -> None:
+        if retention_s <= 0 or fs.mtime(p) <= horizon:
+            fs.delete(p)
+
+    data = f"{path}/data"
+    for cd in fs.list_dirs(data):
+        for td in fs.list_dirs(f"{data}/{cd}"):
+            if td[len("txn="):] not in live:
+                drop(f"{data}/{cd}/{td}")
+    for d in fs.list_dirs(f"{path}/_staging"):
+        drop(f"{path}/_staging/{d}")
+    for d in fs.list_dirs(path):
+        if d.startswith("artifacts-") and d not in live:
+            drop(f"{path}/{d}")
 
 
 def ann_topk_indexed(
@@ -1629,40 +1425,28 @@ def ann_topk_indexed(
 ) -> DataFrame:
     """Serve approximate top-k from a :func:`write_ivf_index` index:
     load the quantizer (one job, :func:`_load_index`), pick each
-    query's ``nprobe`` nearest cells, and scan ONLY those cells'
-    partitions — the probed cell set is collected to a literal
-    ``cell IN (...)`` predicate (<= n_queries x nprobe ints), so
-    pruning happens at PLANNING time and unprobed directories are
-    never opened. Scoring inside the
-    probed cells is :func:`ann_topk_ivf`'s exact cosine; with the
-    same quantizer the two return IDENTICAL rows (pinned in pytest) —
-    persistence changes where the inverted lists live, never the
-    answer. Returns (query_id, vec_id, cosine, rank)."""
+    query's ``nprobe`` nearest cells, and scan ONLY the head version's
+    leaves in those cells — the probed cell set is collected to a
+    literal ``cell IN (...)`` predicate (<= n_queries x nprobe ints),
+    so pruning happens at PLANNING time and unprobed directories are
+    never opened. A probed cell the version lists no leaf for (the
+    quantizer keeps centroids no vector was assigned to) costs
+    nothing. Scoring inside the probed cells is :func:`ann_topk_ivf`'s
+    exact cosine; with the same quantizer the two return IDENTICAL
+    rows (pinned in pytest) — persistence changes where the inverted
+    lists live, never the answer. Returns (query_id, vec_id, cosine,
+    rank)."""
     from pyspark.sql.window import Window
 
     qid = query_id_col or id_col
-    centroids = _load_index(spark, path)["centroids"]
+    index = _load_index(spark, path)
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    probes, cells = _expand_probes(centroids, q, nprobe)
-    # open ONLY the probed cells' directories (basePath keeps `cell` a
-    # partition column): at 10^5+ cells a full partition FILE discovery
-    # of <path>/data is itself a fixed listing cost — the probe should
-    # never list files it won't read. But a probed cell may have NO
-    # directory at all: ivf_centroids carries empty cells forward (a
-    # centroid can be no vector's top-1 assignment), and the writer's
-    # partitionBy only creates directories for non-empty cells — so the
-    # probed list is intersected with the directories that exist. That
-    # is ONE non-recursive name listing of <path>/data (an O(n_cells)
-    # dirname RPC, not the per-file discovery this path avoids). The
-    # residual isin filter keeps semantics explicit and the
-    # PartitionFilters plan fact asserted in test_plan_shapes.py.
-    existing = _existing_cells(spark, f"{path}/data")
-    cells = [c for c in cells if c in existing]
-    if not cells:
-        return _empty_topk(spark, q, existing, path, id_col, "cosine")
-    data = _pruned_cells_read(spark, path, cells)
+    probes, cells = _expand_probes(index["centroids"], q, nprobe)
+    data = _read_leaves(spark, path, index["head"], cells=cells)
+    if data is None:
+        return _empty_topk(spark, q, index["head"], id_col, "cosine")
     scored = data.join(F.broadcast(probes), on="cell").select(
         "query_id",
         F.col(id_col),

@@ -19,6 +19,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+MAX_DRIVER_MEM_MB = 20 * 1024
+
+
+def machine_defaults() -> "tuple[str, str]":
+    """The local thread count and driver memory :func:`get_spark` uses
+    when ``SPARK_GRAFT_CPUS`` / ``PANDABASE_DRIVER_MEM`` are unset:
+    every CPU of the machine, and half its physical RAM capped at 20g
+    (the driver JVM shares the machine with the Python driver and the
+    page cache)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mem_mb = min(MAX_DRIVER_MEM_MB, phys // 2 // 2**20)
+    return str(os.cpu_count() or 1), f"{mem_mb}m"
+
+
 def get_spark(
     app_name: str = "pandabase_spark",
     master: str | None = None,
@@ -27,9 +41,12 @@ def get_spark(
     """Build (or fetch) a SparkSession with engine defaults applied.
 
     Pass ``extra_conf`` to override any default. Honors
-    ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract).
+    ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract) and
+    ``PANDABASE_DRIVER_MEM`` for the driver memory; either one unset
+    takes its :func:`machine_defaults` value.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    default_cpus, default_mem = machine_defaults()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", default_cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(
@@ -62,7 +79,7 @@ def get_spark(
         # classic full-key-shuffle shape when a session keeps Spark's
         # default true)
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        .config("spark.driver.memory", os.environ.get("PANDABASE_DRIVER_MEM", "20g"))
+        .config("spark.driver.memory", os.environ.get("PANDABASE_DRIVER_MEM", default_mem))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get("PANDABASE_WAREHOUSE", "/tmp/pandabase_warehouse"))
     )

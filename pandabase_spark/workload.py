@@ -4814,9 +4814,9 @@ def ann_topk_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q("ann_topk_ivf_indexed")  # approximate: rows-only check (no oracle)
 def ann_topk_ivf_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted serving shape of the IVF index: built ONCE
-    (write_ivf_index — quantizer sidecar + corpus partitioned by
-    cell, one directory per inverted list) and queried by scanning
-    ONLY the probed cells' partitions (literal ``cell IN`` predicate
+    (write_ivf_index — quantizer in the artifacts file + corpus
+    partitioned by cell, one directory per inverted list) and queried
+    by scanning ONLY the probed cells' leaves (literal ``cell IN`` predicate
     → planning-time partition pruning, asserted in
     tests/test_plan_shapes.py). With the same quantizer this returns
     rows IDENTICAL to ann_topk_ivf (pinned in pytest) — persistence
@@ -4869,8 +4869,8 @@ def ann_topk_ivf_appended_full_q(
     """Incremental index maintenance, VALUE-EXACT: the IVF index is
     built on HALF the corpus (write_ivf_index trains the quantizer and
     partitions the data by cell), the other half is APPENDED against
-    the frozen quantizer (append_ivf_index — new parquet files inside
-    existing cell directories, no retrain, no rewrite: the 100 TB
+    the frozen quantizer (append_ivf_index — one new leaf per touched
+    cell, committed by one log claim, no retrain, no rewrite: the 100 TB
     continuous-ingest shape where per-batch cost must be O(batch), not
     O(corpus)), and the probe runs with nprobe = n_cells so the result
     must hash-match brute-force cosine top-k over the FULL corpus —
@@ -4916,12 +4916,11 @@ def streaming_ann_index_ingest(
     mis-assigned batch row breaks the driver hash. Delivery contract
     (r12): every append passes ``txn=(app_id, batch_id)`` — the same
     Delta txnAppId/txnVersion shape the keyed-table streaming sinks
-    ride — so the batch lands as a dynamic partition overwrite of its
-    own ``txn=`` sub-partitions and a REPLAYED micro-batch (lost
-    checkpoint, retry after a committed-but-unacknowledged epoch)
-    replaces its previous attempt instead of double-inserting:
-    effectively exactly-once at the index level (replay pytest in
-    test_operators.py)."""
+    ride — so the claim that lists a batch's leaf also commits its
+    batch id, and a REPLAYED micro-batch (lost checkpoint, retry after
+    a committed-but-unacknowledged epoch) at or below that watermark
+    is a no-op instead of a double-insert: exactly-once at the index
+    level (replay pytest in test_operators.py)."""
     import tempfile
 
     from pandabase_spark.operators.similarity import (
@@ -4942,7 +4941,7 @@ def streaming_ann_index_ingest(
     rest = e.where(F.col("vec_id") > half)
     rest.repartition(2).write.mode("overwrite").parquet(f"{scratch}/src")
     # hoist the FROZEN quantizer out of foreachBatch: per-batch
-    # sidecar re-reads buy nothing by the add-after-train contract
+    # artifact re-reads buy nothing by the add-after-train contract
     # (r15, guide §4.5 at the micro-batch level)
     from pandabase_spark.operators.similarity import _load_index
 
@@ -5108,8 +5107,8 @@ def ann_topk_ivfpq_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition of write_ivf_index's layout with PQ compression:
     ``write_ivfpq_index`` stores the corpus as cell-partitioned
     (id, pq_code) rows (m small ints per row, ~16-32× less index IO
-    than raw vectors) plus two tiny sidecars (quantizer, codebooks),
-    and ``ann_topk_ivfpq_indexed`` serves with planning-time ``cell
+    than raw vectors) plus one tiny artifacts file (quantizer,
+    codebooks), and ``ann_topk_ivfpq_indexed`` serves with planning-time ``cell
     IN`` partition pruning + ADC scoring over the codes — index IO ≈
     (nprobe/n_cells) × (compressed corpus), the billion-vector query
     shape. Pinned persisted==in-memory in pytest; recall floors ride
@@ -5143,7 +5142,7 @@ def ann_topk_ivfpq_indexed_full_q(
     distance IS exact squared L2 — the result must hash-match
     DuckDB's brute-force L2 top-10. This gates the full production
     chain end to end: ingest-time encode, the (cell, txn) index
-    layout, sidecar round-trips, probe expansion against the
+    layout and log, the artifacts round-trip, probe expansion against the
     PERSISTED quantizer, partition-pruned reads, and ADC scoring over
     stored codes. The lossy persisted configuration
     (``ann_topk_ivfpq_indexed``) shares every line."""
@@ -5275,8 +5274,8 @@ def streaming_ivfpq_index_ingest(
     as a stream (maxFilesPerTrigger=1) and every micro-batch is
     cell-assigned AND PQ-encoded against the frozen artifacts inside
     ``foreachBatch`` via ``append_ivfpq_index(txn=(app, batch_id))`` —
-    replay-idempotent dynamic partition overwrites, the exactly-once
-    continuous-ingest shape for a 100 TB compressed vector corpus.
+    one log claim per batch, a replay at or below the watermark a
+    no-op: the exactly-once continuous-ingest shape for a 100 TB compressed vector corpus.
     After the availableNow cycle drains, a full-probe ADC search over
     the persisted codes must hash-match DuckDB's brute-force L2
     top-10 over the ENTIRE corpus: a dropped, duplicated,
@@ -5314,7 +5313,7 @@ def streaming_ivfpq_index_ingest(
     rest = q16.where(F.col("vec_id") > half)
     rest.repartition(2).write.mode("overwrite").parquet(f"{scratch}/src")
     # hoist the FROZEN quantizer + codebooks + residual flag out of
-    # foreachBatch: the per-batch sidecar re-reads and the per-batch
+    # foreachBatch: the per-batch artifact re-reads and the per-batch
     # codebook driver collect buy nothing by the add-after-train
     # contract (r15, guide §4.5 at the micro-batch level)
     from pandabase_spark.operators.similarity import _load_index
@@ -5353,17 +5352,17 @@ def ann_ivfpq_compacted_full_q(
     """Index COMPACTION, VALUE-EXACT (r13 — the r12 verdict's named
     scale-killer, closed): a streaming-maintained persisted index
     accrues one ``txn=`` leaf per cell per micro-batch without bound;
-    :func:`compact_index` folds everything below a replay watermark
-    into ONE ``compact-<gen>`` leaf per cell, O(live leaves) instead
-    of the O(corpus) retrain the docs used to prescribe. This gate
-    drives the WHOLE maintenance lifecycle and demands brute-force
-    exactness at the end: bootstrap build (lossless enumerated
-    codebooks) → two txn'd appends + one untagged (adhoc) append →
-    a replayed txn batch (dynamic-overwrite idempotence) → compact
-    (folds base + adhoc + below-watermark batches) → a replay of a
-    FOLDED batch (must be a watermark NO-OP — its leaves are gone and
-    a dynamic overwrite would re-insert its rows as duplicates) → one
-    more append on the compacted tree → full-probe ADC serve. With
+    :func:`compact_index` folds the head's leaves (all but each app's
+    newest ``keep_last`` batches) into ONE new leaf per cell, O(live
+    leaves) instead of the O(corpus) retrain the docs used to
+    prescribe. This gate drives the WHOLE maintenance lifecycle and
+    demands brute-force exactness at the end: bootstrap build
+    (lossless enumerated codebooks) → two txn'd appends + one untagged
+    append → a replayed txn batch (at the watermark: a no-op) →
+    compact (folds the build, the untagged append and batch 0) → a
+    replay of a FOLDED batch (still a watermark NO-OP, though its
+    leaf is gone) → one more append on the compacted tree →
+    full-probe ADC serve. With
     ``nprobe == n_cells`` and lossless codebooks the served top-10
     must hash-match DuckDB's brute-force L2 over the ENTIRE corpus:
     any row the fold dropped, duplicated, or re-inserted breaks the
@@ -5399,9 +5398,9 @@ def ann_ivfpq_compacted_full_q(
     append_ivfpq_index(
         q16.where(F.col("vec_id") % 8 == 3), path, vec_col="qvec",
     )
-    # WAL-recovery replay BEFORE compaction: replaces, never dupes
+    # WAL-recovery replay BEFORE compaction: a no-op, never a dupe
     append_ivfpq_index(b0, path, vec_col="qvec", txn=("gate", 0))
-    compact_index(spark, path, keep_last=1)  # folds base+adhoc+batch 0
+    compact_index(spark, path, keep_last=1)  # folds build, untagged, batch 0
     # replay of the FOLDED batch: the compaction-watermark no-op
     append_ivfpq_index(b0, path, vec_col="qvec", txn=("gate", 0))
     # the stream continues on the compacted tree

@@ -10,8 +10,11 @@ write_ivfpq_index (16 cells, m=8, 16 codes), append_ivfpq_index with
 ``txn=``, compact_index and a single-vector ann_topk_ivfpq_indexed.
 Each verb runs in its own Spark job group. For every verb it prints
 the job count and, per job, the call sites Spark records as its stage
-names: the phase tree behind the verb's count. Needs no test data.
-Usage:
+names: the phase tree behind the verb's count. A DataFrameWriter write
+launched from the JVM bridge has no Python call site of its own, so
+while tracing, ``save`` and ``parquet`` set Spark's ``callSite.short``
+local property to the innermost ``pandabase_spark/`` frame that called
+them. Needs no test data. Usage:
 
     python scripts/jobtrace.py [rows]    # default 2000 keyed rows
                                          # and 2000 vectors
@@ -19,13 +22,54 @@ Usage:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import sys
 import tempfile
+import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+LIB = os.path.join(ROOT, "pandabase_spark") + os.sep
+
+
+@contextlib.contextmanager
+def named_writes(sc):
+    """While active, ``DataFrameWriter.save``/``.parquet`` name their
+    jobs after the innermost library frame that called them."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    saved = {n: getattr(DataFrameWriter, n) for n in ("save", "parquet")}
+
+    def named(verb, orig):
+        def write(self, *args, **kwargs):
+            frame = next(
+                (f for f in reversed(traceback.extract_stack()[:-1])
+                 if f.filename.startswith(LIB)),
+                None,
+            )
+            if frame is None:
+                return orig(self, *args, **kwargs)
+            prev = sc.getLocalProperty("callSite.short")
+            site = os.path.relpath(frame.filename, ROOT)
+            sc.setLocalProperty(
+                "callSite.short", f"{verb} at {site}:{frame.lineno}"
+            )
+            try:
+                return orig(self, *args, **kwargs)
+            finally:
+                sc.setLocalProperty("callSite.short", prev)
+
+        return write
+
+    for verb, orig in saved.items():
+        setattr(DataFrameWriter, verb, named(verb, orig))
+    try:
+        yield
+    finally:
+        for verb, orig in saved.items():
+            setattr(DataFrameWriter, verb, orig)
 
 
 def trace_ann(spark, trace, root: str, rows: int) -> None:
@@ -101,7 +145,8 @@ def main() -> None:
         group = f"jobtrace-{verb}"
         sc.setJobGroup(group, verb)
         try:
-            fn()
+            with named_writes(sc):
+                fn()
         finally:
             sc.setJobGroup(None, None)
         jids = sorted(st.getJobIdsForGroup(group))

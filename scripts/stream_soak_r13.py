@@ -9,8 +9,8 @@ two events a production stream actually hits injected mid-run:
   micro-batches are re-delivered verbatim with their original
   (app, batch_id) txns — the foreachBatch re-delivery Structured
   Streaming performs after WAL recovery of an uncommitted epoch;
-  dynamic-partition-overwrite idempotence must converge, not
-  double-insert;
+  each is at or below its app's committed txn watermark, so it must
+  be a no-op, not a double-insert;
 - a MID-RUN COMPACTION: ``compact_index(keep_last=2)`` folds the
   first ~98 batches' txn leaves while the stream is paused, after
   which (a) a replay of a folded (below-watermark) batch must be a
@@ -77,8 +77,9 @@ def _batch_df(spark, b):
 def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
+    from pandabase_spark import kt_log
+    from pandabase_spark.fs import HadoopFS
     from pandabase_spark.operators.similarity import (
-        _load_compaction_state,
         ann_topk_ivfpq_indexed,
         append_ivfpq_index,
         compact_index,
@@ -193,8 +194,8 @@ def main() -> None:
     stats_mid = compact_index(spark, path, keep_last=2)
     report["midrun_compact_wall_s"] = round(time.time() - t0, 1)
     report["midrun_compact"] = stats_mid
-    state = _load_compaction_state(spark, path)
-    report["watermark_after_midrun"] = state["watermarks"].get(APP)
+    head = kt_log.head(HadoopFS(spark), path)
+    report["watermark_after_midrun"] = head["txns"].get(APP)
 
     # a FOLDED batch re-delivered after compaction: no-op by contract
     rows_pre = count_rows()

@@ -20,6 +20,10 @@ write verb — and every segment the surviving head lists must carry it.
 Throughout, every version the log still lists (``history()``) must
 reference only segments that exist: vacuum stubs a version before it
 deletes the segments, never after.
+
+The persisted ANN index commits through the same claim; its build,
+``txn=`` append and compaction get the same sweep at the end of this
+file.
 """
 
 from __future__ import annotations
@@ -230,3 +234,185 @@ def test_crash_at_every_mutating_call(spark, tmp_path, verb):
         assert not _unreferenced_segments(cat), f"{verb} crashed at call {k}"
         assert _state(cat) == post, f"{verb} crashed at call {k}: vacuum"
         assert not _dangling_versions(cat), f"{verb} crashed at call {k}"
+
+
+# -- the persisted ANN index -------------------------------------------
+#
+# The index verbs commit by the same claim (see similarity.py): land
+# the leaves, claim the next version. Their crash points are the leaf
+# renames, the staging delete, the claim, the hint and compaction's
+# deletes. similarity.py builds its ``HadoopFS`` per call, so one
+# CrashingFS stands in for the class. The served state is the
+# full-probe top-k (nprobe = n_cells) of one query over the whole
+# index, None before the build.
+
+DIM, CELLS = 16, 4
+INDEX_TXN = ("sweep", 1)
+
+
+@pytest.fixture(scope="module")
+def ann_inputs(spark):
+    """200 corpus vectors in 4 clusters, a 30-vector batch, one query
+    and prebuilt artifacts (so every build encodes identically)."""
+    import numpy as np
+    import pandas as pd
+
+    from pandabase_spark.operators.similarity import (
+        ivf_assign, ivf_centroids, pq_codebooks,
+    )
+
+    rng = np.random.default_rng(11)
+    centers = 4 * rng.standard_normal((CELLS, DIM))
+
+    def frame(n, first):
+        v = centers[rng.integers(0, CELLS, n)] + rng.standard_normal((n, DIM))
+        return spark.createDataFrame(pd.DataFrame({
+            "vec_id": np.arange(first, first + n, dtype=np.int64),
+            "embedding": list(v),
+        }))
+
+    corpus, batch, query = frame(200, 0), frame(30, 200), frame(1, 10_000)
+    cents = ivf_centroids(corpus, n_cells=CELLS, iters=2)
+    books = pq_codebooks(ivf_assign(corpus, cents), m=4, k=8, iters=2)
+    return corpus, batch, query, cents, books
+
+
+def _served(spark, path, query):
+    from pandabase_spark.operators.similarity import ann_topk_ivfpq_indexed
+
+    try:
+        rows = ann_topk_ivfpq_indexed(
+            spark, path, query, k=1000, nprobe=CELLS
+        ).collect()
+    except FileNotFoundError:
+        return None
+    ids = [r["vec_id"] for r in rows]
+    assert len(ids) == len(set(ids)), "an id is served twice"
+    return {(r["vec_id"], r["approx_dist"], r["rank"]) for r in rows}
+
+
+def _unlisted(spark, path) -> "set[str]":
+    """Leaves, staging and artifacts directories on disk that the head
+    version does not list."""
+    import os
+
+    from pandabase_spark.fs import HadoopFS
+
+    head = kt_log.head(HadoopFS(spark), path)
+    listed = {
+        f"data/cell={c}/txn={lb}"
+        for lb, leaf in head.get("leaves", {}).items()
+        for c in leaf["cells"]
+    } | {head.get("artifacts")}
+    on_disk = set()
+    if os.path.isdir(f"{path}/data"):
+        on_disk |= {
+            f"data/{cd}/{td}"
+            for cd in os.listdir(f"{path}/data")
+            for td in os.listdir(f"{path}/data/{cd}")
+        }
+    if os.path.isdir(f"{path}/_staging"):
+        on_disk |= {f"_staging/{d}" for d in os.listdir(f"{path}/_staging")}
+    on_disk |= {d for d in os.listdir(path) if d.startswith("artifacts-")}
+    return on_disk - listed
+
+
+def _index_case(verb, inputs, retention_s):
+    """(setup(spark, path), op(spark, path)) for one index verb."""
+    from pandabase_spark.operators.similarity import (
+        append_ivfpq_index, compact_index, write_ivfpq_index,
+    )
+
+    corpus, batch, _, cents, books = inputs
+
+    def build(spark, path):
+        write_ivfpq_index(
+            corpus, path, m=4, centroids=cents, codebooks=books
+        )
+
+    def append(spark, path, txn=INDEX_TXN):
+        append_ivfpq_index(batch, path, txn=txn)
+
+    def streamed(spark, path):
+        build(spark, path)
+        append(spark, path, txn=("sweep", 0))
+
+    if verb == "build":
+        return lambda spark, path: None, build
+    if verb == "append":
+        return build, append
+    if verb == "compact":
+        return streamed, lambda spark, path: compact_index(
+            spark, path, keep_last=0, retention_s=retention_s
+        )
+    raise AssertionError(verb)
+
+
+@pytest.mark.parametrize(
+    "verb,retention_s",
+    [("build", 0.0), ("append", 0.0), ("compact", 0.0), ("compact", 3600.0)],
+)
+def test_index_crash_at_every_mutating_call(
+    spark, tmp_path, monkeypatch, ann_inputs, verb, retention_s
+):
+    import shutil
+    import types
+
+    import pandabase_spark.fs as fsmod
+    from pandabase_spark.operators import similarity
+    from pandabase_spark.operators.similarity import compact_index
+
+    setup, op = _index_case(verb, ann_inputs, retention_s)
+    real, real_time = fsmod.HadoopFS, similarity.time
+
+    def served(path):
+        return _served(spark, path, ann_inputs[2])
+
+    def crashing(crash_at=None) -> CrashingFS:
+        fs = CrashingFS(real(spark), crash_at=crash_at)
+        monkeypatch.setattr(fsmod, "HadoopFS", lambda _spark: fs)
+        return fs
+
+    seed = str(tmp_path / "seed")
+    setup(spark, seed)
+    pre = served(seed)
+    clean = str(tmp_path / "clean")
+    if pre is not None:
+        shutil.copytree(seed, clean)
+    counting = crashing()
+    op(spark, clean)
+    monkeypatch.setattr(fsmod, "HadoopFS", real)
+    n_calls = counting.calls
+    assert n_calls >= 2, f"{verb} made only {n_calls} mutating calls"
+    post = served(clean)
+    assert post is not None and len(post) == (
+        230 if verb != "build" else 200
+    )
+
+    def cleanup(path):
+        # what no reader can use goes once it is older than retention
+        compact_index(spark, path, keep_last=100, retention_s=retention_s)
+        if retention_s:
+            later = real_time.time() + 2 * retention_s
+            monkeypatch.setattr(
+                similarity, "time", types.SimpleNamespace(time=lambda: later)
+            )
+            compact_index(spark, path, keep_last=100, retention_s=retention_s)
+            monkeypatch.setattr(similarity, "time", real_time)
+        return _unlisted(spark, path)
+
+    assert not cleanup(clean)
+    for k in range(1, n_calls + 1):
+        path = str(tmp_path / f"k{k}")
+        if pre is not None:
+            shutil.copytree(seed, path)
+        crashing(crash_at=k)
+        with pytest.raises(Crash):
+            op(spark, path)
+        monkeypatch.setattr(fsmod, "HadoopFS", real)
+        got = served(path)
+        assert got in (pre, post), f"{verb} crashed at call {k}: torn state"
+        op(spark, path)
+        assert served(path) == post, f"{verb} crashed at call {k}"
+        left = cleanup(path)
+        assert not left, f"{verb} crashed at call {k}: {sorted(left)} kept"

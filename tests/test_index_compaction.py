@@ -1,38 +1,39 @@
-"""Persisted-ANN-index compaction (r12 verdict ask #2).
+"""Persisted-ANN-index compaction and the index log.
 
-``compact_index`` folds a streaming-maintained index's accumulated
-``txn=`` leaves (one per cell per micro-batch under
-``_append_index_batch``) into one ``txn=compact-<gen>`` leaf per
-cell — O(live leaves), not the O(corpus) retrain+rewrite that used to
-be the only mitigation. Contracts pinned here:
+Every index write lands its ``data/cell=<c>/txn=<label>`` leaves and
+then claims the next version of the index log (``_pb_log/``, the
+keyed table's rule in ``kt_log``); readers use only the leaves the
+head version lists. ``compact_index`` folds the head's leaves into one
+new leaf per cell — O(live leaves), not the O(corpus)
+retrain+rewrite. Contracts pinned here:
 
 - serve results are IDENTICAL before/after compaction, for both the
   raw IVF index and the IVFPQ index (shared layout);
-- a replayed batch at-or-below the compaction watermark is a NO-OP
-  (its rows live in a compact leaf; a dynamic-overwrite replay of a
-  vanished sub-partition would otherwise duplicate them);
-- batches ABOVE the watermark keep their own leaves and their replay
-  idempotence;
-- crash at any point (uncommitted fold leaves, committed-but-pending
-  deletes) is never served wrong and a re-run converges;
-- reserved label shapes (base / adhoc-* / compact-*) cannot be
-  aliased by a user txn app id.
+- a ``txn=`` batch at or below its app's committed watermark is a
+  NO-OP, folded or not, and an empty batch commits its watermark;
+- a crash at any point (a fold landed but never claimed, a claim
+  whose deletes never ran) is never served wrong, and a re-run
+  converges, leaving no leaf the head does not list;
+- ``retention_s`` keeps unlisted leaves until they age out;
+- any app id is an ordinary app: no label shape is reserved.
 
 The reference has no index maintenance surface at all (pandas +
 SQLAlchemy, reference:pandabase/pandabase.py); this is engine
-extension surface modeled on FAISS add-after-train plus Delta-style
-layout-derived idempotence.
+extension surface modeled on FAISS add-after-train plus Delta's log.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
+from pandabase_spark import kt_log
+from pandabase_spark.fs import HadoopFS
+from pandabase_spark.operators import similarity
 from pandabase_spark.operators.similarity import (
-    _load_compaction_state,
+    _read_leaves,
     ann_topk_indexed,
     ann_topk_ivfpq_indexed,
     append_ivf_index,
@@ -49,16 +50,32 @@ def _emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
-def _leaves(path):
-    out = {}
+def index_head(spark, path) -> dict:
+    """The index's head version."""
+    return kt_log.head(HadoopFS(spark), path)
+
+
+def index_rows(spark, path):
+    """The index's rows as readers see them: the head's leaves."""
+    return _read_leaves(spark, path, index_head(spark, path))
+
+
+def disk_leaves(path) -> "set[tuple[int, str]]":
+    """Every (cell, label) leaf directory on disk, listed or not."""
     data = f"{path}/data"
-    for cd in os.listdir(data):
-        if cd.startswith("cell="):
-            out[cd] = sorted(
-                td for td in os.listdir(f"{data}/{cd}")
-                if td.startswith("txn=")
-            )
-    return out
+    if not os.path.isdir(data):
+        return set()
+    return {
+        (int(cd[len("cell="):]), td[len("txn="):])
+        for cd in os.listdir(data)
+        for td in os.listdir(f"{data}/{cd}")
+    }
+
+
+def listed_leaves(head) -> "set[tuple[int, str]]":
+    return {
+        (c, lb) for lb, leaf in head["leaves"].items() for c in leaf["cells"]
+    }
 
 
 def _topk_set(df):
@@ -70,6 +87,23 @@ def _topk_set(df):
     }
 
 
+def _streamed_ivf(spark, path, n_batches=3):
+    """A raw IVF index on the even ids plus ``n_batches`` txn batches
+    of odd ids, and the full-probe truth over its 3 first queries."""
+    emb = _emb(spark)
+    write_ivf_index(
+        emb.where("vec_id % 2 = 0"), path, n_cells=4, iters=1,
+        sample_mod=2,
+    )
+    for b in range(n_batches):
+        append_ivf_index(
+            emb.where(f"vec_id % 2 = 1 and vec_id % 3 = {b}"), path,
+            txn=("a", b),
+        )
+    q = emb.where("vec_id < 3")
+    return q, _topk_set(ann_topk_indexed(spark, path, q, k=8, nprobe=4))
+
+
 def test_compact_raw_ivf_serves_identical_and_shrinks_leaves(
     spark, tmp_path
 ):
@@ -79,8 +113,8 @@ def test_compact_raw_ivf_serves_identical_and_shrinks_leaves(
         emb.where("vec_id % 4 = 0"), path, n_cells=6, iters=2,
         sample_mod=2,
     )
-    # a streaming horizon in miniature: tagged batches + an untagged
-    # (adhoc) backfill, several leaves per cell
+    # a streaming horizon in miniature: tagged batches + untagged
+    # backfills, several leaves per cell
     for b in range(4):
         append_ivf_index(
             emb.where(f"vec_id % 4 = 1 and vec_id % 7 = {b % 7}"),
@@ -98,30 +132,30 @@ def test_compact_raw_ivf_serves_identical_and_shrinks_leaves(
     )
     # full probe over the appended index == brute force (sanity)
     assert before == _topk_set(cosine_topk(corpus, q, k=8))
-    n_before = sum(len(v) for v in _leaves(path).values())
+    n_before = len(disk_leaves(path))
 
     stats = compact_index(spark, path, keep_last=2)
-    assert stats["folded_labels"] > 0
+    assert stats["folded_labels"] == 5  # base, 2 backfills, batches 0-1
     assert stats["leaves_after"] < stats["leaves_before"] == n_before
 
     after = _topk_set(ann_topk_indexed(spark, path, q, k=8, nprobe=6))
     assert after == before
-    # every cell now holds exactly: one compact leaf + the retained
-    # (above-watermark) batch leaves
-    for cd, tds in _leaves(path).items():
-        assert "txn=compact-1" in tds
-        assert "txn=base" not in tds
-        assert all(
-            td == "txn=compact-1" or td.startswith("txn=app")
-            for td in tds
-        ), tds
-    state = _load_compaction_state(spark, path)
-    assert state["gen"] == 1 and state["exclude"] == []
-    assert state["watermarks"] == {"app": 1}  # batches 0,1 folded
+    # the head lists one fold plus the two newest batches, the disk
+    # holds exactly those leaves, and the watermark is untouched
+    head = index_head(spark, path)
+    assert head["v"] == stats["gen"]
+    kinds = sorted(
+        (leaf["app"], leaf["batch"]) for leaf in head["leaves"].values()
+        if leaf["app"] is not None
+    )
+    assert kinds == [("app", 2), ("app", 3)]
+    assert len(head["leaves"]) == 3
+    assert disk_leaves(path) == listed_leaves(head)
+    assert head["txns"] == {"app": 3}
 
     # a second compaction with nothing newly foldable is a no-op
     stats2 = compact_index(spark, path, keep_last=2)
-    assert stats2["folded_labels"] == 0
+    assert stats2["folded_labels"] == 0 and stats2["gen"] == stats["gen"]
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=6)
     ) == before
@@ -167,30 +201,33 @@ def test_replay_below_watermark_is_noop_above_still_idempotent(
     }
     for b, df in batches.items():
         append_ivf_index(df, path, txn=("app", b))
-    compact_index(spark, path, keep_last=1)  # folds batch 0, keeps 1
-    state = _load_compaction_state(spark, path)
-    assert state["watermarks"] == {"app": 0}
-    data = lambda: spark.read.parquet(f"{path}/data")
-    n = data().count()
+    compact_index(spark, path, keep_last=1)  # folds base + batch 0
+    head = index_head(spark, path)
+    assert head["txns"] == {"app": 1}
+    n = index_rows(spark, path).count()
 
-    # lost checkpoint restarted from epoch 0: the pre-watermark batch
-    # re-delivered — MUST be a no-op (no leaves recreated, no dupes)
-    leaves0 = _leaves(path)
-    append_ivf_index(batches[0], path, txn=("app", 0))
-    assert data().count() == n
-    assert _leaves(path) == leaves0
+    # lost checkpoint restarted from epoch 0: the folded batch and the
+    # retained one re-delivered — both no-ops: no leaf, no version
+    leaves0 = disk_leaves(path)
+    for b in (0, 1):
+        append_ivf_index(batches[b], path, txn=("app", b))
+        assert index_head(spark, path)["v"] == head["v"]
+    assert index_rows(spark, path).count() == n
+    assert disk_leaves(path) == leaves0
     assert (
-        data().groupBy("vec_id").count().where("count > 1").count()
-        == 0
+        index_rows(spark, path).groupBy("vec_id").count()
+        .where("count > 1").count() == 0
     )
-    # the retained batch keeps dynamic-overwrite replay idempotence
-    append_ivf_index(batches[1], path, txn=("app", 1))
-    assert data().count() == n
-    # and the stream continues past the watermark normally
+    # an empty batch past the watermark lands no leaf but commits the
+    # watermark
     append_ivf_index(
         emb.where("vec_id % 2 = 1 and vec_id % 4 = 1").limit(0),
         path, txn=("app", 2),
-    )  # empty batch: fine
+    )
+    head2 = index_head(spark, path)
+    assert head2["v"] == head["v"] + 1
+    assert head2["txns"] == {"app": 2}
+    assert head2["leaves"] == head["leaves"]
     q = emb.where("vec_id < 2")
     got = _topk_set(ann_topk_indexed(spark, path, q, k=5, nprobe=4))
     corpus = emb.where(
@@ -202,83 +239,69 @@ def test_replay_below_watermark_is_noop_above_still_idempotent(
 def test_crash_windows_never_served_wrong_and_rerun_converges(
     spark, tmp_path
 ):
-    import shutil
-
-    from pandabase_spark.operators.similarity import (
-        _commit_compaction_state,
-    )
-
-    emb = _emb(spark)
     path = str(tmp_path / "idx")
-    write_ivf_index(
-        emb.where("vec_id % 2 = 0"), path, n_cells=4, iters=1,
-        sample_mod=2,
-    )
-    append_ivf_index(emb.where("vec_id % 2 = 1"), path, txn=("a", 0))
-    append_ivf_index(emb.limit(0), path, txn=("a", 1))
-    q = emb.where("vec_id < 3")
-    truth = _topk_set(ann_topk_indexed(spark, path, q, k=8, nprobe=4))
-
-    # crash window 1: fold leaves written for an UNCOMMITTED
-    # generation (no state sidecar yet) — serve must ignore them
+    q, truth = _streamed_ivf(spark, path, n_batches=2)
     data = f"{path}/data"
-    victim = next(
-        cd for cd, tds in _leaves(path).items() if "txn=base" in tds
+    base = next(
+        lb for lb, leaf in index_head(spark, path)["leaves"].items()
+        if lb.startswith("base-")
     )
-    fake = f"{data}/{victim}/txn=compact-1"
-    shutil.copytree(f"{data}/{victim}/txn=base", fake)
-    _commit_compaction_state(
-        spark, path, {"gen": 0, "watermarks": {}, "exclude": []}
-    )
-    assert _topk_set(
-        ann_topk_indexed(spark, path, q, k=8, nprobe=4)
-    ) == truth
+    cell = index_head(spark, path)["leaves"][base]["cells"][0]
 
-    # crash window 2: compaction COMMITTED (gen=1, folded labels in
-    # exclude) but physical deletes didn't run — serve must exclude
-    # the superseded leaves, not double-count them
-    shutil.rmtree(fake)
-    stats = compact_index(spark, path, keep_last=0)
-    assert stats["gen"] == 1 and stats["folded_labels"] > 0
-    # recreate a superseded leaf as if its delete never happened
-    comp = next(
-        cd for cd, tds in _leaves(path).items()
-        if "txn=compact-1" in tds
-    )
+    # crash window 1: a fold landed its leaf but never claimed a
+    # version — no reader sees it
     shutil.copytree(
-        f"{data}/{comp}/txn=compact-1", f"{data}/{comp}/txn=base"
-    )
-    _commit_compaction_state(
-        spark, path,
-        {"gen": 1, "watermarks": {"a": 1}, "exclude": ["base"]},
+        f"{data}/cell={cell}/txn={base}",
+        f"{data}/cell={cell}/txn=compact-crashed",
     )
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
-    # a re-run resumes: finishes the pending delete, then no-ops
+
+    # crash window 2: the fold claimed its version but its deletes
+    # never ran — the folded leaf is on disk and unlisted
+    stats = compact_index(spark, path, keep_last=0)
+    assert stats["folded_labels"] == 3
+    assert not os.path.exists(f"{data}/cell={cell}/txn=compact-crashed")
+    fold = next(iter(index_head(spark, path)["leaves"]))
+    shutil.copytree(
+        f"{data}/cell={cell}/txn={fold}", f"{data}/cell={cell}/txn={base}"
+    )
+    assert _topk_set(
+        ann_topk_indexed(spark, path, q, k=8, nprobe=4)
+    ) == truth
+    # a re-run finishes the delete and folds nothing
     stats2 = compact_index(spark, path, keep_last=0)
-    assert not os.path.exists(f"{data}/{comp}/txn=base")
-    state = _load_compaction_state(spark, path)
-    assert state["exclude"] == []
+    assert stats2["folded_labels"] == 0
+    assert disk_leaves(path) == listed_leaves(index_head(spark, path))
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
-    assert stats2["folded_labels"] == 0
 
 
-def test_reserved_txn_app_prefixes_raise(spark, tmp_path):
+def test_txn_app_ids_are_not_reserved(spark, tmp_path):
+    """Leaf labels are generated and the head records each leaf's app
+    and batch, so no app id can alias index machinery: ids shaped like
+    the labels append and replay like any other app."""
     emb = _emb(spark)
     path = str(tmp_path / "idx")
-    write_ivf_index(emb.limit(50), path, n_cells=2, iters=1)
-    for bad in ("base", "compact-7", "adhoc-x"):
-        with pytest.raises(ValueError, match="reserved"):
-            append_ivf_index(emb.limit(5), path, txn=(bad, 0))
+    write_ivf_index(emb.where("vec_id % 4 = 0"), path, n_cells=2, iters=1)
+    apps = ("base", "compact-7", "adhoc-x")
+    for i, app in enumerate(apps):
+        append_ivf_index(emb.where(f"vec_id % 4 = {i + 1}"), path, txn=(app, 0))
+        append_ivf_index(emb.where(f"vec_id % 4 = {i + 1}"), path, txn=(app, 0))
+    assert index_head(spark, path)["txns"] == {app: 0 for app in apps}
+    q = emb.where("vec_id < 3")
+    got = _topk_set(ann_topk_indexed(spark, path, q, k=8, nprobe=2))
+    assert got == _topk_set(cosine_topk(emb, q, k=8))
+    compact_index(spark, path, keep_last=0)
+    assert _topk_set(ann_topk_indexed(spark, path, q, k=8, nprobe=2)) == got
 
 
 def test_compact_residual_ivfpq_serves_identical(spark, tmp_path):
-    """Compaction is payload-agnostic, but the RESIDUAL index adds an
-    anchors sidecar and a residual flag the fold must not disturb —
-    pin serve identity across compaction on the residual
+    """Compaction is payload-agnostic, but the RESIDUAL index keeps
+    anchors and a residual flag in its artifacts the fold must not
+    disturb — pin serve identity across compaction on the residual
     configuration too (the production-recommended encoding)."""
     from pyspark.sql import functions as F
 
@@ -323,140 +346,82 @@ def test_compact_residual_ivfpq_serves_identical(spark, tmp_path):
 def test_stale_uncommitted_fold_leaf_deleted_under_new_watermark(
     spark, tmp_path
 ):
-    """r13 review finding: a crashed fold leaves UNCOMMITTED
-    compact-<g+1> leaves; a re-run under a DIFFERENT watermark whose
-    fold set misses that cell must DELETE the stale leaf rather than
-    let its own commit flip it live (which would serve the stale
-    partial fold's rows as duplicates)."""
-    import shutil
-
-    emb = _emb(spark)
+    """A crashed fold leaves leaves no version lists. A later run is
+    never fooled by them: one that folds nothing still deletes them,
+    and one that folds never lists them."""
     path = str(tmp_path / "idx")
-    write_ivf_index(
-        emb.where("vec_id % 2 = 0"), path, n_cells=4, iters=1,
-        sample_mod=2,
-    )
-    for b in range(3):
-        append_ivf_index(
-            emb.where(f"vec_id % 2 = 1 and vec_id % 3 = {b}"), path,
-            txn=("a", b),
-        )
-    q = emb.where("vec_id < 3")
-    truth = _topk_set(ann_topk_indexed(spark, path, q, k=8, nprobe=4))
-    # simulate run A's crash mid-rename: an uncommitted compact-1
-    # leaf holding a COPY of batch a:2's rows in one cell
+    q, truth = _streamed_ivf(spark, path)
     data = f"{path}/data"
-    victim = next(
-        cd for cd, tds in _leaves(path).items()
-        if any(td.startswith("txn=a") for td in tds)
-    )
-    src_leaf = next(
-        td for td in _leaves(path)[victim] if td.startswith("txn=a")
-    )
-    shutil.copytree(
-        f"{data}/{victim}/{src_leaf}", f"{data}/{victim}/txn=compact-1"
-    )
-    # run B folds NOTHING from that app (keep_last high) but still
-    # folds base+adhoc? nothing movable -> no commit; the stale leaf
-    # must STILL be deleted by the entry cleanup
+    head = index_head(spark, path)
+    batch = next(lb for lb in head["leaves"] if lb.startswith("add-"))
+    cell = head["leaves"][batch]["cells"][0]
+    stale = f"{data}/cell={cell}/txn=compact-stale"
+
+    # a copy of batch rows under an unlisted label
+    shutil.copytree(f"{data}/cell={cell}/txn={batch}", stale)
     stats = compact_index(spark, path, keep_last=10)
-    assert stats["folded_labels"] == 0
-    assert not os.path.exists(f"{data}/{victim}/txn=compact-1")
+    assert stats["folded_labels"] == 0  # only the build's leaf to fold
+    assert not os.path.exists(stale)
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
-    # and a run that DOES commit a new generation can never resurrect
-    # it: replant the stale leaf, fold with keep_last=0
-    shutil.copytree(
-        f"{data}/{victim}/{src_leaf}", f"{data}/{victim}/txn=compact-1"
-    )
+    # replant it: a run that DOES fold never picks it up
+    shutil.copytree(f"{data}/cell={cell}/txn={batch}", stale)
     stats2 = compact_index(spark, path, keep_last=0)
-    assert stats2["gen"] == 1 and stats2["folded_labels"] > 0
+    assert stats2["folded_labels"] == 4
+    assert not os.path.exists(stale)
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
 
 
-def test_retention_defers_physical_deletes(spark, tmp_path):
-    """r13 review finding (online serve-vs-compaction race): with
-    retention_s > 0 the superseded leaves survive the commit — a
-    reader holding the PRE-commit state keeps a consistent snapshot —
-    and are reclaimed only by a later run once aged past the window.
-    New readers exclude them immediately; the dead copies are never
-    re-folded."""
+def test_retention_defers_physical_deletes(spark, tmp_path, monkeypatch):
+    """With retention_s > 0 the folded leaves survive the commit — a
+    reader holding the PRE-commit version keeps a consistent snapshot
+    — and are reclaimed only by a later run once the window has
+    passed. New readers use the head's leaves at once."""
     import time
+    import types
 
-    emb = _emb(spark)
     path = str(tmp_path / "idx")
-    write_ivf_index(
-        emb.where("vec_id % 2 = 0"), path, n_cells=4, iters=1,
-        sample_mod=2,
-    )
-    for b in range(3):
-        append_ivf_index(
-            emb.where(f"vec_id % 2 = 1 and vec_id % 3 = {b}"), path,
-            txn=("a", b),
-        )
-    q = emb.where("vec_id < 3")
-    truth = _topk_set(ann_topk_indexed(spark, path, q, k=8, nprobe=4))
-    leaves0 = sum(len(v) for v in _leaves(path).values())
+    q, truth = _streamed_ivf(spark, path)
+    leaves0 = disk_leaves(path)
     stats = compact_index(spark, path, keep_last=0, retention_s=3600)
-    assert stats["folded_labels"] > 0
-    # superseded leaves still on disk (deferred), plus the new fold
-    assert sum(len(v) for v in _leaves(path).values()) > leaves0
-    state = _load_compaction_state(spark, path)
-    assert state["exclude"], "retention must keep the exclude set live"
-    # new readers exclude the dead copies: result identical, no dupes
+    assert stats["folded_labels"] == 4
+    head = index_head(spark, path)
+    # the folded leaves are still on disk, beside the new fold
+    assert disk_leaves(path) == leaves0 | listed_leaves(head)
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
-    # a second run inside the window folds nothing new and keeps them
+    # a second run inside the window folds nothing and keeps them
     stats2 = compact_index(spark, path, keep_last=0, retention_s=3600)
     assert stats2["folded_labels"] == 0
-    assert _load_compaction_state(spark, path)["exclude"]
-    # age the exclusions out (rewrite timestamps), then reclaim
-    from pandabase_spark.operators.similarity import (
-        _commit_compaction_state,
+    assert disk_leaves(path) == leaves0 | listed_leaves(head)
+    # two hours later the window has passed: reclaimed
+    later = time.time() + 7200
+    monkeypatch.setattr(
+        similarity, "time", types.SimpleNamespace(time=lambda: later)
     )
-
-    aged = {
-        **state,
-        "exclude_until": {lb: 1.0 for lb in state["exclude"]},
-    }
-    _commit_compaction_state(spark, path, aged)
     compact_index(spark, path, keep_last=0, retention_s=3600)
-    state3 = _load_compaction_state(spark, path)
-    assert state3["exclude"] == []
+    monkeypatch.undo()
+    assert disk_leaves(path) == listed_leaves(head)
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
-    # only the compact leaf (+ nothing else foldable) remains per cell
-    for tds in _leaves(path).values():
-        assert all(td.startswith("txn=compact-") for td in tds), tds
 
 
 def test_first_compaction_crash_mid_rename_never_served_wrong(
     spark, tmp_path, monkeypatch
 ):
-    """r13 second review pass: on a NEVER-compacted index the serve
-    path applies no generation filter (no state sidecar), so a crash
-    during the first fold's rename phase used to expose the partial
-    compact-1 leaves as live duplicates. compact_index now commits
-    the default state BEFORE staging anything — pinned here by
-    crashing the very first rename and asserting the serve result is
-    still exact and a re-run converges."""
+    """A crash after the first rename of a fold leaves a partial fold
+    leaf on disk. No version lists it, so the serve result is still
+    exact, and a re-run folds again and deletes it."""
     import pandabase_spark.fs as fsmod
 
-    emb = _emb(spark)
     path = str(tmp_path / "idx")
-    write_ivf_index(
-        emb.where("vec_id % 2 = 0"), path, n_cells=4, iters=1,
-        sample_mod=2,
-    )
-    append_ivf_index(emb.where("vec_id % 2 = 1"), path, txn=("a", 0))
-    append_ivf_index(emb.limit(0), path, txn=("a", 1))
-    q = emb.where("vec_id < 3")
-    truth = _topk_set(ann_topk_indexed(spark, path, q, k=8, nprobe=4))
+    q, truth = _streamed_ivf(spark, path, n_batches=2)
+    v0 = index_head(spark, path)["v"]
 
     real_rename = fsmod.HadoopFS.rename_dir
     calls = {"n": 0}
@@ -471,19 +436,16 @@ def test_first_compaction_crash_mid_rename_never_served_wrong(
         compact_index(spark, path, keep_last=0)
     monkeypatch.setattr(fsmod.HadoopFS, "rename_dir", real_rename)
     assert calls["n"] == 1
-    # the partial compact-1 leaf exists, but the sidecar was committed
-    # at entry (gen=0) so the serve filter ignores the uncommitted gen
-    assert any(
-        "txn=compact-1" in tds for tds in _leaves(path).values()
-    )
-    state = _load_compaction_state(spark, path)
-    assert state is not None and state["gen"] == 0
+    head = index_head(spark, path)
+    assert head["v"] == v0
+    assert any(lb.startswith("compact-") for _, lb in disk_leaves(path))
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
-    # re-run converges: fold commits, serve still exact
+    # re-run converges: the fold commits, the partial one is deleted
     stats = compact_index(spark, path, keep_last=0)
-    assert stats["gen"] == 1 and stats["folded_labels"] > 0
+    assert stats["gen"] == v0 + 1 and stats["folded_labels"] == 3
+    assert disk_leaves(path) == listed_leaves(index_head(spark, path))
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth

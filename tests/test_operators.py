@@ -968,28 +968,42 @@ def test_persisted_ivf_index_identical_to_in_memory(spark, tmp_path):
 
 
 def test_persisted_ivf_index_empty_and_missing_cells(spark, tmp_path):
-    """A probed cell with no data directory is a no-op, not a crash:
-    ivf_centroids deliberately carries forward centroids for empty
-    cells, so the quantizer can name cells partitionBy never wrote.
-    An empty query set short-circuits to an empty result with the
-    contract schema."""
+    """A probed cell the head version lists no leaf for is a no-op, not
+    a crash: ivf_centroids deliberately carries forward centroids for
+    empty cells, so the quantizer can name cells partitionBy never
+    wrote. An empty query set short-circuits to an empty result with
+    the contract schema."""
+    from pandabase_spark.fs import HadoopFS
     from pandabase_spark.operators.similarity import (
-        ann_topk_indexed, write_ivf_index,
+        _commit, ann_topk_indexed, write_ivf_index,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     path = str(tmp_path / "ivf_sparse")
     write_ivf_index(emb, path, n_cells=8, iters=2, sample_mod=2)
-    # force a quantizer/data mismatch: drop two cell directories so
-    # every nprobe=8 probe set includes cells with no data partition
-    import shutil, os
+    fs = HadoopFS(spark)
 
-    dirs = sorted(
-        d for d in os.listdir(f"{path}/data") if d.startswith("cell=")
+    def drop_cells(keep):
+        """Commit a version that lists only the cells ``keep`` allows."""
+        from pandabase_spark import kt_log
+
+        def change(head):
+            leaves = {
+                lb: {**leaf, "cells": [c for c in leaf["cells"] if keep(c)]}
+                for lb, leaf in head["leaves"].items()
+            }
+            return {**head, "leaves": leaves}
+
+        return _commit(fs, path, kt_log.head(fs, path), change)
+
+    # force a quantizer/data mismatch: unlist two cells so every
+    # nprobe=8 probe set includes cells with no listed leaf
+    cells = sorted(
+        c for leaf in drop_cells(lambda c: True)["leaves"].values()
+        for c in leaf["cells"]
     )
-    assert len(dirs) >= 3
-    for d in dirs[:2]:
-        shutil.rmtree(f"{path}/data/{d}")
+    assert len(cells) >= 3
+    drop_cells(lambda c: c not in cells[:2])
     q = emb.where("vec_id < 3")
     out = ann_topk_indexed(spark, path, q, k=5, nprobe=8)
     rows = out.collect()
@@ -1001,83 +1015,118 @@ def test_persisted_ivf_index_empty_and_missing_cells(spark, tmp_path):
     )
     assert empty.collect() == []
     assert empty.columns == ["query_id", "vec_id", "cosine", "rank"]
-    # index whose data dir holds NO cell partition at all (the empty-
-    # corpus shape): the old lit(False) fallback read the data dir and
-    # died on 'unable to infer schema' (ADVICE r9) — now an empty
-    # contract result with zero reads
-    for d in dirs[2:]:
-        shutil.rmtree(f"{path}/data/{d}")
+    # an index whose head lists no leaf at all (the empty-corpus
+    # shape): an empty contract result with zero reads
+    drop_cells(lambda c: False)
     bare = ann_topk_indexed(spark, path, q, k=5, nprobe=8)
     assert bare.collect() == []
     assert bare.columns == ["query_id", "vec_id", "cosine", "rank"]
 
 
+def _claim_v1(path, artifacts) -> str:
+    """Commit version 1 of an index with no leaves, naming the
+    artifacts file ``artifacts``."""
+    import json
+    import os
+
+    from pandabase_spark import kt_log
+
+    os.makedirs(f"{path}/_pb_log")
+    with open(kt_log.version_path(path, 1), "w") as fh:
+        json.dump({
+            "v": 1, "ts": 0.0, "artifacts": artifacts,
+            "schema": "vec_id bigint", "txns": {}, "leaves": {},
+        }, fh)
+    return path
+
+
+def _hand_index(spark, path, rows) -> str:
+    """An index with no leaves whose artifacts file holds ``rows``
+    (tuples in the artifacts schema), committed as version 1."""
+    from pandabase_spark.operators.similarity import _ARTIFACTS_SCHEMA
+
+    spark.createDataFrame(rows, _ARTIFACTS_SCHEMA).coalesce(1).write.parquet(
+        f"{path}/artifacts-hand"
+    )
+    return _claim_v1(path, "artifacts-hand")
+
+
 def test_load_centroids_requires_dense_cell_ids(spark, tmp_path):
     """The literal scorers name a cell by its list position, so the
-    persisted sidecar must hold cells 0..n-1: rows in any file order
+    persisted quantizer must hold cells 0..n-1: rows in any file order
     load sorted by cell, and a gap ({0, 2}) raises instead of quietly
     renumbering cell 2 as cell 1."""
     from pandabase_spark.operators.similarity import _load_index
 
-    schema = "cell int, cvec array<double>"
-    ok = str(tmp_path / "ok")
-    spark.createDataFrame(
-        [(1, [0.0, 1.0]), (0, [1.0, 0.0])], schema
-    ).coalesce(1).write.parquet(f"{ok}/centroids")
+    meta = ("meta", None, None, None, False, None)
+    ok = _hand_index(spark, str(tmp_path / "ok"), [
+        ("centroids", 1, None, None, None, [0.0, 1.0]),
+        ("centroids", 0, None, None, None, [1.0, 0.0]), meta,
+    ])
     assert _load_index(spark, ok)["centroids"] == [[1.0, 0.0], [0.0, 1.0]]
 
-    gap = str(tmp_path / "gap")
-    spark.createDataFrame(
-        [(0, [1.0, 0.0]), (2, [0.0, 1.0])], schema
-    ).coalesce(1).write.parquet(f"{gap}/centroids")
+    gap = _hand_index(spark, str(tmp_path / "gap"), [
+        ("centroids", 0, None, None, None, [1.0, 0.0]),
+        ("centroids", 2, None, None, None, [0.0, 1.0]), meta,
+    ])
     with pytest.raises(ValueError, match="0..n-1"):
         _load_index(spark, gap)
 
 
 def test_load_index_sidecar_rules(spark, tmp_path):
-    """The one-job loader keeps the per-sidecar rules: no ``meta`` dir
-    means a raw index; a ``meta`` dir that cannot be read makes the
-    load raise (never a silent raw); a ``codebooks`` sidecar that
-    exists but is empty raises."""
+    """The one-job loader's rules for the artifacts file: no codebook
+    rows means a raw index; a file that cannot be read makes the load
+    raise (never a silent raw); a file without exactly one meta row
+    raises; a residual index loads its anchors as a frame."""
     from py4j.protocol import Py4JJavaError
 
     from pandabase_spark.operators.similarity import _load_index
 
-    def index_with_centroids(name):
-        path = str(tmp_path / name)
-        spark.createDataFrame(
-            [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-            "cell int, cvec array<double>",
-        ).coalesce(1).write.parquet(f"{path}/centroids")
-        return path
-
-    raw = _load_index(spark, index_with_centroids("raw"))
-    assert raw["residual"] is False
+    cents = [
+        ("centroids", 0, None, None, None, [1.0, 0.0]),
+        ("centroids", 1, None, None, None, [0.0, 1.0]),
+    ]
+    raw = _load_index(spark, _hand_index(
+        spark, str(tmp_path / "raw"),
+        cents + [("meta", None, None, None, False, None)],
+    ))
+    assert raw["residual"] is False and raw["head"]["v"] == 1
     assert raw["codebooks"] is None and raw["anchors"] is None
 
-    bad = index_with_centroids("bad_meta")
-    (tmp_path / "bad_meta" / "meta").mkdir()
-    (tmp_path / "bad_meta" / "meta" / "part-00000.parquet").write_bytes(
-        b"not a parquet file"
-    )
-    with pytest.raises(Py4JJavaError, match="meta/part-00000.parquet"):
+    bad = _hand_index(spark, str(tmp_path / "bad"), cents)
+    part = next((tmp_path / "bad" / "artifacts-hand").glob("part-*"))
+    part.write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="artifacts-hand/part-"):
         _load_index(spark, bad)
 
-    empty = index_with_centroids("empty_books")
-    spark.createDataFrame(
-        [], "j int, code int, cvec array<double>"
-    ).coalesce(1).write.parquet(f"{empty}/codebooks")
-    with pytest.raises(ValueError, match="empty codebook"):
-        _load_index(spark, empty)
+    no_meta = _hand_index(spark, str(tmp_path / "no_meta"), cents)
+    with pytest.raises(ValueError, match="one meta row"):
+        _load_index(spark, no_meta)
+
+    res = _load_index(spark, _hand_index(
+        spark, str(tmp_path / "res"),
+        cents + [
+            ("codebooks", None, 0, 0, None, [0.5]),
+            ("codebooks", None, 1, 0, None, [0.25]),
+            ("meta", None, None, None, True, None),
+            ("anchors", 1, None, None, None, [2.0, 3.0]),
+        ],
+    ))
+    assert res["residual"] is True
+    assert res["codebooks"] == [[[0.5]], [[0.25]]]
+    assert [tuple(r) for r in res["anchors"].collect()] == [(1, [2.0, 3.0])]
 
 
 def test_persisted_index_job_counts(spark, tmp_path):
-    """Serving a persisted index costs one job to load every sidecar,
-    one to expand the probes and the scan itself; a txn append costs
-    the load and the write. Counted per verb in its own job group."""
+    """Serving a persisted index costs one job to load the artifacts,
+    one to expand the probes and the scan of the head's exact leaf
+    paths (no schema inference); a txn append costs the load and the
+    write; a compaction one scan of the folded leaves and one write.
+    Counted per verb in its own job group."""
     from pandabase_spark.operators.similarity import (
         ann_topk_indexed, ann_topk_ivfpq_indexed, append_ivfpq_index,
-        ivf_centroids, pq_codebooks, write_ivf_index, write_ivfpq_index,
+        compact_index, ivf_centroids, pq_codebooks, write_ivf_index,
+        write_ivfpq_index,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -1104,15 +1153,19 @@ def test_persisted_index_job_counts(spark, tmp_path):
     n = jobs("pin-ivfpq-query", lambda: ann_topk_ivfpq_indexed(
         spark, pq_path, q, k=10, nprobe=4
     ).collect())
-    assert n <= 6, f"ann_topk_ivfpq_indexed ran {n} jobs (budget 6)"
+    assert n <= 5, f"ann_topk_ivfpq_indexed ran {n} jobs (budget 5)"
     n = jobs("pin-ivf-query", lambda: ann_topk_indexed(
         spark, ivf_path, q, k=10, nprobe=4
     ).collect())
-    assert n <= 6, f"ann_topk_indexed ran {n} jobs (budget 6)"
+    assert n <= 5, f"ann_topk_indexed ran {n} jobs (budget 5)"
     n = jobs("pin-ivfpq-append", lambda: append_ivfpq_index(
         emb.where("vec_id < 100"), pq_path, txn=("pin", 0)
     ))
     assert n <= 3, f"append_ivfpq_index ran {n} jobs (budget 3)"
+    n = jobs("pin-compact", lambda: compact_index(
+        spark, pq_path, keep_last=0
+    ))
+    assert n <= 2, f"compact_index ran {n} jobs (budget 2)"
 
 
 def test_append_ivf_index_matches_rebuild_and_bruteforce(spark, tmp_path):
@@ -1176,18 +1229,19 @@ def test_append_ivf_index_matches_rebuild_and_bruteforce(spark, tmp_path):
 def test_append_ivf_index_txn_replay_idempotent(spark, tmp_path):
     """r11 verdict ask #6 — the lost-checkpoint replay contract, the
     stream_upsert-style probe for the IVF index: a micro-batch
-    re-delivered with the SAME ``txn=(app, batch_id)`` must REPLACE
-    its previous attempt (dynamic partition overwrite of its own
-    ``txn=`` sub-partitions), never double-insert. Asserts: (a) after
-    a replay the corpus row count is unchanged and has no duplicate
-    ids, (b) full-probe search still equals brute force, (c) a
-    DIFFERENT batch id under the same app does append, (d) untagged
-    appends keep plain at-least-once semantics (the documented
-    non-streaming contract)."""
+    re-delivered with the SAME ``txn=(app, batch_id)`` is a no-op (the
+    head's watermark for the app already holds it), never a
+    double-insert. Asserts, through the head version: (a) after a
+    replay the index rows and the version are unchanged, with no
+    duplicate ids, (b) full-probe search still equals brute force,
+    (c) a DIFFERENT batch id under the same app does append, (d)
+    untagged appends keep plain at-least-once semantics (the
+    documented non-streaming contract)."""
     from pandabase_spark.operators.similarity import (
         ann_topk_indexed, append_ivf_index, cosine_topk,
         write_ivf_index,
     )
+    from tests.test_index_compaction import index_head, index_rows
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     path = str(tmp_path / "idx")
@@ -1198,10 +1252,13 @@ def test_append_ivf_index_txn_replay_idempotent(spark, tmp_path):
     app = "stream:/ckpt/annr"
     batch1 = emb.where("vec_id % 3 = 1")
     append_ivf_index(batch1, path, txn=(app, 0))
-    data = lambda: spark.read.parquet(f"{path}/data")
+    data = lambda: index_rows(spark, path)
     n_after_first = data().count()
-    # lost checkpoint: batch 0 re-delivered verbatim → converges
+    head = index_head(spark, path)
+    assert head["txns"] == {app: 0}
+    # lost checkpoint: batch 0 re-delivered verbatim → a no-op
     append_ivf_index(batch1, path, txn=(app, 0))
+    assert index_head(spark, path) == head
     assert data().count() == n_after_first
     assert (
         data().groupBy("vec_id").count().where("count > 1").count() == 0
@@ -1220,7 +1277,7 @@ def test_append_ivf_index_txn_replay_idempotent(spark, tmp_path):
     ))
     assert got == as_set(cosine_topk(emb, emb.where("vec_id < 3"), k=8))
     # untagged appends stay at-least-once by contract: repeating one
-    # DOES duplicate (each lands under a fresh adhoc txn label)
+    # DOES duplicate (each lands as a fresh leaf)
     n0 = data().count()
     extra = emb.where("vec_id < 2")
     append_ivf_index(extra, path)
@@ -1297,7 +1354,9 @@ def test_ivfpq_persisted_index_serves_and_appends(spark, tmp_path):
         assert got_q == want, qid
 
     # (c) frozen-artifact append + replay convergence
-    data = lambda: spark.read.parquet(f"{path}/data")
+    from tests.test_index_compaction import index_rows
+
+    data = lambda: index_rows(spark, path)
     n0 = data().count()
     half = emb.where("vec_id >= 1000")
     rest = emb.where("vec_id < 1000")
@@ -1401,7 +1460,9 @@ def test_ivfpq_residual_encoding(spark, tmp_path):
         assert got_q == want, qid
 
     # (c) residual append + replay convergence on the exact index
-    data = lambda: spark.read.parquet(f"{xpath}/data")
+    from tests.test_index_compaction import index_rows
+
+    data = lambda: index_rows(spark, xpath)
     n0 = data().count()
     extra = corpus.withColumn("vec_id", F.col("vec_id") + 10_000)
     append_ivfpq_index(extra, xpath, txn=("r", 0))
@@ -1422,34 +1483,43 @@ def test_ivfpq_residual_encoding(spark, tmp_path):
         assert ids == {qid, qid + 10_000}, (qid, ids)
 
 
-def test_centroid_literal_rejects_nonfinite(spark):
+def test_centroid_literal_rejects_nonfinite(spark, tmp_path):
     """A non-finite centroid component must fail the index build
-    loudly: Spark's non-ANSI string→double cast parses repr's
-    'inf'/'nan' spellings to NULL, so letting one through would
-    silently persist a quantizer with null array elements."""
+    loudly: every probe distance against that cell would be NaN, so
+    letting one through would silently persist a broken quantizer.
+    Finite centroids round-trip through the artifacts file
+    bit-exactly."""
+    import os
+
     import pytest
 
-    from pandabase_spark.operators.similarity import _centroids_literal_df
+    from pandabase_spark.operators.similarity import (
+        _load_index, _write_artifacts,
+    )
 
+    path = str(tmp_path / "ix")
     for bad in (float("inf"), float("-inf"), float("nan")):
         with pytest.raises(ValueError, match="non-finite"):
-            _centroids_literal_df(spark, [[1.0, 2.0], [0.5, bad]])
-    # finite centroids still build and round-trip bit-exactly
-    df = _centroids_literal_df(spark, [[1.0, 2.5e-17], [-3.0, 4.0]])
-    got = {r["cell"]: r["cvec"] for r in df.collect()}
-    assert got == {0: [1.0, 2.5e-17], 1: [-3.0, 4.0]}
+            _write_artifacts(spark, path, "bad", [[1.0, 2.0], [0.5, bad]])
+    assert not os.path.exists(path)
+    name = _write_artifacts(spark, path, "ok", [[1.0, 2.5e-17], [-3.0, 4.0]])
+    got = _load_index(spark, _claim_v1(path, name))
+    assert got["centroids"] == [[1.0, 2.5e-17], [-3.0, 4.0]]
+    assert got["residual"] is False
 
 
 def test_ivfpq_shared_training_matches_sequential(spark, tmp_path):
     """The r14 builder-sharing seam: write_ivfpq_index training BOTH
     artifacts itself (one persisted sample + one seed TakeOrdered
-    feeding both trainers, sidecar writes overlapped with the data
-    write) must produce a byte-identical index to the sequential
-    pipeline it replaced — standalone ivf_centroids, standalone
-    pq_codebooks over the assigned corpus, injected into the writer."""
+    feeding both trainers) must produce an index identical to the
+    sequential pipeline it replaced — standalone ivf_centroids,
+    standalone pq_codebooks over the assigned corpus, injected into
+    the writer: the same artifacts and the same encoded rows."""
     from pandabase_spark.operators.similarity import (
-        ivf_assign, ivf_centroids, pq_codebooks, write_ivfpq_index,
+        _load_index, ivf_assign, ivf_centroids, pq_codebooks,
+        write_ivfpq_index,
     )
+    from tests.test_index_compaction import index_rows
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cents = ivf_centroids(emb, n_cells=8, iters=2, sample_mod=2)
@@ -1466,19 +1536,15 @@ def test_ivfpq_shared_training_matches_sequential(spark, tmp_path):
         emb, p_shared, n_cells=8, m=8, n_codes=16, iters=2, sample_mod=2,
     )
 
-    def part(path, sub, cols):
+    def artifacts(path):
+        index = _load_index(spark, path)
+        return [index[k] for k in ("centroids", "codebooks", "residual")]
+
+    def rows(path):
         return sorted(
-            tuple(
-                tuple(v) if isinstance(v, list) else v
-                for v in (r[c] for c in cols)
-            )
-            for r in spark.read.parquet(f"{path}/{sub}").collect()
+            (r["vec_id"], r["cell"], tuple(r["pq_code"]))
+            for r in index_rows(spark, path).collect()
         )
 
-    for sub, cols in (
-        ("centroids", ["cell", "cvec"]),
-        ("codebooks", ["j", "code", "cvec"]),
-        ("meta", ["residual"]),
-        ("data", ["vec_id", "cell", "pq_code"]),
-    ):
-        assert part(p_seq, sub, cols) == part(p_shared, sub, cols), sub
+    assert artifacts(p_seq) == artifacts(p_shared)
+    assert rows(p_seq) == rows(p_shared)

@@ -694,8 +694,8 @@ def test_skipping_write_job_budgets(spark, tmp_path):
 def test_ivfpq_build_job_budget(spark, tmp_path):
     """Training the quantizer and the codebooks is ONE collect of the
     capped hash-ordered sample; Lloyd runs on the driver. On a
-    parquet-backed corpus the whole build (collect, three sidecar
-    writes, the cell-partitioned data write) stays within 6 jobs, and
+    parquet-backed corpus the whole build (collect, the one artifacts
+    write, the cell-partitioned data write) stays within 4 jobs, and
     no job depends on the Lloyd iteration count: a per-iteration Spark
     aggregate would add 2 jobs per iteration per trainer. An in-memory
     corpus under the cap is collected without a sort, so it costs no
@@ -729,7 +729,7 @@ def test_ivfpq_build_job_budget(spark, tmp_path):
         ("parquet", spark.read.parquet(src)), ("memory", in_memory)
     ):
         counts = {iters: jobs(corpus, tag, iters) for iters in (2, 6)}
-        assert counts[2] == counts[6] <= 6, (tag, counts)
+        assert counts[2] == counts[6] <= 4, (tag, counts)
 
 
 def test_indexed_ann_probe_prunes_partitions(spark, tmp_path):
@@ -791,10 +791,9 @@ def test_analytic_job_budgets(spark):
 
 def test_compacted_index_probe_still_prunes_partitions(spark, tmp_path):
     """r13: compaction must not cost the serve path its planning-time
-    pruning — after folding txn leaves into compact-<gen>, the data
-    scan still carries a PartitionFilters entry on `cell` (the
-    compaction-state filter adds only partition-column predicates),
-    and unprobed cell directories stay unopened."""
+    pruning — after folding txn leaves into one new leaf per cell, the
+    scan of the head's leaf paths still carries a PartitionFilters
+    entry on `cell`, and unprobed cell directories stay unopened."""
     from pandabase_spark.operators.similarity import (
         ann_topk_indexed, append_ivf_index, compact_index,
         write_ivf_index,

@@ -152,7 +152,7 @@ def test_standalone_pq_codebooks_matches_shared_training(spark, tmp_path):
     import numpy as np
 
     from pandabase_spark.operators.similarity import (
-        pq_codebooks, write_ivfpq_index,
+        _load_index, pq_codebooks, write_ivfpq_index,
     )
 
     rng = np.random.default_rng(3)
@@ -166,7 +166,4 @@ def test_standalone_pq_codebooks_matches_shared_training(spark, tmp_path):
     write_ivfpq_index(
         emb, path, n_cells=4, m=4, n_codes=2, iters=2, sample_mod=2
     )
-    shared = [[None] * 2 for _ in range(4)]
-    for r in spark.read.parquet(f"{path}/codebooks").collect():
-        shared[r["j"]][r["code"]] = list(r["cvec"])
-    assert standalone == shared
+    assert standalone == _load_index(spark, path)["codebooks"]
