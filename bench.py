@@ -564,15 +564,10 @@ def main() -> None:
         append_ivfpq_index, compact_index,
     )
 
-    from pandabase_spark.operators.similarity import _load_index
-
-    # frozen artifacts loaded once for the 6-batch append loop (same
-    # hoist as the streaming ingest queries — r15)
-    _pq_art = _load_index(spark, pq_path)
     for b in range(6):
         append_ivfpq_index(
             emb.where(F.col("vec_id") % 97 == b), pq_path,
-            txn=("bench", b), _artifacts=_pq_art,
+            txn=("bench", b),
         )
     _cstats = {}
     timed("ivfpq_index_compact",

@@ -4940,12 +4940,6 @@ def streaming_ann_index_ingest(
     scratch = tempfile.mkdtemp(prefix="pb_annstream_")
     rest = e.where(F.col("vec_id") > half)
     rest.repartition(2).write.mode("overwrite").parquet(f"{scratch}/src")
-    # hoist the FROZEN quantizer out of foreachBatch: per-batch
-    # artifact re-reads buy nothing by the add-after-train contract
-    # (r15, guide §4.5 at the micro-batch level)
-    from pandabase_spark.operators.similarity import _load_index
-
-    art = _load_index(spark, path)
     with _stream_cycle(spark):
         stream = (
             spark.readStream.schema(rest.schema)
@@ -4957,7 +4951,6 @@ def streaming_ann_index_ingest(
             stream.writeStream.foreachBatch(
                 lambda batch, bid: append_ivf_index(
                     batch, path, txn=(f"stream:{ckpt}", bid),
-                    _artifacts=art,
                 )
             )
             .option("checkpointLocation", ckpt)
@@ -5312,13 +5305,6 @@ def streaming_ivfpq_index_ingest(
     scratch = tempfile.mkdtemp(prefix="pb_ivfpqstream_")
     rest = q16.where(F.col("vec_id") > half)
     rest.repartition(2).write.mode("overwrite").parquet(f"{scratch}/src")
-    # hoist the FROZEN quantizer + codebooks + residual flag out of
-    # foreachBatch: the per-batch artifact re-reads and the per-batch
-    # codebook driver collect buy nothing by the add-after-train
-    # contract (r15, guide §4.5 at the micro-batch level)
-    from pandabase_spark.operators.similarity import _load_index
-
-    art = _load_index(spark, path)
     with _stream_cycle(spark):
         stream = (
             spark.readStream.schema(rest.schema)
@@ -5331,7 +5317,6 @@ def streaming_ivfpq_index_ingest(
                 lambda batch, bid: append_ivfpq_index(
                     batch, path, vec_col="qvec",
                     txn=(f"stream:{ckpt}", bid),
-                    _artifacts=art,
                 )
             )
             .option("checkpointLocation", ckpt)

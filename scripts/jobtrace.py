@@ -3,12 +3,15 @@
 
 Builds a generated keyed table with ``stats_columns`` and
 ``bloom_columns`` plus a Delta copy in a temporary warehouse, then runs
-create, append, upsert, merge, compact, delta_append and
-delta_checkpoint. Then it writes seeded, clustered 64-dimensional unit
-vectors to parquet and runs the persisted IVFADC verbs on them:
-write_ivfpq_index (16 cells, m=8, 16 codes), append_ivfpq_index with
-``txn=``, compact_index and a single-vector ann_topk_ivfpq_indexed.
-Each verb runs in its own Spark job group. For every verb it prints
+create, append, upsert, merge, compact, delta_append,
+delta_checkpoint and delta_scan. Then it writes seeded, clustered
+64-dimensional unit vectors to parquet and runs the persisted IVFADC
+verbs on them: write_ivfpq_index (16 cells, m=8, 16 codes),
+append_ivfpq_index with ``txn=``, compact_index and a single-vector
+ann_topk_ivfpq_indexed, with the query row read from parquet and as a
+driver-local frame; then write_ivf_index and the same two
+single-vector ann_topk_indexed queries on the raw-vector index. Each
+verb runs in its own Spark job group. For every verb it prints
 the job count and, per job, the call sites Spark records as its stage
 names: the phase tree behind the verb's count. A DataFrameWriter write
 launched from the JVM bridge has no Python call site of its own, so
@@ -77,9 +80,10 @@ def trace_ann(spark, trace, root: str, rows: int) -> None:
     unit vectors (16 clusters, dim 64), read back from parquet."""
     import numpy as np
 
+    from pandabase_spark.localframe import local_frame
     from pandabase_spark.operators.similarity import (
-        ann_topk_ivfpq_indexed, append_ivfpq_index, compact_index,
-        write_ivfpq_index,
+        ann_topk_indexed, ann_topk_ivfpq_indexed, append_ivfpq_index,
+        compact_index, write_ivf_index, write_ivfpq_index,
     )
 
     rng = np.random.default_rng(1)
@@ -95,14 +99,23 @@ def trace_ann(spark, trace, root: str, rows: int) -> None:
     corpus = vectors.where(f"vec_id < {rows}")
     batch = vectors.where(f"vec_id >= {rows}")
     query = vectors.where("vec_id = 0")
+    local = local_frame(
+        spark, [tuple(r) for r in query.collect()], vectors.schema
+    )
     path = f"{root}/index"
     trace("ivfpq_build", lambda: write_ivfpq_index(
         corpus, path, n_cells=16, m=8, n_codes=16))
     trace("ivfpq_append", lambda: append_ivfpq_index(
         batch, path, txn=("jobtrace", 0)))
     trace("ivfpq_compact", lambda: compact_index(spark, path, keep_last=0))
-    trace("ivfpq_query", lambda: ann_topk_ivfpq_indexed(
-        spark, path, query, k=10, nprobe=4).collect())
+    for name, q in (("ivfpq_query", query), ("ivfpq_local_query", local)):
+        trace(name, lambda: ann_topk_ivfpq_indexed(
+            spark, path, q, k=10, nprobe=4).collect())
+    ivf = f"{root}/ivf_index"
+    trace("ivf_build", lambda: write_ivf_index(corpus, ivf, n_cells=16))
+    for name, q in (("ivf_query", query), ("ivf_local_query", local)):
+        trace(name, lambda: ann_topk_indexed(
+            spark, ivf, q, k=10, nprobe=4).collect())
 
 
 def main() -> None:
@@ -114,6 +127,7 @@ def main() -> None:
     from pandabase_spark.io import KeyedCatalog
     from pandabase_spark.session import get_spark
     from pandabase_spark.sources import delta_writer as dw
+    from pandabase_spark.sources.delta_reader import delta_scan
 
     spark = get_spark("jobtrace")
     spark.sparkContext.setLogLevel("ERROR")
@@ -180,6 +194,7 @@ def main() -> None:
         trace("delta_append", lambda: dw.delta_append(
             df.withColumn("k", F.col("k") + rows), bronze))
         trace("delta_checkpoint", lambda: dw.delta_checkpoint(spark, bronze))
+        trace("delta_scan", lambda: delta_scan(spark, bronze).collect())
         trace_ann(spark, trace, f"{wh}/ann", rows)
     finally:
         spark.stop()

@@ -1077,7 +1077,8 @@ def test_load_index_sidecar_rules(spark, tmp_path):
     """The one-job loader's rules for the artifacts file: no codebook
     rows means a raw index; a file that cannot be read makes the load
     raise (never a silent raw); a file without exactly one meta row
-    raises; a residual index loads its anchors as a frame."""
+    raises; a residual index loads its anchors as (cell, vector)
+    rows."""
     from py4j.protocol import Py4JJavaError
 
     from pandabase_spark.operators.similarity import _load_index
@@ -1114,15 +1115,21 @@ def test_load_index_sidecar_rules(spark, tmp_path):
     ))
     assert res["residual"] is True
     assert res["codebooks"] == [[[0.5]], [[0.25]]]
-    assert [tuple(r) for r in res["anchors"].collect()] == [(1, [2.0, 3.0])]
+    assert res["anchors"] == [(1, [2.0, 3.0])]
 
 
 def test_persisted_index_job_counts(spark, tmp_path):
-    """Serving a persisted index costs one job to load the artifacts,
-    one to expand the probes and the scan of the head's exact leaf
-    paths (no schema inference); a txn append costs the load and the
-    write; a compaction one scan of the folded leaves and one write.
-    Counted per verb in its own job group."""
+    """A persisted-index query runs the scan of the head's exact leaf
+    paths (no schema inference) and the top-k window, nothing more:
+    the artifacts come from the memo the build seeded, and the probes
+    ride the plan as a literal. A driver-local single-vector query
+    runs 2 jobs; a parquet query frame adds its collect. The first
+    query after the memo is cleared adds one artifacts load. A txn
+    append runs the leaf write, a replayed txn batch no job at all; a
+    compaction one scan of the folded leaves and one write. Counted
+    per verb in its own job group."""
+    from pandabase_spark.localframe import local_frame
+    from pandabase_spark.operators import similarity
     from pandabase_spark.operators.similarity import (
         ann_topk_indexed, ann_topk_ivfpq_indexed, append_ivfpq_index,
         compact_index, ivf_centroids, pq_codebooks, write_ivf_index,
@@ -1140,6 +1147,10 @@ def test_persisted_index_job_counts(spark, tmp_path):
     ivf_path = str(tmp_path / "ivf")
     write_ivf_index(emb, ivf_path, n_cells=8, iters=2, sample_mod=2)
     q = emb.where("vec_id < 2")
+    one = local_frame(
+        spark, [tuple(r) for r in emb.where("vec_id = 0").collect()],
+        emb.schema,
+    )
     sc = spark.sparkContext
 
     def jobs(group, fn):
@@ -1150,22 +1161,208 @@ def test_persisted_index_job_counts(spark, tmp_path):
             sc.setJobGroup(None, None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    n = jobs("pin-ivfpq-query", lambda: ann_topk_ivfpq_indexed(
-        spark, pq_path, q, k=10, nprobe=4
-    ).collect())
-    assert n <= 5, f"ann_topk_ivfpq_indexed ran {n} jobs (budget 5)"
-    n = jobs("pin-ivf-query", lambda: ann_topk_indexed(
-        spark, ivf_path, q, k=10, nprobe=4
-    ).collect())
-    assert n <= 5, f"ann_topk_indexed ran {n} jobs (budget 5)"
-    n = jobs("pin-ivfpq-append", lambda: append_ivfpq_index(
-        emb.where("vec_id < 100"), pq_path, txn=("pin", 0)
+    budgets = [
+        ("ivfpq-local-query", 2, lambda: ann_topk_ivfpq_indexed(
+            spark, pq_path, one, k=10, nprobe=4).collect()),
+        ("ivfpq-query", 3, lambda: ann_topk_ivfpq_indexed(
+            spark, pq_path, q, k=10, nprobe=4).collect()),
+        ("ivf-local-query", 2, lambda: ann_topk_indexed(
+            spark, ivf_path, one, k=10, nprobe=4).collect()),
+        ("ivf-query", 3, lambda: ann_topk_indexed(
+            spark, ivf_path, q, k=10, nprobe=4).collect()),
+        ("ivfpq-append", 2, lambda: append_ivfpq_index(
+            emb.where("vec_id < 100"), pq_path, txn=("pin", 0))),
+        ("ivfpq-replay", 0, lambda: append_ivfpq_index(
+            emb.where("vec_id < 100"), pq_path, txn=("pin", 0))),
+        ("compact", 2, lambda: compact_index(spark, pq_path, keep_last=0)),
+        ("cold-query", 3, lambda: (
+            similarity._memo.clear(),
+            ann_topk_ivfpq_indexed(
+                spark, pq_path, one, k=10, nprobe=4).collect(),
+        )),
+    ]
+    for name, budget, fn in budgets:
+        n = jobs(f"pin-{name}", fn)
+        assert n <= budget, f"{name} ran {n} jobs (budget {budget})"
+
+
+def test_artifacts_memo_is_thread_safe():
+    """The artifacts memo is shared by every driver thread (a streaming
+    sink's foreachBatch runs on its own): with more threads than
+    cores and a short switch interval, concurrent puts and hits raise
+    nothing, a hit returns the entry put under its key, and the memo
+    stays within its bound while entries are evicted."""
+    import sys
+    import threading
+
+    from pandabase_spark.operators import similarity as S
+
+    class FS:
+        def canonical(self, p):
+            return p
+
+    saved = list(S._memo.items())
+    interval = sys.getswitchinterval()
+    errors = []
+
+    def run(worker, n):
+        threads = [
+            threading.Thread(target=worker, args=(t,)) for t in range(n)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+
+    def hits(t):
+        try:
+            for i in range(2000):
+                path = f"/hot{(t + i) % (S._MEMO_ENTRIES // 2)}"
+                S._memo_put((path, "a"), {"path": path})
+                got = S._index_artifacts(None, FS(), path, {"artifacts": "a"})
+                if got != {"path": path}:
+                    errors.append((path, got))
+        except Exception as exc:  # collected for the assert below
+            errors.append(exc)
+
+    def evictions(t):
+        try:
+            for i in range(2000):
+                S._memo_put((f"/cold{t}-{i}", "a"), {})
+        except Exception as exc:
+            errors.append(exc)
+
+    try:
+        sys.setswitchinterval(1e-6)
+        S._memo.clear()
+        run(hits, 8)
+        run(evictions, 8)
+        assert len(S._memo) <= S._MEMO_ENTRIES
+    finally:
+        sys.setswitchinterval(interval)
+        S._memo.clear()
+        S._memo.update(saved)
+    assert not errors, errors[:3]
+
+
+def test_persisted_ivfpq_identical_to_in_memory(spark, tmp_path):
+    """Driver-side probe expansion selects exactly the cells the Spark
+    scorer selects, and the probe literal carries any query id: (a)
+    with the same centroids and codebooks, a multi-query batch keyed
+    by STRING ids (one holding a quote and a backslash) at nprobe <
+    n_cells returns rows identical to the in-memory ann_topk_ivfpq;
+    (b) the same ids on a residual index with enumerated codebooks at
+    nprobe == n_cells equal brute-force L2 top-k (the rule of the
+    ann_topk_ivfpq_residual_full oracle: planted integer centers as
+    quantizer and anchors keep the arithmetic exact)."""
+    from pandabase_spark.operators.similarity import (
+        ann_topk_ivfpq, ann_topk_ivfpq_indexed, ivf_centroids,
+        pq_codebooks, write_ivfpq_index,
+    )
+
+    quoted = "it's \\ \"q1\""
+    qid = F.when(F.col("vec_id") == 1, F.lit(quoted)).otherwise(
+        F.concat(F.lit("q"), F.col("vec_id").cast("string"))
+    ).alias("qid")
+    as_set = lambda df: {
+        (r["query_id"], r["vec_id"], r["approx_dist"], r["rank"])
+        for r in df.collect()
+    }
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = ivf_centroids(emb, n_cells=8, iters=2, sample_mod=2)
+    books = pq_codebooks(emb, m=8, k=16, iters=2, sample_mod=2)
+    path = str(tmp_path / "ivfpq")
+    write_ivfpq_index(emb, path, centroids=cents, codebooks=books)
+    q = emb.where("vec_id < 6").select(qid, "embedding")
+    disk = as_set(ann_topk_ivfpq_indexed(
+        spark, path, q, query_id_col="qid", k=8, nprobe=3
     ))
-    assert n <= 3, f"append_ivfpq_index ran {n} jobs (budget 3)"
-    n = jobs("pin-compact", lambda: compact_index(
-        spark, pq_path, keep_last=0
+    mem = as_set(ann_topk_ivfpq(
+        emb, q, query_id_col="qid", k=8, n_cells=8, nprobe=3,
+        centroids=cents, codebooks=books,
     ))
-    assert n <= 2, f"compact_index ran {n} jobs (budget 2)"
+    assert disk == mem
+    assert {x[0] for x in disk} == {quoted, "q0", "q2", "q3", "q4", "q5"}
+
+    tri = F.expr(
+        "transform(sequence(1, 16), i -> case "
+        "when element_at(embedding, (i-1)*4+1) > 0.2D then 1.0D "
+        "when element_at(embedding, (i-1)*4+1) < -0.2D then -1.0D "
+        "else 0.0D end)"
+    )
+    center = F.expr(
+        "transform(sequence(1, 16), i -> cast(case "
+        "when (i - 1) % 4 = vec_id % 4 then 8 * (vec_id % 4 + 1) "
+        "else 0 end as double))"
+    )
+    corpus = emb.select(
+        "vec_id", F.zip_with(center, tri, lambda a, b: a + b).alias("qvec")
+    )
+    centers = [
+        [float(8 * (j + 1)) if i % 4 == j else 0.0 for i in range(16)]
+        for j in range(4)
+    ]
+    rpath = str(tmp_path / "residual")
+    write_ivfpq_index(
+        corpus, rpath, vec_col="qvec", centroids=centers, m=8,
+        residual=True, exact_codebooks=True, anchors=centers,
+    )
+    got = as_set(ann_topk_ivfpq_indexed(
+        spark, rpath, corpus.where("vec_id < 6").select(qid, "qvec"),
+        vec_col="qvec", query_id_col="qid", k=8, nprobe=4,
+    ))
+    vecs = {r["vec_id"]: r["qvec"] for r in corpus.collect()}
+    want = set()
+    for v in range(6):
+        name = quoted if v == 1 else f"q{v}"
+        top = sorted(
+            (round(sum((a - b) ** 2 for a, b in zip(vecs[v], x)), 6), i)
+            for i, x in vecs.items()
+        )[:8]
+        want |= {(name, i, d, r + 1) for r, (d, i) in enumerate(top)}
+    assert got == want
+
+
+def test_indexed_query_vector_rules(spark, tmp_path):
+    """A query vector that is null, of the wrong length or holds a
+    null, NaN or infinite component has no nearest cells: the serve
+    paths raise ValueError naming its query id, where such a query
+    once probed arbitrary cells silently."""
+    import re
+
+    from pandabase_spark.operators.similarity import (
+        ann_topk_indexed, ann_topk_ivfpq_indexed, write_ivf_index,
+        write_ivfpq_index,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    ivf = str(tmp_path / "ivf")
+    write_ivf_index(emb, ivf, n_cells=4, iters=2, sample_mod=2)
+    pq = str(tmp_path / "pq")
+    write_ivfpq_index(emb, pq, n_cells=4, m=8, n_codes=16, sample_mod=2)
+    dim = len(emb.first()["embedding"])
+    ok = [0.5] * (dim - 1)
+    cases = {
+        "null": None,
+        "short": ok,
+        "long": ok + [0.5, 0.5],
+        "nan": ok + [float("nan")],
+        "inf": [float("-inf")] + ok,
+        "null-component": ok + [None],
+    }
+    for name, vec in cases.items():
+        qf = spark.createDataFrame(
+            [(7, "fine", ok + [0.5]), (8, f"bad '{name}'", vec)],
+            "vec_id int, qid string, embedding array<double>",
+        )
+        for serve, path in ((ann_topk_indexed, ivf),
+                            (ann_topk_ivfpq_indexed, pq)):
+            with pytest.raises(ValueError, match=re.escape(
+                repr(f"bad '{name}'")
+            )):
+                serve(spark, path, qf, query_id_col="qid", k=3)
 
 
 def test_append_ivf_index_matches_rebuild_and_bruteforce(spark, tmp_path):
