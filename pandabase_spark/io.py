@@ -100,7 +100,7 @@ from pandabase_spark.types import (
     coerce_to_table_schema,
     coercion_class,
     infer_schema_pandas,
-    narrow_spark_schema,
+    narrowing_aggs,
     narrowing_aggs_grouped,
     pandas_to_spark,
     spark_to_logical,
@@ -2366,73 +2366,11 @@ class KeyedCatalog:
             raise NameError(
                 "generated columns are declared at create time"
             )
-        tm = self.meta(table_name) if exists else None
-        target_schema = tm.schema if exists else None
-        # the narrowing aggregate is a full batch scan; for an
-        # existing-table Spark write whose columns are all known, its
-        # two live effects (all-null drop, type narrowing) are
-        # reproduced by the hoisted batch probe + coercion below, so
-        # the scan is skipped and the write pays ONE batch aggregate
-        # total (probe) before the write itself
-        # a CREATE from a Spark frame folds the narrowing aggregate
-        # into _create's key-validation probe the same way (one batch
-        # scan total before the write, not two) — the narrowing
-        # DECISIONS are identical, they just ride the probe's job
-        fold_create = (
-            not exists
-            and not isinstance(df, pd.DataFrame)
-            and not auto_index
-        )
-        if fold_create and generated:
-            # r15 advisory fix: the folded create computes generated
-            # columns BEFORE the narrowing decisions ride the probe,
-            # while the unfolded path narrows first — a generated
-            # expression referencing a column narrowing would drop
-            # (all-null) or re-type (int→boolean) would diverge
-            # between the two paths. Resolution check (driver-side
-            # analysis, no job): if an expression resolves against the
-            # KEY columns alone it references no narrowing candidate
-            # and the fold stays decision-identical; anything else
-            # (candidate reference, another generated column, a bad
-            # expression) takes the unfolded narrow-first path, where
-            # _apply_generated raises its usual errors.
-            keyset = set(keys or [])
-            probe_schema = T.StructType(
-                [f for f in df.schema.fields if f.name in keyset]
-            )
-            probe = self.spark.createDataFrame([], probe_schema)
-            for _gexpr in generated.values():
-                try:
-                    probe.select(F.expr(_gexpr)).schema
-                except Exception:
-                    fold_create = False
-                    break
-        fold_probe = (
-            exists
-            and not isinstance(df, pd.DataFrame)
-            and not auto_index
-            and not tm.auto_index
-            and set(df.columns) <= set(target_schema.names)
-            # every column must be coercible from its DECLARED type:
-            # the old narrowing pass dropped an all-null column BEFORE
-            # coercion ever saw it, so a batch carrying e.g. an
-            # all-NULL NullType (F.lit(None)) or all-null string
-            # column against a numeric table column used to succeed.
-            # The fold runs coercion first, so any column coercion
-            # would reject must take the narrowing path instead —
-            # same semantics, just without the saved scan.
-            and all(
-                coercion_class(
-                    df.schema[c].dataType, target_schema[c].dataType
-                ) != "reject"
-                for c in df.columns
-            )
-        )
+        m = self.meta(table_name) if exists else None
         sdf, keys = self._normalize_input(
-            df, keys, auto_index, target_schema,
-            narrow=not (fold_probe or fold_create),
+            df, keys, auto_index, m.schema if exists else None
         )
-        for k in keys:
+        for k in [] if auto_index else keys:
             if spark_to_logical(sdf.schema[k].dataType) not in (
                 "boolean", "integer", "float", "datetime", "string"
             ):
@@ -2452,11 +2390,10 @@ class KeyedCatalog:
                 constraints=constraints, stats_columns=stats_columns,
                 bloom_columns=bloom_columns, sketch_columns=sketch_columns,
                 cluster_by=cluster_by, generated=generated,
-                txn=txn, ingest=ingest, fold_narrow=fold_create,
+                txn=txn, ingest=ingest,
             )
             return
 
-        m = self.meta(table_name)
         if how == "upsert" and m.auto_index:
             raise IOError("upsert is not valid on auto-indexed tables")
         if set(m.keys) != set(keys) and not (auto_index and m.auto_index):
@@ -2464,6 +2401,46 @@ class KeyedCatalog:
                 f"key mismatch: table has keys {m.keys}, incoming has {list(keys)}"
             )
         existing_schema = m.schema
+        if m.auto_index:
+            # the index is assigned once, by _append, above the table's max
+            sdf = sdf.drop(AUTO_INDEX_NAME)
+        # ONE batch aggregate serves the whole write: PK validation,
+        # touched buckets, row count, per-column non-null counts and
+        # the narrowing rules' stats. Known columns are cast to the
+        # table's types first, so bucket hashing sees the table's key
+        # types; a new column, or one whose declared type coercion
+        # rejects, is narrowed from the probe's stats instead (an
+        # all-null NullType or string column against a numeric table
+        # column is dropped below before coercion sees it).
+        known = {f.name: f.dataType for f in existing_schema.fields}
+        held = [
+            c for c in sdf.columns
+            if c not in known
+            or (
+                c not in keys
+                and coercion_class(sdf.schema[c].dataType, known[c])
+                == "reject"
+            )
+        ]
+        sdf = coerce_to_table_schema(
+            sdf,
+            T.StructType([f for f in existing_schema if f.name not in held]),
+            keys,
+        )
+        nar_aggs, nar_numeric, nar_all = narrowing_aggs(
+            sdf.select(*held), []
+        )
+        man = self._manifest(table_name)
+        probe = self._batch_probe(
+            sdf, self._resolve_nb(m, man), narrow=nar_aggs
+        )
+        if not isinstance(df, pd.DataFrame):
+            # an all-null Spark column carries no type: it is absent,
+            # so an upsert preserves the target's values (reference
+            # make_clean_columns_dict). A pandas all-NaN column already
+            # took the table's type on the driver and writes NULL.
+            sdf = sdf.drop(*probe["null_cols"])
+        sdf = apply_narrowing(sdf, probe["row"], nar_numeric, nar_all)
         new_cols = [
             f for f in sdf.schema.fields if f.name not in existing_schema.names
         ]
@@ -2484,26 +2461,6 @@ class KeyedCatalog:
                 "resurrect it"
             )
         sdf = coerce_to_table_schema(sdf, existing_schema, keys)
-        probe = None
-        if fold_probe:
-            # ONE batch aggregate serves the whole write: manifest
-            # snapshot + PK validation + touched buckets + row count +
-            # the narrowing pass's all-null-column drop (reference
-            # make_clean_columns_dict semantics: an all-null column is
-            # treated as absent, so an upsert preserves the target's
-            # values). The probe runs on the COERCED frame so bucket
-            # hashing always sees the table's key types. The snapshot
-            # taken here also serves the commit — a rival commit in
-            # the window trips the version claim, same as before.
-            man = self._manifest(table_name)
-            mrs = self._resolve_nb(m, man)
-            touched, n_batch, null_cols, kb = self._batch_probe(sdf, mrs)
-            if null_cols:
-                sdf = sdf.drop(*null_cols)
-            probe = {
-                "man": man, "m": mrs, "touched": touched, "n": n_batch,
-                "key_bytes": kb,
-            }
         gen_provided: "list[str] | None" = None
         if m.generated:
             gen_provided = [c for c in m.generated if c in sdf.columns]
@@ -2546,15 +2503,15 @@ class KeyedCatalog:
             )
             m.schema_json = json.dumps(evolved.jsonValue())
             self._write_meta(table_name, m)
-
+        # the probe's manifest snapshot also serves the commit: a rival
+        # commit in the window trips the version claim
+        probe.update(man=man, m=self._resolve_nb(m, man))
         if how == "append":
-            self._append(
-                sdf, table_name, m, txn=txn, ingest=ingest, probe=probe,
-            )
+            self._append(sdf, table_name, probe, txn=txn, ingest=ingest)
         else:
             self._upsert(
-                sdf, table_name, m, txn=txn, ingest=ingest,
-                gen_provided=gen_provided, probe=probe,
+                sdf, table_name, probe, txn=txn, ingest=ingest,
+                gen_provided=gen_provided,
             )
 
     def _normalize_input(
@@ -2563,16 +2520,15 @@ class KeyedCatalog:
         keys: Sequence[str] | None,
         auto_index: bool,
         target_schema: T.StructType | None = None,
-        narrow: bool = True,
     ) -> tuple[DataFrame, list[str]]:
         """Validate + convert input; returns (spark_df, key list).
 
-        ``narrow=False`` skips the narrowing aggregate for Spark
-        inputs — a full batch scan whose only effects for an
-        existing-table write with no new columns (type narrowing is
-        overridden by coerce_to_table_schema; all-null-column drop)
-        are reproduced for free by the write's own batch probe, so
-        the caller that owns that probe skips the scan here."""
+        Runs no Spark job. pandas input is typed on the driver
+        (:func:`infer_schema_pandas` applies the narrowing rules);
+        Spark input is narrowed later, by the write's one batch
+        aggregate. Auto-index input comes back without its index: it
+        gets it once, from ``_create`` at base 0 or from ``_append``
+        above the table's max."""
         if isinstance(df, pd.DataFrame):
             pdf = df.copy()
             if keys is not None:
@@ -2614,22 +2570,18 @@ class KeyedCatalog:
             sdf = pandas_to_spark(
                 self.spark, pdf, keys or [], target_schema=target_schema
             )
-            if auto_index:
-                sdf = self._assign_auto_index(sdf, base=0)
-                keys = [AUTO_INDEX_NAME]
-            return sdf, list(keys)
+            return sdf, [AUTO_INDEX_NAME] if auto_index else list(keys)
 
         # Spark DataFrame input
         if auto_index:
-            sdf = self._assign_auto_index(df, base=0)
-            return narrow_spark_schema(sdf, [AUTO_INDEX_NAME]), [AUTO_INDEX_NAME]
+            return df, [AUTO_INDEX_NAME]
         if not keys:
             raise NameError("Spark DataFrame input requires keys= (or auto_index)")
         keys = [clean_name(k) for k in keys]
         missing = [k for k in keys if k not in df.columns]
         if missing:
             raise NameError(f"key columns {missing} not in DataFrame")
-        return (narrow_spark_schema(df, keys) if narrow else df), keys
+        return df, keys
 
     def _assign_auto_index(self, sdf: DataFrame, base: int) -> DataFrame:
         """Contiguous auto-increment key without a global sort.
@@ -2643,23 +2595,28 @@ class KeyedCatalog:
         1. one small job counts rows per partition (driver gets ≤
            numPartitions longs);
         2. cumulative offsets per partition become a literal map;
-        3. id = base + offset[partition] + intra-partition row_number,
-           where the window is PARTITIONED by spark_partition_id — every
-           partition ranks independently, no single-partition exchange.
+        3. id = base + offset[partition] + the row's position in its
+           partition. ``monotonically_increasing_id`` is documented as
+           (partition index << 33) + position; stored with each row in
+           the persisted frame, it names both the partition to count
+           and the position: no window, no exchange, every partition
+           ranks on its own. (``spark_partition_id`` would not do: the
+           optimizer evaluates a projection over a local relation on
+           the driver, where it reads 0 for every row.)
         """
-        from pyspark.sql.window import Window
-
-        pid = F.spark_partition_id()
-        # persist: the per-partition counts and the ranking window must
-        # observe the SAME partition assignment (a re-computed shuffled
-        # input could map rows to different partitions between the jobs)
-        staged = sdf.withColumn("_pb_pid", pid).persist()
+        # persist: the per-partition counts and the positions must
+        # observe the SAME ids (a re-computed shuffled input could map
+        # rows to different partitions between the jobs)
+        staged = sdf.withColumn(
+            "_pb_mid", F.monotonically_increasing_id()
+        ).persist()
         # released by _release_staged() after the segment write commits —
         # without this, auto-index writes in a long-lived session
         # accumulate cached blocks
         self._pending_unpersist.append(staged)
+        part = F.shiftright(F.col("_pb_mid"), 33)
         counts = dict(
-            staged.groupBy("_pb_pid").count().collect()
+            staged.groupBy(part).count().collect()
         )  # ≤ numPartitions entries — driver-safe
         offsets: dict[int, int] = {}
         acc = 0
@@ -2670,15 +2627,15 @@ class KeyedCatalog:
             F.create_map(
                 *[F.lit(x) for kv in offsets.items() for x in kv]
             ),
-            F.col("_pb_pid"),
+            part,
         ) if offsets else F.lit(0)
-        w = Window.partitionBy("_pb_pid").orderBy(F.monotonically_increasing_id())
+        position = F.col("_pb_mid").bitwiseAND(F.lit((1 << 33) - 1))
         return (
             staged.withColumn(
                 AUTO_INDEX_NAME,
-                (F.row_number().over(w) - 1 + offset_expr + F.lit(base)).cast("long"),
+                (position + offset_expr + F.lit(base)).cast("long"),
             )
-            .drop("_pb_pid")
+            .drop("_pb_mid")
         )
 
     def _write_segment(
@@ -2773,53 +2730,31 @@ class KeyedCatalog:
         generated: "Mapping[str, str] | None" = None,
         txn: "tuple[str, int] | None" = None,
         ingest: "dict[str, int] | None" = None,
-        fold_narrow: bool = False,
     ) -> None:
+        """Create the table from its first batch, in ONE batch
+        aggregate before the write.
+
+        ONE shuffle serves the whole create: bucket + repartition up
+        front and PERSIST the shuffled frame (each Spark action
+        re-plans, so without the persist the probe and the write would
+        each run the exchange). The probe is one aggregate over the
+        cache: key validation (nulls + duplicates) and the narrowing
+        rules' stats (:func:`narrowing_aggs_grouped`) together. It
+        also warms the cache the constraint pass and the segment write
+        then stream from; only the failure path pays a second probe,
+        to name the offending key. Narrowing then re-types or drops
+        value columns, generated columns are computed from the
+        narrowed frame, and the declared stats/bloom/sketch/cluster_by
+        columns are checked against the result. pandas input was
+        already narrowed on the driver, so its stats decide nothing
+        new. Auto-index input gets its index here, at base 0."""
         bad_keys = [c for c in (generated or {}) if c in keys]
         if bad_keys:
             raise NameError(
                 f"key columns cannot be generated: {bad_keys}"
             )
-        sdf = self._apply_generated(sdf, dict(generated or {}), None)
-        bad_stats = [
-            c for c in (stats_columns or []) if c not in sdf.columns
-        ]
-        if bad_stats:
-            raise NameError(f"stats_columns not in schema: {bad_stats}")
-        bad_blooms = [
-            c for c in (bloom_columns or []) if c not in sdf.columns
-        ]
-        if bad_blooms:
-            raise NameError(f"bloom_columns not in schema: {bad_blooms}")
-        bad_sk = [
-            c for c in (sketch_columns or []) if c not in sdf.columns
-        ]
-        if bad_sk:
-            raise NameError(f"sketch_columns not in schema: {bad_sk}")
-        for c in cluster_by or []:
-            if c not in sdf.columns:
-                raise NameError(f"cluster_by column not in schema: {c}")
-            dt = sdf.schema[c].dataType
-            if not isinstance(
-                dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-            ):
-                raise ValueError(
-                    f"cluster_by needs integer columns; {c} is "
-                    f"{dt.simpleString()} (bucket continuous values "
-                    "into an integer column first)"
-                )
-        # ONE shuffle serves the whole create: bucket + repartition up
-        # front and PERSIST the shuffled frame (each Spark action
-        # re-plans, so without the persist the validation probe and
-        # the write would each run the exchange). Key validation
-        # (nulls + duplicates) is ONE aggregate over the cache — it
-        # both validates and warms the cache the constraint pass and
-        # the segment write then stream from; only the failure path
-        # pays a second probe, to name the offending key. With
-        # ``fold_narrow`` (Spark-frame creates) the narrowing rules'
-        # stats ride the SAME aggregate, so the create pays one batch
-        # scan total instead of narrowing + validation (the same fold
-        # the existing-table write path does with its batch probe).
+        if auto_index:
+            sdf = self._assign_auto_index(sdf, base=0)
         from functools import reduce
         import operator
 
@@ -2832,19 +2767,10 @@ class KeyedCatalog:
         )
         cached = staged  # narrowing projects over this; release THIS
         try:
-            nar_l1: list = []
-            nar_l2: list = []
-            nar_numeric: list = []
-            nar_all: list = []
-            if fold_narrow:
-                # generated columns are computed post-narrowing in the
-                # unfolded path (never narrowed) — exclude them, and
-                # the bucket column, from the candidate set
-                nar_l1, nar_l2, nar_numeric, nar_all = (
-                    narrowing_aggs_grouped(
-                        sdf, list(keys) + list(generated or {})
-                    )
-                )
+            # generated columns are never narrowed; neither are keys
+            nar_l1, nar_l2, nar_numeric, nar_all = narrowing_aggs_grouped(
+                sdf, list(keys) + list(generated or {})
+            )
             # the probe is a TWO-LEVEL aggregate: the cache is already
             # hash-partitioned by the key-derived bucket column, so
             # grouping by (bucket, keys) needs NO exchange — rows of a
@@ -2880,43 +2806,32 @@ class KeyedCatalog:
                     f"duplicate key in batch: "
                     f"{ {k: dup[0][k] for k in keys} }"
                 )
-            if nar_l1:
-                staged = apply_narrowing(
-                    staged, row.asDict(), nar_numeric, nar_all
-                )
-                # a declared column the narrowing dropped (all-null)
-                # raises exactly what the unfolded path raised from
-                # its pre-create schema checks
-                for label, cols in (
-                    ("stats_columns", stats_columns),
-                    ("bloom_columns", bloom_columns),
-                    ("sketch_columns", sketch_columns),
+            staged = apply_narrowing(
+                staged, row.asDict(), nar_numeric, nar_all
+            )
+            staged = self._apply_generated(
+                staged, dict(generated or {}), None
+            )
+            for label, cols in (
+                ("stats_columns", stats_columns),
+                ("bloom_columns", bloom_columns),
+                ("sketch_columns", sketch_columns),
+            ):
+                gone = [c for c in (cols or []) if c not in staged.columns]
+                if gone:
+                    raise NameError(f"{label} not in schema: {gone}")
+            for c in cluster_by or []:
+                if c not in staged.columns:
+                    raise NameError(f"cluster_by column not in schema: {c}")
+                dt = staged.schema[c].dataType
+                if not isinstance(
+                    dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
                 ):
-                    gone = [
-                        c for c in (cols or []) if c not in staged.columns
-                    ]
-                    if gone:
-                        raise NameError(
-                            f"{label} not in schema: {gone}"
-                        )
-                for c in cluster_by or []:
-                    if c not in staged.columns:
-                        raise NameError(
-                            f"cluster_by column not in schema: {c}"
-                        )
-                    dt = staged.schema[c].dataType
-                    if not isinstance(
-                        dt,
-                        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-                    ):
-                        # narrowing re-typed it (all-zero int → double,
-                        # {0,1} int → boolean) — same refusal the
-                        # unfolded path raised from its pre-create check
-                        raise ValueError(
-                            f"cluster_by needs integer columns; {c} is "
-                            f"{dt.simpleString()} (bucket continuous "
-                            "values into an integer column first)"
-                        )
+                    raise ValueError(
+                        f"cluster_by needs integer columns; {c} is "
+                        f"{dt.simpleString()} (bucket continuous values "
+                        "into an integer column first)"
+                    )
             m = TableMeta(
                 keys=list(keys),
                 auto_index=auto_index,
@@ -2944,47 +2859,61 @@ class KeyedCatalog:
         )
 
     def _batch_probe(
-        self, sdf: DataFrame, m: TableMeta
-    ) -> "tuple[list[int], int, list[str], int]":
-        """In-batch PK validation + touched buckets + batch row count
-        + all-null value columns in ONE aggregate pass (previously
-        FOUR batch scans per write: the narrowing aggregate, the
-        duplicate groupBy, the null-key limit, and the distinct-bucket
-        collect — at 100 TB every extra pass over a large batch is a
-        real cost): count vs distinct-key count detects duplicates, a
-        null-key counter detects nulls, collect_set over the bucket
-        expression (bounded by num_buckets) yields the touched
-        buckets, and per-value-column non-null counts identify
-        all-null columns (the reference drops those —
-        make_clean_columns_dict semantics — which for an upsert means
-        "preserve the target values", so the caller must drop them
-        before merging). The row count rides along for free and feeds
-        the broadcast-vs-shuffle merge-shape decision. Only the
-        FAILURE path pays a second scan, to name the offending key in
-        the error."""
+        self, sdf: DataFrame, m: TableMeta, narrow: Sequence = ()
+    ) -> dict:
+        """Everything a keyed write needs to know about its batch, in
+        ONE aggregate pass: count vs distinct-key count detects
+        duplicates, a null-key counter detects nulls, collect_set over
+        the bucket expression (bounded by num_buckets) yields the
+        touched buckets, per-value-column non-null counts identify
+        all-null columns, and ``narrow`` (the caller's
+        :func:`narrowing_aggs` expressions) rides along. The row count
+        and the string keys' total bytes feed the broadcast-vs-shuffle
+        merge-shape decision. Only the FAILURE path pays a second
+        scan, to name the offending key in the error.
+
+        The batch's key columns must already have the table's types:
+        xxhash64 of an int differs from xxhash64 of the equal long, so
+        an uncast key would hash into the wrong bucket. A mismatch
+        raises TypeError before anything is hashed. An auto-index
+        table's batch has no key yet (``_append`` assigns it), so only
+        the count, non-null and ``narrow`` aggregates run.
+
+        Returns ``{"touched", "n", "null_cols", "key_bytes", "row"}``,
+        ``row`` being the whole aggregate row as a dict."""
         from functools import reduce
         import operator
 
-        any_null = reduce(
-            operator.or_, [F.col(k).isNull() for k in m.keys]
-        )
-        value_cols = [c for c in sdf.columns if c not in m.keys]
+        keys = [] if m.auto_index else list(m.keys)
+        for k in keys:
+            have, want = sdf.schema[k].dataType, m.schema[k].dataType
+            if have != want:
+                raise TypeError(
+                    f"key column {k} is {have.simpleString()} but the "
+                    f"table's is {want.simpleString()}; cast it first "
+                    "(bucket hashing depends on the key type)"
+                )
+        key_aggs = []
+        if keys:
+            any_null = reduce(operator.or_, [F.col(k).isNull() for k in keys])
+            key_aggs = [
+                F.count_distinct(*[F.col(k) for k in keys]).alias("nd"),
+                F.sum(any_null.cast("long")).alias("nn"),
+                F.collect_set(
+                    _bucket_expr(keys, m.num_buckets)
+                ).alias("bs"),
+            ]
+        value_cols = [c for c in sdf.columns if c not in keys]
         # string keys get their TOTAL bytes measured (rides the same
         # aggregate for free) — the broadcast gate must not trust a
         # per-key width guess that long URL/path keys would blow past
         str_keys = [
-            k for k in m.keys
+            k for k in keys
             if isinstance(m.schema[k].dataType, T.StringType)
         ]
         row = sdf.agg(
             F.count(F.lit(1)).alias("n"),
-            F.count_distinct(
-                *[F.col(k) for k in m.keys]
-            ).alias("nd"),
-            F.sum(any_null.cast("long")).alias("nn"),
-            F.collect_set(
-                _bucket_expr(m.keys, m.num_buckets)
-            ).alias("bs"),
+            *key_aggs,
             *[
                 F.count(F.col(c)).alias(f"_nn_{i}")
                 for i, c in enumerate(value_cols)
@@ -2998,33 +2927,33 @@ class KeyedCatalog:
                 )
                 for i, k in enumerate(str_keys)
             ],
-        ).first()
-        if int(row["nn"] or 0):
+            *narrow,
+        ).first().asDict()
+        if keys and int(row["nn"] or 0):
             raise ValueError("key columns may not contain NULL")
         # count_distinct skips nothing here: null-key rows raised above
-        if int(row["n"] or 0) != int(row["nd"] or 0):
+        if keys and int(row["n"] or 0) != int(row["nd"] or 0):
             dup = (
-                sdf.groupBy(*m.keys)
+                sdf.groupBy(*keys)
                 .count()
                 .where(F.col("count") > 1)
                 .limit(1)
                 .collect()
             )
             raise ValueError(f"duplicate key in batch: {dup[0].asDict()}")
-        null_cols = [
-            c
-            for i, c in enumerate(value_cols)
-            if int(row[f"_nn_{i}"] or 0) == 0
-        ]
-        str_key_bytes = sum(
-            int(row[f"_kb_{i}"] or 0) for i in range(len(str_keys))
-        )
-        return (
-            sorted(int(b) for b in row["bs"]),
-            int(row["n"] or 0),
-            null_cols,
-            str_key_bytes,
-        )
+        return {
+            "touched": sorted(int(b) for b in row.get("bs") or []),
+            "n": int(row["n"] or 0),
+            "null_cols": [
+                c
+                for i, c in enumerate(value_cols)
+                if int(row[f"_nn_{i}"] or 0) == 0
+            ],
+            "key_bytes": sum(
+                int(row[f"_kb_{i}"] or 0) for i in range(len(str_keys))
+            ),
+            "row": row,
+        }
 
     def _keys_broadcastable(
         self, n_rows: int, m: TableMeta, str_bytes: "int | None" = None,
@@ -3200,41 +3129,31 @@ class KeyedCatalog:
         self,
         sdf: DataFrame,
         table_name: str,
-        m: TableMeta,
+        probe: dict,
         txn: "tuple[str, int] | None" = None,
         ingest: "dict[str, int] | None" = None,
-        probe: "dict | None" = None,
     ) -> None:
         """Strict append: any incoming key already present → IntegrityError
         (reference:pandabase/sql.py:264-266). The overlap probe joins the
         batch against ONLY the buckets it hashes into (manifest path
         pruning), then commits a new segment — no rewrite of existing
-        data. ``probe`` carries the caller's already-run batch probe +
-        manifest snapshot (the common to_table path) so the batch is
-        scanned once, not twice."""
-        self._check_constraints(sdf, m)
-        # one manifest snapshot for the PK probe and the commit (same
-        # discipline as the DML rewrites): a rival commit in the window
-        # trips the claim instead of being silently absorbed
-        if probe is not None:
-            man, m = probe["man"], probe["m"]
-        else:
-            man = self._manifest(table_name)
-            m = self._resolve_nb(m, man)
+        data. ``probe`` is the caller's batch probe plus the manifest
+        snapshot (``man``) and its resolved meta (``m``), so the batch
+        is scanned once, and the snapshot serves both the overlap
+        probe and the commit: a rival commit in the window trips the
+        claim instead of being silently absorbed. An auto-index batch
+        gets its index here, counting on from the table's max."""
+        man, m = probe["man"], probe["m"]
         if m.auto_index:
             base_row = (
                 self._read_raw(table_name, manifest=man)
                 .agg(F.max(AUTO_INDEX_NAME))
                 .collect()[0][0]
             )
-            sdf = sdf.drop(AUTO_INDEX_NAME)
             sdf = self._assign_auto_index(sdf, base=(base_row or -1) + 1)
-        else:
-            if probe is not None:
-                touched, n_batch = probe["touched"], probe["n"]
-                key_bytes = probe.get("key_bytes")
-            else:
-                touched, n_batch, _, key_bytes = self._batch_probe(sdf, m)
+        self._check_constraints(sdf, m)
+        if not m.auto_index:
+            touched, n_batch = probe["touched"], probe["n"]
             existing = self._read_raw(
                 table_name, buckets=touched, manifest=man,
             )
@@ -3249,7 +3168,7 @@ class KeyedCatalog:
             # 100 TB ingest sizes is an OOM, not an optimization —
             # oversized batches let the planner pick the join.
             batch_keys = sdf.select(*m.keys)
-            if self._keys_broadcastable(n_batch, m, key_bytes):
+            if self._keys_broadcastable(n_batch, m, probe["key_bytes"]):
                 batch_keys = batch_keys.hint("broadcast")
             clash_df = existing.join(
                 batch_keys, on=list(m.keys), how="inner",
@@ -3276,11 +3195,10 @@ class KeyedCatalog:
         self,
         sdf: DataFrame,
         table_name: str,
-        m: TableMeta,
+        probe: dict,
         txn: "tuple[str, int] | None" = None,
         ingest: "dict[str, int] | None" = None,
         gen_provided: "list[str] | None" = None,
-        probe: "dict | None" = None,
     ) -> None:
         """MERGE: batch rows win on matched keys (all incoming columns,
         NULLs included — reference:pandabase/sql.py:300); table columns
@@ -3311,40 +3229,19 @@ class KeyedCatalog:
         it. Crash before the commit ⇒ previous state intact (old
         segments are immutable); orphan segment cleaned by vacuum().
         """
-        # one manifest snapshot for the data read AND the commit —
-        # and ITS bucketing, so touched-bucket replacement always
-        # matches the live layout even right after a rebucket;
-        # ``probe`` carries the caller's already-run snapshot + batch
-        # aggregate (the common to_table path), so the batch is
-        # scanned once, not twice
-        if probe is not None:
-            man, m = probe["man"], probe["m"]
-            touched, n_batch = probe["touched"], probe["n"]
-            key_bytes = probe.get("key_bytes")
-        else:
-            # probe=None ⇒ input normalization already ran its own
-            # inference (Spark narrowing, or the pandas path where an
-            # all-NaN float column must NOT be dropped — NaN is a
-            # value, and incoming NaN overwrites to null per
-            # reference:tests/test_sql.py:503-530), so no column drop
-            # happens here
-            man = self._manifest(table_name)
-            m = self._resolve_nb(m, man)
-            touched, n_batch, _, key_bytes = self._batch_probe(sdf, m)
+        # one manifest snapshot (the caller's ``probe``) for the data
+        # read AND the commit — and ITS bucketing, so touched-bucket
+        # replacement always matches the live layout even right after
+        # a rebucket
+        man, m = probe["man"], probe["m"]
+        touched = probe["touched"]
         existing = self._read_raw(table_name, buckets=touched, manifest=man)
         src_cols = set(sdf.columns)
         full_column = all(c in src_cols for c in existing.columns)
-        # _upsert_shape: test/measurement escape hatch ("antiunion" |
-        # "fullouter" | None=adaptive); antiunion is only SOUND for
-        # full-column batches (it has no carry for preserved columns)
-        forced = getattr(self, "_upsert_shape", None)
-        use_anti = (
-            full_column
-            and (
-                forced == "antiunion"
-                if forced is not None
-                else self._keys_broadcastable(n_batch, m, key_bytes)
-            )
+        # antiunion is only SOUND for full-column batches (it has no
+        # carry for preserved columns)
+        use_anti = full_column and self._keys_broadcastable(
+            probe["n"], m, probe["key_bytes"]
         )
         # observability: which shape actually ran (bench records it in
         # dml_facts; tests assert dispatch without plan introspection)
@@ -3639,7 +3536,8 @@ class KeyedCatalog:
 
         man = self._manifest(table_name)
         m = self._resolve_nb(m, man)
-        touched, n_src, _, src_key_bytes = self._batch_probe(source, m)
+        src_probe = self._batch_probe(source, m)
+        touched = src_probe["touched"]
         bs_del_pred = (
             F.lit(True)
             if when_not_matched_by_source_delete is True
@@ -3660,7 +3558,9 @@ class KeyedCatalog:
             # bad size estimate can plan this anti-join as a sort-merge
             # that shuffles the ENTIRE table just to find doomed rows
             src_keys = source.select(*m.keys)
-            if self._keys_broadcastable(n_src, m, src_key_bytes):
+            if self._keys_broadcastable(
+                src_probe["n"], m, src_probe["key_bytes"]
+            ):
                 src_keys = src_keys.hint("broadcast")
             doomed = (
                 self._read_raw(table_name, manifest=man)

@@ -24,10 +24,19 @@ Distinctive semantic rules preserved (SURVEY.md §1.2):
    through (reference TODO, reference:pandabase/sql.py:223-229); anything
    else raises TypeError (reference:pandabase/sql.py:250-254).
 
-Scale note: narrowing over a Spark DataFrame is ONE aggregation job
-computing min/max/invalid-count for every candidate column at once
-(map-side partial aggregation; no collect of data, only of the 1-row
-aggregate), so inference cost is a single scan regardless of column count.
+Where the rules run: pandas input is narrowed on the driver
+(:func:`infer_schema_pandas`). A keyed write of a Spark frame narrows
+inside the one batch aggregate it already runs (io.py): a create folds
+:func:`narrowing_aggs_grouped` into its key-validation probe, a write to
+an existing table folds :func:`narrowing_aggs` of its new columns into
+its batch probe, and both hand the collected row to
+:func:`apply_narrowing`. :func:`narrow_spark_schema` is the standalone
+form, one aggregation of its own, for the file readers' ``narrow=True``.
+
+Scale note: the narrowing stats are min/max/invalid-count/non-null-count
+per candidate column, computed for every column at once (map-side
+partial aggregation; no collect of data, only of the 1-row aggregate),
+so inference costs no extra scan regardless of column count.
 """
 
 from __future__ import annotations
@@ -123,8 +132,10 @@ def _series_logical_type(col: pd.Series, is_key: bool) -> str | None:
 
     Mirrors reference:pandabase/helpers.py:84-121 (_get_type_from_df_col):
     narrowing never applies to keys (reference:pandabase/helpers.py:99-102).
+    A zero-row key column is typed from its dtype, as a zero-row Spark
+    key column keeps its declared type.
     """
-    if col.isna().all():
+    if col.isna().all() and not (is_key and col.empty):
         return None
     if not is_key and series_is_boolean(col):
         return "boolean"
@@ -209,12 +220,14 @@ def infer_schema_pandas(
 def narrowing_aggs(
     df: DataFrame, keys: Sequence[str]
 ) -> "tuple[list, list[str], list[str]]":
-    """The aggregate expressions behind the narrowing rules, exposed so
-    a caller that already runs a full-batch aggregation (the create
-    path's key-validation probe, io.py) can FOLD them into its own pass
-    instead of paying a second batch scan. Returns
-    ``(agg_exprs, numeric_cols, candidate_cols)`` — feed the collected
-    row to :func:`apply_narrowing`."""
+    """The aggregate expressions behind the narrowing rules for every
+    non-key column of ``df``, exposed so a caller that already runs a
+    full-batch aggregation (a keyed write's batch probe, io.py) can
+    FOLD them into its own pass instead of paying a second batch scan.
+    Only ``df``'s schema is read: the expressions name columns, so
+    ``df`` may be a projection of the frame they are evaluated on.
+    Returns ``(agg_exprs, numeric_cols, candidate_cols)`` — feed the
+    collected row to :func:`apply_narrowing`."""
     keyset = set(keys)
     aggs = []
     numeric_cols = [
@@ -240,12 +253,14 @@ def narrowing_aggs_grouped(
 ) -> "tuple[list, list, list[str], list[str]]":
     """:func:`narrowing_aggs` split into an algebraic two-level form
     for a caller whose batch is ALREADY clustered by a key-derived
-    column (the create path's bucket-partitioned cache, io.py): level
-    one computes the same min/max/non-boolean/non-null aggregates per
-    key group — no exchange, the partitioning already satisfies the
-    grouping — and level two merges the per-group rows (min of mins,
-    max of maxes, sums) into the exact row :func:`apply_narrowing`
-    expects. Returns ``(level1, level2, numeric_cols, candidate_cols)``.
+    column: every create's key-validation probe over its
+    bucket-partitioned cache (io.py), whatever the input (Spark,
+    pandas or auto-index). Level one computes the same
+    min/max/non-boolean/non-null aggregates per key group — no
+    exchange, the partitioning already satisfies the grouping — and
+    level two merges the per-group rows (min of mins, max of maxes,
+    sums) into the exact row :func:`apply_narrowing` expects.
+    Returns ``(level1, level2, numeric_cols, candidate_cols)``.
     """
     keyset = set(keys)
     numeric_cols = [
@@ -270,9 +285,9 @@ def narrowing_aggs_grouped(
         # SUM over zero level-1 rows (an empty batch produces zero key
         # groups) is NULL, not 0 — coalesce to the empty-batch identity
         # so apply_narrowing's `== 0` decisions fire exactly as they do
-        # on the single-level/unfolded path (r15 advisory fix; without
-        # this an empty create kept all columns on the folded path but
-        # dropped every all-null column on the pandas path)
+        # for the single-level form (without this an empty Spark create
+        # kept every value column while an empty pandas create, typed
+        # on the driver, dropped them)
         level2.append(
             F.coalesce(F.sum(f"__nb_{c}"), F.lit(0)).alias(f"__nb_{c}")
         )
@@ -335,9 +350,11 @@ def coercion_class(have: T.DataType, want: T.DataType) -> str:
     (deliberate-deviation cast, see coerce_to_table_schema), or
     ``"reject"`` (coerce raises TypeError — including types
     spark_to_logical doesn't map, e.g. NullType). Shared by
-    :func:`coerce_to_table_schema` and the write path's probe-fold
-    gate, so 'would coercion succeed' can be decided from schemas
-    alone without duplicating the rules."""
+    :func:`coerce_to_table_schema` and the keyed write path, which
+    holds a rejected column back from the pre-probe cast (an all-null
+    one is dropped by the probe, a narrowed one may still cast), so
+    'would coercion succeed' is decided from schemas alone without
+    duplicating the rules."""
     if have == want:
         return "same"
     try:

@@ -4,7 +4,12 @@
 Builds a generated keyed table with ``stats_columns`` and
 ``bloom_columns`` plus a Delta copy in a temporary warehouse, then runs
 create, append, upsert, merge, compact, delta_append,
-delta_checkpoint and delta_scan. Then it writes seeded, clustered
+delta_checkpoint and delta_scan. Then it traces the keyed writes whose
+type narrowing once took a separate pass: a Spark upsert carrying a new
+column under ``add_new_columns``, a Spark upsert carrying an all-null
+``NullType`` column, a create with a generated column over a value
+column, an auto-index create and append, a pandas create and a pandas
+upsert. Then it writes seeded, clustered
 64-dimensional unit vectors to parquet and runs the persisted IVFADC
 verbs on them: write_ivfpq_index (16 cells, m=8, 16 codes),
 append_ivfpq_index with ``txn=``, compact_index and a single-vector
@@ -14,10 +19,11 @@ single-vector ann_topk_indexed queries on the raw-vector index. Each
 verb runs in its own Spark job group. For every verb it prints
 the job count and, per job, the call sites Spark records as its stage
 names: the phase tree behind the verb's count. A DataFrameWriter write
-launched from the JVM bridge has no Python call site of its own, so
-while tracing, ``save`` and ``parquet`` set Spark's ``callSite.short``
-local property to the innermost ``pandabase_spark/`` frame that called
-them. Needs no test data. Usage:
+or a DataFrameReader read launched from the JVM bridge has no Python
+call site of its own, so while tracing, the writer's ``save`` and
+``parquet`` and the reader's ``load`` and ``parquet`` set Spark's
+``callSite.short`` local property to the innermost ``pandabase_spark/``
+frame that called them. Needs no test data. Usage:
 
     python scripts/jobtrace.py [rows]    # default 2000 keyed rows
                                          # and 2000 vectors
@@ -38,15 +44,23 @@ LIB = os.path.join(ROOT, "pandabase_spark") + os.sep
 
 
 @contextlib.contextmanager
-def named_writes(sc):
-    """While active, ``DataFrameWriter.save``/``.parquet`` name their
-    jobs after the innermost library frame that called them."""
-    from pyspark.sql.readwriter import DataFrameWriter
+def named_calls(sc):
+    """While active, ``DataFrameWriter.save``/``.parquet`` and
+    ``DataFrameReader.load``/``.parquet`` name their jobs after the
+    innermost library frame that called them."""
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
 
-    saved = {n: getattr(DataFrameWriter, n) for n in ("save", "parquet")}
+    saved = [
+        (cls, verb, getattr(cls, verb))
+        for cls, verbs in (
+            (DataFrameWriter, ("save", "parquet")),
+            (DataFrameReader, ("load", "parquet")),
+        )
+        for verb in verbs
+    ]
 
     def named(verb, orig):
-        def write(self, *args, **kwargs):
+        def call(self, *args, **kwargs):
             frame = next(
                 (f for f in reversed(traceback.extract_stack()[:-1])
                  if f.filename.startswith(LIB)),
@@ -64,15 +78,45 @@ def named_writes(sc):
             finally:
                 sc.setLocalProperty("callSite.short", prev)
 
-        return write
+        return call
 
-    for verb, orig in saved.items():
-        setattr(DataFrameWriter, verb, named(verb, orig))
+    for cls, verb, orig in saved:
+        setattr(cls, verb, named(verb, orig))
     try:
         yield
     finally:
-        for verb, orig in saved.items():
-            setattr(DataFrameWriter, verb, orig)
+        for cls, verb, orig in saved:
+            setattr(cls, verb, orig)
+
+
+def trace_narrowing(spark, cat, trace, df, rows: int) -> None:
+    """The keyed writes whose type narrowing rides the write's batch
+    probe: new and all-null Spark columns, a generated column over a
+    value column, auto-index input and pandas input."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    cat.to_table(df, "n", keys=["k"])
+    trace("upsert_new_column", lambda: cat.to_table(
+        df.where(F.col("k") < 3).withColumn("flag", F.col("k") % 2),
+        "n", keys=["k"], how="upsert", add_new_columns=True))
+    trace("upsert_nulltype", lambda: cat.to_table(
+        df.where(F.col("k") < 3).withColumn("v", F.lit(None)),
+        "n", keys=["k"], how="upsert"))
+    trace("create_generated", lambda: cat.to_table(
+        df, "g", keys=["k"], generated={"w": "v + 1"}))
+    trace("auto_index_create", lambda: cat.to_table(
+        df.drop("k"), "a", auto_index=True))
+    trace("auto_index_append", lambda: cat.to_table(
+        df.drop("k"), "a", auto_index=True, how="append"))
+    pdf = pd.DataFrame({
+        "k": range(rows),
+        "v": [2.0 * i for i in range(rows)],
+        "p": [f"p{i % 97}" for i in range(rows)],
+    }).set_index("k")
+    trace("pandas_create", lambda: cat.to_table(pdf, "pd"))
+    trace("pandas_upsert", lambda: cat.to_table(
+        pdf.iloc[:3].assign(v=-1.0), "pd", how="upsert"))
 
 
 def trace_ann(spark, trace, root: str, rows: int) -> None:
@@ -159,7 +203,7 @@ def main() -> None:
         group = f"jobtrace-{verb}"
         sc.setJobGroup(group, verb)
         try:
-            with named_writes(sc):
+            with named_calls(sc):
                 fn()
         finally:
             sc.setJobGroup(None, None)
@@ -190,6 +234,7 @@ def main() -> None:
             .withColumn("v", F.col("v") - 1.0),
             "t", when_matched_update="all"))
         trace("compact", lambda: cat.compact("t"))
+        trace_narrowing(spark, cat, trace, df, rows)
         dw.delta_create(df, bronze)
         trace("delta_append", lambda: dw.delta_append(
             df.withColumn("k", F.col("k") + rows), bronze))

@@ -48,18 +48,12 @@ class CarryAntiCatalog(KeyedCatalog):
         self,
         sdf: DataFrame,
         table_name: str,
-        m,
+        probe: dict,
         txn=None,
         ingest=None,
         gen_provided=None,
-        probe=None,
     ) -> None:
-        if probe is not None:
-            man, m, touched = probe["man"], probe["m"], probe["touched"]
-        else:
-            man = self._manifest(table_name)
-            m = self._resolve_nb(m, man)
-            touched = self._batch_probe(sdf, m)[0]
+        man, m, touched = probe["man"], probe["m"], probe["touched"]
         existing = self._read_raw(table_name, buckets=touched, manifest=man)
         table_cols = list(existing.columns)
         preserved = [c for c in table_cols if c not in sdf.columns]
@@ -110,10 +104,11 @@ def main() -> None:
         "carryanti": CarryAntiCatalog(spark, f"{wh}/old"),
         "adaptive": KeyedCatalog(spark, f"{wh}/adaptive"),
     }
-    # pin the pure shapes; "adaptive" exercises the shipped dispatch
-    # (broadcast anti+union for full-column broadcastable batches,
-    # full-outer otherwise)
-    cats["onepass"]._upsert_shape = "fullouter"
+    # pin the pure shapes ("onepass" through the broadcast gate the
+    # upsert shape is decided by); "adaptive" exercises the shipped
+    # dispatch (broadcast anti+union for full-column broadcastable
+    # batches, full-outer otherwise)
+    cats["onepass"]._keys_broadcastable = lambda *a, **kw: False
     for name, cat in cats.items():
         cat.to_table(li, "t", keys=workload.LI_KEYS)
 

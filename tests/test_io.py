@@ -179,6 +179,62 @@ def test_coercion_incompatible_raises(catalog, spark):
         catalog.to_table(up, "t", keys=["k"], how="upsert")
 
 
+@pytest.mark.parametrize(
+    "case, values, spark_type, generated, expect",
+    [
+        # {0,1} ints become boolean
+        ("bool01", [0, 1, 1], "long", None, [("k", "bigint"), ("v", "boolean")]),
+        # all-zero ints become double
+        ("allzero", [0, 0, 0], "long", None, [("k", "bigint"), ("v", "double")]),
+        # an all-null column carries no type: it is not created
+        ("allnull", [None] * 3, "double", None, [("k", "bigint")]),
+        # generated columns are computed after narrowing: v is boolean
+        # by then, and boolean + int does not resolve
+        ("generated", [0, 1, 1], "long", {"g": "v + 1"}, "AnalysisException"),
+        # every value column of an empty batch is vacuously all-null
+        ("empty", [], "double", None, [("k", "bigint")]),
+    ],
+)
+def test_pandas_and_spark_creates_narrow_alike(
+    catalog, spark, case, values, spark_type, generated, expect
+):
+    """The same rows create the same table whether they arrive as
+    pandas (narrowed on the driver) or as a Spark frame (narrowed by
+    the create's one batch aggregate): same schema and rows, or the
+    same refusal."""
+    ks = list(range(1, len(values) + 1))
+    pdf = pd.DataFrame(
+        {
+            "k": pd.array(ks, dtype="int64"),
+            "v": pd.array(
+                values,
+                dtype="float64" if spark_type == "double" else "int64",
+            ),
+        }
+    ).set_index("k")
+    sdf = spark.createDataFrame(
+        list(zip(ks, values)), f"k long, v {spark_type}"
+    )
+
+    def outcome(frame, name, **kw):
+        try:
+            catalog.to_table(frame, name, generated=generated, **kw)
+        except Exception as e:
+            return type(e).__name__
+        return (
+            [
+                (f.name, f.dataType.simpleString())
+                for f in catalog.meta(name).schema.fields
+            ],
+            sorted(tuple(r) for r in catalog.read_table(name).collect()),
+        )
+
+    got_pandas = outcome(pdf, f"p_{case}")
+    got_spark = outcome(sdf, f"s_{case}", keys=["k"])
+    assert got_pandas == got_spark
+    assert (got_spark if isinstance(expect, str) else got_spark[0]) == expect
+
+
 def test_catalog_utils(catalog, simple_pdf):
     catalog.to_table(simple_pdf, "t1", how="create_only")
     catalog.to_table(simple_pdf, "t2", how="create_only")

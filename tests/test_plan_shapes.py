@@ -540,9 +540,8 @@ def test_dml_job_budgets(spark, tmp_path):
         cat.drop_table(name)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    # write path (r10 fold: the narrowing aggregate is skipped for
-    # existing-table writes with no new columns — its effects ride the
-    # hoisted batch probe, so append/upsert scan the batch ONCE):
+    # write path (type narrowing rides each write's one batch probe,
+    # so append/upsert scan the batch ONCE):
     # create = one cached shuffle + one validation agg + write;
     # append = hoisted probe agg + clash agg + write; upsert =
     # hoisted probe + adaptive merge write (measured 8/8/5)
@@ -689,6 +688,70 @@ def test_skipping_write_job_budgets(spark, tmp_path):
         cat.drop_table("sk_c")
         over = {v: n for v, n in counts.items() if n > budget[v]}
         assert not over, f"{skip}: jobs {counts} over budget {budget}"
+
+
+def test_every_write_runs_one_batch_probe(spark, tmp_path):
+    """Type narrowing rides each keyed write's one batch aggregate,
+    whatever the batch carries: a new column, an all-null NullType
+    column, a generated column over a value column, or auto-index
+    input. So each such write runs no more jobs than the plain Spark
+    write of its verb. Auto-index writes may add the jobs of their
+    one per-partition count, and an auto-index append those of its
+    base-row max too, each measured here on its own. A separate
+    narrowing aggregate would cost each shape 2 jobs more."""
+    from pandabase_spark.io import AUTO_INDEX_NAME, KeyedCatalog
+
+    cat = KeyedCatalog(spark, str(tmp_path / "wh"), default_buckets=8)
+    df = spark.range(2000).select(
+        F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
+    )
+    batch = df.where(F.col("k") < 3)
+    sc = spark.sparkContext
+
+    def jobs(name, fn) -> int:
+        group = f"nb-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = {
+        "create": jobs("create", lambda: cat.to_table(df, "t", keys=["k"])),
+        "append": jobs("append", lambda: cat.to_table(
+            df.withColumn("k", F.col("k") + 10_000), "t", keys=["k"],
+            how="append")),
+        "upsert": jobs("upsert", lambda: cat.to_table(
+            batch.withColumn("v", F.col("v") + 1.0), "t", keys=["k"],
+            how="upsert")),
+    }
+    count = jobs("count", lambda: cat._assign_auto_index(
+        df.drop("k"), base=0))
+    cat._release_staged()
+    cat.to_table(df.drop("k"), "a", auto_index=True)
+    top = jobs("max", lambda: cat._read_raw("a").agg(
+        F.max(AUTO_INDEX_NAME)).collect())
+    shapes = {
+        "upsert_new_column": ("upsert", 0, lambda: cat.to_table(
+            batch.withColumn("flag", F.col("k") % 2), "t", keys=["k"],
+            how="upsert", add_new_columns=True)),
+        "upsert_nulltype": ("upsert", 0, lambda: cat.to_table(
+            batch.withColumn("v", F.lit(None)), "t", keys=["k"],
+            how="upsert")),
+        "create_generated": ("create", 0, lambda: cat.to_table(
+            df, "g", keys=["k"], generated={"w": "v + 1"})),
+        "auto_index_create": ("create", count, lambda: cat.to_table(
+            df.drop("k"), "a2", auto_index=True)),
+        "auto_index_append": ("append", count + top, lambda: cat.to_table(
+            df.drop("k"), "a", auto_index=True, how="append")),
+    }
+    over = {}
+    for name, (verb, extra, fn) in shapes.items():
+        n = jobs(name, fn)
+        if n > plain[verb] + extra:
+            over[name] = (n, plain[verb] + extra)
+    assert not over, f"(jobs, allowed) {over}; plain writes {plain}"
 
 
 def test_ivfpq_build_job_budget(spark, tmp_path):

@@ -5,13 +5,14 @@ Each test pins one of the five r14 ADVICE items:
    sequence/greatest explode used to emit one (id, NULL) shingle, so
    every NULL-text doc minhashed to the same signature);
 2. ``narrowing_aggs_grouped``'s level-2 merges coalesce to the
-   empty-batch identity (SUM over zero groups is NULL, not 0), so the
-   folded create drops all-null columns exactly like the unfolded
-   pandas path on a zero-row batch;
-3. the folded create falls back to narrow-first when a generated
-   expression references a narrowing-candidate column (the folded
-   path computed generated columns BEFORE narrowing, the unfolded
-   path after);
+   empty-batch identity (SUM over zero groups is NULL, not 0), so a
+   Spark-frame create drops all-null columns on a zero-row batch
+   exactly like a pandas create, whose columns are typed on the
+   driver;
+3. a create computes generated columns AFTER narrowing, whether the
+   batch is a Spark frame or pandas, so an expression over a column
+   narrowing drops or re-types resolves (or fails) the same way for
+   both;
 4. ``_probe_type`` returns None for mixed-type probe values so the
    local-frame fast path defers to classic createDataFrame inference
    (which merges [1, 2.5] to double) instead of pinning LongType and
@@ -73,11 +74,11 @@ def test_grouped_narrowing_empty_batch_identity(spark):
 
 
 def test_empty_create_drops_allnull_columns_on_folded_path(catalog, spark):
-    """Zero-row Spark-frame create (folded narrowing): every value
-    column of an empty batch is vacuously all-null/typeless, so the
-    created schema keeps only the keys — the same decision the
-    unfolded single-level aggregate path makes (its COUNT over an
-    empty ungrouped agg is 0, not NULL)."""
+    """Zero-row Spark-frame create (narrowing rides the create's
+    two-level probe): every value column of an empty batch is
+    vacuously all-null/typeless, so the created schema keeps only the
+    keys — the same decision the single-level aggregate makes (its
+    COUNT over an empty ungrouped agg is 0, not NULL)."""
     sdf = spark.createDataFrame([], "k long, v double, s string")
     catalog.to_table(sdf, "t_spark_empty", keys=["k"])
     s1 = [f.name for f in catalog.meta("t_spark_empty").schema.fields]
@@ -89,7 +90,8 @@ def test_generated_referencing_narrowing_candidate_matches_unfolded(
 ):
     """A generated column referencing an all-null (narrowing-dropped)
     value column must behave identically whether the input arrives as
-    a Spark frame (folded path) or pandas (unfolded path)."""
+    a Spark frame (narrowed by the create's probe) or pandas
+    (narrowed on the driver)."""
     sdf = spark.createDataFrame(
         [(1, None), (2, None)], "k long, v double"
     )
@@ -109,11 +111,10 @@ def test_generated_referencing_narrowing_candidate_matches_unfolded(
             )
         except Exception:
             res[name] = "rejected"
-    # before the r15 fix the folded spark path silently SUCCEEDED
-    # (generated computed from the pre-narrow column) while the
-    # unfolded pandas path rejected; both must now make the same
-    # decision — the all-null referenced column is dropped first, so
-    # the generated expression cannot resolve
+    # both must make the same decision: the all-null referenced
+    # column is dropped first, so the generated expression cannot
+    # resolve (a create that computed generated columns before
+    # narrowing would succeed on the Spark frame alone)
     assert res["spark"] == res["pandas"] == "rejected"
 
 

@@ -2565,7 +2565,7 @@ def test_vacuum_reclaims_aged_orphan_sidecar(spark, catalog):
     catalog.drop_table("sv_t")
 
 
-def test_upsert_shapes_are_equivalent(spark, catalog):
+def test_upsert_shapes_are_equivalent(spark, catalog, monkeypatch):
     """The adaptive upsert (round 10) picks between two merge shapes —
     broadcast anti+union for full-column broadcastable batches,
     full-outer otherwise (quiet-box A/B: the full-outer join can never
@@ -2583,7 +2583,8 @@ def test_upsert_shapes_are_equivalent(spark, catalog):
     # one, with correct values — provided generated values are
     # validated) or full_column is False and the antiunion force is a
     # no-op, making the equivalence vacuous (first draft's mistake,
-    # caught in review); _last_upsert_shape asserts the force landed
+    # caught in review); _last_upsert_shape asserts the force landed.
+    # The shape is forced through the broadcast gate it is decided by.
     batch = spark.createDataFrame(
         # matched+changed, matched+NULL (null must WIN), brand new key
         [(10, 999.0, None, 30), (20, None, "upd", 60),
@@ -2595,11 +2596,12 @@ def test_upsert_shapes_are_equivalent(spark, catalog):
         t = f"shape_{shape}"
         catalog.to_table(src, t, keys=["k"], generated={"g": "k * 3"})
         catalog.delete_rows(t, "k = 10")  # re-insert path
-        catalog._upsert_shape = shape
-        try:
+        with monkeypatch.context() as mp:
+            mp.setattr(
+                catalog, "_keys_broadcastable",
+                lambda *a, **kw: shape == "antiunion",
+            )
             catalog.to_table(batch, t, keys=["k"], how="upsert")
-        finally:
-            catalog._upsert_shape = None
         assert catalog._last_upsert_shape == shape
         results[shape] = {
             r["k"]: (r["v"], r["s"], r["g"])
@@ -2614,7 +2616,7 @@ def test_upsert_shapes_are_equivalent(spark, catalog):
     assert len(got) == 101
 
 
-def test_upsert_adaptive_dispatch_picks_by_batch(spark, catalog):
+def test_upsert_adaptive_dispatch_picks_by_batch(spark, catalog, monkeypatch):
     """Dispatch facts: a full-column broadcastable batch takes the
     anti+union branch (no full-outer join in any job), a
     partial-column batch must take the full-outer branch regardless of
@@ -2627,14 +2629,12 @@ def test_upsert_adaptive_dispatch_picks_by_batch(spark, catalog):
     )
     catalog.to_table(src, "disp", keys=["k"])
     # partial-column + forced antiunion: fallback keeps preserved cols
-    catalog._upsert_shape = "antiunion"
-    try:
+    with monkeypatch.context() as mp:
+        mp.setattr(catalog, "_keys_broadcastable", lambda *a, **kw: True)
         part = spark.createDataFrame(
             [(5, 123.0)], schema="k bigint, v double"
         )
         catalog.to_table(part, "disp", keys=["k"], how="upsert")
-    finally:
-        catalog._upsert_shape = None
     row = {r["k"]: (r["v"], r["s"]) for r in catalog.read_table("disp").collect()}
     assert row[5] == (123.0, "s5"), "preserved column must survive"
     assert catalog._last_upsert_shape == "fullouter"
@@ -2659,15 +2659,14 @@ def test_upsert_adaptive_dispatch_picks_by_batch(spark, catalog):
 
 
 def test_folded_probe_keeps_narrowing_semantics(spark, catalog):
-    """The r10 write-path fold skips the narrowing aggregate for
-    existing-table Spark writes with no new columns (the batch is
-    scanned ONCE, by the hoisted probe). The narrowing pass's two
-    live effects must survive the fold: an all-null batch column is
-    treated as ABSENT (upsert preserves target values — reference
-    make_clean_columns_dict drops all-None columns), and a genuinely
-    NEW column under add_new_columns still gets type-narrowed (0/1
-    ints evolve the schema as boolean), because that path keeps the
-    narrowing aggregate."""
+    """An existing-table write narrows inside its one batch probe
+    (the batch is scanned ONCE). The narrowing rules' live effects
+    hold there: an all-null Spark batch column is treated as ABSENT
+    (upsert preserves target values — reference
+    make_clean_columns_dict drops all-None columns), even a new one
+    without add_new_columns, and a genuinely NEW column under
+    add_new_columns is type-narrowed (0/1 ints evolve the schema as
+    boolean). A non-null new column still needs add_new_columns."""
     src = spark.createDataFrame(
         [(k, float(k), f"s{k}") for k in range(40)],
         schema="k bigint, v double, s string",
@@ -2692,7 +2691,7 @@ def test_folded_probe_keeps_narrowing_semantics(spark, catalog):
     got = {r["k"]: (r["v"], r["s"]) for r in catalog.read_table("fold").collect()}
     assert got[7] == (None, "u7") and got[8] == (88.0, "u8")
 
-    # new column of 0/1 ints: the non-folded path narrows it to boolean
+    # new column of 0/1 ints: the probe's stats narrow it to boolean
     batch3 = spark.createDataFrame(
         [(1, 1), (2, 0)], schema="k bigint, flag int"
     )
@@ -2703,9 +2702,8 @@ def test_folded_probe_keeps_narrowing_semantics(spark, catalog):
 
     # an all-null column whose DECLARED type coercion would reject —
     # NullType from F.lit(None), and an all-null string against the
-    # double column — must still take the narrowing path and be
-    # DROPPED (preserve), not explode in coerce_to_table_schema
-    # (the code-review regression on the first fold draft)
+    # double column — is DROPPED (preserve) before coercion, not
+    # exploded in coerce_to_table_schema
     nulltype = spark.range(3).select(
         F.col("id").alias("k"), F.lit(None).alias("v")
     )
@@ -2716,6 +2714,36 @@ def test_folded_probe_keeps_narrowing_semantics(spark, catalog):
     catalog.to_table(strnull, "fold", keys=["k"], how="upsert")
     got = {r["k"]: r["v"] for r in catalog.read_table("fold").collect()}
     assert got[1] == 1.0 and got[2] == 2.0, "all-null mismatch must preserve"
+
+    # an all-null NEW column without add_new_columns is absent too:
+    # dropped, not refused
+    newnull = spark.range(3).select(
+        F.col("id").alias("k"), F.lit(None).cast("string").alias("extra")
+    )
+    catalog.to_table(newnull, "fold", keys=["k"], how="upsert")
+    assert "extra" not in catalog.read_table("fold").columns
+
+    # a non-null new column without add_new_columns is still refused
+    extra = spark.createDataFrame([(1, "x")], schema="k bigint, extra string")
+    with pytest.raises(NameError, match="add_new_columns"):
+        catalog.to_table(extra, "fold", keys=["k"], how="upsert")
+
+
+def test_batch_probe_refuses_uncast_keys(spark, catalog):
+    """xxhash64 of an int differs from xxhash64 of the equal long, so
+    the batch probe refuses a key whose type differs from the
+    table's before it hashes anything; to_table casts the keys
+    first, so the same int-keyed batch upserts into the long table."""
+    catalog.to_table(
+        spark.createDataFrame([(1, 1.0), (2, 2.0)], "k bigint, v double"),
+        "kt_long", keys=["k"],
+    )
+    batch = spark.createDataFrame([(2, 20.0), (3, 3.0)], "k int, v double")
+    with pytest.raises(TypeError, match="key column k is int"):
+        catalog._batch_probe(batch, catalog.meta("kt_long"))
+    catalog.to_table(batch, "kt_long", keys=["k"], how="upsert")
+    got = {r["k"]: r["v"] for r in catalog.read_table("kt_long").collect()}
+    assert got == {1: 1.0, 2: 20.0, 3: 3.0}
 
 
 def test_vacuum_spares_inflight_staged_dv(spark, catalog):
