@@ -29,7 +29,7 @@ def unescape_partition(name: str) -> str:
     """Decode Hive-style partition-value escaping (``%XX``) in a
     directory name — Spark writes ``txn=app:0`` as ``txn=app%3A0``.
     Shared by every consumer that maps listed directory NAMES back to
-    logical partition VALUES (ANN index maintenance, Delta export).
+    logical partition VALUES (Delta export).
 
     Escapes are decoded as BYTES and then UTF-8: Spark/Hive only
     escape ASCII specials, but other engines percent-encode the UTF-8

@@ -16,8 +16,8 @@ Two tiers, per the standard ANN playbook:
   partition key — a query reads 1/2^planes of the corpus per probe.
 
 Hyperplane matrix is a deterministic md5-seeded constant (no RNG state,
-reproducible across sessions) materialized as a literal array — it
-travels with the plan, no side file, no driver loop.
+reproducible across sessions) carried as one literal (``_literal``) —
+it travels with the plan, no side file, no driver loop.
 
 The reference has no similarity surface (SURVEY.md §2 Table B) — this is
 extension surface for the driver's ``embeddings`` table.
@@ -61,25 +61,54 @@ def _hyperplanes(planes: int, dim: int) -> list[list[float]]:
     return out
 
 
-def _arr_sql(vals: list[float]) -> str:
-    """SQL text of a constant double array. Composed as ONE
-    server-parsed string because ``F.array(*[F.lit(v) ...])`` costs one
-    py4j round trip per element (~1.5s of driver time for a 16×64
-    centroid set); ``repr(float)`` is shortest-round-trip, so the
-    parsed doubles are bit-identical to the Python values."""
-    return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
-
-
-def _dot_sql(vec_col: str, vals: list[float]) -> str:
-    """SQL text of dot(`vec_col`, literal array) — semantically equal to
-    :func:`pandabase_spark.functions.vector.dot`, but composed into one
-    server-parsed string: building n_cells such folds through the
-    Column API costs ~90 py4j round trips each (lambda plumbing), ~1.4s
-    of driver time per assignment at 16×64 — the string parses in ~1ms."""
+def _literal(value, ddl: str, parsed: "str | None" = None) -> str:
+    """SQL text of the driver-held ``value`` (nested lists; dicts for
+    maps) as ONE constant of type ``ddl``, parsed as ``parsed``
+    (default ``ddl``; a map parses with string keys, the only JSON
+    key): the carrier of every matrix the scorers use and of the serve
+    path's probes. The optimizer folds it once, so the plan does not
+    grow with the matrix (one SQL fold per centroid made 87,065
+    analyzed nodes at 1,024 centroids), and ``json`` writes shortest
+    round-trip reprs, so the doubles are bit-exact. A NaN or infinity
+    has no literal: it raises ``ValueError``."""
+    try:
+        text = json.dumps(
+            value, separators=(",", ":"), allow_nan=False,
+            default=lambda o: np.asarray(o, dtype=np.float64).tolist(),
+        )
+    except ValueError:
+        raise ValueError(
+            "a driver-held matrix holds a non-finite value; NaN and "
+            "infinity have no literal"
+        ) from None
     return (
-        f"aggregate(zip_with(`{vec_col}`, {_arr_sql(vals)}, "
-        "(x, y) -> cast(x as double) * y), 0D, (acc, v) -> acc + v)"
+        f"cast(from_json('{text}', '{parsed or ddl}', "
+        f"map('mode', 'FAILFAST')) as {ddl})"
     )
+
+
+# the per-dimension terms the scorers fold: dot and squared L2 distance
+_DOT = "cast(_pb_x as double) * _pb_y"
+_SQDIST = "(cast(_pb_x as double) - _pb_y) * (cast(_pb_x as double) - _pb_y)"
+
+
+def _fold(a: str, b: str, term: str = _DOT) -> str:
+    """SQL text of the sum of ``term`` over the zipped arrays ``a`` and
+    ``b``, in double, left to right over the dimensions: the order
+    :func:`_folded` reproduces."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (_pb_x, _pb_y) -> {term}), "
+        "0D, (_pb_s, _pb_t) -> _pb_s + _pb_t)"
+    )
+
+
+def _scores(vec_col: str, matrix, term: str = _DOT) -> str:
+    """SQL text of the array of ``term`` folds of column ``vec_col``
+    against each row of the driver-held ``matrix``: one ``transform``
+    over one literal."""
+    rows = _literal(matrix, "array<array<double>>")
+    vec = "`" + vec_col.replace("`", "``") + "`"
+    return f"transform({rows}, _pb_c -> {_fold(vec, '_pb_c', term)})"
 
 
 def hyperplane_buckets(
@@ -87,8 +116,8 @@ def hyperplane_buckets(
 ) -> DataFrame:
     """Attach an LSH ``bucket`` (int, ``planes`` sign bits) per row.
 
-    One projection: ``planes`` dot products per vector, all inside one
-    codegen stage; adds no shuffle. Bucket the table ONCE at ingest and
+    One projection: ``planes`` dot products per vector, one
+    ``transform`` over the hyperplanes as one literal; adds no shuffle. Bucket the table ONCE at ingest and
     reuse for every query — at scale, persist partitioned by bucket.
     """
     if dim is None:
@@ -96,16 +125,14 @@ def hyperplane_buckets(
         if first is None:
             raise ValueError("cannot infer dim from an empty DataFrame")
         dim = first[0]
-    hp = _hyperplanes(planes, dim)
-    bucket = F.expr(
-        "cast(("
-        + " + ".join(
-            f"(cast(({_dot_sql(vec_col, plane)}) >= 0 as int) * {1 << i})"
-            for i, plane in enumerate(hp)
-        )
-        + ") as int)"
+    bits = (
+        f"zip_with({_scores(vec_col, _hyperplanes(planes, dim))}, "
+        f"sequence(0, {planes - 1}), (_pb_d, _pb_i) -> "
+        "cast(_pb_d >= 0 as bigint) * shiftleft(1L, _pb_i))"
     )
-    return df.withColumn("bucket", bucket)
+    return df.withColumn("bucket", F.expr(
+        f"cast(aggregate({bits}, 0L, (_pb_s, _pb_t) -> _pb_s + _pb_t) as int)"
+    ))
 
 
 def cosine_topk(
@@ -238,15 +265,12 @@ def _with_cell(
 
     Centroids are unit-normalized, so dot == cosine up to the vector's
     own norm, which is constant across cells — argmax is identical.
-    The ``n_cells`` dot folds are staged once as an array column, and
-    the argmax is ``array_position(dots, array_max(dots))`` over that
-    attribute — a CASE chain over named dot expressions would re-inline
-    each 64-dim fold per branch (~n_cells² folds per row). Ties break
-    to the lowest cell id (first array position).
+    The dots are one ``transform`` over the centroid matrix as one
+    literal (:func:`_scores`), staged once as an array column, and the
+    argmax is ``array_position(dots, array_max(dots))`` over that
+    attribute. Ties break to the lowest cell id (first array position).
     """
-    dots = F.expr(
-        "array(" + ",".join(_dot_sql(vec_col, c) for c in centroids) + ")"
-    )
+    dots = F.expr(_scores(vec_col, centroids))
     staged = df.withColumn("_pb_dots", dots)
     cell = (
         F.array_position(F.col("_pb_dots"), F.array_max("_pb_dots")) - 1
@@ -297,9 +321,9 @@ def _train_rows(
 def _folded(X: np.ndarray, C: np.ndarray, sqdist: bool) -> np.ndarray:
     """(rows × centroids) dots, or squared L2 distances, accumulated
     left to right over the dimensions in double: the order in which
-    :func:`_dot_sql` / :func:`_sqdist_sql` fold, so a row is assigned
-    here exactly as the Spark scorer assigns it, ties included (a
-    BLAS matmul sums in another order)."""
+    :func:`_fold` folds, so a row is assigned here exactly as the
+    Spark scorer assigns it, ties included (a BLAS matmul sums in
+    another order)."""
     out = np.zeros((len(X), len(C)))
     for j in range(X.shape[1]):
         if sqdist:
@@ -405,9 +429,10 @@ def ivf_centroids(
 ) -> list[list[float]]:
     """Train a spherical-k-means coarse quantizer; returns unit-norm
     centroids as plain Python lists (n_cells × dim floats — an index
-    artifact, intentionally driver-side and scored as literal folds,
-    the same carrier as :func:`pq_codebooks`). List position is the
-    cell id everywhere the quantizer is scored or persisted.
+    artifact, intentionally driver-side; it reaches Spark as one
+    literal (:func:`_literal`), the same carrier as
+    :func:`pq_codebooks`). List position is the cell id everywhere the
+    quantizer is scored or persisted.
 
     One collect (at most one Spark job), then NumPy on the driver. It
     fetches the training sample: after ``sample_mod`` (train on the deterministic
@@ -454,19 +479,14 @@ def _with_cells_topn(
     pick the same cells on the driver, :func:`_expand_probes`). One
     expression: sort the (−dot, cell) struct array, slice; ties break
     to the lower cell id (stable sort on (negdot, cell))."""
-    arr = (
-        "array("
-        + ",".join(
-            f"named_struct('negdot', -({_dot_sql(vec_col, c)}), "
-            f"'cell', cast({i} as int))"
-            for i, c in enumerate(centroids)
-        )
-        + ")"
+    pairs = (
+        f"zip_with({_scores(vec_col, centroids)}, "
+        f"sequence(0, {len(centroids) - 1}), (_pb_d, _pb_i) -> "
+        "named_struct('negdot', -_pb_d, 'cell', _pb_i))"
     )
-    return df.withColumn(
-        out,
-        F.expr(f"transform(slice(array_sort({arr}), 1, {n}), s -> s.cell)"),
-    )
+    return df.withColumn(out, F.expr(
+        f"transform(slice(array_sort({pairs}), 1, {n}), _pb_p -> _pb_p.cell)"
+    ))
 
 
 def _probe_cells(
@@ -543,7 +563,9 @@ def ivf_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Attach the IVF ``cell`` column (one projection, no shuffle)
-    against the :func:`ivf_centroids` list, scored as literal folds.
+    against the :func:`ivf_centroids` list, scored by one
+    ``transform`` over it as one literal: the plan does not grow with
+    ``n_cells``.
     At scale, run once at ingest and persist partitioned by ``cell`` —
     then every probe is a partition-pruned read.
     """
@@ -615,13 +637,15 @@ def ann_topk_ivf(
 #     _pandabase_log.json         hint: a copy of a recent version
 #     artifacts-<label>/          quantizer, codebooks, residual flag
 #                                 and anchors, as one tagged parquet
-#     data/cell=<c>/txn=<label>/  a leaf: one write's rows in cell c
-#     _staging/<label>/           a write in flight, or a crashed one
+#     data/txn=<label>/           one write: a fresh label per attempt
+#     data/txn=<label>/cell=<c>/  a leaf: that write's rows in cell c
 #
 # Every index write follows the keyed table's log rule (kt_log): land
-# the leaves, then claim {v+1}.json put-if-absent. A leaf that no
-# version lists is never read; compact_index deletes it once no reader
-# can still use it.
+# the label directory in place, then claim {v+1}.json put-if-absent.
+# Nothing is staged or renamed. A label that no version lists is never
+# read; compact_index deletes its directory once no reader can still
+# use it. Indexes written in the older cell-first layout
+# (data/cell=<c>/txn=<label>) are not read: rebuild them.
 
 # The artifacts file's schema, known by construction: one row per
 # centroid (cell, vec), codebook entry (j, code, vec) and anchor
@@ -649,8 +673,10 @@ def _label(kind: str) -> str:
     return f"{kind}-{uuid.uuid4().hex[:16]}"
 
 
-def _leaf(path: str, cell: int, label: str) -> str:
-    return f"{path}/data/cell={cell}/txn={label}"
+def _leaf(path: str, label: str, cell: "int | None" = None) -> str:
+    """The label directory of one write, or its leaf in ``cell``."""
+    out = f"{path}/data/txn={label}"
+    return out if cell is None else f"{out}/cell={cell}"
 
 
 def _index_head(fs, path: str) -> dict:
@@ -688,22 +714,19 @@ def _commit(fs, path: str, man: dict, change) -> dict:
 
 
 def _land(fs, frame: DataFrame, path: str, label: str) -> "list[int]":
-    """Write ``frame`` (it has a ``cell`` column) ``partitionBy("cell")``
-    into a fresh staging directory, then rename each cell's output into
-    place as the leaf ``data/cell=<c>/txn=<label>``. Returns the cells
-    written; no reader sees them until a version lists them."""
-    stage = f"{path}/_staging/{label}"
-    frame.repartition("cell").write.partitionBy("cell").parquet(stage)
+    """Write ``frame`` (it has a ``cell`` column) in place as the label
+    directory ``data/txn=<label>``, one ``cell=<c>`` leaf per cell, in
+    one ``partitionBy("cell")`` write, and return the cells written,
+    from one listing of that directory. A write that lands no cell
+    deletes its directory at once. No reader sees the leaves until a
+    version lists the label."""
+    out = _leaf(path, label)
+    frame.repartition("cell").write.partitionBy("cell").parquet(out)
     cells = sorted(
-        int(d[5:]) for d in fs.list_dirs(stage) if d.startswith("cell=")
+        int(d[5:]) for d in fs.list_dirs(out) if d.startswith("cell=")
     )
-    # a rename needs its parent: create the cell directories that are new
-    have = set(fs.list_dirs(f"{path}/data"))
-    for c in cells:
-        if f"cell={c}" not in have:
-            fs.mkdirs(f"{path}/data/cell={c}")
-        fs.rename_dir(f"{stage}/cell={c}", _leaf(path, c, label))
-    fs.delete(stage)
+    if not cells:
+        fs.delete(out)
     return cells
 
 
@@ -796,7 +819,7 @@ def _read_leaves(
     no listed leaf matches."""
     want = None if cells is None else set(cells)
     paths = [
-        _leaf(path, c, lb)
+        _leaf(path, lb, c)
         for lb, leaf in sorted(man["leaves"].items())
         if labels is None or lb in labels
         for c in leaf["cells"]
@@ -805,7 +828,7 @@ def _read_leaves(
     if not paths:
         return None
     df = (
-        spark.read.schema(f"{man['schema']}, cell int, txn string")
+        spark.read.schema(f"{man['schema']}, txn string, cell int")
         .option("basePath", f"{path}/data")
         .parquet(*paths)
         .drop("txn")
@@ -828,7 +851,7 @@ def write_ivf_index(
     """Build the IVF index ONCE at ingest and persist it
     cell-partitioned — the 100 TB serving shape the in-memory
     :func:`ann_topk_ivf` docstrings promise: the cell-assigned corpus
-    lands as one ``data/cell=<c>/txn=<label>`` leaf per cell (one
+    lands as one ``data/txn=<label>/cell=<c>`` leaf per cell (one
     directory per inverted list), the trained quantizer as the
     ``(cell, vec)`` rows of the artifacts file, and version 1 of the
     index log lists both. A probe then reads ONLY its probed cells'
@@ -955,7 +978,7 @@ def write_ivfpq_index(
     artifacts file holds the coarse quantizer and the PQ codebooks
     ((j, code, vec) rows — an m×k table, tiny by construction), and
     the corpus lands as (id, pq_code) rows under the same
-    ``data/cell=<c>/txn=<label>`` layout and log as
+    ``data/txn=<label>/cell=<c>`` layout and log as
     :func:`write_ivf_index` — NO raw vectors on the serving path: each
     row is m small ints (~16-32× less index IO than the raw-vector
     index), and a probe reads ~nprobe/n_cells of THAT. Both artifacts
@@ -1059,9 +1082,10 @@ def _subtract_cell_anchor(
     unshifted = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     if not anchors:
         return assigned.withColumn(vec_col, unshifted)
-    amap = "map(" + ", ".join(
-        f"{int(c)}, {_arr_sql(a)}" for c, a in anchors
-    ) + ")"
+    amap = _literal(
+        {int(c): a for c, a in anchors}, "map<int, array<double>>",
+        parsed="map<string, array<double>>",
+    )
     avec = F.expr(f"element_at({amap}, cell)")
     shifted = F.zip_with(
         F.col(vec_col), avec, lambda x, y: x.cast("double") - y
@@ -1302,7 +1326,7 @@ def _expand_probes(
     (query_id, _qvec) rows are collected once: no job for a
     driver-local query frame, one for any other. Each query's
     ``nprobe`` nearest cells are picked in NumPy by :func:`_folded`,
-    which sums the dots in :func:`_dot_sql`'s order, ties to the lower
+    which sums the dots in :func:`_fold`'s order, ties to the lower
     cell as in :func:`_with_cells_topn`: the selection is bit-identical
     to the Spark scorer's. A residual index shifts each probe's query
     by its cell's anchor here, with the persisted doubles (a cell
@@ -1312,12 +1336,10 @@ def _expand_probes(
     planning-time ``cell IN`` predicate), one row per (leaf row,
     probing query) with ``query_id`` and ``_qvec`` attached, or None
     when no listed leaf lies in a probed cell. The probes reach the
-    executors as one literal ``map<cell, array<struct<_qi, _qvec>>>``
-    ``inline``d on the scan: no join, so no broadcast job. Its
-    vectors travel as JSON text that the optimizer parses and folds
-    once (shortest round-trip reprs, so the doubles are bit-exact); a
-    SQL array expression of that size took seconds to analyze (13 s
-    for 400 queries × 4 probes × 64 dims on a 4-core box). ``_qvec``
+    executors as one :func:`_literal` ``map<cell, array<struct<_qi,
+    _qvec>>>`` ``inline``d on the scan: no join, so no broadcast job
+    (a SQL array expression of that size took 13 s to analyze for 400
+    queries × 4 probes × 64 dims on a 4-core box). ``_qvec``
     keeps the query frame's type (``array<double>`` once shifted) and
     ``query_id`` its column's, looked up by position ``_qi`` in a
     literal array, so scoring sees the values it would see on the
@@ -1363,13 +1385,10 @@ def _expand_probes(
         "array<double>" if index["residual"]
         else q.schema["_qvec"].dataType.simpleString()
     )
-    text = json.dumps(per_cell, separators=(",", ":"))
     probes = "array<struct<_qi:int, _qvec:{}>>"
-    probes = (
-        f"cast(from_json('{text}', "
-        f"'map<string, {probes.format('array<double>')}>', "
-        "map('mode', 'FAILFAST')) "
-        f"as map<int, {probes.format(vec_t)}>)"
+    probes = _literal(
+        per_cell, f"map<int, {probes.format(vec_t)}>",
+        parsed=f"map<string, {probes.format('array<double>')}>",
     )
     id_t = q.schema["query_id"].dataType
     ids = "array(" + ", ".join(_value_sql(r["query_id"], id_t) for r in rows) + ")"
@@ -1412,7 +1431,7 @@ def compact_index(
 ) -> dict:
     """Coalesce a persisted index's accumulated leaves — the
     long-horizon maintenance the streaming ingest story needs: every
-    append lands one ``cell=<c>/txn=<label>`` leaf per touched cell,
+    append lands one ``txn=<label>/cell=<c>`` leaf per touched cell,
     so a month of 1-minute triggers leaves ~43k leaves per cell,
     degrading scan planning on the serve path. This is the O(live
     leaves) fix, where a retrain+rewrite would be O(corpus): fold the
@@ -1433,9 +1452,9 @@ def compact_index(
     a replayed batch at or below its app's watermark stays a no-op
     whether or not its leaf was folded.
 
-    Every run then deletes what no reader can still use: leaves,
-    staging directories and artifacts files that the head does not
-    list, that no version listed within the last ``retention_s``
+    Every run then deletes what no reader can still use: label
+    directories and artifacts files that the head does not list,
+    that no version listed within the last ``retention_s``
     seconds (a reader holding that version may still scan them) and
     that were written more than ``retention_s`` ago (a concurrent
     append may be about to claim them). The default (0) deletes at
@@ -1499,8 +1518,10 @@ def _pairs(man: dict) -> int:
 
 
 def _vacuum(fs, path: str, man: dict, retention_s: float) -> None:
-    """Delete the leaves, staging directories and artifacts files that
-    no reader of the index can still use (see :func:`compact_index`)."""
+    """Delete the label directories and artifacts files that no reader
+    of the index can still use (see :func:`compact_index`), from one
+    listing of ``data/`` and one of the index directory: one delete
+    per dead label, however many cells it holds."""
     horizon = time.time() - retention_s
     live = set(man["leaves"]) | {man["artifacts"]}
     cur = man
@@ -1516,13 +1537,10 @@ def _vacuum(fs, path: str, man: dict, retention_s: float) -> None:
         if retention_s <= 0 or fs.mtime(p) <= horizon:
             fs.delete(p)
 
-    data = f"{path}/data"
-    for cd in fs.list_dirs(data):
-        for td in fs.list_dirs(f"{data}/{cd}"):
-            if td[len("txn="):] not in live:
-                drop(f"{data}/{cd}/{td}")
-    for d in fs.list_dirs(f"{path}/_staging"):
-        drop(f"{path}/_staging/{d}")
+    for d in fs.list_dirs(f"{path}/data"):
+        label = d[len("txn="):]
+        if d.startswith("txn=") and label not in live:
+            drop(_leaf(path, label))
     for d in fs.list_dirs(path):
         if d.startswith("artifacts-") and d not in live:
             drop(f"{path}/{d}")
@@ -1582,29 +1600,6 @@ def ann_topk_indexed(
 # Product quantization (PQ): compressed approximate distances
 # ---------------------------------------------------------------------------
 
-def _sqdist_sql(vec_col: str, vals: "list[float]") -> str:
-    """SQL text of squared L2 distance between ``vec_col`` and a
-    literal array (same one-parsed-string rationale as _dot_sql)."""
-    return (
-        f"aggregate(zip_with(`{vec_col}`, {_arr_sql(vals)}, "
-        "(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "
-        "0D, (acc, v) -> acc + v)"
-    )
-
-
-def _books_sql(codebooks: "list[list[list[float]]]") -> str:
-    """Nested array literal of the whole codebook set (m × k × d/m
-    doubles) as one server-parsed string — shared by the ADC scorers."""
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(_arr_sql(c) for c in book) + ")"
-            for book in codebooks
-        )
-        + ")"
-    )
-
-
 def _adc_expr(codebooks: "list[list[list[float]]]") -> Column:
     """Asymmetric-distance expression: dist² ≈ Σ_j ||q_j −
     C_j[code_j]||² evaluated against the staged ``_qvec`` (exact
@@ -1614,14 +1609,16 @@ def _adc_expr(codebooks: "list[list[list[float]]]") -> Column:
     diverge between them."""
     m = len(codebooks)
     d = len(codebooks[0][0])
+    books = _literal(codebooks, "array<array<array<double>>>")
+    sub = _fold(
+        f"slice(`_qvec`, _pb_j * {d} + 1, {d})",
+        f"element_at(element_at({books}, _pb_j + 1), "
+        "element_at(`pq_code`, _pb_j + 1) + 1)",
+        _SQDIST,
+    )
     return F.expr(
-        f"aggregate(sequence(0, {m - 1}), 0D, (acc, j) -> acc + "
-        "aggregate(zip_with("
-        f"slice(`_qvec`, j * {d} + 1, {d}), "
-        f"element_at(element_at({_books_sql(codebooks)}, j + 1), "
-        "element_at(`pq_code`, j + 1) + 1), "
-        "(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "
-        "0D, (a, v) -> a + v))"
+        f"aggregate(sequence(0, {m - 1}), 0D, "
+        f"(_pb_a, _pb_j) -> _pb_a + {sub})"
     )
 
 
@@ -1642,8 +1639,9 @@ def pq_codebooks(
     memory reduction at the driver-data shape (64 floats → 8 codes).
 
     Returns ``codebooks[j][c] = subcentroid`` as plain Python lists
-    (m·k·(d/m) floats — an index artifact, deliberately driver-side
-    and literal-broadcastable, same contract as :func:`ivf_centroids`).
+    (m·k·(d/m) floats — an index artifact, deliberately driver-side;
+    each subspace's book reaches Spark as one literal
+    (:func:`_literal`), the carrier of :func:`ivf_centroids`).
 
     One collect, then NumPy on the driver, sampled and capped as in
     :func:`ivf_centroids` with ``k`` in place of ``n_cells``. The first
@@ -1667,38 +1665,28 @@ def pq_encode(
     out: str = "pq_code",
 ) -> DataFrame:
     """Attach the PQ code (``array<int>`` of length m) — per subspace
-    the argmin-distance codebook entry, all codegen'd literal folds,
-    no shuffle. This is the INGEST-time pass: store the codes, drop
+    the argmin-distance codebook entry, one ``transform`` over that
+    subspace's codebook as one literal (ties to the lowest code), no
+    shuffle. This is the INGEST-time pass: store the codes, drop
     (or cold-store) the raw vectors, and scoring reads m ints per row
     instead of d floats."""
-    m = len(codebooks)
     d = len(codebooks[0][0])
-    staged = df
-    code_cols = []
-    for j in range(m):
-        sv = f"_pb_sv{j}"
-        staged = staged.withColumn(
-            sv, F.slice(vec_col, j * d + 1, d)
-        )
-        dists = F.expr(
-            "array("
-            + ",".join(_sqdist_sql(sv, c) for c in codebooks[j])
-            + ")"
-        )
-        staged = staged.withColumn(f"_pb_d{j}", dists)
-        code_cols.append(
-            (
-                F.array_position(
-                    F.col(f"_pb_d{j}"), F.array_min(f"_pb_d{j}")
-                )
-                - 1
-            ).cast("int")
-        )
-    result = staged.withColumn(out, F.array(*code_cols))
-    drop = [f"_pb_sv{j}" for j in range(m)] + [
-        f"_pb_d{j}" for j in range(m)
-    ]
-    return result.drop(*drop)
+    subs = {
+        f"_pb_sv{j}": F.slice(vec_col, j * d + 1, d)
+        for j in range(len(codebooks))
+    }
+    dists = {
+        f"_pb_d{j}": F.expr(_scores(sv, book, _SQDIST))
+        for j, (sv, book) in enumerate(zip(subs, codebooks))
+    }
+    codes = F.array(*[
+        (F.array_position(F.col(c), F.array_min(c)) - 1).cast("int")
+        for c in dists
+    ])
+    return (
+        df.withColumns(subs).withColumns(dists).withColumn(out, codes)
+        .drop(*subs, *dists)
+    )
 
 
 def ann_topk_pq(

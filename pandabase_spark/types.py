@@ -430,6 +430,10 @@ def pandas_to_spark(
     schema, _ = infer_schema_pandas(
         pdf, keys, auto_index=False, target_schema=target_schema
     )
+    if not schema.fields:
+        # every column was dropped (no rows, or all NaN): PySpark cannot
+        # build a frame from zero pandas columns, so keep the row count
+        return spark.range(len(pdf)).select()
     inferred = {f.name for f in schema.fields}
     use = pdf.reset_index(drop=True)
     use = use[[c for c in use.columns if c in inferred or c in keys]]

@@ -18,7 +18,10 @@ driver-local frame; then write_ivf_index and the same two
 single-vector ann_topk_indexed queries on the raw-vector index. Each
 verb runs in its own Spark job group. For every verb it prints
 the job count and, per job, the call sites Spark records as its stage
-names: the phase tree behind the verb's count. A DataFrameWriter write
+names: the phase tree behind the verb's count. Beside the jobs it
+prints the verb's ``HadoopFS`` calls by method, each with the
+innermost library frame outside ``fs.py`` that made it, so the
+file-system cost of a verb shows per call site. A DataFrameWriter write
 or a DataFrameReader read launched from the JVM bridge has no Python
 call site of its own, so while tracing, the writer's ``save`` and
 ``parquet`` and the reader's ``load`` and ``parquet`` set Spark's
@@ -37,10 +40,21 @@ import shutil
 import sys
 import tempfile
 import traceback
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 LIB = os.path.join(ROOT, "pandabase_spark") + os.sep
+
+
+def _library_frame(skip: str = "") -> "traceback.FrameSummary | None":
+    """The innermost library frame on the stack outside the file
+    ``skip``."""
+    return next(
+        (f for f in reversed(traceback.extract_stack()[:-1])
+         if f.filename.startswith(LIB) and f.filename != skip),
+        None,
+    )
 
 
 @contextlib.contextmanager
@@ -61,11 +75,7 @@ def named_calls(sc):
 
     def named(verb, orig):
         def call(self, *args, **kwargs):
-            frame = next(
-                (f for f in reversed(traceback.extract_stack()[:-1])
-                 if f.filename.startswith(LIB)),
-                None,
-            )
+            frame = _library_frame()
             if frame is None:
                 return orig(self, *args, **kwargs)
             prev = sc.getLocalProperty("callSite.short")
@@ -87,6 +97,45 @@ def named_calls(sc):
     finally:
         for cls, verb, orig in saved:
             setattr(cls, verb, orig)
+
+
+@contextlib.contextmanager
+def counted_fs(calls: Counter):
+    """While active, each outermost call of a public ``HadoopFS``
+    method adds one to ``calls[(method, call site)]`` (a method that
+    calls another counts once)."""
+    from pandabase_spark import fs as fsmod
+
+    cls = fsmod.HadoopFS
+    saved = {
+        n: v for n, v in vars(cls).items()
+        if callable(v) and not n.startswith("_")
+    }
+    depth = [0]
+
+    def counted(name, orig):
+        def call(self, *args, **kwargs):
+            if not depth[0]:
+                f = _library_frame(fsmod.__file__)
+                site = "?" if f is None else (
+                    f"{os.path.relpath(f.filename, ROOT)}:{f.lineno} ({f.name})"
+                )
+                calls[(name, site)] += 1
+            depth[0] += 1
+            try:
+                return orig(self, *args, **kwargs)
+            finally:
+                depth[0] -= 1
+
+        return call
+
+    for name, orig in saved.items():
+        setattr(cls, name, counted(name, orig))
+    try:
+        yield
+    finally:
+        for name, orig in saved.items():
+            setattr(cls, name, orig)
 
 
 def trace_narrowing(spark, cat, trace, df, rows: int) -> None:
@@ -201,14 +250,15 @@ def main() -> None:
 
     def trace(verb: str, fn) -> None:
         group = f"jobtrace-{verb}"
+        calls: Counter = Counter()
         sc.setJobGroup(group, verb)
         try:
-            with named_calls(sc):
+            with named_calls(sc), counted_fs(calls):
                 fn()
         finally:
             sc.setJobGroup(None, None)
         jids = sorted(st.getJobIdsForGroup(group))
-        print(f"{verb}: {len(jids)} jobs")
+        print(f"{verb}: {len(jids)} jobs, {sum(calls.values())} fs calls")
         for j in jids:
             info = st.getJobInfo(j)
             sites = []
@@ -218,6 +268,8 @@ def main() -> None:
                 if (name := where(name)) not in sites:
                     sites.append(name)
             print(f"  job {j}: {' | '.join(sites)}")
+        for (method, site), n in sorted(calls.items()):
+            print(f"  fs {method} x{n}: {site}")
 
     try:
         trace("create", lambda: cat.to_table(

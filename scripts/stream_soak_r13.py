@@ -159,14 +159,13 @@ def main() -> None:
         return spark.read.parquet(f"{path}/data").count()
 
     def leaves() -> "list[int]":
-        out = []
-        for cd in os.listdir(f"{path}/data"):
-            if cd.startswith("cell="):
-                out.append(len([
-                    t for t in os.listdir(f"{path}/data/{cd}")
-                    if t.startswith("txn=")
-                ]))
-        return out
+        """Leaves per cell, over every ``txn=<label>`` directory."""
+        per_cell: "dict[str, int]" = {}
+        for td in os.listdir(f"{path}/data"):
+            for cd in os.listdir(f"{path}/data/{td}"):
+                if cd.startswith("cell="):
+                    per_cell[cd] = per_cell.get(cd, 0) + 1
+        return list(per_cell.values())
 
     report: dict = {"n_batches": N_BATCHES, "batch_rows": BATCH_ROWS,
                     "n_cells": N_CELLS, "corpus_rows": n_total}

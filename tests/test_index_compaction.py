@@ -1,6 +1,6 @@
 """Persisted-ANN-index compaction and the index log.
 
-Every index write lands its ``data/cell=<c>/txn=<label>`` leaves and
+Every index write lands its ``data/txn=<label>/cell=<c>`` leaves and
 then claims the next version of the index log (``_pb_log/``, the
 keyed table's rule in ``kt_log``); readers use only the leaves the
 head version lists. ``compact_index`` folds the head's leaves into one
@@ -60,16 +60,20 @@ def index_rows(spark, path):
     return _read_leaves(spark, path, index_head(spark, path))
 
 
-def disk_leaves(path) -> "set[tuple[int, str]]":
-    """Every (cell, label) leaf directory on disk, listed or not."""
+def disk_leaves(path) -> "set[tuple[int | None, str]]":
+    """Every (cell, label) leaf directory on disk, listed or not, and
+    (None, label) for a label directory that holds no leaf."""
     data = f"{path}/data"
     if not os.path.isdir(data):
         return set()
-    return {
-        (int(cd[len("cell="):]), td[len("txn="):])
-        for cd in os.listdir(data)
-        for td in os.listdir(f"{data}/{cd}")
-    }
+    out = set()
+    for td in os.listdir(data):
+        cells = [
+            int(cd[len("cell="):]) for cd in os.listdir(f"{data}/{td}")
+            if cd.startswith("cell=")
+        ]
+        out |= {(c, td[len("txn="):]) for c in cells or [None]}
+    return out
 
 
 def listed_leaves(head) -> "set[tuple[int, str]]":
@@ -243,17 +247,13 @@ def test_crash_windows_never_served_wrong_and_rerun_converges(
     q, truth = _streamed_ivf(spark, path, n_batches=2)
     data = f"{path}/data"
     base = next(
-        lb for lb, leaf in index_head(spark, path)["leaves"].items()
+        lb for lb in index_head(spark, path)["leaves"]
         if lb.startswith("base-")
     )
-    cell = index_head(spark, path)["leaves"][base]["cells"][0]
 
-    # crash window 1: a fold landed its leaf but never claimed a
-    # version — no reader sees it
-    shutil.copytree(
-        f"{data}/cell={cell}/txn={base}",
-        f"{data}/cell={cell}/txn=compact-crashed",
-    )
+    # crash window 1: a fold landed its leaves but never claimed a
+    # version — no reader sees them
+    shutil.copytree(f"{data}/txn={base}", f"{data}/txn=compact-crashed")
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
@@ -262,11 +262,9 @@ def test_crash_windows_never_served_wrong_and_rerun_converges(
     # never ran — the folded leaf is on disk and unlisted
     stats = compact_index(spark, path, keep_last=0)
     assert stats["folded_labels"] == 3
-    assert not os.path.exists(f"{data}/cell={cell}/txn=compact-crashed")
+    assert not os.path.exists(f"{data}/txn=compact-crashed")
     fold = next(iter(index_head(spark, path)["leaves"]))
-    shutil.copytree(
-        f"{data}/cell={cell}/txn={fold}", f"{data}/cell={cell}/txn={base}"
-    )
+    shutil.copytree(f"{data}/txn={fold}", f"{data}/txn={base}")
     assert _topk_set(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
@@ -354,11 +352,10 @@ def test_stale_uncommitted_fold_leaf_deleted_under_new_watermark(
     data = f"{path}/data"
     head = index_head(spark, path)
     batch = next(lb for lb in head["leaves"] if lb.startswith("add-"))
-    cell = head["leaves"][batch]["cells"][0]
-    stale = f"{data}/cell={cell}/txn=compact-stale"
+    stale = f"{data}/txn=compact-stale"
 
     # a copy of batch rows under an unlisted label
-    shutil.copytree(f"{data}/cell={cell}/txn={batch}", stale)
+    shutil.copytree(f"{data}/txn={batch}", stale)
     stats = compact_index(spark, path, keep_last=10)
     assert stats["folded_labels"] == 0  # only the build's leaf to fold
     assert not os.path.exists(stale)
@@ -366,7 +363,7 @@ def test_stale_uncommitted_fold_leaf_deleted_under_new_watermark(
         ann_topk_indexed(spark, path, q, k=8, nprobe=4)
     ) == truth
     # replant it: a run that DOES fold never picks it up
-    shutil.copytree(f"{data}/cell={cell}/txn={batch}", stale)
+    shutil.copytree(f"{data}/txn={batch}", stale)
     stats2 = compact_index(spark, path, keep_last=0)
     assert stats2["folded_labels"] == 4
     assert not os.path.exists(stale)
@@ -414,27 +411,26 @@ def test_retention_defers_physical_deletes(spark, tmp_path, monkeypatch):
 def test_first_compaction_crash_mid_rename_never_served_wrong(
     spark, tmp_path, monkeypatch
 ):
-    """A crash after the first rename of a fold leaves a partial fold
-    leaf on disk. No version lists it, so the serve result is still
-    exact, and a re-run folds again and deletes it."""
-    import pandabase_spark.fs as fsmod
-
+    """A crash after the fold's data write and before its claim leaves
+    the fold's label directory on disk. No version lists it, so the
+    serve result is still exact, and a re-run folds again and deletes
+    it. (The fold once landed through per-cell renames; the name keeps
+    the crash window it first pinned.)"""
     path = str(tmp_path / "idx")
     q, truth = _streamed_ivf(spark, path, n_batches=2)
     v0 = index_head(spark, path)["v"]
 
-    real_rename = fsmod.HadoopFS.rename_dir
+    real_commit = similarity._commit
     calls = {"n": 0}
 
-    def crash_after_first(self, src, dst):
-        real_rename(self, src, dst)
+    def crash_before_claim(*args, **kwargs):
         calls["n"] += 1
-        raise RuntimeError("injected crash mid-rename")
+        raise RuntimeError("injected crash before the claim")
 
-    monkeypatch.setattr(fsmod.HadoopFS, "rename_dir", crash_after_first)
+    monkeypatch.setattr(similarity, "_commit", crash_before_claim)
     with pytest.raises(RuntimeError, match="injected"):
         compact_index(spark, path, keep_last=0)
-    monkeypatch.setattr(fsmod.HadoopFS, "rename_dir", real_rename)
+    monkeypatch.setattr(similarity, "_commit", real_commit)
     assert calls["n"] == 1
     head = index_head(spark, path)
     assert head["v"] == v0

@@ -193,6 +193,11 @@ def test_coercion_incompatible_raises(catalog, spark):
         ("generated", [0, 1, 1], "long", {"g": "v + 1"}, "AnalysisException"),
         # every value column of an empty batch is vacuously all-null
         ("empty", [], "double", None, [("k", "bigint")]),
+        # under auto_index, dropping every column leaves the index only
+        ("auto_empty", [], "double", None,
+         [(AUTO_INDEX_NAME, "bigint")]),
+        ("auto_allnull", [None] * 3, "double", None,
+         [(AUTO_INDEX_NAME, "bigint")]),
     ],
 )
 def test_pandas_and_spark_creates_narrow_alike(
@@ -202,6 +207,7 @@ def test_pandas_and_spark_creates_narrow_alike(
     pandas (narrowed on the driver) or as a Spark frame (narrowed by
     the create's one batch aggregate): same schema and rows, or the
     same refusal."""
+    auto = case.startswith("auto_")
     ks = list(range(1, len(values) + 1))
     pdf = pd.DataFrame(
         {
@@ -229,8 +235,13 @@ def test_pandas_and_spark_creates_narrow_alike(
             sorted(tuple(r) for r in catalog.read_table(name).collect()),
         )
 
-    got_pandas = outcome(pdf, f"p_{case}")
-    got_spark = outcome(sdf, f"s_{case}", keys=["k"])
+    if auto:
+        got_pandas = outcome(pdf.reset_index(drop=True), f"p_{case}",
+                             auto_index=True)
+        got_spark = outcome(sdf.drop("k"), f"s_{case}", auto_index=True)
+    else:
+        got_pandas = outcome(pdf, f"p_{case}")
+        got_spark = outcome(sdf, f"s_{case}", keys=["k"])
     assert got_pandas == got_spark
     assert (got_spark if isinstance(expect, str) else got_spark[0]) == expect
 

@@ -961,8 +961,10 @@ def test_persisted_ivf_index_identical_to_in_memory(spark, tmp_path):
     # the index is layout-real: one directory per inverted list
     import os
 
+    (label,) = os.listdir(f"{path}/data")
     cells = sorted(
-        d for d in os.listdir(f"{path}/data") if d.startswith("cell=")
+        d for d in os.listdir(f"{path}/data/{label}")
+        if d.startswith("cell=")
     )
     assert len(cells) >= 2
 
@@ -1186,6 +1188,83 @@ def test_persisted_index_job_counts(spark, tmp_path):
         assert n <= budget, f"{name} ran {n} jobs (budget {budget})"
 
 
+def test_index_fs_calls_do_not_grow_with_cells(spark, tmp_path, monkeypatch):
+    """Every index write lands ``data/txn=<label>/`` in place and learns
+    its cells from one listing of it, and vacuum deletes one directory
+    per dead label: an IVFPQ build, a ``txn=`` append and
+    ``compact_index(keep_last=0)`` each make the same ``HadoopFS``
+    calls, method by method, at 4 and at 16 populated cells, and none
+    makes or renames a directory."""
+    from collections import Counter
+
+    import numpy as np
+
+    import pandabase_spark.fs as fsmod
+    from pandabase_spark import kt_log
+    from pandabase_spark.operators.similarity import (
+        append_ivfpq_index, compact_index, write_ivfpq_index,
+    )
+
+    rng = np.random.default_rng(7)
+    centers = rng.standard_normal((16, 8))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    vecs = centers[np.arange(1100) % 16] + 0.05 * rng.standard_normal(
+        (1100, 8)
+    )
+    frame = spark.createDataFrame(pd.DataFrame({
+        "vec_id": np.arange(1100, dtype=np.int64), "embedding": list(vecs),
+    }))
+    corpus, batch = frame.where("vec_id < 1000"), frame.where("vec_id >= 1000")
+
+    class CountingFS:
+        def __init__(self, inner):
+            self._inner = inner
+            self.calls: Counter = Counter()
+
+        def __getattr__(self, name):
+            attr = getattr(self._inner, name)
+
+            def call(*args, **kwargs):
+                self.calls[name] += 1
+                return attr(*args, **kwargs)
+
+            return call
+
+    real = fsmod.HadoopFS
+
+    def counted(fn) -> dict:
+        fs = CountingFS(real(spark))
+        monkeypatch.setattr(fsmod, "HadoopFS", lambda _spark: fs)
+        try:
+            fn()
+        finally:
+            monkeypatch.setattr(fsmod, "HadoopFS", real)
+        return dict(fs.calls)
+
+    def run(n_cells: int) -> dict:
+        path = str(tmp_path / f"ix{n_cells}")
+        calls = {
+            "build": counted(lambda: write_ivfpq_index(
+                corpus, path, centroids=centers[:n_cells].tolist(), m=2,
+                n_codes=4, iters=1,
+            )),
+            "append": counted(lambda: append_ivfpq_index(
+                batch, path, txn=("fs", 0)
+            )),
+        }
+        leaves = kt_log.head(real(spark), path)["leaves"]
+        assert sum(len(x["cells"]) for x in leaves.values()) == 2 * n_cells
+        calls["compact"] = counted(
+            lambda: compact_index(spark, path, keep_last=0)
+        )
+        return calls
+
+    four, sixteen = run(4), run(16)
+    assert four == sixteen, (four, sixteen)
+    for verb, calls in sixteen.items():
+        assert not {"mkdirs", "rename_dir"} & set(calls), (verb, calls)
+
+
 def test_artifacts_memo_is_thread_safe():
     """The artifacts memo is shared by every driver thread (a streaming
     sink's foreachBatch runs on its own): with more threads than
@@ -1386,10 +1465,17 @@ def test_append_ivf_index_matches_rebuild_and_bruteforce(spark, tmp_path):
         emb.where("vec_id % 2 = 0"), path, n_cells=8, iters=2,
         sample_mod=2,
     )
-    files_before = {
-        d: len(os.listdir(f"{path}/data/{d}"))
-        for d in os.listdir(f"{path}/data") if d.startswith("cell=")
-    }
+    def cell_files() -> "dict[str, int]":
+        """Files per ``cell=<c>`` leaf name, over every label."""
+        out: "dict[str, int]" = {}
+        for lb in os.listdir(f"{path}/data"):
+            for d in os.listdir(f"{path}/data/{lb}"):
+                if d.startswith("cell="):
+                    n = len(os.listdir(f"{path}/data/{lb}/{d}"))
+                    out[d] = out.get(d, 0) + n
+        return out
+
+    files_before = cell_files()
     append_ivf_index(emb.where("vec_id % 2 = 1"), path)
     as_set = lambda df: {
         (r["query_id"], r["vec_id"], round(r["cosine"], 6), r["rank"])
@@ -1401,10 +1487,7 @@ def test_append_ivf_index_matches_rebuild_and_bruteforce(spark, tmp_path):
     exact = as_set(cosine_topk(emb, emb.where("vec_id < 3"), k=8))
     assert got == exact
     # cells the odd half didn't hash into keep their exact file count
-    files_after = {
-        d: len(os.listdir(f"{path}/data/{d}"))
-        for d in os.listdir(f"{path}/data") if d.startswith("cell=")
-    }
+    files_after = cell_files()
     untouched = [
         d for d in files_before if files_after[d] == files_before[d]
     ]
@@ -1415,10 +1498,7 @@ def test_append_ivf_index_matches_rebuild_and_bruteforce(spark, tmp_path):
     assert grown, "append must add files to at least one cell"
     # appending an empty batch adds nothing anywhere
     append_ivf_index(emb.where("vec_id < 0"), path)
-    files_empty = {
-        d: len(os.listdir(f"{path}/data/{d}"))
-        for d in os.listdir(f"{path}/data") if d.startswith("cell=")
-    }
+    files_empty = cell_files()
     assert files_empty == files_after
     assert untouched is not None  # documented observation, not a gate
 

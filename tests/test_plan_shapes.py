@@ -924,3 +924,56 @@ def test_delta_scan_plans_one_scan_any_tuple_count(spark, tmp_path):
     a = plan_audit(df)
     assert a.parquet_scans == 1
     assert a.join_safe
+
+
+def test_literal_scorers_do_not_grow_with_matrix_size(spark):
+    """Every driver-held matrix (centroids, hyperplanes, codebooks,
+    anchors) reaches Spark as one folded JSON literal scored by one
+    ``transform``: the analyzed plan has the same number of expression
+    nodes at 16 and at 1,024 rows of the matrix (64 planes for the
+    LSH buckets), where one SQL fold per row grew it with the matrix
+    (1,385 nodes at 16 centroids, 87,065 at 1,024). A non-finite
+    matrix value has no literal and raises."""
+    import numpy as np
+
+    from pandabase_spark.operators.similarity import (
+        _adc_expr, _subtract_cell_anchor, _with_cells_topn,
+        hyperplane_buckets, ivf_assign, pq_encode,
+    )
+
+    dim = 8
+    df = spark.createDataFrame(
+        [(0, [0.5] * dim, 1, [0, 1])],
+        "vec_id long, embedding array<double>, cell int, "
+        "pq_code array<int>",
+    )
+    rng = np.random.default_rng(0)
+
+    def nodes(frame) -> int:
+        return frame._jdf.queryExecution().analyzed().toJSON().count(
+            '"class":'
+        )
+
+    def shapes(n: int) -> dict:
+        mat = rng.standard_normal((n, dim)).tolist()
+        books = rng.standard_normal((2, n, dim // 2)).tolist()
+        q = df.withColumnRenamed("embedding", "_qvec")
+        return {
+            "ivf_assign": nodes(ivf_assign(df.drop("cell"), mat)),
+            "cells_topn": nodes(_with_cells_topn(df, "embedding", mat, 3)),
+            "pq_encode": nodes(pq_encode(df.drop("pq_code"), books)),
+            "adc": nodes(q.withColumn("d", _adc_expr(books))),
+            "anchors": nodes(_subtract_cell_anchor(
+                df, list(enumerate(mat)), "embedding"
+            )),
+        }
+
+    assert shapes(16) == shapes(1024)
+    planes = {
+        p: nodes(hyperplane_buckets(df, "embedding", planes=p, dim=dim))
+        for p in (8, 64)
+    }
+    assert planes[8] == planes[64], planes
+    for bad in (float("nan"), float("inf")):
+        with pytest.raises(ValueError, match="non-finite"):
+            ivf_assign(df, [[0.0] * (dim - 1) + [bad]] * 2)
