@@ -100,7 +100,7 @@ from pandabase_spark.types import (
     coerce_to_table_schema,
     coercion_class,
     infer_schema_pandas,
-    narrowing_aggs,
+    fold_narrowing,
     narrowing_aggs_grouped,
     pandas_to_spark,
     spark_to_logical,
@@ -260,6 +260,160 @@ def _bucket_expr(keys: Sequence[str], num_buckets: int):
     ).cast("int")
 
 
+def _key_order(k: str, dt: T.DataType) -> Column:
+    """The first key column as a key range records it: a TIMESTAMP as
+    its epoch microseconds, any other type as itself. A timestamp
+    collected to the driver becomes local wall time, which runs
+    backwards across a daylight-saving fold, so a range kept in that
+    form could call two overlapping ranges disjoint."""
+    return F.unix_micros(F.col(k)) if isinstance(dt, T.TimestampType) else F.col(k)
+
+
+def _key_bound(v: Any, dt: T.DataType) -> Any:
+    """A read bound on the first key column in the form its key ranges
+    are kept in (:func:`_key_order`), or None where Spark compares the
+    bound under a cast the ranges do not model: a date bound on a
+    timestamp key or the reverse, a number on a boolean key, any bound
+    on a TIMESTAMP_NTZ key (compared as a session-zone instant). Such a
+    bound prunes nothing. ``read_table`` refuses every other mismatched
+    bound (:meth:`KeyedCatalog._check_bound_type`)."""
+    import datetime
+
+    stamp = isinstance(dt, T.TimestampType)
+    if (
+        isinstance(dt, T.TimestampNTZType)
+        or (isinstance(dt, T.BooleanType) and not isinstance(v, bool))
+        or (
+            (stamp or isinstance(dt, T.DateType))
+            and isinstance(v, datetime.datetime) != stamp
+        )
+    ):
+        return None
+    return T.TimestampType().toInternal(v) if stamp else stat_json(v)
+
+
+def _range_misses(rng: Any, lo: Any, hi: Any) -> bool:
+    """True when a recorded ``[min, max]`` provably misses the bounds
+    ``[lo, hi]`` (JSON forms; None is an open side). A missing or
+    partial range never misses, and a string never orders against a
+    number: metadata written before decimal stats became numbers holds
+    them as strings, and those leaves are read, not skipped."""
+    if not rng or rng[0] is None or rng[1] is None:
+        return False
+    return (
+        hi is not None
+        and isinstance(rng[0], str) == isinstance(hi, str)
+        and rng[0] > hi
+    ) or (
+        lo is not None
+        and isinstance(rng[1], str) == isinstance(lo, str)
+        and rng[1] < lo
+    )
+
+
+def _skip_aggs(m: "TableMeta") -> list:
+    """The per-bucket aggregates behind a segment's skipping entries:
+    the first key column's range, min/max of ``m.stats_columns``, one
+    ``collect_set`` of ``xxhash64(col, seed) mod BLOOM_M`` per Bloom
+    column and hash seed (bounded by BLOOM_M whatever the row count, so
+    the collect is metadata-sized; NULLs set no bits, since a Bloom
+    probe is an equality probe and NULL never equals), and KLL/HLL
+    sketches of ``m.sketch_columns``.
+
+    KLL (quantiles/ranks) runs over the numeric try_cast, so a
+    non-numeric value contributes NULL and is skipped (string sketch
+    columns keep HLL distinct counts without crashing the cast under
+    ANSI mode); HLL (distinct count) runs over the canonical string
+    form. Both are Spark-native DataSketches aggregates and MERGEABLE:
+    table statistics fold the live (segment, bucket) entries, and the
+    data is never rescanned.
+
+    Grouped by ``PART_DIR``, they run over a segment's rows
+    (:meth:`KeyedCatalog._segment_skipping`) or over the batch probe's
+    one row per key (:meth:`KeyedCatalog._batch_probe`); either way
+    :func:`_skip_doc` turns the rows into the same entries."""
+    k0 = m.keys[0]
+    aggs = [
+        F.min(_key_order(k0, m.schema[k0].dataType)).alias("_k_lo"),
+        F.max(_key_order(k0, m.schema[k0].dataType)).alias("_k_hi"),
+    ]
+    for c in m.stats_columns:
+        aggs.append(F.min(c).alias(f"_lo_{c}"))
+        aggs.append(F.max(c).alias(f"_hi_{c}"))
+    for ci, c in enumerate(m.bloom_columns):
+        for s in range(BLOOM_K):
+            aggs.append(
+                F.collect_set(
+                    F.when(
+                        F.col(c).isNotNull(),
+                        F.pmod(F.xxhash64(F.col(c), F.lit(s)), F.lit(BLOOM_M)),
+                    )
+                ).alias(f"_bl_{ci}_{s}")
+            )
+    for c in m.sketch_columns:
+        aggs.append(
+            F.kll_sketch_agg_double(F.col(c).try_cast("double")).alias(
+                f"_kll_{c}"
+            )
+        )
+        # HLL accepts int/long/string/binary only — hash any other
+        # type through its canonical string form (distinct-count
+        # preserving; doubles stringify uniquely)
+        aggs.append(
+            F.hll_sketch_agg(F.col(c).cast("string")).alias(f"_hll_{c}")
+        )
+    return aggs
+
+
+def _skip_doc(rows: list, m: "TableMeta") -> dict:
+    """A segment's ``_pb_skip.json`` from the rows of :func:`_skip_aggs`:
+    ``{kind: {str(bucket): {col_id: entry}}}``, ``col_id`` being the
+    stable column identity. ``keys`` (always) holds the first key
+    column's ``[min, max]``; stats ``[min, max]``, blooms ``{"m", "k",
+    "b64"}`` and sketches ``{"kll": b64, "hll": b64}`` are present when
+    the table declares them. A (bucket, column) whose values are all
+    NULL gets no Bloom entry."""
+    import base64
+
+    def b64(v):
+        return base64.b64encode(v).decode() if v else None
+
+    ident = {c: m.colmap.get(c, c) for c in m.schema.names}
+    k0 = ident[m.keys[0]]
+    out: dict = {"keys": {}}
+    out.update(
+        (kind, {})
+        for kind, cols in (
+            ("stats", m.stats_columns),
+            ("blooms", m.bloom_columns),
+            ("sketches", m.sketch_columns),
+        )
+        if cols
+    )
+    for r in rows:
+        b = str(r[PART_DIR])
+        out["keys"][b] = {k0: [stat_json(r["_k_lo"]), stat_json(r["_k_hi"])]}
+        if m.stats_columns:
+            out["stats"][b] = {
+                ident[c]: [stat_json(r[f"_lo_{c}"]), stat_json(r[f"_hi_{c}"])]
+                for c in m.stats_columns
+            }
+        for ci, c in enumerate(m.bloom_columns):
+            bits = set().union(*(r[f"_bl_{ci}_{s}"] for s in range(BLOOM_K)))
+            if bits:
+                out["blooms"].setdefault(b, {})[ident[c]] = {
+                    "m": BLOOM_M, "k": BLOOM_K, "b64": _bloom_b64(bits),
+                }
+        if m.sketch_columns:
+            out["sketches"][b] = {
+                ident[c]: {
+                    "kll": b64(r[f"_kll_{c}"]), "hll": b64(r[f"_hll_{c}"]),
+                }
+                for c in m.sketch_columns
+            }
+    return out
+
+
 def _man_dv_files(man: dict) -> "set[str]":
     """The DV sidecar files a manifest references and OWNS — external
     (clone) refs carry a '/' and are the source table's to reclaim.
@@ -413,7 +567,8 @@ class KeyedCatalog:
         self, table_name: str, man: dict, m: "TableMeta | None" = None
     ) -> dict:
         """The data-skipping dict of a manifest's live leaves:
-        ``{"stats" | "blooms" | "sketches": {seg: {bucket: {col: ..}}}}``.
+        ``{"keys" | "stats" | "blooms" | "sketches": {seg: {bucket:
+        {col: ..}}}}``, ``keys`` holding the first key column's range.
         Each segment's entries live in its own immutable
         ``_pb_skip.json``, written once by :meth:`_write_segment` and
         keyed by stable column identity. Here they are read for the
@@ -426,7 +581,7 @@ class KeyedCatalog:
         if m is None:
             m = self.meta(table_name)
         names = {m.colmap.get(c, c): c for c in m.schema.names}
-        out: dict = {"stats": {}, "blooms": {}, "sketches": {}}
+        out: dict = {"keys": {}, "stats": {}, "blooms": {}, "sketches": {}}
         for seg, bs in man["segments"].items():
             path = f"{self._seg_path(table_name, seg)}/{SKIP_FILE}"
             if not self.fs.exists(path):
@@ -474,16 +629,22 @@ class KeyedCatalog:
         return int(got) if got is not None else None
 
     def _txn_applied(
-        self, table_name: str, txn: "tuple[str, int] | None"
+        self,
+        table_name: str,
+        txn: "tuple[str, int] | None",
+        man: "dict | None" = None,
     ) -> bool:
         """True iff this (app_id, version) write already committed —
-        the replay guard. Checked against the head manifest; a
-        racing duplicate that slips past the check loses the OCC
-        claim in :meth:`_commit` instead, and its retry lands here."""
+        the replay guard. Checked against the head manifest (``man``,
+        when the caller already holds it); a racing duplicate that
+        slips past the check loses the OCC claim in :meth:`_commit`
+        instead, and its retry lands here."""
         if txn is None:
             return False
         app, tv = txn
-        last = self._manifest(table_name).get("txns", {}).get(str(app))
+        if man is None:
+            man = self._manifest(table_name)
+        last = man.get("txns", {}).get(str(app))
         return last is not None and int(tv) <= int(last)
 
     @staticmethod
@@ -507,37 +668,16 @@ class KeyedCatalog:
         self, seg_path: str, buckets: Sequence[int], m: TableMeta
     ) -> dict:
         """The skipping entries of one freshly written segment, read
-        back from its files in ONE grouped aggregate (the write-time
-        skipping pass of Delta Lake): per bucket, min/max of
-        ``m.stats_columns``, Bloom bitsets of ``m.bloom_columns`` and
-        KLL/HLL sketches of ``m.sketch_columns``.
+        back from its files in ONE grouped aggregate (:func:`_skip_aggs`,
+        the write-time skipping pass of Delta Lake), as the
+        :func:`_skip_doc` dict. The rewriting writes (upsert, MERGE,
+        the DML rewrites, the DV fold, compaction) take their entries
+        from here; a create or append takes them from its batch probe
+        unless a skipping column changed after the probe.
 
         The bucket is the file's own leaf directory (the last
         ``_pb_b=N`` path component), never an earlier match in the
-        catalog path. With Bloom columns, each row is repeated once
-        per hash seed (BLOOM_K), and each Bloom column folds its
-        JVM-side ``xxhash64(col, seed) mod BLOOM_M`` positions into
-        one ``collect_set`` per bucket — bounded by BLOOM_M (8192)
-        regardless of row count, so the collect is metadata-sized.
-        min/max and HLL ignore the repeats; KLL counts rows, so it
-        sees seed 0 only. NULLs set no bits (a bloom probe is an
-        equality probe; NULL never equals), and a (bucket, column)
-        whose values are all NULL gets no Bloom entry.
-
-        KLL (quantiles/ranks) runs over the numeric try_cast, so a
-        non-numeric value contributes NULL and is skipped (string
-        sketch columns keep HLL distinct counts without crashing the
-        cast under ANSI mode); HLL (distinct count) runs over the
-        canonical string form. Both are Spark-native DataSketches
-        aggregates and MERGEABLE: table statistics fold the live
-        (segment, bucket) entries, and the data is never rescanned.
-
-        Returns ``{kind: {str(bucket): {col_id: entry}}}`` for each
-        declared kind, ``col_id`` being the stable column identity:
-        stats ``[min, max]``, blooms ``{"m", "k", "b64"}``, sketches
-        ``{"kll": b64, "hll": b64}``."""
-        import base64
-
+        catalog path."""
         df = (
             self.spark.read.schema(m.schema)
             .parquet(*[f"{seg_path}/{PART_DIR}={b}" for b in buckets])
@@ -550,80 +690,7 @@ class KeyedCatalog:
                 ).cast("int"),
             )
         )
-        aggs = []
-        for c in m.stats_columns:
-            aggs.append(F.min(c).alias(f"_lo_{c}"))
-            aggs.append(F.max(c).alias(f"_hi_{c}"))
-        if m.bloom_columns:
-            df = df.withColumn(
-                "_pb_seed",
-                F.explode(F.sequence(F.lit(0), F.lit(BLOOM_K - 1))),
-            )
-        for ci, c in enumerate(m.bloom_columns):
-            aggs.append(
-                F.collect_set(
-                    F.when(
-                        F.col(c).isNotNull(),
-                        F.pmod(
-                            F.xxhash64(F.col(c), F.col("_pb_seed")),
-                            F.lit(BLOOM_M),
-                        ),
-                    )
-                ).alias(f"_bl_{ci}")
-            )
-        for c in m.sketch_columns:
-            x = F.col(c).try_cast("double")
-            if m.bloom_columns:
-                x = F.when(F.col("_pb_seed") == 0, x)
-            aggs.append(F.kll_sketch_agg_double(x).alias(f"_kll_{c}"))
-            # HLL accepts int/long/string/binary only — hash any other
-            # type through its canonical string form (distinct-count
-            # preserving; doubles stringify uniquely)
-            aggs.append(
-                F.hll_sketch_agg(F.col(c).cast("string")).alias(
-                    f"_hll_{c}"
-                )
-            )
-        rows = df.groupBy(PART_DIR).agg(*aggs).collect()
-
-        def b64(v):
-            return base64.b64encode(v).decode() if v else None
-
-        ident = {c: m.colmap.get(c, c) for c in m.schema.names}
-        out: dict = {
-            kind: {}
-            for kind, cols in (
-                ("stats", m.stats_columns),
-                ("blooms", m.bloom_columns),
-                ("sketches", m.sketch_columns),
-            )
-            if cols
-        }
-        for r in rows:
-            b = str(r[PART_DIR])
-            if m.stats_columns:
-                out["stats"][b] = {
-                    ident[c]: [
-                        stat_json(r[f"_lo_{c}"]), stat_json(r[f"_hi_{c}"])
-                    ]
-                    for c in m.stats_columns
-                }
-            for ci, c in enumerate(m.bloom_columns):
-                if r[f"_bl_{ci}"]:
-                    out["blooms"].setdefault(b, {})[ident[c]] = {
-                        "m": BLOOM_M,
-                        "k": BLOOM_K,
-                        "b64": _bloom_b64(r[f"_bl_{ci}"]),
-                    }
-            if m.sketch_columns:
-                out["sketches"][b] = {
-                    ident[c]: {
-                        "kll": b64(r[f"_kll_{c}"]),
-                        "hll": b64(r[f"_hll_{c}"]),
-                    }
-                    for c in m.sketch_columns
-                }
-        return out
+        return _skip_doc(df.groupBy(PART_DIR).agg(*_skip_aggs(m)).collect(), m)
 
     def table_sketch_stats(
         self,
@@ -807,27 +874,28 @@ class KeyedCatalog:
         est = int(round(row["_n"] * max(0.0, row["_hr"] - row["_lr"])))
         return est, int(row["_n"])
 
+    def _one_row(self) -> DataFrame:
+        """A one-row driver-local frame to evaluate literal expressions
+        over: the optimizer folds a projection of it into a local
+        relation, so ``select(...).first()`` runs no Spark job, and the
+        JVM evaluates the same expressions the writers use, so Python
+        never re-implements a hash and can never drift from it."""
+        return local_frame(self.spark, [(0,)], "_pb_one int")
+
     def _bloom_positions(self, value: Any, dtype: T.DataType) -> list[int]:
         """Probe bit positions for ``value`` under the SAME JVM
         expressions that built the filters (``xxhash64(lit(value)
-        cast col-type, seed) mod m``) — a 1-row driver-side job, so
-        Python never re-implements the hash and can never drift from
-        it."""
-        row = (
-            self.spark.range(1)
-            .select(
-                *[
-                    F.pmod(
-                        F.xxhash64(
-                            F.lit(value).cast(dtype), F.lit(s)
-                        ),
-                        F.lit(BLOOM_M),
-                    ).alias(f"p{s}")
-                    for s in range(BLOOM_K)
-                ]
-            )
-            .first()
-        )
+        cast col-type, seed) mod m``), folded on the driver
+        (:meth:`_one_row`)."""
+        row = self._one_row().select(
+            *[
+                F.pmod(
+                    F.xxhash64(F.lit(value).cast(dtype), F.lit(s)),
+                    F.lit(BLOOM_M),
+                ).alias(f"p{s}")
+                for s in range(BLOOM_K)
+            ]
+        ).first()
         return [row[f"p{s}"] for s in range(BLOOM_K)]
 
     def _commit(
@@ -844,8 +912,15 @@ class KeyedCatalog:
         txn: "tuple[str, int] | None" = None,
         ingest: "dict[str, int] | None" = None,
         op_params: "dict | None" = None,
+        prior: "dict | None" = None,
     ) -> None:
         """THE commit point, with optimistic concurrency detection.
+
+        ``prior`` is the manifest version ``v`` the caller planned on,
+        when it already holds it: the claim of ``v+1`` only wins while
+        that version is the head, so it stands in for a re-read. The
+        carried-forward maps (txns, ingest, DVs, column maps) come from
+        it.
 
         ``op_params`` records the operation's salient arguments in the
         commit (Delta's operationParameters): the forensic answer to
@@ -887,7 +962,7 @@ class KeyedCatalog:
         # Skipping metadata is not in the manifest: each segment
         # carries its own (:meth:`_write_segment`, :meth:`_skipping`).
         m = meta if meta is not None else self.meta(table_name)
-        prior_man = self._manifest(table_name)
+        prior_man = prior if prior is not None else self._manifest(table_name)
         # commit wall-clock in micros: the resolution key for
         # AS-OF-timestamp time travel (version_as_of). Clock skew
         # between writers can only mis-order commits by the skew
@@ -1210,9 +1285,10 @@ class KeyedCatalog:
         Returns the number of segments replaced.
         """
         table_name = self._qualify(table_name, schema)
-        m = self.meta(table_name)
+        # one meta read and one head read serve the whole compaction
+        meta = self.meta(table_name)
         man = self._manifest(table_name)
-        m = self._resolve_nb(m, man)
+        m = self._resolve_nb(meta, man)
         segs: dict[str, list[int]] = man["segments"]
         if target_bytes is None:
             chosen = list(segs)
@@ -1230,7 +1306,7 @@ class KeyedCatalog:
         # pre-rename segments rewrite under the CURRENT names
         sub_man = dict(man)
         sub_man["segments"] = {s: segs[s] for s in chosen}
-        rows = self._read_raw(table_name, manifest=sub_man)
+        rows = self._read_raw(table_name, manifest=sub_man, m=m)
         seg, buckets = self._write_segment(rows, table_name, m)
         # commit against the SAME manifest the rewrite read from — a
         # rival commit in the window must trip the put-if-absent claim,
@@ -1241,7 +1317,8 @@ class KeyedCatalog:
         }
         merged[seg] = buckets
         self._commit(
-            table_name, merged, v=man["v"], op="compact",
+            table_name, merged, v=man["v"], op="compact", meta=meta,
+            prior=man,
             op_params={
                 "target_bytes": target_bytes,
                 "merged_segments": len(chosen),
@@ -2331,15 +2408,15 @@ class KeyedCatalog:
         ingest: "dict[str, int] | None" = None,
     ) -> None:
         exists = self.has_table(table_name)
-        if (
-            exists
-            and how == "create_only"
-            and self._manifest(table_name)["v"] == 0
-        ):
+        # the one head read of the write: it answers the create-retry
+        # and replay checks, pins the data the write reads, and is the
+        # version the commit claims on top of
+        man = self._manifest(table_name) if exists else None
+        if exists and how == "create_only" and man["v"] == 0:
             # a create that crashed between its meta write and its
             # claim committed nothing: the retry creates afresh
             exists = False
-        if exists and self._txn_applied(table_name, txn):
+        if exists and self._txn_applied(table_name, txn, man):
             return
         if exists and constraints:
             raise NameError(
@@ -2401,17 +2478,26 @@ class KeyedCatalog:
                 f"key mismatch: table has keys {m.keys}, incoming has {list(keys)}"
             )
         existing_schema = m.schema
+        mb = self._resolve_nb(m, man)
         if m.auto_index:
-            # the index is assigned once, by _append, above the table's max
+            # an auto-index append counts on from the table's max, so
+            # the batch has its key before the probe
             sdf = sdf.drop(AUTO_INDEX_NAME)
+            top = (
+                self._read_raw(table_name, manifest=man, m=mb)
+                .agg(F.max(AUTO_INDEX_NAME))
+                .collect()[0][0]
+            )
+            sdf = self._assign_auto_index(sdf, base=(top or -1) + 1)
         # ONE batch aggregate serves the whole write: PK validation,
-        # touched buckets, row count, per-column non-null counts and
-        # the narrowing rules' stats. Known columns are cast to the
-        # table's types first, so bucket hashing sees the table's key
-        # types; a new column, or one whose declared type coercion
-        # rejects, is narrowed from the probe's stats instead (an
-        # all-null NullType or string column against a numeric table
-        # column is dropped below before coercion sees it).
+        # touched buckets, row count, per-column non-null counts, the
+        # narrowing rules' stats and the new segment's skipping
+        # entries. Known columns are cast to the table's types first,
+        # so bucket hashing sees the table's key types; a new column,
+        # or one whose declared type coercion rejects, is narrowed
+        # from the probe's stats instead (an all-null NullType or
+        # string column against a numeric table column is dropped
+        # below before coercion sees it).
         known = {f.name: f.dataType for f in existing_schema.fields}
         held = [
             c for c in sdf.columns
@@ -2427,12 +2513,9 @@ class KeyedCatalog:
             T.StructType([f for f in existing_schema if f.name not in held]),
             keys,
         )
-        nar_aggs, nar_numeric, nar_all = narrowing_aggs(
-            sdf.select(*held), []
-        )
-        man = self._manifest(table_name)
+        probed = sdf.schema
         probe = self._batch_probe(
-            sdf, self._resolve_nb(m, man), narrow=nar_aggs
+            sdf, mb, narrow=held, facts=how == "append"
         )
         if not isinstance(df, pd.DataFrame):
             # an all-null Spark column carries no type: it is absent,
@@ -2440,7 +2523,7 @@ class KeyedCatalog:
             # make_clean_columns_dict). A pandas all-NaN column already
             # took the table's type on the driver and writes NULL.
             sdf = sdf.drop(*probe["null_cols"])
-        sdf = apply_narrowing(sdf, probe["row"], nar_numeric, nar_all)
+        sdf = apply_narrowing(sdf, probe["row"], *probe["nar"])
         new_cols = [
             f for f in sdf.schema.fields if f.name not in existing_schema.names
         ]
@@ -2505,7 +2588,9 @@ class KeyedCatalog:
             self._write_meta(table_name, m)
         # the probe's manifest snapshot also serves the commit: a rival
         # commit in the window trips the version claim
-        probe.update(man=man, m=self._resolve_nb(m, man))
+        probe.update(man=man, m=self._resolve_nb(m, man), meta=m)
+        if not self._facts_hold(probed, sdf.schema, m):
+            probe["facts"] = None
         if how == "append":
             self._append(sdf, table_name, probe, txn=txn, ingest=ingest)
         else:
@@ -2644,6 +2729,7 @@ class KeyedCatalog:
         table_name: str,
         m: TableMeta,
         pre_bucketed: bool = False,
+        facts: "dict | None" = None,
     ) -> tuple[str, list[int]]:
         """Write one immutable segment; returns (segment name, buckets).
 
@@ -2656,12 +2742,17 @@ class KeyedCatalog:
         from the few row-groups that overlap. The bucket list is read
         back from the written directory names — no extra Spark job.
 
-        When the table declares stats, Bloom or sketch columns, the
-        segment's skipping entries are then read back from its files
-        (:meth:`_segment_skipping`) and written ONCE beside them, as
-        ``seg-*/_pb_skip.json``: a ``_``-prefixed file Spark's reader
-        skips, immutable like the data and deleted with its segment
-        directory. Nothing is live until the manifest commit.
+        The segment's skipping entries (:func:`_skip_doc`) are written
+        ONCE beside its files, as ``seg-*/_pb_skip.json``: a
+        ``_``-prefixed file Spark's reader skips, immutable like the
+        data and deleted with its segment directory. ``facts`` are
+        entries the caller already holds for exactly these rows (a
+        create's or append's batch probe); they cost no Spark job, and
+        on a table without stats, Bloom or sketch columns they carry
+        the key ranges alone. Without them, a table that declares such
+        columns reads its new segment back (:meth:`_segment_skipping`),
+        and any other table writes no file. Nothing is live until the
+        manifest commit.
 
         ``pre_bucketed``: the caller already attached ``PART_DIR`` and
         repartitioned on it — skip both here, so the validation jobs
@@ -2706,12 +2797,13 @@ class KeyedCatalog:
             for d in self.fs.list_dirs(seg_path)
             if d.startswith(f"{PART_DIR}=")
         )
-        if buckets and (
+        if facts is None and (
             m.stats_columns or m.bloom_columns or m.sketch_columns
-        ):
+        ) and buckets:
+            facts = self._segment_skipping(seg_path, buckets, m)
+        if facts is not None and buckets:
             self.fs.write_text_atomic(
-                f"{seg_path}/{SKIP_FILE}",
-                json.dumps(self._segment_skipping(seg_path, buckets, m)),
+                f"{seg_path}/{SKIP_FILE}", json.dumps(facts)
             )
         return seg, buckets
 
@@ -2737,17 +2829,19 @@ class KeyedCatalog:
         ONE shuffle serves the whole create: bucket + repartition up
         front and PERSIST the shuffled frame (each Spark action
         re-plans, so without the persist the probe and the write would
-        each run the exchange). The probe is one aggregate over the
-        cache: key validation (nulls + duplicates) and the narrowing
-        rules' stats (:func:`narrowing_aggs_grouped`) together. It
-        also warms the cache the constraint pass and the segment write
-        then stream from; only the failure path pays a second probe,
-        to name the offending key. Narrowing then re-types or drops
-        value columns, generated columns are computed from the
+        each run the exchange). The probe (:meth:`_batch_probe`) is one
+        aggregate over the cache: key validation (nulls + duplicates),
+        the narrowing rules' stats and the segment's skipping entries
+        together. It also warms the cache the constraint pass and the
+        segment write then stream from. Narrowing then re-types or
+        drops value columns, generated columns are computed from the
         narrowed frame, and the declared stats/bloom/sketch/cluster_by
         columns are checked against the result. pandas input was
         already narrowed on the driver, so its stats decide nothing
-        new. Auto-index input gets its index here, at base 0."""
+        new. The segment takes its skipping entries from the probe
+        unless one of its skipping columns was generated or retyped
+        after it; then it is read back. Auto-index input gets its index
+        here, at base 0."""
         bad_keys = [c for c in (generated or {}) if c in keys]
         if bad_keys:
             raise NameError(
@@ -2755,11 +2849,12 @@ class KeyedCatalog:
             )
         if auto_index:
             sdf = self._assign_auto_index(sdf, base=0)
-        from functools import reduce
-        import operator
-
         num_buckets = num_buckets or self.default_buckets
-        any_null = reduce(operator.or_, [F.col(k).isNull() for k in keys])
+        declared = dict(
+            stats_columns=list(stats_columns or []),
+            bloom_columns=list(bloom_columns or []),
+            sketch_columns=list(sketch_columns or []),
+        )
         staged = (
             sdf.withColumn(PART_DIR, _bucket_expr(list(keys), num_buckets))
             .repartition(PART_DIR)
@@ -2767,57 +2862,32 @@ class KeyedCatalog:
         )
         cached = staged  # narrowing projects over this; release THIS
         try:
-            # generated columns are never narrowed; neither are keys
-            nar_l1, nar_l2, nar_numeric, nar_all = narrowing_aggs_grouped(
-                sdf, list(keys) + list(generated or {})
+            # the probe's view of the table: the batch's own types, and
+            # the skipping columns the batch already carries
+            probe = self._batch_probe(
+                staged,
+                TableMeta(
+                    keys=list(keys),
+                    auto_index=auto_index,
+                    num_buckets=num_buckets,
+                    schema_json=json.dumps(sdf.schema.jsonValue()),
+                    **{
+                        label: [c for c in cols if c in sdf.columns]
+                        for label, cols in declared.items()
+                    },
+                ),
+                # generated columns are never narrowed; neither are keys
+                narrow=[
+                    c for c in sdf.columns
+                    if c not in keys and c not in (generated or {})
+                ],
             )
-            # the probe is a TWO-LEVEL aggregate: the cache is already
-            # hash-partitioned by the key-derived bucket column, so
-            # grouping by (bucket, keys) needs NO exchange — rows of a
-            # key group are co-located by construction — and the only
-            # shuffle left is the one-row-per-task merge of the level-2
-            # partials. The single-level count_distinct form this
-            # replaces planned an Expand plus a full exchange of one
-            # row per distinct key (the whole batch, again) before the
-            # final rollup.
-            grouped = staged.groupBy(PART_DIR, *keys).agg(
-                F.count(F.lit(1)).alias("__c"),
-                *nar_l1,
-            )
-            row = grouped.agg(
-                F.sum("__c").alias("n"),
-                F.count(F.lit(1)).alias("nd"),
-                F.sum(
-                    F.when(any_null, F.col("__c")).otherwise(F.lit(0))
-                ).alias("nn"),
-                *nar_l2,
-            ).first()
-            if int(row["nn"] or 0):
-                raise ValueError("key columns may not contain NULL")
-            if int(row["n"] or 0) != int(row["nd"] or 0):
-                dup = (
-                    staged.groupBy(PART_DIR, *keys)
-                    .count()
-                    .where(F.col("count") > 1)
-                    .limit(1)
-                    .collect()
-                )
-                raise ValueError(
-                    f"duplicate key in batch: "
-                    f"{ {k: dup[0][k] for k in keys} }"
-                )
-            staged = apply_narrowing(
-                staged, row.asDict(), nar_numeric, nar_all
-            )
+            staged = apply_narrowing(staged, probe["row"], *probe["nar"])
             staged = self._apply_generated(
                 staged, dict(generated or {}), None
             )
-            for label, cols in (
-                ("stats_columns", stats_columns),
-                ("bloom_columns", bloom_columns),
-                ("sketch_columns", sketch_columns),
-            ):
-                gone = [c for c in (cols or []) if c not in staged.columns]
+            for label, cols in declared.items():
+                gone = [c for c in cols if c not in staged.columns]
                 if gone:
                     raise NameError(f"{label} not in schema: {gone}")
             for c in cluster_by or []:
@@ -2840,51 +2910,94 @@ class KeyedCatalog:
                     staged.drop(PART_DIR).schema.jsonValue()
                 ),
                 constraints=dict(constraints or {}),
-                stats_columns=list(stats_columns or []),
-                bloom_columns=list(bloom_columns or []),
-                sketch_columns=list(sketch_columns or []),
                 cluster_by=list(cluster_by or []),
                 generated=dict(generated or {}),
+                **declared,
             )
             self._check_constraints(staged.drop(PART_DIR), m)
             seg, buckets = self._write_segment(
-                staged, table_name, m, pre_bucketed=True
+                staged, table_name, m, pre_bucketed=True,
+                facts=(
+                    probe["facts"]
+                    if self._facts_hold(sdf.schema, staged.schema, m)
+                    else None
+                ),
             )
         finally:
             cached.unpersist()
         self._write_meta(table_name, m)
         self._commit(
             table_name, {seg: buckets}, v=0, op="create", txn=txn,
-            ingest=ingest,
+            ingest=ingest, meta=m, prior={"v": 0, "segments": {}},
+        )
+
+    @staticmethod
+    def _facts_hold(
+        probed: T.StructType, written: T.StructType, m: TableMeta
+    ) -> bool:
+        """Whether a batch probe's skipping entries describe the rows
+        as written: every stats, Bloom and sketch column was in the
+        probed batch and kept its type. A column generated after the
+        probe, dropped as all-null, or retyped by narrowing ({0,1} to
+        boolean, all-zero integers to double) fails this: its min/max
+        JSON and Bloom hashes differ under the new type, so its
+        segment is read back instead."""
+        return all(
+            c in probed.names
+            and c in written.names
+            and probed[c].dataType == written[c].dataType
+            for c in (*m.stats_columns, *m.bloom_columns, *m.sketch_columns)
         )
 
     def _batch_probe(
-        self, sdf: DataFrame, m: TableMeta, narrow: Sequence = ()
+        self,
+        sdf: DataFrame,
+        m: TableMeta,
+        narrow: Sequence[str] = (),
+        facts: bool = True,
     ) -> dict:
         """Everything a keyed write needs to know about its batch, in
-        ONE aggregate pass: count vs distinct-key count detects
-        duplicates, a null-key counter detects nulls, collect_set over
-        the bucket expression (bounded by num_buckets) yields the
-        touched buckets, per-value-column non-null counts identify
-        all-null columns, and ``narrow`` (the caller's
-        :func:`narrowing_aggs` expressions) rides along. The row count
-        and the string keys' total bytes feed the broadcast-vs-shuffle
-        merge-shape decision. Only the FAILURE path pays a second
-        scan, to name the offending key in the error.
+        ONE bucket-keyed aggregate. The batch is bucketed and
+        repartitioned on ``PART_DIR`` (a frame that already carries it
+        — a create's persisted cache — is used as it is). Level one
+        groups by (bucket, keys) with no exchange, since rows of a key
+        group are co-located by construction, and level two groups
+        those rows by bucket on the same partitioning: one row per
+        touched bucket reaches the driver, which folds them.
+
+        - Row count against the distinct-key count (a key lies in one
+          bucket, so per-bucket distinct counts add up) detects
+          duplicates; a null-key counter detects nulls. Only the
+          FAILURE path pays a second scan, to name the offending key.
+        - The bucket rows are the touched buckets; per-column non-null
+          counts name all-null columns; the row count and the string
+          keys' total bytes feed the broadcast-vs-shuffle merge-shape
+          decision.
+        - ``narrow`` names the columns whose types the narrowing rules
+          may still decide (:func:`narrowing_aggs_grouped`); their
+          folded stats are ``row``, for :func:`apply_narrowing` with
+          ``nar``.
+        - Per bucket, the first key column's ``[min, max]`` (``ranges``,
+          for the append's clash check) and the entries a new segment
+          of exactly these rows records in ``_pb_skip.json``
+          (``facts``, the :func:`_skip_doc` dict): the stats min/max,
+          the Bloom positions and the sketches of the ``m``
+          skipping columns the batch carries. Level one carries each
+          such value column as its key group's one value, so level two
+          runs :func:`_skip_aggs`, the segment read-back's aggregates,
+          over the same values. ``facts`` is None when a declared
+          skipping column is absent from the batch, or when the caller
+          passes ``facts=False`` because its segment holds other rows
+          too (upsert, MERGE).
 
         The batch's key columns must already have the table's types:
         xxhash64 of an int differs from xxhash64 of the equal long, so
         an uncast key would hash into the wrong bucket. A mismatch
-        raises TypeError before anything is hashed. An auto-index
-        table's batch has no key yet (``_append`` assigns it), so only
-        the count, non-null and ``narrow`` aggregates run.
-
-        Returns ``{"touched", "n", "null_cols", "key_bytes", "row"}``,
-        ``row`` being the whole aggregate row as a dict."""
+        raises TypeError before anything is hashed."""
         from functools import reduce
         import operator
 
-        keys = [] if m.auto_index else list(m.keys)
+        keys = list(m.keys)
         for k in keys:
             have, want = sdf.schema[k].dataType, m.schema[k].dataType
             if have != want:
@@ -2893,46 +3006,70 @@ class KeyedCatalog:
                     f"table's is {want.simpleString()}; cast it first "
                     "(bucket hashing depends on the key type)"
                 )
-        key_aggs = []
-        if keys:
-            any_null = reduce(operator.or_, [F.col(k).isNull() for k in keys])
-            key_aggs = [
-                F.count_distinct(*[F.col(k) for k in keys]).alias("nd"),
-                F.sum(any_null.cast("long")).alias("nn"),
-                F.collect_set(
-                    _bucket_expr(keys, m.num_buckets)
-                ).alias("bs"),
-            ]
-        value_cols = [c for c in sdf.columns if c not in keys]
-        # string keys get their TOTAL bytes measured (rides the same
-        # aggregate for free) — the broadcast gate must not trust a
-        # per-key width guess that long URL/path keys would blow past
+        if PART_DIR not in sdf.columns:
+            sdf = sdf.withColumn(
+                PART_DIR, _bucket_expr(keys, m.num_buckets)
+            ).repartition(PART_DIR)
+        value_cols = [c for c in sdf.columns if c not in keys and c != PART_DIR]
+        skip_cols = list(
+            dict.fromkeys((*m.stats_columns, *m.bloom_columns, *m.sketch_columns))
+        )
+        facts = facts and all(c in sdf.columns for c in skip_cols)
+        if not facts:
+            import dataclasses
+
+            # the key ranges alone
+            m = dataclasses.replace(
+                m, stats_columns=[], bloom_columns=[], sketch_columns=[]
+            )
+            skip_cols = []
+        carried = [c for c in skip_cols if c in value_cols]
+        nar_l1, nar_l2, nar_numeric, nar_all = narrowing_aggs_grouped(
+            sdf.select(*narrow), []
+        )
+        # non-null counts name the all-null columns; the narrowing
+        # aggregates already count their own columns under the same name
+        counted = [c for c in value_cols if c not in nar_all]
+        # string keys get their TOTAL bytes measured — the broadcast
+        # gate must not trust a per-key width guess that long URL/path
+        # keys would blow past; octet_length, not length: multibyte
+        # UTF-8 keys undercount up to 4x under a character count
         str_keys = [
-            k for k in keys
-            if isinstance(m.schema[k].dataType, T.StringType)
+            k for k in keys if isinstance(m.schema[k].dataType, T.StringType)
         ]
-        row = sdf.agg(
-            F.count(F.lit(1)).alias("n"),
-            *key_aggs,
-            *[
-                F.count(F.col(c)).alias(f"_nn_{i}")
-                for i, c in enumerate(value_cols)
-            ],
-            *[
-                # octet_length, not length: the broadcast gate needs
-                # BYTES, and multibyte UTF-8 keys undercount up to 4x
-                # under a character count
-                F.sum(F.octet_length(F.col(k)).cast("long")).alias(
-                    f"_kb_{i}"
-                )
-                for i, k in enumerate(str_keys)
-            ],
-            *narrow,
-        ).first().asDict()
-        if keys and int(row["nn"] or 0):
+        any_null = reduce(operator.or_, [F.col(k).isNull() for k in keys])
+        rows = (
+            sdf.groupBy(PART_DIR, *keys)
+            .agg(
+                F.count(F.lit(1)).alias("__c"),
+                *[F.count(F.col(c)).alias(f"__cnt_{c}") for c in counted],
+                *nar_l1,
+                *[F.first(c).alias(c) for c in carried],
+            )
+            .groupBy(PART_DIR)
+            .agg(
+                F.sum("__c").alias("n"),
+                F.count(F.lit(1)).alias("nd"),
+                F.sum(F.when(any_null, F.col("__c"))).alias("nn"),
+                *[F.sum(f"__cnt_{c}").alias(f"__cnt_{c}") for c in counted],
+                *[
+                    F.sum(
+                        F.octet_length(F.col(k)).cast("long") * F.col("__c")
+                    ).alias(f"_kb_{i}")
+                    for i, k in enumerate(str_keys)
+                ],
+                *nar_l2,
+                *_skip_aggs(m),
+            )
+            .collect()
+        )
+
+        def total(name: str) -> int:
+            return sum(int(r[name] or 0) for r in rows)
+
+        if total("nn"):
             raise ValueError("key columns may not contain NULL")
-        # count_distinct skips nothing here: null-key rows raised above
-        if keys and int(row["n"] or 0) != int(row["nd"] or 0):
+        if total("n") != total("nd"):
             dup = (
                 sdf.groupBy(*keys)
                 .count()
@@ -2940,19 +3077,22 @@ class KeyedCatalog:
                 .limit(1)
                 .collect()
             )
-            raise ValueError(f"duplicate key in batch: {dup[0].asDict()}")
+            raise ValueError(
+                f"duplicate key in batch: { {k: dup[0][k] for k in keys} }"
+            )
+        doc = _skip_doc(rows, m)
+        k0 = m.colmap.get(keys[0], keys[0])
         return {
-            "touched": sorted(int(b) for b in row.get("bs") or []),
-            "n": int(row["n"] or 0),
-            "null_cols": [
-                c
-                for i, c in enumerate(value_cols)
-                if int(row[f"_nn_{i}"] or 0) == 0
-            ],
-            "key_bytes": sum(
-                int(row[f"_kb_{i}"] or 0) for i in range(len(str_keys))
+            "touched": sorted(int(r[PART_DIR]) for r in rows),
+            "n": total("n"),
+            "null_cols": [c for c in value_cols if not total(f"__cnt_{c}")],
+            "key_bytes": sum(total(f"_kb_{i}") for i in range(len(str_keys))),
+            "row": fold_narrowing(
+                [r.asDict() for r in rows], nar_numeric, nar_all
             ),
-            "row": row,
+            "nar": (nar_numeric, nar_all),
+            "ranges": {int(b): e[k0] for b, e in doc["keys"].items()},
+            "facts": doc if facts else None,
         }
 
     def _keys_broadcastable(
@@ -3064,8 +3204,8 @@ class KeyedCatalog:
         conjuncts are fine: they only narrow the match set, never
         widen it past the pinned bucket. The bucket comes from
         evaluating THE SAME _bucket_expr the layout writes with, on a
-        one-row literal frame (driver-local job, zero IO) — the
-        arithmetic can never diverge from the writer's."""
+        one-row driver-local frame (:meth:`_one_row`, no Spark job) —
+        the arithmetic can never diverge from the writer's."""
         import re
 
         if not isinstance(predicate, str) or not m.keys:
@@ -3110,20 +3250,27 @@ class KeyedCatalog:
             vals[col] = lit
         if set(vals) != {k.lower() for k in m.keys}:
             return None
-        row = (
-            self.spark.range(1)
-            .select(
-                *[
-                    F.expr(vals[k.lower()])
-                    .cast(m.schema[k].dataType)
-                    .alias(k)
-                    for k in m.keys
-                ]
+        return [
+            self._key_bucket(
+                self._one_row().select(
+                    *[
+                        F.expr(vals[k.lower()])
+                        .cast(m.schema[k].dataType)
+                        .alias(k)
+                        for k in m.keys
+                    ]
+                ),
+                m,
             )
-            .select(_bucket_expr(m.keys, m.num_buckets).alias("b"))
-            .first()
-        )
-        return [int(row["b"])]
+        ]
+
+    @staticmethod
+    def _key_bucket(key: DataFrame, m: TableMeta) -> int:
+        """The bucket of the one key row of a driver-local frame whose
+        columns are ``m.keys`` in the table's types: the writer's own
+        :func:`_bucket_expr`, folded by the optimizer with no Spark
+        job."""
+        return key.select(_bucket_expr(m.keys, m.num_buckets)).first()[0]
 
     def _append(
         self,
@@ -3134,60 +3281,68 @@ class KeyedCatalog:
         ingest: "dict[str, int] | None" = None,
     ) -> None:
         """Strict append: any incoming key already present → IntegrityError
-        (reference:pandabase/sql.py:264-266). The overlap probe joins the
-        batch against ONLY the buckets it hashes into (manifest path
-        pruning), then commits a new segment — no rewrite of existing
-        data. ``probe`` is the caller's batch probe plus the manifest
-        snapshot (``man``) and its resolved meta (``m``), so the batch
-        is scanned once, and the snapshot serves both the overlap
-        probe and the commit: a rival commit in the window trips the
-        claim instead of being silently absorbed. An auto-index batch
-        gets its index here, counting on from the table's max."""
+        (reference:pandabase/sql.py:264-266), then a new segment — no
+        rewrite of existing data. ``probe`` is the caller's batch probe
+        plus the manifest snapshot (``man``), its resolved meta (``m``)
+        and the table meta (``meta``): the batch is scanned once, and
+        the snapshot serves both the clash check and the commit, so a
+        rival commit in the window trips the claim instead of being
+        silently absorbed.
+
+        The clash check reads only the leaves that can hold one of the
+        batch's keys: a leaf in a bucket the batch hashes into whose
+        first-key range (``_pb_skip.json``) overlaps the batch's range
+        in that bucket. A leaf without a range is always read. When no
+        leaf is left, as for an append of new, increasing keys, the
+        check runs no Spark job. An auto-index batch counts on from the
+        table's max and cannot clash.
+
+        The new segment's skipping entries come from the probe
+        (``probe["facts"]``), unless a skipping column changed after it
+        (then ``facts`` is None and the segment is read back)."""
         man, m = probe["man"], probe["m"]
-        if m.auto_index:
-            base_row = (
-                self._read_raw(table_name, manifest=man)
-                .agg(F.max(AUTO_INDEX_NAME))
-                .collect()[0][0]
-            )
-            sdf = self._assign_auto_index(sdf, base=(base_row or -1) + 1)
         self._check_constraints(sdf, m)
         if not m.auto_index:
-            touched, n_batch = probe["touched"], probe["n"]
-            existing = self._read_raw(
-                table_name, buckets=touched, manifest=man,
+            leaves = dict(
+                buckets=probe["touched"],
+                manifest=man,
+                key_bounds=probe["ranges"],
+                skip=self._skipping(table_name, man, m),
             )
-            # ONE parallel aggregate over the pruned buckets (a
-            # limit(1).collect() here executed in sequential
-            # CollectLimit waves that scan everything anyway on the
-            # clash-free common path); the failure path re-probes to
-            # name the offending key. The broadcast hint is GATED on
-            # the probe's row count: hinting an arbitrarily large
-            # batch's key frame would force-materialize it on every
-            # executor (the hint bypasses Spark's own stats), which at
-            # 100 TB ingest sizes is an OOM, not an optimization —
-            # oversized batches let the planner pick the join.
-            batch_keys = sdf.select(*m.keys)
-            if self._keys_broadcastable(n_batch, m, probe["key_bytes"]):
-                batch_keys = batch_keys.hint("broadcast")
-            clash_df = existing.join(
-                batch_keys, on=list(m.keys), how="inner",
-            )
-            n_clash = clash_df.agg(
-                F.count(F.lit(1)).alias("n")
-            ).first()["n"]
-            if n_clash:
-                clash = clash_df.limit(1).collect()
-                raise IntegrityError(
-                    f"append would violate primary key on {table_name}: "
-                    f"key {dict((k, clash[0][k]) for k in m.keys)} already exists"
+            if self._live_paths(table_name, **leaves):
+                existing = self._read_raw(table_name, m=m, **leaves)
+                # ONE parallel aggregate over the pruned leaves; the
+                # failure path re-probes to name the offending key.
+                # The broadcast hint is GATED on the probe's row count:
+                # hinting an arbitrarily large batch's key frame would
+                # force-materialize it on every executor (the hint
+                # bypasses Spark's own stats) — oversized batches let
+                # the planner pick the join.
+                batch_keys = sdf.select(*m.keys)
+                if self._keys_broadcastable(
+                    probe["n"], m, probe["key_bytes"]
+                ):
+                    batch_keys = batch_keys.hint("broadcast")
+                clash_df = existing.join(
+                    batch_keys, on=list(m.keys), how="inner",
                 )
-        seg, buckets = self._write_segment(sdf, table_name, m)
+                n_clash = clash_df.agg(
+                    F.count(F.lit(1)).alias("n")
+                ).first()["n"]
+                if n_clash:
+                    clash = clash_df.limit(1).collect()
+                    raise IntegrityError(
+                        f"append would violate primary key on {table_name}: "
+                        f"key {dict((k, clash[0][k]) for k in m.keys)} already exists"
+                    )
+        seg, buckets = self._write_segment(
+            sdf, table_name, m, facts=probe["facts"]
+        )
         segments = dict(man["segments"])
         segments[seg] = buckets
         self._commit(
             table_name, segments, v=man["v"], op="append", txn=txn,
-            ingest=ingest,
+            ingest=ingest, meta=probe["meta"], prior=man,
         )
         self._maybe_auto_compact(table_name)
 
@@ -3235,7 +3390,9 @@ class KeyedCatalog:
         # a rebucket
         man, m = probe["man"], probe["m"]
         touched = probe["touched"]
-        existing = self._read_raw(table_name, buckets=touched, manifest=man)
+        existing = self._read_raw(
+            table_name, buckets=touched, manifest=man, m=m
+        )
         src_cols = set(sdf.columns)
         full_column = all(c in src_cols for c in existing.columns)
         # antiunion is only SOUND for full-column batches (it has no
@@ -3349,7 +3506,7 @@ class KeyedCatalog:
         segments[seg] = buckets
         self._commit(
             table_name, segments, v=man["v"], op="upsert", txn=txn,
-            ingest=ingest,
+            ingest=ingest, meta=probe["meta"], prior=man,
         )
         self._maybe_auto_compact(table_name)
 
@@ -3428,10 +3585,13 @@ class KeyedCatalog:
         extension surface.
         """
         table_name = self._qualify(table_name, schema)
-        if self._txn_applied(table_name, txn):
+        # one head read and one meta read serve the whole merge: the
+        # replay check, the pinned read and the commit's claim
+        man = self._manifest(table_name)
+        if self._txn_applied(table_name, txn, man):
             # replayed transaction: already committed, report a no-op
             return {"updated": 0, "deleted": 0, "inserted": 0}
-        m = self.meta(table_name)
+        meta = m = self.meta(table_name)
         if m.auto_index:
             raise IOError("merge is not valid on auto-indexed tables")
         missing = [k for k in m.keys if k not in source.columns]
@@ -3534,9 +3694,8 @@ class KeyedCatalog:
                     f"BY SOURCE update assigns unknown columns: {unknown}"
                 )
 
-        man = self._manifest(table_name)
         m = self._resolve_nb(m, man)
-        src_probe = self._batch_probe(source, m)
+        src_probe = self._batch_probe(source, m, facts=False)
         touched = src_probe["touched"]
         bs_del_pred = (
             F.lit(True)
@@ -3563,7 +3722,7 @@ class KeyedCatalog:
             ):
                 src_keys = src_keys.hint("broadcast")
             doomed = (
-                self._read_raw(table_name, manifest=man)
+                self._read_raw(table_name, manifest=man, m=m)
                 .alias("t")
                 .join(src_keys, on=list(m.keys), how="left_anti")
                 .where(bs_del_pred)
@@ -3572,7 +3731,7 @@ class KeyedCatalog:
                 set(touched) | set(self._batch_buckets(doomed, m))
             )
         existing = self._read_raw(
-            table_name, buckets=touched, manifest=man
+            table_name, buckets=touched, manifest=man, m=m
         ).alias("t")
         # keep ALL source columns: clause expressions may reference
         # source-only columns (flags, payloads) that never land in the
@@ -3767,6 +3926,7 @@ class KeyedCatalog:
             segments[seg] = buckets
         self._commit(
             table_name, segments, v=man["v"], op="merge", txn=txn,
+            meta=meta, prior=man,
             op_params={
                 "when_matched_update": (
                     when_matched_update
@@ -4439,7 +4599,17 @@ class KeyedCatalog:
         stats_bounds: "Mapping[str, tuple] | None" = None,
         bloom_probe: "Mapping[str, list[int]] | None" = None,
         skip: "dict | None" = None,
+        key_bounds: "tuple | Mapping[int, tuple] | None" = None,
     ) -> "list[tuple[str, str]]":
+        """The (segment, leaf path) pairs a read opens: the manifest's
+        live leaves, cut to ``buckets`` and pruned by the skipping
+        entries (:meth:`_skipping`, or ``skip`` when the caller already
+        loaded them). ``stats_bounds`` prunes on stats min/max,
+        ``bloom_probe`` on Bloom bits, and ``key_bounds`` on the first
+        key column's recorded range: one ``(lo, hi)`` in
+        :func:`_key_bound` form for every bucket (a key-range read), or
+        ``{bucket: (lo, hi)}`` (an append's clash check). A leaf
+        without the entry a test needs is always read."""
         # ``manifest=`` pins the read to a caller-captured snapshot so
         # DML rewrites read and commit against the SAME version — a
         # rival commit in the window then trips the put-if-absent claim
@@ -4450,45 +4620,36 @@ class KeyedCatalog:
             else self._manifest(table_name, version=version)
         )
         want = None if buckets is None else set(buckets)
-        # ``skip=``: the manifest's _skipping dict, when the caller
-        # already loaded it
         if skip is None:
             skip = (
                 self._skipping(table_name, man)
-                if (stats_bounds or bloom_probe)
+                if (stats_bounds or bloom_probe or key_bounds)
                 else {}
             )
         stats = skip.get("stats", {}) if stats_bounds else {}
         blooms = skip.get("blooms", {}) if bloom_probe else {}
+        ranges = skip.get("keys", {}) if key_bounds else {}
 
         def skippable(seg: str, b: int) -> bool:
             # leaf-level data skipping: drop a (segment, bucket)
             # leaf when its recorded [min, max] provably misses the
             # requested range. Missing stats → never skip (advisory).
             st = stats.get(seg, {}).get(str(b))
-            if not st:
-                return False
-            for col, (lo, hi) in stats_bounds.items():
-                rng = st.get(col)
-                if not rng or rng[0] is None or rng[1] is None:
-                    continue
-                lo_j = stat_json(lo)
-                hi_j = stat_json(hi)
-                # a string never orders against a number: manifests
-                # written before decimal stats became numbers hold
-                # them as strings, and those leaves are read, not
-                # skipped
-                if (
-                    hi_j is not None
-                    and isinstance(rng[0], str) == isinstance(hi_j, str)
-                    and rng[0] > hi_j
-                ) or (
-                    lo_j is not None
-                    and isinstance(rng[1], str) == isinstance(lo_j, str)
-                    and rng[1] < lo_j
-                ):
-                    return True
-            return False
+            return bool(st) and any(
+                _range_misses(st.get(col), stat_json(lo), stat_json(hi))
+                for col, (lo, hi) in stats_bounds.items()
+            )
+
+        def key_skippable(seg: str, b: int) -> bool:
+            bounds = (
+                key_bounds.get(b)
+                if isinstance(key_bounds, Mapping)
+                else key_bounds
+            )
+            # one entry per leaf: the first key column's, by its
+            # current name
+            rng = next(iter(ranges.get(seg, {}).get(str(b), {}).values()), None)
+            return bounds is not None and _range_misses(rng, *bounds)
 
         def bloom_skippable(seg: str, b: int) -> bool:
             # equality data skipping: drop a leaf when its Bloom filter
@@ -4521,6 +4682,7 @@ class KeyedCatalog:
             if (want is None or b in want)
             and not (stats_bounds and skippable(seg, b))
             and not (bloom_probe and bloom_skippable(seg, b))
+            and not (key_bounds and key_skippable(seg, b))
         ]
 
     def _read_raw(
@@ -4533,6 +4695,7 @@ class KeyedCatalog:
         bloom_probe: "Mapping[str, list[int]] | None" = None,
         m: "TableMeta | None" = None,
         skip: "dict | None" = None,
+        key_bounds: "tuple | Mapping[int, tuple] | None" = None,
     ) -> DataFrame:
         if not self.has_table(table_name):
             raise NameError(f"no such table: {table_name}")
@@ -4551,6 +4714,7 @@ class KeyedCatalog:
             stats_bounds=stats_bounds,
             bloom_probe=bloom_probe,
             skip=skip,
+            key_bounds=key_bounds,
         )
         if not pairs:
             return local_frame(self.spark, [], schema)
@@ -4786,13 +4950,26 @@ class KeyedCatalog:
             and lo == hi
             and all(b is not None for b in lo)
         ):
-            # point lookup → single-bucket path pruning
-            probe = local_frame(
-                self.spark,
-                [tuple(lo)],
-                T.StructType([m.schema[k] for k in m.keys]),
-            )
-            buckets = self._batch_buckets(probe, m)
+            # point lookup → single-bucket path pruning, the bucket
+            # folded on the driver from a one-row local frame
+            buckets = [
+                self._key_bucket(
+                    local_frame(
+                        self.spark,
+                        [tuple(lo)],
+                        T.StructType([m.schema[k] for k in m.keys]),
+                    ),
+                    m,
+                )
+            ]
+        # first-key bounds prune leaves by their recorded key ranges
+        key_bounds = tuple(
+            None if bound is None or bound[0] is None
+            else _key_bound(bound[0], m.schema[m.keys[0]].dataType)
+            for bound in (lo, hi)
+        )
+        if key_bounds == (None, None):
+            key_bounds = None
 
         bloom_probe = None
         if bloom_point:
@@ -4810,7 +4987,7 @@ class KeyedCatalog:
         # hand) serves the selectivity gate and the leaf pruning
         skip = (
             self._skipping(table_name, _man, m)
-            if (stats_bounds or bloom_probe) and _man is not None
+            if (stats_bounds or bloom_probe or key_bounds) and _man is not None
             else None
         )
         # Selectivity-gated skipping (the sketch surface consumed as
@@ -4877,6 +5054,7 @@ class KeyedCatalog:
             bloom_probe=bloom_probe,
             m=m,
             skip=skip,
+            key_bounds=key_bounds,
         )
         if bloom_point:
             for col, val in bloom_point.items():

@@ -26,10 +26,11 @@ Distinctive semantic rules preserved (SURVEY.md §1.2):
 
 Where the rules run: pandas input is narrowed on the driver
 (:func:`infer_schema_pandas`). A keyed write of a Spark frame narrows
-inside the one batch aggregate it already runs (io.py): a create folds
-:func:`narrowing_aggs_grouped` into its key-validation probe, a write to
-an existing table folds :func:`narrowing_aggs` of its new columns into
-its batch probe, and both hand the collected row to
+inside the one batch aggregate it already runs (io.py): every keyed
+write's bucket-keyed batch probe folds :func:`narrowing_aggs_grouped`
+of the columns still open to narrowing (every value column of a create,
+the new columns of a write to an existing table), merges its per-bucket
+rows with :func:`fold_narrowing` and hands the result to
 :func:`apply_narrowing`. :func:`narrow_spark_schema` is the standalone
 form, one aggregation of its own, for the file readers' ``narrow=True``.
 
@@ -253,9 +254,9 @@ def narrowing_aggs_grouped(
 ) -> "tuple[list, list, list[str], list[str]]":
     """:func:`narrowing_aggs` split into an algebraic two-level form
     for a caller whose batch is ALREADY clustered by a key-derived
-    column: every create's key-validation probe over its
-    bucket-partitioned cache (io.py), whatever the input (Spark,
-    pandas or auto-index). Level one computes the same
+    column: every keyed write's batch probe over its bucket-partitioned
+    batch (io.py), whatever the input (Spark, pandas or auto-index).
+    Level one computes the same
     min/max/non-boolean/non-null aggregates per key group — no
     exchange, the partitioning already satisfies the grouping — and
     level two merges the per-group rows (min of mins, max of maxes,
@@ -297,6 +298,31 @@ def narrowing_aggs_grouped(
             F.coalesce(F.sum(f"__cnt_{c}"), F.lit(0)).alias(f"__cnt_{c}")
         )
     return level1, level2, numeric_cols, all_cols
+
+
+def fold_narrowing(
+    rows: "Sequence[dict]",
+    numeric_cols: Sequence[str],
+    all_cols: Sequence[str],
+) -> dict:
+    """Merge the level-two rows of :func:`narrowing_aggs_grouped`, one
+    per group of a grouped caller (a keyed write's batch probe groups
+    them by bucket, io.py), into the one row :func:`apply_narrowing`
+    expects: min of mins, max of maxes, sums. No rows (an empty batch)
+    fold to the empty-batch identity: NULL min/max, zero counts."""
+
+    def fold(fn, name):
+        vals = [r[name] for r in rows if r[name] is not None]
+        return fn(vals) if vals else None
+
+    out = {}
+    for c in numeric_cols:
+        out[f"__min_{c}"] = fold(min, f"__min_{c}")
+        out[f"__max_{c}"] = fold(max, f"__max_{c}")
+        out[f"__nb_{c}"] = fold(sum, f"__nb_{c}") or 0
+    for c in all_cols:
+        out[f"__cnt_{c}"] = fold(sum, f"__cnt_{c}") or 0
+    return out
 
 
 def apply_narrowing(

@@ -3,9 +3,12 @@
 
 Builds a generated keyed table with ``stats_columns`` and
 ``bloom_columns`` plus a Delta copy in a temporary warehouse, then runs
-create, append, upsert, merge, compact, delta_append,
-delta_checkpoint and delta_scan. Then it traces the keyed writes whose
-type narrowing once took a separate pass: a Spark upsert carrying a new
+create, append (new keys above every stored key), append_overlap (new
+keys interleaved with a second table's stored keys, so the key-clash
+join runs), upsert, merge, compact, read_point (a Bloom-pruned
+equality read), delta_append, delta_checkpoint and delta_scan. Then it
+traces the keyed writes whose type narrowing once took a separate
+pass: a Spark upsert carrying a new
 column under ``add_new_columns``, a Spark upsert carrying an all-null
 ``NullType`` column, a create with a generated column over a value
 column, an auto-index create and append, a pandas create and a pandas
@@ -277,6 +280,12 @@ def main() -> None:
         trace("append", lambda: cat.to_table(
             df.withColumn("k", F.col("k") + rows), "t", keys=["k"],
             how="append"))
+        # an append whose keys interleave with the stored ones: every
+        # touched leaf's key range overlaps, so the clash join runs
+        cat.to_table(df.where(F.col("k") % 2 == 0), "o", keys=["k"],
+                     stats_columns=["v"], bloom_columns=["p"])
+        trace("append_overlap", lambda: cat.to_table(
+            df.where(F.col("k") % 2 == 1), "o", keys=["k"], how="append"))
         trace("upsert", lambda: cat.to_table(
             df.where(F.col("k") < 3).withColumn("v", F.col("v") + 1.0),
             "t", keys=["k"], how="upsert"))
@@ -286,6 +295,8 @@ def main() -> None:
             .withColumn("v", F.col("v") - 1.0),
             "t", when_matched_update="all"))
         trace("compact", lambda: cat.compact("t"))
+        trace("read_point", lambda: cat.read_table(
+            "t", bloom_point={"p": "p5"}).collect())
         trace_narrowing(spark, cat, trace, df, rows)
         dw.delta_create(df, bronze)
         trace("delta_append", lambda: dw.delta_append(

@@ -636,10 +636,13 @@ def test_dml_job_budgets(spark, tmp_path):
 
 
 def test_skipping_write_job_budgets(spark, tmp_path):
-    """A table with stats AND bloom columns pays ONE skipping pass per
-    new segment: the min/max stats and the Bloom bitsets come from the
-    same grouped read-back (2 jobs under AQE). A separate stats pass
-    and bloom pass cost each verb 2 jobs more than these budgets.
+    """A table with stats AND bloom columns pays at most ONE skipping
+    pass per new segment. A create or append takes the min/max stats,
+    the Bloom bitsets and the key ranges from its batch probe and reads
+    nothing back; an append of new keys above every stored key also
+    runs no clash join. An upsert and a compaction read their segment
+    back in one grouped aggregate (2 jobs under AQE). A separate stats
+    pass and bloom pass cost each verb 2 jobs more than these budgets.
     Declaring sketch columns too costs nothing more: the KLL/HLL
     sketches ride in the same aggregate, per bucket, so a write whose
     DML shrinks an older segment recomputes nothing either."""
@@ -660,7 +663,7 @@ def test_skipping_write_job_budgets(spark, tmp_path):
         sc.setJobGroup(None, None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    budget = {"create": 7, "append": 10, "upsert": 7, "compact": 4}
+    budget = {"create": 4, "append": 4, "upsert": 7, "compact": 4}
     for skip in (
         dict(stats_columns=["v"], bloom_columns=["p"]),
         dict(stats_columns=["v"], bloom_columns=["p"], sketch_columns=["v"]),
@@ -752,6 +755,193 @@ def test_every_write_runs_one_batch_probe(spark, tmp_path):
         if n > plain[verb] + extra:
             over[name] = (n, plain[verb] + extra)
     assert not over, f"(jobs, allowed) {over}; plain writes {plain}"
+
+
+def test_new_key_append_runs_no_clash_job(spark, tmp_path, monkeypatch):
+    """An append's clash check reads only the leaves whose first-key
+    range overlaps the batch's range in the same bucket. An append of
+    keys above every stored key reads none and runs no Spark job of
+    its own (the jobs of the segment write are counted apart); an
+    append whose range overlaps runs the join and still refuses an
+    existing key; a leaf without a recorded range is always read. A
+    read bounded on the first key prunes leaves by the same ranges."""
+    from pandabase_spark.io import SKIP_FILE, IntegrityError, KeyedCatalog
+
+    cat = KeyedCatalog(spark, str(tmp_path / "wh"), default_buckets=8)
+    sc = spark.sparkContext
+
+    def rows(lo, hi, step=1):
+        return spark.range(lo, hi, step).select(
+            F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
+        )
+
+    real_append, real_write = cat._append, cat._write_segment
+
+    def append(*args, **kwargs):
+        sc.setJobGroup("clash", "clash")
+        try:
+            return real_append(*args, **kwargs)
+        finally:
+            sc.setJobGroup(None, None)
+
+    def write(*args, **kwargs):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup("write", "write")
+        try:
+            return real_write(*args, **kwargs)
+        finally:
+            sc.setJobGroup(outer, outer)
+
+    monkeypatch.setattr(cat, "_append", append)
+    monkeypatch.setattr(cat, "_write_segment", write)
+
+    def clash_jobs(fn) -> int:
+        before = set(sc.statusTracker().getJobIdsForGroup("clash"))
+        fn()
+        return len(set(sc.statusTracker().getJobIdsForGroup("clash")) - before)
+
+    for skip in ({}, dict(stats_columns=["v"])):
+        cat.to_table(rows(0, 1000, 2), "t", keys=["k"], **skip)
+        # above every key: no leaf overlaps
+        assert clash_jobs(lambda: cat.to_table(
+            rows(1000, 1200), "t", keys=["k"], how="append")) == 0
+        # interleaved with stored keys: the ranges overlap, the join
+        # runs and finds no clash
+        assert clash_jobs(lambda: cat.to_table(
+            rows(1, 1000, 2), "t", keys=["k"], how="append")) > 0
+        with pytest.raises(IntegrityError):
+            cat.to_table(rows(1100, 1101), "t", keys=["k"], how="append")
+        # a key-range read opens only the leaves whose range overlaps
+        got = cat.read_table("t", lowest=1000, highest=1199)
+        assert got.count() == 200
+        assert len({
+            f.split("/t/")[1].split("/")[0] for f in got.inputFiles()
+        }) == 1
+        cat.drop_table("t")
+
+    # a leaf without a key range (written before ranges existed) is
+    # always read: the clash it holds is found
+    cat.to_table(rows(0, 100), "t", keys=["k"])
+    tpath = cat._path("t")
+    for seg in cat._manifest("t")["segments"]:
+        cat.fs.delete(f"{tpath}/{seg}/{SKIP_FILE}", recursive=False)
+    assert clash_jobs(lambda: cat.to_table(
+        rows(200, 300), "t", keys=["k"], how="append")) > 0
+    with pytest.raises(IntegrityError):
+        cat.to_table(rows(50, 51), "t", keys=["k"], how="append")
+    assert cat.read_table("t").count() == 200
+
+
+def test_pandas_and_spark_probes_cost_the_same(spark, tmp_path):
+    """The batch probe is bucket-keyed: it repartitions the batch on
+    its bucket and aggregates twice on that partitioning, so a batch
+    built from pandas costs the same jobs as one from spark.range
+    (the global count_distinct form paid one job more on the pandas
+    batch)."""
+    import pandas as pd
+
+    from pandabase_spark.io import KeyedCatalog
+
+    cat = KeyedCatalog(spark, str(tmp_path / "wh"), default_buckets=8)
+    df = spark.range(2000).select(
+        F.col("id").alias("k"), (F.col("id") * 2.0).alias("v"),
+        F.concat(F.lit("p"), F.col("id") % 97).alias("p"),
+    )
+    cat.to_table(df, "t", keys=["k"], stats_columns=["v"],
+                 bloom_columns=["p"])
+    m = cat.meta("t")
+    sc = spark.sparkContext
+    batches = {
+        "spark": df.where(F.col("k") < 250),
+        "pandas": spark.createDataFrame(
+            pd.DataFrame({
+                "k": range(250), "v": [2.0 * i for i in range(250)],
+                "p": [f"p{i % 97}" for i in range(250)],
+            }),
+            df.schema,
+        ),
+    }
+    counts, probes = {}, {}
+    for name, batch in batches.items():
+        sc.setJobGroup(f"probe-{name}", name)
+        try:
+            probes[name] = cat._batch_probe(batch, m)
+        finally:
+            sc.setJobGroup(None, None)
+        counts[name] = len(sc.statusTracker().getJobIdsForGroup(f"probe-{name}"))
+    assert counts["pandas"] == counts["spark"] <= 2, counts
+    assert probes["pandas"]["facts"] == probes["spark"]["facts"]
+    assert probes["pandas"]["touched"] == probes["spark"]["touched"]
+
+
+def test_literal_hashes_fold_on_the_driver(spark, catalog):
+    """Bloom probe positions, the bucket a full-key equality predicate
+    pins and a point read's bucket are evaluated over a one-row
+    driver-local frame: no Spark job runs, and every value hashes as it
+    did over ``spark.range(1)``."""
+    import datetime
+    import json
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from pandabase_spark.io import BLOOM_K, BLOOM_M, TableMeta, _bucket_expr
+    from pandabase_spark.localframe import local_frame
+
+    sc = spark.sparkContext
+    values = [
+        (7, T.LongType()), (-3, T.IntegerType()), ("abc", T.StringType()),
+        (2.5, T.DoubleType()), (datetime.date(2020, 1, 2), T.DateType()),
+        (datetime.datetime(2020, 1, 2, 3, 4, 5), T.TimestampType()),
+        (Decimal("3.25"), T.DecimalType(10, 2)), (True, T.BooleanType()),
+    ]
+    # full-key equality predicates the DML bucket pinning recognizes
+    predicates = [
+        ("k = 7", T.LongType()), ("k = -3", T.IntegerType()),
+        ("k = 'abc'", T.StringType()), ("k = true", T.BooleanType()),
+    ]
+
+    def meta(dt):
+        schema = T.StructType([T.StructField("k", dt)])
+        return TableMeta(keys=["k"], auto_index=False, num_buckets=8,
+                         schema_json=json.dumps(schema.jsonValue()))
+
+    def old_positions(value, dt):
+        row = spark.range(1).select(*[
+            F.pmod(F.xxhash64(F.lit(value).cast(dt), F.lit(s)),
+                   F.lit(BLOOM_M)).alias(f"p{s}")
+            for s in range(BLOOM_K)
+        ]).first()
+        return [row[f"p{s}"] for s in range(BLOOM_K)]
+
+    def old_bucket(col, dt):
+        return spark.range(1).select(col.cast(dt).alias("k")).select(
+            _bucket_expr(["k"], 8)).first()[0]
+
+    want = {
+        i: (old_positions(v, dt), old_bucket(F.lit(v), dt))
+        for i, (v, dt) in enumerate(values)
+    }
+    want_eq = [[old_bucket(F.expr(p.split(" = ")[1]), dt)]
+               for p, dt in predicates]
+    sc.setJobGroup("fold", "fold")
+    try:
+        got = {
+            i: (
+                catalog._bloom_positions(v, dt),
+                catalog._key_bucket(
+                    local_frame(spark, [(v,)], meta(dt).schema), meta(dt)
+                ),
+            )
+            for i, (v, dt) in enumerate(values)
+        }
+        got_eq = [catalog._key_equality_buckets(p, meta(dt))
+                  for p, dt in predicates]
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == want
+    assert got_eq == want_eq
+    assert sc.statusTracker().getJobIdsForGroup("fold") == []
 
 
 def test_ivfpq_build_job_budget(spark, tmp_path):

@@ -573,8 +573,8 @@ def test_dml_rewrite_detects_rival_commit_instead_of_absorbing(
     orig = KeyedCatalog._write_segment
     fired = {}
 
-    def hooked(self, rows, table_name, m):
-        seg = orig(self, rows, table_name, m)
+    def hooked(self, rows, table_name, m, **kw):
+        seg = orig(self, rows, table_name, m, **kw)
         if table_name == "dml_race" and not fired.get("x"):
             fired["x"] = True
             # rival writer: append new keys, completing a commit in
@@ -2084,6 +2084,56 @@ def test_range_read_consumes_selectivity_estimate(spark, catalog):
     assert got2.count() == 40000
 
 
+def test_key_range_reads_prune_timestamp_and_date_keys(spark, catalog):
+    """``read_table(lowest=, highest=)`` on a timestamp key prunes leaves
+    by their recorded key ranges (kept as epoch microseconds) and
+    returns exactly the rows the bounds select; a date bound on the
+    timestamp key and a datetime bound on a date key prune nothing and
+    still select the right rows."""
+    import datetime
+
+    base = datetime.datetime(2024, 3, 1)
+
+    def batch(lo, hi):
+        return spark.range(lo, hi).select(
+            F.timestamp_seconds(
+                F.lit(int(base.timestamp())) + F.col("id") * 3600
+            ).alias("ts"),
+            F.col("id").cast("double").alias("v"),
+        )
+
+    catalog.to_table(batch(0, 48), "ts_t", keys=["ts"], num_buckets=2)
+    catalog.to_table(batch(48, 96), "ts_t", keys=["ts"], how="append")
+    catalog.to_table(
+        batch(0, 96).select(F.to_date("ts").alias("d"), "v")
+        .groupBy("d").agg(F.max("v").alias("v")),
+        "d_t", keys=["d"], num_buckets=2,
+    )
+    catalog.to_table(
+        spark.range(1).select(
+            F.to_date(F.lit("2024-03-10")).alias("d"), F.lit(0.0).alias("v")
+        ),
+        "d_t", keys=["d"], how="append",
+    )
+
+    def check(name, lo, hi, n_segments):
+        got = catalog.read_table(name, lowest=lo, highest=hi)
+        key = catalog.meta(name).keys[0]
+        want = catalog.read_table(name).where(
+            (F.col(key) >= F.lit(lo)) & (F.col(key) <= F.lit(hi))
+        )
+        assert sorted(got.collect()) == sorted(want.collect()) != []
+        assert len({
+            p.split(f"/{name}/")[1].split("/")[0] for p in got.inputFiles()
+        }) == n_segments, (name, lo, hi)
+
+    hour = datetime.timedelta(hours=1)
+    check("ts_t", base + 50 * hour, base + 60 * hour, 1)
+    check("ts_t", datetime.date(2024, 3, 3), datetime.date(2024, 3, 4), 2)
+    check("d_t", datetime.date(2024, 3, 10), datetime.date(2024, 3, 11), 1)
+    check("d_t", base, base + 24 * hour, 2)
+
+
 def test_range_read_loads_skipping_metadata_once(spark, catalog):
     """One read_table(stats_bounds=...) on a stats + sketch table reads
     each live segment's skipping file once and the table meta once:
@@ -2123,6 +2173,63 @@ def test_range_read_loads_skipping_metadata_once(spark, catalog):
     names = [p.rsplit("/", 1)[1] for p in counting.reads]
     assert names.count(SKIP_FILE) == 2, counting.reads
     assert names.count(META_FILE) == 1, counting.reads
+
+
+def test_write_verbs_read_meta_and_head_once(spark, catalog):
+    """Each keyed write verb reads the table meta once and walks the
+    log head once, and passes both down to its probe, its pinned reads
+    and its commit: append, upsert and merge through ``to_table`` and
+    ``merge_table``, and ``compact`` without its vacuum. The head walk starts at the hint
+    file, so a walk is one read of it."""
+    from pandabase_spark import kt_log
+    from pandabase_spark.io import META_FILE
+
+    df = spark.range(200).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+    )
+    catalog.to_table(df, "once_w", keys=["k"], num_buckets=4,
+                     stats_columns=["v"])
+    hint = kt_log.hint_path(catalog._path("once_w")).rsplit("/", 1)[1]
+
+    class CountingFS:
+        def __init__(self, inner):
+            self._inner = inner
+            self.reads: list[str] = []
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def read_text(self, path, *args, **kwargs):
+            self.reads.append(path.rsplit("/", 1)[1])
+            return self._inner.read_text(path, *args, **kwargs)
+
+    verbs = {
+        "append": lambda: catalog.to_table(
+            df.withColumn("k", F.col("k") + 1000), "once_w", keys=["k"],
+            how="append"),
+        "upsert": lambda: catalog.to_table(
+            df.where("k < 10").withColumn("v", F.col("v") + 1.0), "once_w",
+            keys=["k"], how="upsert"),
+        "merge": lambda: catalog.merge_table(
+            df.where("k >= 190").withColumn("k", F.col("k") + 20),
+            "once_w", when_matched_update="all"),
+        # vacuum, which compact runs by default, walks the versions
+        # on its own
+        "compact": lambda: catalog.compact("once_w", vacuum=False),
+    }
+    real = catalog.fs
+    reads = {}
+    for verb, fn in verbs.items():
+        catalog.fs = counting = CountingFS(real)
+        try:
+            fn()
+        finally:
+            catalog.fs = real
+        reads[verb] = (
+            counting.reads.count(META_FILE), counting.reads.count(hint)
+        )
+    assert reads == {verb: (1, 1) for verb in verbs}, reads
+    assert catalog.read_table("once_w").count() == 410
 
 
 def test_vacuum_retention_window_protects_time_travel(spark, catalog):
@@ -3054,10 +3161,11 @@ def test_stats_bounds_on_decimal_columns(spark, catalog, monkeypatch):
 
 
 def _skipping_from_rows(spark, catalog, name):
-    """The stats and blooms a table's manifest should hold, derived
-    without the commit's aggregate: each live leaf's rows are read
-    back, bucketed with ``_bucket_expr``, summarized in pandas, and
-    every non-NULL bloom value is hashed with ``_bloom_positions``."""
+    """The stats, blooms and first-key ranges a table's segments should
+    record, derived without the write's aggregate: each live leaf's
+    rows are read back, bucketed with ``_bucket_expr``, summarized in
+    pandas, and every non-NULL bloom value is hashed with
+    ``_bloom_positions``."""
     from pandabase_spark.io import (
         BLOOM_K, BLOOM_M, PART_DIR, _bloom_b64, _bucket_expr,
     )
@@ -3065,7 +3173,8 @@ def _skipping_from_rows(spark, catalog, name):
     m = catalog.meta(name)
     man = catalog._manifest(name)
     nb = man.get("nb") or m.num_buckets
-    stats, blooms, positions = {}, {}, {}
+    k0 = m.keys[0]
+    stats, blooms, keys, positions = {}, {}, {}, {}
     for seg, live in man["segments"].items():
         pdf = (
             spark.read.parquet(f"{catalog._path(name)}/{seg}")
@@ -3075,7 +3184,9 @@ def _skipping_from_rows(spark, catalog, name):
             .toPandas()
         )
         st, bl = stats.setdefault(seg, {}), blooms.setdefault(seg, {})
+        ks = keys.setdefault(seg, {})
         for b, grp in pdf.groupby("_b"):
+            ks[str(b)] = {k0: [int(grp[k0].min()), int(grp[k0].max())]}
             st[str(b)] = {
                 c: ([None, None] if grp[c].isna().all()
                     else [float(grp[c].min()), float(grp[c].max())])
@@ -3093,7 +3204,7 @@ def _skipping_from_rows(spark, catalog, name):
                     bl.setdefault(str(b), {})[c] = {
                         "m": BLOOM_M, "k": BLOOM_K, "b64": _bloom_b64(bits),
                     }
-    return stats, blooms
+    return stats, blooms, keys
 
 
 def test_skipping_metadata_matches_rows_after_every_write(spark, catalog):
@@ -3124,9 +3235,10 @@ def test_skipping_metadata_matches_rows_after_every_write(spark, catalog):
     def check():
         man = catalog._manifest("sk_t")
         skip = catalog._skipping("sk_t", man)
-        stats, blooms = _skipping_from_rows(spark, catalog, "sk_t")
+        stats, blooms, keys = _skipping_from_rows(spark, catalog, "sk_t")
         assert skip["stats"] == stats
         assert skip["blooms"] == blooms
+        assert skip["keys"] == keys
         for seg in man["segments"]:
             assert stats[seg]["1"]["v"] == [None, None]
             assert "0" in stats[seg] and "0" not in blooms[seg]
@@ -3188,6 +3300,33 @@ def test_skipping_metadata_matches_rows_after_every_write(spark, catalog):
     assert table_rows() == want
     check()
 
+    from pyspark.sql import types as T
+
+    # creates whose skipping columns take their final type or value
+    # only after the batch probe: a Bloom column narrowed from {0, 1}
+    # to boolean, and a generated stats column
+    base = spark.range(0, 60).select(
+        F.col("id").alias("k"), (F.col("id") % 2).alias("f"),
+        (F.col("id") * 0.5).alias("v"),
+    )
+    for name, kw in (
+        ("sk_narrow", dict(bloom_columns=["f"], stats_columns=["v"])),
+        ("sk_gen", dict(stats_columns=["w"], generated={"w": "v * 3 - k"})),
+    ):
+        catalog.to_table(base, name, keys=["k"], num_buckets=4, **kw)
+        man = catalog._manifest(name)
+        skip = catalog._skipping(name, man)
+        stats, blooms, keys = _skipping_from_rows(spark, catalog, name)
+        if "bloom_columns" not in kw:
+            blooms = {}
+        assert (skip["stats"], skip["blooms"], skip["keys"]) == (
+            stats, blooms, keys
+        ), name
+        assert all(len(keys[seg]) == 4 for seg in man["segments"])
+    assert isinstance(
+        catalog.meta("sk_narrow").schema["f"].dataType, T.BooleanType
+    )
+
 
 def test_skipping_bucket_is_the_leaf_dir_not_the_catalog_path(spark, tmp_path):
     """A catalog whose own path contains ``_pb_b=3/`` still records one
@@ -3203,7 +3342,7 @@ def test_skipping_bucket_is_the_leaf_dir_not_the_catalog_path(spark, tmp_path):
                  stats_columns=["v"], bloom_columns=["p"])
     man = cat._manifest("pb_t")
     skip = cat._skipping("pb_t", man)
-    stats, blooms = _skipping_from_rows(spark, cat, "pb_t")
+    stats, blooms, _ = _skipping_from_rows(spark, cat, "pb_t")
     (seg, live), = man["segments"].items()
     assert sorted(live) == [0, 1, 2, 3]
     assert set(skip["stats"][seg]) == set(skip["blooms"][seg]) == {
